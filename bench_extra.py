@@ -38,7 +38,8 @@ def main() -> None:
     import bench
     from vcf2df_spark import datasource
     from vcf2df_spark.decode import (
-        _ctypes_fast, decode_blocks, schema_from_blocks,
+        _file_signatures, _spark_signatures, ctypes_from_signatures,
+        decode_blocks,
     )
     from vcf2df_spark.encode import (
         encode_keyed, normalize_input, with_partition_key,
@@ -84,10 +85,11 @@ def main() -> None:
 
     stored = spark.read.parquet(f"{wh}/blocks")
     sc.setJobDescription("extra: schema derivation (Spark aggregate)")
-    out["schema_spark_job_sec"] = timed(lambda: schema_from_blocks(stored))
+    out["schema_spark_job_sec"] = timed(
+        lambda: ctypes_from_signatures(_spark_signatures(stored)))
     sc.setJobDescription("extra: schema derivation (driver fast path)")
     out["schema_fast_path_sec"] = timed(
-        lambda: _ctypes_fast(stored, None, False))
+        lambda: ctypes_from_signatures(_file_signatures(stored, None)))
     sc.setJobDescription("extra: grouped decode")
     out["decode_grouped_count_sec"] = timed(
         lambda: decode_blocks(stored).count())

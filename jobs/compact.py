@@ -81,7 +81,7 @@ def run_compact(
     if merge_schemas:
         # additive schema evolution: epochs/batches with DIFFERENT extra
         # columns decode against their union schema, typed zero-defaults
-        # filling the pre-evolution chunks (decode.ctypes_from_blocks).
+        # filling the pre-evolution chunks (decode.ctypes_from_signatures).
         # Uses the grouped decode (one shuffle) instead of the shuffle-free
         # datasource scan — the price of unifying, paid once here so every
         # later read of the output is homogeneous and shuffle-free again.

@@ -55,10 +55,10 @@ def main(argv: list[str] | None = None) -> None:
         # schema-derivation aggregate — one Spark job of pure overhead
         # (~0.3 s measured, the r3 grouped-decode regression); warehouses
         # without manifests keep the loud heterogeneity-checking derivation
-        from vcf2df_spark.datasource import _ctypes_from_manifests
+        from vcf2df_spark.datasource import ctypes_from_manifests
         from vcf2df_spark.decode import schema_from_ctypes
 
-        ctypes = _ctypes_from_manifests(args.warehouse)
+        ctypes = ctypes_from_manifests(args.warehouse)
         pre = schema_from_ctypes(ctypes) if ctypes is not None else None
         decoded = decode_blocks(blocks, out_schema=pre)
     source = normalize_input(spark.read.parquet(args.source))

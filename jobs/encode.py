@@ -125,83 +125,84 @@ def main(argv: list[str] | None = None) -> None:
     level = (StorageLevel.DISK_ONLY if args.persist == "disk_only"
              else StorageLevel.MEMORY_AND_DISK)
     detect = args.on_duplicates == "fail"
-    blocks = encode_keyed(pending, detect_dups=detect).persist(level)
+    cached = encode_keyed(pending, detect_dups=detect).persist(level)
+    blocks = cached
+    try:
+        n_blocks = blocks.count()
+        if n_blocks == 0:
+            print(json.dumps({"job_id": args.job_id, "status": "noop",
+                              "committed_before": n_committed}))
+            return
 
-    n_blocks = blocks.count()
-    if n_blocks == 0:
-        print(json.dumps({"job_id": args.job_id, "status": "noop",
-                          "committed_before": n_committed}))
+        if detect:
+            from vcf2df_spark.encode import DUP_MARKER
+
+            dup_total = (
+                blocks.filter(F.col("column") == DUP_MARKER)
+                .agg(F.sum("n_rows")).collect()[0][0]
+            )
+            if dup_total:
+                print(json.dumps({"job_id": args.job_id, "status": "invalid-input",
+                                  "duplicate_rows": int(dup_total)}))
+                sys.exit(5)
+            blocks = blocks.filter(F.col("column") != DUP_MARKER)
+
+        # stats from the materialized cache BEFORE writes mutate the warehouse
+        stats = blocks.agg(
+            F.sum(F.when(F.col("column") == "conv_id", F.col("n_rows"))).alias("rows"),
+            F.countDistinct("partition_id").alias("parts"),
+            F.sum("raw_bytes").alias("raw"),
+            F.sum("enc_bytes").alias("enc"),
+        ).collect()[0]
+        rows = stats["rows"]
+
+        # skew report: per-partition row counts from the block metadata (free)
+        psizes = (
+            blocks.filter(F.col("column") == "conv_id")
+            .groupBy("partition_id").agg(F.sum("n_rows").alias("n"))
+            .agg(F.max("n").alias("mx"), F.avg("n").alias("mean")).collect()[0]
+        )
+        balance = round(psizes["mx"] / max(psizes["mean"], 1), 3)
+
+        # blocks first (idempotent per-partition overwrite), manifest commit last
+        if args.shard_dirs:
+            blocks.withColumn(
+                "shard", F.pmod(F.col("partition_id"), F.lit(args.shard_dirs))
+            ).write.mode("overwrite").partitionBy("shard", "partition_id").parquet(
+                blocks_path
+            )
+        else:
+            blocks.write.mode("overwrite").partitionBy("partition_id").parquet(
+                blocks_path
+            )
+        manifests = manifest.build_manifests(
+            blocks, args.job_id, args.input, num_partitions=args.partitions,
+            shard_dirs=args.shard_dirs or None,
+        )
+        manifests.write.mode("append").parquet(manifests_path)
+        wall = time.time() - t0
+        print(json.dumps({
+            "job_id": args.job_id,
+            "status": "partial" if truncated else "ok",
+            "committed_before": n_committed,
+            "partitions_encoded": int(stats["parts"]),
+            "rows_encoded": int(rows),
+            "raw_bytes": int(stats["raw"]),
+            "enc_bytes": int(stats["enc"]),
+            "ratio": round(stats["raw"] / max(stats["enc"], 1), 3),
+            "quarantined_rows": n_dup_rows,
+            "partition_max_over_mean": balance,
+            "wall_sec": round(wall, 2),
+            "turns_per_sec": int(rows / wall),
+        }))
+        if truncated:
+            sys.exit(3)
+    finally:
+        # every exit path drops the cache: in a shared session a later
+        # encode of the same input would otherwise read these blocks
+        cached.unpersist()
         if owns_session:
             spark.stop()
-        return
-
-    if detect:
-        from vcf2df_spark.encode import DUP_MARKER
-
-        dup_total = (
-            blocks.filter(F.col("column") == DUP_MARKER)
-            .agg(F.sum("n_rows")).collect()[0][0]
-        )
-        if dup_total:
-            print(json.dumps({"job_id": args.job_id, "status": "invalid-input",
-                              "duplicate_rows": int(dup_total)}))
-            if owns_session:
-                spark.stop()
-            sys.exit(5)
-        blocks = blocks.filter(F.col("column") != DUP_MARKER)
-
-    # stats from the materialized cache BEFORE writes mutate the warehouse
-    stats = blocks.agg(
-        F.sum(F.when(F.col("column") == "conv_id", F.col("n_rows"))).alias("rows"),
-        F.countDistinct("partition_id").alias("parts"),
-        F.sum("raw_bytes").alias("raw"),
-        F.sum("enc_bytes").alias("enc"),
-    ).collect()[0]
-    rows = stats["rows"]
-
-    # skew report: per-partition row counts from the block metadata (free)
-    psizes = (
-        blocks.filter(F.col("column") == "conv_id")
-        .groupBy("partition_id").agg(F.sum("n_rows").alias("n"))
-        .agg(F.max("n").alias("mx"), F.avg("n").alias("mean")).collect()[0]
-    )
-    balance = round(psizes["mx"] / max(psizes["mean"], 1), 3)
-
-    # blocks first (idempotent per-partition overwrite), manifest commit last
-    if args.shard_dirs:
-        blocks.withColumn(
-            "shard", F.pmod(F.col("partition_id"), F.lit(args.shard_dirs))
-        ).write.mode("overwrite").partitionBy("shard", "partition_id").parquet(
-            blocks_path
-        )
-    else:
-        blocks.write.mode("overwrite").partitionBy("partition_id").parquet(
-            blocks_path
-        )
-    manifests = manifest.build_manifests(
-        blocks, args.job_id, args.input, num_partitions=args.partitions,
-        shard_dirs=args.shard_dirs or None,
-    )
-    manifests.write.mode("append").parquet(manifests_path)
-    wall = time.time() - t0
-    print(json.dumps({
-        "job_id": args.job_id,
-        "status": "partial" if truncated else "ok",
-        "committed_before": n_committed,
-        "partitions_encoded": int(stats["parts"]),
-        "rows_encoded": int(rows),
-        "raw_bytes": int(stats["raw"]),
-        "enc_bytes": int(stats["enc"]),
-        "ratio": round(stats["raw"] / max(stats["enc"], 1), 3),
-        "quarantined_rows": n_dup_rows,
-        "partition_max_over_mean": balance,
-        "wall_sec": round(wall, 2),
-        "turns_per_sec": int(rows / wall),
-    }))
-    if owns_session:
-        spark.stop()
-    if truncated:
-        sys.exit(3)
 
 
 if __name__ == "__main__":

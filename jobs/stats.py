@@ -23,6 +23,8 @@ import time
 def warehouse_stats(warehouse: str) -> dict:
     import pyarrow.dataset as pads
 
+    from vcf2df_spark.decode import ctypes_from_signatures
+
     d = pads.dataset(
         f"{warehouse}/manifests", format="parquet", partitioning="hive"
     )
@@ -40,7 +42,7 @@ def warehouse_stats(warehouse: str) -> dict:
         return {"status": "empty", "warehouse": warehouse}
 
     codec_use: collections.Counter[str] = collections.Counter()
-    schema: dict[str, str] = {}
+    sigs = set()
     epochs = set()
     jobs = set()
     n_rows = n_chunks = raw_b = enc_b = 0
@@ -54,10 +56,12 @@ def warehouse_stats(warehouse: str) -> dict:
             epochs.add(r["epoch"])
         for entry in json.loads(r.get("codecs") or "[]"):
             codec_use[entry] += 1  # "column:codec" per partition
-        sig = r.get("schema_sig")
-        if sig:
-            for col, ct in json.loads(sig).items():
-                schema.setdefault(col, ct or "str")
+        if r.get("schema_sig"):
+            sigs.add(r["schema_sig"])
+    # the same union (and the same loud ctype conflict) as read planning
+    schema = dict(sorted(ctypes_from_signatures(
+        (json.loads(s).items() for s in sigs), merge=True
+    ).items())) if sigs else None
     # streaming (epoch) warehouses: the block identity is (partition_id,
     # epoch) — counting distinct partition_id alone would understate the
     # physical block-dir count the rest of the engine routes on
@@ -70,7 +74,7 @@ def warehouse_stats(warehouse: str) -> dict:
         "raw_bytes": raw_b,
         "enc_bytes": enc_b,
         "compression_ratio": round(raw_b / enc_b, 3) if enc_b else None,
-        "schema": dict(sorted(schema.items())) or None,
+        "schema": schema,
         "codec_partitions": dict(sorted(codec_use.items())),
         "jobs": sorted(j for j in jobs if j),
         "epochs": sorted(epochs) if epochs else None,
@@ -84,7 +88,7 @@ def main(argv: list[str] | None = None) -> None:
     t0 = time.time()
     try:
         out = warehouse_stats(args.warehouse)
-    except (FileNotFoundError, OSError) as e:
+    except (FileNotFoundError, OSError, ValueError) as e:
         print(json.dumps({"status": "error", "error": str(e)}))
         sys.exit(2)
     out["wall_sec"] = round(time.time() - t0, 3)

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from jobs import compact
@@ -164,10 +165,11 @@ def test_merge_schemas_decode_and_compact(spark, tmp_path, capsys):
     assert got == want
 
 
-def test_merge_schemas_rejects_type_change(spark, tmp_path):
-    """A column whose ctype CHANGES across batches is never merged."""
-    import pytest as _pytest
-
+@pytest.mark.parametrize("reader", ["decode_blocks", "read_warehouse"])
+def test_merge_schemas_rejects_type_change(spark, tmp_path, reader):
+    """A column whose ctype CHANGES across batches is never merged — by
+    the merging grouped decode and by the datasource's union planning,
+    with the same message."""
     from vcf2df_spark.decode import decode_blocks
 
     root = str(tmp_path / "tcwh")
@@ -184,6 +186,9 @@ def test_merge_schemas_rejects_type_change(spark, tmp_path):
     encode_transcripts(src1, num_partitions=1, chunk_rows=64).write.parquet(
         f"{root}/blocks/epoch=1"
     )
-    blocks = spark.read.parquet(f"{root}/blocks")
-    with _pytest.raises(Exception, match="two ctypes"):
-        decode_blocks(blocks, merge_schemas=True).count()
+    with pytest.raises(Exception, match="two ctypes"):
+        if reader == "decode_blocks":
+            blocks = spark.read.parquet(f"{root}/blocks")
+            decode_blocks(blocks, merge_schemas=True).count()
+        else:
+            datasource.read_warehouse(spark, root).count()

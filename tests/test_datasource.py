@@ -356,7 +356,7 @@ def test_planning_reads_manifests_not_blocks(spark, mwh, monkeypatch):
 
 
 def test_ctypes_from_manifests_matches_blocks_scan(mwh):
-    sig = datasource._ctypes_from_manifests(mwh)
+    sig = datasource.ctypes_from_manifests(mwh)
     full = datasource._ctypes_from_blocks(f"{mwh}/blocks")
     assert sig == full
     assert sig["score"] == "f64" and sig["conv_id"] == "str"
@@ -372,7 +372,7 @@ def test_legacy_manifests_without_sig_fall_back(spark, mwh, tmp_path):
     spark.read.parquet(f"{mwh}/manifests").drop("schema_sig").write.parquet(
         f"{root}/manifests"
     )
-    assert datasource._ctypes_from_manifests(root) is None
+    assert datasource.ctypes_from_manifests(root) is None
     got = datasource.infer_ctypes(f"{root}/blocks")
     assert got == datasource._ctypes_from_blocks(f"{root}/blocks")
 
@@ -415,3 +415,33 @@ def test_routed_partitions_skip_tree_listing(spark, mwh, monkeypatch, ref=None):
         for batch in reader.read(part):
             rows += batch.num_rows
     assert rows > 0  # the conversation is decodable from the routed dirs
+
+
+def test_routed_in_list_reads_manifests_once(spark, mwh, monkeypatch):
+    """A pushed conv_id IN list routes all its keys from ONE manifests
+    read (not one per key) and plans the union of the per-key routes."""
+    import pyarrow.dataset as pads
+
+    cids = [
+        r[0] for r in decode_blocks(spark.read.parquet(f"{mwh}/blocks"))
+        .select("conv_id").distinct().orderBy("conv_id").take(3)
+    ]
+    ds = PrunedTranscriptDataSource({"path": mwh})
+
+    def planned(flt):
+        reader = ds.reader(ds.schema())
+        reader.pushFilters([flt])
+        return {p.file_path for p in reader.partitions()}
+
+    want = set().union(*(planned(EqualTo(("conv_id",), c)) for c in cids))
+    opens: list[str] = []
+    real_dataset = pads.dataset
+
+    def counting(source, *a, **kw):
+        if str(source).rstrip("/").endswith("/manifests"):
+            opens.append(source)
+        return real_dataset(source, *a, **kw)
+
+    monkeypatch.setattr(pads, "dataset", counting)
+    assert planned(In(("conv_id",), tuple(cids))) == want
+    assert len(opens) == 1

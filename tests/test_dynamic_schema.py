@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vcf2df_spark import fixtures
-from vcf2df_spark.decode import decode_blocks, schema_from_blocks
+from vcf2df_spark.decode import decode_blocks
 from vcf2df_spark.encode import encode_transcripts, normalize_input
 
 
@@ -100,7 +100,7 @@ def test_normalize_types_and_defaults(spark):
 def test_schema_from_blocks_matches_decode(spark, extended_roundtrip):
     pdf = fixtures.transcripts_extended(n_convs=50)
     blocks = encode_transcripts(spark.createDataFrame(pdf), num_partitions=4)
-    schema = schema_from_blocks(blocks)
+    schema = decode_blocks(blocks).schema
     names = [f.name for f in schema.fields]
     types = {f.name: f.dataType.simpleString() for f in schema.fields}
     assert names == ["conv_id", "turn_idx", "role", "text", "tool", "ts",
@@ -207,25 +207,31 @@ def test_fast_schema_path_on_bare_parquet_scan(spark, tmp_path, monkeypatch):
     encode_transcripts(src, num_partitions=4).write.parquet(f"{path}/blocks")
     stored = spark.read.parquet(f"{path}/blocks")
 
-    slow = decode_mod.ctypes_from_blocks(
-        stored.filter(~F.col("column").startswith("__"))
+    slow = decode_mod.ctypes_from_signatures(
+        decode_mod._spark_signatures(
+            stored.filter(~F.col("column").startswith("__"))
+        )
     )
-    fast = decode_mod._ctypes_fast(stored, None, False)
+    fast = decode_mod.ctypes_from_signatures(
+        decode_mod._file_signatures(stored, None)
+    )
     assert fast == slow  # identical map, no Spark job needed
 
     # pruned decode: the requested-columns filter is mirrored too
-    fast_pruned = decode_mod._ctypes_fast(stored, ["conv_id", "score"], False)
+    fast_pruned = decode_mod.ctypes_from_signatures(
+        decode_mod._file_signatures(stored, ["conv_id", "score"])
+    )
     assert fast_pruned == {"conv_id": "str", "score": "f64"}
 
     # the bench/grouped decode path must not launch the derivation job
     def boom(*a, **kw):
         raise AssertionError("distributed schema derivation ran on a bare scan")
 
-    monkeypatch.setattr(decode_mod, "schema_from_blocks", boom)
+    monkeypatch.setattr(decode_mod, "_spark_signatures", boom)
     assert decode_blocks(stored).count() == len(pdf)
 
     # a FILTERED lineage is not a bare scan: fast path declines (the
     # distributed derivation keeps the heterogeneity guarantee there)
-    assert decode_mod._ctypes_fast(
-        stored.filter(F.col("partition_id") == 0), None, False
+    assert decode_mod._file_signatures(
+        stored.filter(F.col("partition_id") == 0), None
     ) is None

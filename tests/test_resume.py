@@ -82,8 +82,23 @@ def test_decode_verify_grouped_uses_manifest_schema(spark, source_path,
     def boom(*a, **kw):
         raise AssertionError("schema derivation ran despite manifests sig")
 
-    monkeypatch.setattr(decode_mod, "schema_from_blocks", boom)
+    monkeypatch.setattr(decode_mod, "_file_signatures", boom)
+    monkeypatch.setattr(decode_mod, "_spark_signatures", boom)
     rc = _run(decode_job.main, ["--warehouse", wh, "--source", source_path,
                                 "--master", "local[4]",
                                 "--reader", "grouped"])
     assert rc == 0
+
+
+def test_encode_job_drops_its_cache(spark, source_path, tmp_path):
+    """The encode job persists its blocks for the stats pass and the
+    writes; every exit path (here ok, then noop) must unpersist them, or a
+    later encode of the same input in a shared session reads the cache."""
+    jsc = spark.sparkContext._jsc
+    wh = str(tmp_path / "cwh")
+    argv = ["--input", source_path, "--out", wh, "--partitions", "4",
+            "--job-id", "c", "--master", "local[4]"]
+    for _ in range(2):  # ok, then noop (everything committed)
+        before = jsc.getPersistentRDDs().size()
+        assert _run(encode_job.main, argv) == 0
+        assert jsc.getPersistentRDDs().size() == before

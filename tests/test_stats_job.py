@@ -70,3 +70,68 @@ def test_stats_epoch_warehouse_counts_block_dirs(spark, tmp_path, capsys):
     assert rec["partitions"] == 4  # 2 pids x 2 epochs
     assert rec["epochs"] == [0, 1]
     assert rec["n_rows"] == 2 * src.count()
+
+
+def test_legacy_null_ctypes_resolve_alike_everywhere(spark, tmp_path, capsys):
+    """Legacy blocks (meta without ``ctype``) and the manifests built from
+    them: every schema reader resolves the core types the same way —
+    turn_idx i32, ts ts — the stats job included."""
+    import jobs.stats as stats_job
+    from pyspark.sql import functions as F
+
+    from vcf2df_spark import datasource
+    from vcf2df_spark.decode import decode_blocks
+
+    src = normalize_input(
+        spark.createDataFrame(fixtures.transcripts_small(n_convs=20))
+    )
+    blocks = encode_transcripts(src, num_partitions=2)
+    pdf = blocks.toPandas()
+    pdf["meta"] = [
+        json.dumps({k: v for k, v in json.loads(m).items() if k != "ctype"})
+        for m in pdf["meta"]
+    ]
+    legacy = spark.createDataFrame(pdf, schema=blocks.schema)
+    wh = str(tmp_path / "lwh")
+    legacy.write.partitionBy("partition_id").parquet(f"{wh}/blocks")
+    manifest.build_manifests(
+        legacy, "legacy", "mem", num_partitions=2
+    ).write.parquet(f"{wh}/manifests")
+
+    assert stats_job.warehouse_stats(wh)["schema"] == {
+        "conv_id": "str", "role": "str", "text": "str", "tool": "str",
+        "ts": "ts", "turn_idx": "i32",
+    }
+    ctypes = datasource.infer_ctypes(f"{wh}/blocks")
+    assert (ctypes["turn_idx"], ctypes["ts"]) == ("i32", "ts")
+
+    stored = spark.read.parquet(f"{wh}/blocks")
+    for df in (
+        decode_blocks(stored),  # bare scan: driver file reader
+        decode_blocks(stored.filter(F.col("partition_id") >= 0)),  # Spark
+        datasource.read_warehouse(spark, wh),
+    ):
+        types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+        assert (types["turn_idx"], types["ts"]) == ("int", "timestamp")
+
+
+def test_stats_ctype_conflict_is_an_error(tmp_path, capsys):
+    """Two committed partitions disagreeing on a column's ctype: the stats
+    job reports the conflict like its other read errors."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    import jobs.stats as stats_job
+
+    (tmp_path / "manifests").mkdir()
+    pq.write_table(pa.table({
+        "partition_id": [0, 1],
+        "status": ["committed", "committed"],
+        "schema_sig": ['{"flag": "f64"}', '{"flag": "bool"}'],
+    }), str(tmp_path / "manifests" / "part-0.parquet"))
+    with pytest.raises(SystemExit) as exc:
+        stats_job.main(["--warehouse", str(tmp_path)])
+    assert exc.value.code == 2
+    rec = json.loads(capsys.readouterr().out.strip())
+    assert rec["status"] == "error" and "two ctypes" in rec["error"]

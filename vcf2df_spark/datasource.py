@@ -59,16 +59,6 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import types as T
 
-_CTYPE_TO_SPARK = {
-    "str": T.StringType(),
-    "i32": T.IntegerType(),
-    "i64": T.LongType(),
-    "ts": T.TimestampType(),
-    "f64": T.DoubleType(),
-    "bool": T.BooleanType(),
-}
-
-
 def _blocks_root(options: dict) -> str:
     path = options.get("path") or options.get("warehouse")
     if not path:
@@ -85,30 +75,22 @@ def _dataset(root: str):
     return pads.dataset(root, format="parquet", partitioning="hive")
 
 
-def _merge_ctype(merged: dict[str, str], col: str, ct: str) -> None:
-    prev = merged.get(col)
-    if prev is not None and prev != ct:
-        raise ValueError(
-            f"conflicting ctypes for column {col!r}: {prev} vs {ct} — "
-            "heterogeneous encodes appended into one warehouse"
-        )
-    merged[col] = ct
-
-
-def _ctypes_from_manifests(warehouse: str) -> dict[str, str] | None:
+def ctypes_from_manifests(warehouse: str) -> dict[str, str] | None:
     """column -> ctype from the manifests' ``schema_sig`` rows: O(partitions)
     metadata instead of the full blocks pull — the read-planning analogue of
     opening ONE Parquet footer (``converter/convert_test.go:63-97``) rather
     than all of them.
 
     The manifests are the commit log, so committed ``schema_sig`` rows ARE
-    the warehouse schema. Returns None (caller falls back to the blocks
-    scan) when the signature is unavailable: no manifests dir, pre-r4
-    manifests without the column, or any null signature rows mixed in.
+    the warehouse schema. Distinct signatures (e.g. epochs that added an
+    extra column) union at planning; a ctype conflict fails loudly. Returns
+    None (caller falls back to the blocks scan) when the signature is
+    unavailable: no manifests dir, pre-r4 manifests without the column, or
+    any null signature rows mixed in.
     """
     import pyarrow.dataset as pads
 
-    from .decode import _CORE_CTYPES
+    from .decode import ctypes_from_signatures
 
     try:
         d = pads.dataset(
@@ -128,13 +110,9 @@ def _ctypes_from_manifests(warehouse: str) -> dict[str, str] | None:
         return None
     if not sigs or None in sigs:
         return None
-    # distinct signatures (e.g. epochs that added an extra column) union
-    # like the blocks scan would; conflicting ctypes still fail loudly
-    merged: dict[str, str] = {}
-    for sig in sorted(sigs):
-        for col, ct in json.loads(sig).items():
-            _merge_ctype(merged, col, ct or _CORE_CTYPES.get(col, "str"))
-    return merged
+    return ctypes_from_signatures(
+        (json.loads(sig).items() for sig in sigs), merge=True
+    )
 
 
 def infer_ctypes(root: str) -> dict[str, str]:
@@ -145,11 +123,12 @@ def infer_ctypes(root: str) -> dict[str, str]:
     ~400k strings instead of ~50M block-metadata rows pulled through the
     driver on EVERY ``.load()``); (2) fallback for warehouses without
     manifests (bench/test block dirs, legacy encodes): the full (column,
-    meta) blocks projection. Per-chunk column-set completeness stays
-    asserted task-side in :meth:`TranscriptReader.read`, where the chunk's
-    rows are already in hand.
+    meta) blocks projection. Both union distinct signatures; per-chunk
+    column-set completeness stays asserted task-side in
+    :meth:`TranscriptReader.read`, where the chunk's rows are already in
+    hand.
     """
-    sig = _ctypes_from_manifests(os.path.dirname(root.rstrip("/")))
+    sig = ctypes_from_manifests(os.path.dirname(root.rstrip("/")))
     if sig is not None:
         return sig
     return _ctypes_from_blocks(root)
@@ -157,25 +136,19 @@ def infer_ctypes(root: str) -> dict[str, str]:
 
 def _ctypes_from_blocks(root: str) -> dict[str, str]:
     """Fallback planning: one narrow (column, meta) projection over the
-    blocks table, deduplicated driver-side; conflicting ctypes for one
-    column fail loudly."""
-    from .decode import _CORE_CTYPES
+    blocks table; its distinct (column, ctype) pairs union like the
+    manifests' signatures."""
+    from .decode import ctypes_from_signatures
 
     tbl = _dataset(root).to_table(columns=["column", "meta"])
-    ctypes: dict[str, str] = {}
-    seen: set[tuple[str, str]] = set()
-    for col, meta in zip(
-        tbl.column("column").to_pylist(), tbl.column("meta").to_pylist()
-    ):
-        if col.startswith("__"):  # marker rows, never data columns
-            continue
-        key = (col, meta)
-        if key in seen:
-            continue
-        seen.add(key)
-        ct = json.loads(meta).get("ctype") or _CORE_CTYPES.get(col, "str")
-        _merge_ctype(ctypes, col, ct)
-    return ctypes
+    pairs = {
+        (col, json.loads(meta).get("ctype"))
+        for col, meta in set(zip(
+            tbl.column("column").to_pylist(), tbl.column("meta").to_pylist()
+        ))
+        if not col.startswith("__")  # marker rows, never data columns
+    }
+    return ctypes_from_signatures([pairs], merge=True)
 
 
 def _hive_keys(file_path: str, root: str) -> dict[str, int]:
@@ -473,34 +446,25 @@ class PrunedTranscriptReader(TranscriptReader):
 
     def _routed_pids(self):
         """(partition ids, shard_dirs) that can hold the pushed conv_id
-        point keys, from the manifests' hash-routing metadata.
+        point keys, from ONE read of the manifests' hash-routing metadata.
         (None, None) = no routable filter or no routing metadata (then
         every file is planned as usual)."""
-        from .scan import _route
+        from .scan import _route_many
 
-        keys: list[str] = []
         for f in self.pushed:
             if f.attribute[0] != "conv_id":
                 continue
             if isinstance(f, EqualTo) and isinstance(f.value, str):
-                keys.append(f.value)
+                keys = [f.value]
             elif isinstance(f, In) and all(
                 isinstance(v, str) for v in f.value
             ):
-                keys.extend(f.value)
+                keys = list(f.value)
             else:
                 continue
-            break  # one conjunct suffices; others only narrow further
-        if not keys:
-            return None, None
-        pids: set[int] = set()
-        shard_dirs = None
-        for k in keys:
-            p, shard_dirs = _route(self.warehouse, k)
-            if p is None:
-                return None, None  # no routing metadata -> plan everything
-            pids.update(p)
-        return pids, shard_dirs
+            # one conjunct suffices; others only narrow further
+            return _route_many(self.warehouse, keys) if keys else (None, None)
+        return None, None
 
     def partitions(self) -> Sequence[InputPartition]:
         """Task-level pruning for point lookups: a pushed conv_id
@@ -643,19 +607,18 @@ class TranscriptDataSource(DataSource):
         return self._ctypes_cache
 
     def schema(self) -> T.StructType:
-        from .decode import _column_order
+        from .decode import _column_order, schema_from_ctypes
 
         ctypes = self._ctypes()
-        cols = _column_order(ctypes)
         if self.options.get("columns"):
             keep = [c.strip() for c in self.options["columns"].split(",")]
             unknown = [c for c in keep if c not in ctypes]
             if unknown:
-                raise ValueError(f"unknown columns {unknown}; have {cols}")
-            cols = [c for c in _column_order(keep)]
-        return T.StructType(
-            [T.StructField(c, _CTYPE_TO_SPARK[ctypes[c]], False) for c in cols]
-        )
+                raise ValueError(
+                    f"unknown columns {unknown}; have {_column_order(ctypes)}"
+                )
+            ctypes = {c: ctypes[c] for c in keep}
+        return schema_from_ctypes(ctypes)
 
     def reader(self, schema: T.StructType) -> TranscriptReader:
         return TranscriptReader(

@@ -11,8 +11,9 @@ Dynamic schema: each block's meta carries ``ctype`` (str/i32/i64/ts/f64/
 bool), so decode rebuilds exactly the columns the table was encoded with —
 core six plus any extras — without a hardcoded column list. The output
 schema is derived from the blocks' own metadata (the Spark analogue of
-reading a Parquet footer) via one tiny driver-side aggregate over the
-pruned (column, meta) projection.
+reading a Parquet footer): thin readers turn blocks or manifests into
+per-chunk (column, ctype) signatures and ``ctypes_from_signatures`` makes
+the one schema decision over them.
 
 Arrow-native like the encode path: string columns are rebuilt directly
 from (utf8 buffer, offsets) with no per-row Python.
@@ -67,7 +68,7 @@ def _decode_one(r: dict, n: int) -> pa.Array:
     payload = bytes(r["payload"] or b"")
     aux = bytes(r["aux"] or b"")
     meta = json.loads(r["meta"])
-    ctype = meta.get("ctype") or _CORE_CTYPES.get(r["column"], "str")
+    ctype = resolve_ctype(r["column"], meta.get("ctype"))
     if ctype == "str":
         arr = arrow_ops.decode_string_column(r["codec"], payload, aux, meta, n)
         if pa.types.is_large_string(arr.type):
@@ -145,8 +146,7 @@ def _decode_group_filling(ctypes: dict):
 
 def schema_from_ctypes(ctypes: dict[str, str]):
     """(column -> ctype) map -> the decode output Spark schema (canonical
-    column order, non-nullable). The map typically comes from the
-    manifests' schema_sig (``datasource._ctypes_from_manifests``)."""
+    column order, non-nullable)."""
     from pyspark.sql import types as T
 
     to_spark = {
@@ -159,42 +159,102 @@ def schema_from_ctypes(ctypes: dict[str, str]):
     )
 
 
-def schema_from_blocks(blocks: DataFrame, requested: list[str] | None = None):
-    """Output Spark schema from the blocks' own metadata (footer analogue);
-    see ``ctypes_from_blocks`` for the derivation and its guarantees."""
-    return schema_from_ctypes(ctypes_from_blocks(blocks, requested))
+def resolve_ctype(column: str, ctype: str | None) -> str:
+    """A block's ctype. Legacy blocks (written before ctype landed) carry
+    none: core columns resolve to their known types, anything else to str."""
+    return ctype or _CORE_CTYPES.get(column, "str")
 
 
-def ctypes_from_blocks(
-    blocks: DataFrame,
+def refuse_colliding_chunks(collided: bool) -> None:
+    """The loud failure for blocks of one column sharing a chunk key. Only
+    the grouped decode can fuse them; the datasource decodes file by file,
+    so it never calls this."""
+    if collided:
+        raise ValueError(
+            "colliding chunk keys: multiple blocks for one column share a "
+            "(partition_id, chunk_idx[, epoch]) group — two encode jobs "
+            "appended into one blocks dir without distinct partition dirs; "
+            "decode refuses to fuse them"
+        )
+
+
+def ctypes_from_signatures(
+    sigs,
     requested: list[str] | None = None,
     merge: bool = False,
 ) -> dict[str, str]:
-    """(column -> ctype) map from the blocks' own metadata.
+    """The schema decision: (column -> ctype) from schema signatures.
 
-    One driver-side aggregate over the (column, meta) projection — parquet
-    column pruning keeps this scan narrow; result is O(columns).
+    ``sigs`` is an iterable of signatures, each an iterable of (column,
+    ctype) pairs whose ctype is None for legacy blocks — one per chunk from
+    the blocks readers, one per partition from the manifests' schema_sig.
+    Readers only produce signatures; every rule lives here:
 
-    ``requested`` columns missing from the blocks (e.g. a zone-map-pruned
-    scan that matched zero chunks) still get a typed field — core columns
-    from their known types, unknown extras as string — so downstream
-    filters resolve against an empty result instead of failing analysis.
-
-    ``merge=True`` is additive schema evolution: heterogeneous chunk
-    signatures UNION into one superset schema instead of raising, as long
-    as no column appears with two different ctypes (that still raises —
-    a type change is never guessable). Chunks missing a merged column
-    decode with the typed zero-defaults ``normalize_input`` uses.
+    - strict (the default): more than one distinct signature is a
+      heterogeneous warehouse (a second encode appending different extras,
+      legacy pre-ctype blocks mixed with new, a streaming schema change
+      across epochs) and fails LOUDLY instead of decoding every chunk
+      against one sampled chunk's schema (ADVICE r2).
+    - ``merge=True`` is additive schema evolution: the signatures UNION
+      into one superset schema. Chunks missing a merged column decode with
+      the typed zero-defaults ``normalize_input`` uses.
+    - a column with two ctypes always raises — a type change is never
+      guessable, so never merged.
+    - no signature at all (zero matching blocks, e.g. a zone-map-pruned
+      scan) gives a typed empty result: ``requested`` columns (default the
+      core six) get their known types, unknown extras string — so
+      downstream filters resolve instead of failing analysis.
     """
+    uniq = sorted(
+        {tuple(sorted((tuple(e) for e in s), key=lambda e: (e[0], e[1] or "")))
+         for s in sigs},
+        key=str,
+    )
+    if len(uniq) > 1 and not merge:
+        raise ValueError(
+            f"heterogeneous chunk schemas in warehouse ({len(uniq)} distinct "
+            "column/ctype sets) — decode refuses to guess; re-encode to one "
+            "schema (jobs/compact.py --merge-schemas unifies additive "
+            "evolution) or decode subsets. Signatures: "
+            + "; ".join(str(list(s)) for s in uniq)
+        )
+    ctypes: dict[str, str] = {}
+    for s in uniq:
+        for col, ct0 in s:
+            ct = resolve_ctype(col, ct0)
+            prev = ctypes.setdefault(col, ct)
+            if prev != ct:
+                raise ValueError(
+                    f"column '{col}' appears with two ctypes "
+                    f"({prev} vs {ct}) across chunks — a type CHANGE is "
+                    "never merged; re-encode the offending batch"
+                )
+    if not ctypes:
+        ctypes = {c: resolve_ctype(c, None)
+                  for c in requested or TRANSCRIPT_COLUMNS}
+    return ctypes
+
+
+def _data_blocks(blocks: DataFrame, columns: list[str] | None) -> DataFrame:
+    """The block rows a decode of ``columns`` reads: markers dropped, and
+    only the requested columns' rows when ``columns`` is given."""
     import pyspark.sql.functions as F
 
-    # one aggregation over the narrow (keys, column, ctype) projection:
-    # every chunk's sorted (column, ctype) signature, deduplicated. A
-    # heterogeneous warehouse (a second encode appending different extras,
-    # legacy pre-ctype blocks mixed with new, a streaming schema change
-    # across epochs) fails LOUDLY here instead of decoding other chunks
-    # against one sampled chunk's schema (ADVICE r2). Cost is O(chunks)
-    # metadata rows — parquet column pruning keeps the scan narrow.
+    blocks = blocks.filter(~F.col("column").startswith("__"))
+    if columns is not None:
+        blocks = blocks.filter(F.col("column").isin(list(columns)))
+    return blocks
+
+
+def _spark_signatures(blocks: DataFrame) -> list:
+    """Spark reader: every chunk's sorted (column, ctype) signature,
+    deduplicated, from one aggregation over the narrow (keys, column,
+    ctype) projection of the data blocks. Cost is O(chunks) metadata rows
+    — parquet column pruning keeps the scan narrow; the result is
+    O(distinct signatures). Serves every lineage the driver file reader
+    declines (in-memory encode output, semi-joined or filtered scans)."""
+    import pyspark.sql.functions as F
+
     per_chunk = (
         blocks.select(
             *group_keys(blocks), "column",
@@ -206,44 +266,14 @@ def ctypes_from_blocks(
             (F.count("*") > F.count_distinct("column")).alias("collided"),
         )
     )
-    sigs = per_chunk.select("sig", "collided").distinct().collect()
-    if any(r["collided"] for r in sigs):
-        raise ValueError(
-            "colliding chunk keys: multiple blocks for one column share a "
-            "(partition_id, chunk_idx[, epoch]) group — two encode jobs "
-            "appended into one blocks dir without distinct partition dirs; "
-            "decode refuses to fuse them"
-        )
-    if len(sigs) > 1 and not merge:
-        rendered = sorted(
-            str([(e["column"], e["ctype"]) for e in s["sig"]]) for s in sigs
-        )
-        raise ValueError(
-            f"heterogeneous chunk schemas in warehouse ({len(sigs)} distinct "
-            "column/ctype sets) — decode refuses to guess; re-encode to one "
-            "schema (jobs/compact.py --merge-schemas unifies additive "
-            "evolution) or decode subsets. Signatures: " + "; ".join(rendered)
-        )
-    ctypes: dict[str, str] = {}
-    for s in sigs:
-        for e in s["sig"]:
-            ct = e["ctype"] or _CORE_CTYPES.get(e["column"], "str")
-            prev = ctypes.setdefault(e["column"], ct)
-            if prev != ct:
-                raise ValueError(
-                    f"column '{e['column']}' appears with two ctypes "
-                    f"({prev} vs {ct}) across chunks — a type CHANGE is "
-                    "never merged; re-encode the offending batch"
-                )
-    if not ctypes:  # zero matching blocks: typed empty result
-        for c in requested or TRANSCRIPT_COLUMNS:
-            ctypes[c] = _CORE_CTYPES.get(c, "str")
-    return ctypes
+    rows = per_chunk.select("sig", "collided").distinct().collect()
+    refuse_colliding_chunks(any(r["collided"] for r in rows))
+    return [r["sig"] for r in rows]
 
 
-# the driver-side schema fast lane only engages on small metadata sets;
-# past these caps the distributed derivation (one narrow Spark aggregate)
-# is the right tool — opening 400k footers on the driver is the anti-move
+# the driver file reader only engages on small metadata sets; past these
+# caps the Spark reader (one narrow aggregate) is the right tool — opening
+# 400k footers on the driver is the anti-move
 _FAST_SCHEMA_MAX_FILES = 256
 _FAST_SCHEMA_MAX_ROWS = 1_000_000
 
@@ -251,9 +281,9 @@ _FAST_SCHEMA_MAX_ROWS = 1_000_000
 def _bare_parquet_files(df: DataFrame) -> list[str] | None:
     """Local parquet file paths when ``df`` is a BARE parquet scan — an
     analyzed plan that is exactly one LogicalRelation, no filters or
-    projections. Only such a plan is safe to mirror driver-side: any other
+    projections. Only such a plan is safe to read driver-side: any other
     lineage (pruning joins, in-memory encode output, unions) must keep the
-    distributed schema derivation. Returns None on any doubt."""
+    Spark reader. Returns None on any doubt."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() != "LogicalRelation":
@@ -271,35 +301,32 @@ def _bare_parquet_files(df: DataFrame) -> list[str] | None:
         return None
 
 
-def _ctypes_fast(
-    raw_blocks: DataFrame,
-    requested: list[str] | None,
-    merge: bool,
-) -> dict[str, str] | None:
-    """Driver-side mirror of :func:`ctypes_from_blocks` for bare parquet
-    scans: the schema-derivation aggregate is O(block-metadata rows), and
-    below the caps reading (keys, column, meta) straight from the parquet
-    footprint costs milliseconds where the Spark job costs a full
-    scheduling round-trip PER DECODE (measured ~0.45 s of the 0.83 s
-    decode phase at sf0.1 — r6 guide §1/§5: driver O(metadata) work).
+def _file_signatures(
+    blocks: DataFrame, requested: list[str] | None
+) -> list | None:
+    """Driver file reader: the same per-chunk signatures as
+    :func:`_spark_signatures`, read straight from the footprint of a bare
+    parquet scan. Below the caps reading (keys, column, meta) costs
+    milliseconds where the Spark job costs a full scheduling round-trip
+    PER DECODE (measured ~0.45 s of the 0.83 s decode phase at sf0.1 — r6
+    guide §1/§5: driver O(metadata) work).
 
-    Same signature semantics, same loud failures (identical messages) for
-    collisions / heterogeneous schemas / type changes. Returns None
-    whenever the fast lane cannot PROVE equivalence (non-bare plan, caps
-    exceeded, unreadable files) — the caller then runs the Spark path.
+    Applies the same marker and ``requested`` filters as
+    :func:`_data_blocks` and the same collision refusal. Returns None
+    whenever it cannot PROVE equivalence (non-bare plan, caps exceeded,
+    unreadable files) — the caller then runs the Spark reader.
     """
     import pyarrow.parquet as pq
 
-    cols_avail = set(raw_blocks.columns)
-    if not {"partition_id", "chunk_idx", "column", "meta"} <= cols_avail:
+    if not {"partition_id", "chunk_idx", "column", "meta"} <= set(blocks.columns):
         return None
-    files = _bare_parquet_files(raw_blocks)
+    files = _bare_parquet_files(blocks)
     if files is None or len(files) > _FAST_SCHEMA_MAX_FILES:
         return None
-    has_epoch = "epoch" in cols_avail
-    key_cols = ["partition_id", "chunk_idx"] + (["epoch"] if has_epoch else [])
-    want = key_cols + ["column", "meta"]
-    frames: list[dict] = []
+    key_cols = group_keys(blocks)
+    keep = None if requested is None else set(requested)
+    ctype_of: dict[str, str | None] = {}
+    per_chunk: dict[tuple, list[tuple[str, str | None]]] = {}
     total = 0
     try:
         for f in files:
@@ -308,81 +335,32 @@ def _ctypes_fast(
             if total > _FAST_SCHEMA_MAX_ROWS:
                 return None
             phys = set(pf.schema_arrow.names)
-            t = pf.read(columns=[c for c in want if c in phys])
-            d = {c: t.column(c).to_pylist() for c in t.schema.names}
+            t = pf.read(columns=[c for c in key_cols + ["column", "meta"]
+                                 if c in phys])
             # hive-partitioned keys (partition_id / epoch) live in the path
-            hive: dict[str, int] = {}
-            for seg in f.split("/")[:-1]:
-                if "=" in seg:
-                    k, v = seg.split("=", 1)
-                    if k in ("partition_id", "epoch"):
-                        hive[k] = int(v)
+            hive = dict(seg.split("=", 1) for seg in f.split("/")[:-1]
+                        if "=" in seg)
+            keys = []
             for k in key_cols:
-                if k not in d:
-                    if k not in hive:
-                        return None  # key neither physical nor in the path
-                    d[k] = [hive[k]] * t.num_rows
-            frames.append(d)
+                if k in phys:
+                    keys.append(t.column(k).to_pylist())
+                elif k in hive:
+                    keys.append([int(hive[k])] * t.num_rows)
+                else:
+                    return None  # key neither physical nor in the path
+            for key, col, m in zip(zip(*keys), t.column("column").to_pylist(),
+                                   t.column("meta").to_pylist()):
+                if col.startswith("__") or (keep is not None and col not in keep):
+                    continue
+                if m not in ctype_of:
+                    ctype_of[m] = json.loads(m).get("ctype")
+                per_chunk.setdefault(key, []).append((col, ctype_of[m]))
     except Exception:
         return None
-
-    keep = requested if requested is None else set(requested)
-    meta_ctype: dict[str, str | None] = {}
-    per_chunk: dict[tuple, list[tuple[str, str | None]]] = {}
-    collided: set[tuple] = set()
-    for d in frames:
-        for i, col in enumerate(d["column"]):
-            if col.startswith("__"):
-                continue
-            if keep is not None and col not in keep:
-                continue
-            m = d["meta"][i]
-            if m not in meta_ctype:
-                try:
-                    meta_ctype[m] = json.loads(m).get("ctype")
-                except Exception:
-                    return None
-            key = tuple(d[k][i] for k in key_cols)
-            per_chunk.setdefault(key, []).append((col, meta_ctype[m]))
-    sigs: list[tuple[tuple[str, str | None], ...]] = []
-    seen_sigs: set = set()
-    for key, entries in per_chunk.items():
-        if len(entries) > len({c for c, _ in entries}):
-            collided.add(key)
-        sig = tuple(sorted(entries, key=lambda e: (e[0], e[1] or "")))
-        if sig not in seen_sigs:
-            seen_sigs.add(sig)
-            sigs.append(sig)
-    if collided:
-        raise ValueError(
-            "colliding chunk keys: multiple blocks for one column share a "
-            "(partition_id, chunk_idx[, epoch]) group — two encode jobs "
-            "appended into one blocks dir without distinct partition dirs; "
-            "decode refuses to fuse them"
-        )
-    if len(sigs) > 1 and not merge:
-        rendered = sorted(str([(c, ct) for c, ct in s]) for s in sigs)
-        raise ValueError(
-            f"heterogeneous chunk schemas in warehouse ({len(sigs)} distinct "
-            "column/ctype sets) — decode refuses to guess; re-encode to one "
-            "schema (jobs/compact.py --merge-schemas unifies additive "
-            "evolution) or decode subsets. Signatures: " + "; ".join(rendered)
-        )
-    ctypes: dict[str, str] = {}
-    for s in sigs:
-        for col, ct0 in s:
-            ct = ct0 or _CORE_CTYPES.get(col, "str")
-            prev = ctypes.setdefault(col, ct)
-            if prev != ct:
-                raise ValueError(
-                    f"column '{col}' appears with two ctypes "
-                    f"({prev} vs {ct}) across chunks — a type CHANGE is "
-                    "never merged; re-encode the offending batch"
-                )
-    if not ctypes:  # zero matching blocks: typed empty result
-        for c in requested or TRANSCRIPT_COLUMNS:
-            ctypes[c] = _CORE_CTYPES.get(c, "str")
-    return ctypes
+    refuse_colliding_chunks(
+        any(len(e) > len({c for c, _ in e}) for e in per_chunk.values())
+    )
+    return list(per_chunk.values())
 
 
 def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
@@ -394,40 +372,31 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
     (analogue of ReadSchema pruning at a parquet scan, but over our own
     encoded blocks).
 
-    ``out_schema`` skips the metadata-derivation aggregate when the caller
-    already holds the warehouse schema (e.g. from the manifests'
-    ``schema_sig`` via ``datasource.infer_ctypes``, or across repeated
-    decodes of one warehouse) — the derivation is one extra Spark job per
-    call, pure overhead when the schema is already known. Callers passing
-    it take over the heterogeneity guarantee ``schema_from_blocks``
-    enforces (manifest signatures carry the same check).
+    The output schema is derived from the blocks' own metadata (footer
+    analogue): a bare parquet scan is read driver-side
+    (:func:`_file_signatures`, no Spark job), any other lineage through
+    one narrow aggregate (:func:`_spark_signatures`), and either way
+    :func:`ctypes_from_signatures` decides.
+
+    ``out_schema`` skips that derivation when the caller already holds the
+    warehouse schema (e.g. from the manifests' ``schema_sig`` via
+    ``datasource.ctypes_from_manifests``). Callers passing it take over the
+    heterogeneity guarantee the derivation enforces (manifest signatures
+    carry the same check).
 
     ``merge_schemas`` opts into additive schema evolution: heterogeneous
     chunk signatures decode against their UNION schema, with typed
-    zero-defaults for chunks written before a column existed (see
-    ``ctypes_from_blocks``). The strict default stays the loud failure —
-    evolution is a deliberate maintenance action (jobs/compact.py
-    --merge-schemas), not something a read should silently paper over.
+    zero-defaults for chunks written before a column existed. The strict
+    default stays the loud failure — evolution is a deliberate maintenance
+    action (jobs/compact.py --merge-schemas), not something a read should
+    silently paper over.
     """
-    import pyspark.sql.functions as F
-
-    raw = blocks
-    blocks = blocks.filter(~F.col("column").startswith("__"))  # markers
-    if columns is not None:
-        blocks = blocks.filter(F.col("column").isin(list(columns)))
-    if merge_schemas:
-        ctypes = _ctypes_fast(raw, columns, merge=True)
-        if ctypes is None:
-            ctypes = ctypes_from_blocks(blocks, requested=columns, merge=True)
-        return blocks.groupBy(*group_keys(blocks)).applyInArrow(
-            _decode_group_filling(ctypes), schema_from_ctypes(ctypes)
-        )
-    if out_schema is None:
-        ctypes = _ctypes_fast(raw, columns, merge=False)
-        out_schema = (
-            schema_from_ctypes(ctypes) if ctypes is not None
-            else schema_from_blocks(blocks, requested=columns)
-        )
-    return blocks.groupBy(*group_keys(blocks)).applyInArrow(
-        _decode_group, out_schema
-    )
+    data = _data_blocks(blocks, columns)
+    if merge_schemas or out_schema is None:
+        sigs = _file_signatures(blocks, columns)
+        if sigs is None:
+            sigs = _spark_signatures(data)
+        ctypes = ctypes_from_signatures(sigs, columns, merge_schemas)
+        out_schema = schema_from_ctypes(ctypes)
+    fn = _decode_group_filling(ctypes) if merge_schemas else _decode_group
+    return data.groupBy(*group_keys(data)).applyInArrow(fn, out_schema)

@@ -146,9 +146,9 @@ def build_manifests(
                 ).otherwise(0)
             ).alias("_turn_stat_nulls"),
             # per-partition (column -> ctype) signature: O(partitions)
-            # read planning (datasource._ctypes_from_manifests) instead of
+            # read planning (datasource.ctypes_from_manifests) instead of
             # the full blocks-metadata pull; null ctype entries are legacy
-            # blocks whose type the reader resolves from _CORE_CTYPES
+            # blocks whose type decode.resolve_ctype supplies
             F.to_json(
                 F.map_from_entries(
                     F.array_sort(

@@ -152,9 +152,11 @@ def _routed_rewrite_locked(
     from .sparkhash import pkey_for
 
     conv_ids = sorted(set(conv_ids))
-    # ONE manifests read routes the whole batch (a per-id loop would pay
-    # K full metadata reads on a bulk GDPR delete)
-    p_list, shard_dirs = _route_many(wh, conv_ids)
+    # ONE driver-side manifests read (no Spark distinct job, r6) plans the
+    # rewrite and routes the whole batch (a per-id loop would pay K full
+    # metadata reads on a bulk GDPR delete)
+    meta = _routing_meta(wh)
+    p_list, shard_dirs = _route_many(meta, conv_ids)
     if p_list is None:
         raise RewriteError(
             "warehouse has no manifests routing metadata "
@@ -163,7 +165,6 @@ def _routed_rewrite_locked(
         )
     pids: set = set(p_list)
 
-    meta = _routing_meta(wh)  # driver pyarrow: no Spark distinct job (r6)
     if meta["has_epoch"]:
         raise RewriteError(
             "streaming (epoch-partitioned) warehouses cannot be rewritten "

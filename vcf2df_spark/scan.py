@@ -136,33 +136,21 @@ def _route(warehouse: str, conv_id: str):
     return _route_many(warehouse, [conv_id])
 
 
-def _route_many(warehouse: str, conv_ids):
+def _route_many(source, conv_ids):
     """Batch routing: (sorted partition ids or None, shard_dirs or None)
     for ALL of ``conv_ids`` from ONE manifests read. A per-id `_route`
     loop re-reads the manifests table per key — at ~400k manifest rows a
     bulk GDPR delete of K conversations would pay K full metadata reads;
-    this pays one read plus K hash computations."""
-    import pyarrow.dataset as pads
+    this pays one read plus K hash computations.
 
+    ``source`` is a warehouse path, or the :func:`_routing_meta` of one
+    when the caller plans more than routing from the same read (the
+    routed rewrite)."""
     from .encode import TURNS_PER_SPLIT
     from .sparkhash import pkey_for
 
-    try:
-        d = pads.dataset(
-            f"{warehouse}/manifests", format="parquet", partitioning="hive"
-        )
-        names = d.schema.names
-        if "conv_min" not in names or "conv_max" not in names:
-            return None, None
-        cols = ["partition_id", "conv_min", "conv_max"] + [
-            c for c in ("num_partitions", "turn_max", "shard_dirs")
-            if c in names
-        ]
-        t = d.to_table(
-            columns=cols, filter=pads.field("status") == "committed"
-        ).to_pylist()
-    except (FileNotFoundError, OSError):
-        return None, None
+    meta = source if isinstance(source, dict) else _routing_meta(source)
+    t = meta["committed"]
     if not t:
         return None, None
 
@@ -193,15 +181,20 @@ def _route_many(warehouse: str, conv_ids):
 
 
 def _routing_meta(warehouse: str) -> dict:
-    """Rewrite-planning metadata from ONE driver-side manifests read:
-    ``mods`` (the set of num_partitions values across ALL manifest rows,
-    committed or not — mirroring the rewrite's ambiguity check), ``turn_max``
-    (max persisted turn_max, None when any row lacks it), ``shard_dirs``,
-    and ``has_epoch``. Replaces a Spark distinct+collect job per rewrite
-    with an O(partitions) pyarrow metadata read."""
+    """Routing and rewrite-planning metadata from ONE driver-side
+    manifests read (pyarrow, O(partitions), no Spark job). Two views of
+    the same rows:
+
+    - ``committed``: the committed rows key routing uses; empty without
+      conv ranges on record (no routing metadata).
+    - ``mods`` (num_partitions values) and ``turn_max`` (max persisted
+      turn_max, None when any row lacks it) over ALL rows, committed or
+      not — mirroring the rewrite's ambiguity check.
+
+    plus ``has_epoch`` (a streaming warehouse)."""
     import pyarrow.dataset as pads
 
-    out = {"mods": set(), "turn_max": None, "shard_dirs": None,
+    out = {"committed": [], "mods": set(), "turn_max": None,
            "has_epoch": False}
     try:
         d = pads.dataset(
@@ -209,19 +202,20 @@ def _routing_meta(warehouse: str) -> dict:
         )
         names = d.schema.names
         out["has_epoch"] = "epoch" in names
-        cols = [c for c in ("num_partitions", "turn_max", "shard_dirs")
+        cols = [c for c in ("partition_id", "status", "conv_min", "conv_max",
+                            "num_partitions", "turn_max", "shard_dirs")
                 if c in names]
         rows = d.to_table(columns=cols).to_pylist() if cols else []
     except (FileNotFoundError, OSError):
         return out
     if not rows:
         return out
+    if "conv_min" in names and "conv_max" in names:
+        out["committed"] = [r for r in rows if r.get("status") == "committed"]
     out["mods"] = {r.get("num_partitions") for r in rows}
     tm = [r.get("turn_max") for r in rows]
     if None not in tm:
         out["turn_max"] = max(tm)
-    shard_vals = {r.get("shard_dirs") for r in rows} - {None}
-    out["shard_dirs"] = shard_vals.pop() if len(shard_vals) == 1 else None
     return out
 
 
@@ -250,7 +244,7 @@ def fetch_conversation(spark: SparkSession, warehouse: str, conv_id: str):
     import pyarrow.dataset as pads
 
     from . import arrow_ops, codecs
-    from .decode import _CORE_CTYPES, _column_order
+    from .decode import _column_order, resolve_ctype
 
     root = f"{warehouse}/blocks"
 
@@ -365,7 +359,7 @@ def fetch_conversation(spark: SparkSession, warehouse: str, conv_id: str):
                 continue
             r = cols[col]
             meta = json.loads(r["meta"])
-            ctype = meta.get("ctype") or _CORE_CTYPES.get(col, "str")
+            ctype = resolve_ctype(col, meta.get("ctype"))
             if ctype == "str":
                 out[col] = _decode_str_row(r, n, lo, hi).to_pylist()
                 continue
