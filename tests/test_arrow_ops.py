@@ -99,13 +99,6 @@ def test_decode_string_rows_fsst_random_access(xs, data):
     hi = data.draw(st.integers(min_value=lo, max_value=n))
     # force-encode with fsst regardless of selector choice
     buf, lengths = arrow_ops.string_buf_lengths(arr)
-    symbols = fsst_mod.train(buf)
-    segs = [fsst_mod.encode_buffer(buf[i:i+fsst_mod.SEGMENT_BYTES], symbols)
-            for i in range(0, len(buf), fsst_mod.SEGMENT_BYTES)] or [b""]
-    payload = b"".join(segs)
-    from vcf2df_spark.codecs import strutil
-    table = strutil.pack_str_list(symbols)
-    lp, lm = arrow_ops._pack_lengths(lengths)
-    meta = {"table_bytes": len(table), **lm, "seg_code_lens": [len(s) for s in segs]}
-    out = arrow_ops.decode_string_rows("fsst", payload, table + lp, meta, n, lo, hi)
+    payload, aux, meta = fsst_mod.encode_from_buf(buf, lengths)
+    out = arrow_ops.decode_string_rows("fsst", payload, aux, meta, n, lo, hi)
     assert out.to_pylist() == xs[lo:hi]

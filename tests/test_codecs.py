@@ -3,17 +3,27 @@
 Generalizes the reference's pure-function golden tests
 (converter/schema_test.go:10-62) and write->independent-read round trip
 (converter/convert_test.go:14-50) to every codec with hand-built edge cases.
+
+Numeric and boolean codecs go through the ``codecs`` registry. String
+formats go through the one string path: the codec module's buffer-level
+encoder, then ``arrow_ops.decode_string_column``.
 """
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from vcf2df_spark import codecs
-from vcf2df_spark.codecs import bitpack, fordelta, fsst
+from vcf2df_spark import arrow_ops, codecs
+from vcf2df_spark.codecs import (
+    bitpack, dictionary, fordelta, fsst, raw, rle, strnum, zstdhi,
+)
 
 
 INT_CASES = {
@@ -42,6 +52,32 @@ STR_CASES = {
 }
 
 
+def _str_block(codec: str, vals) -> tuple[bytes, bytes, dict]:
+    """Force-encode ``vals`` with one string format's own encoder."""
+    arr = pa.array(list(vals), type=pa.string())
+    if codec in ("dict", "rle"):
+        mod = dictionary if codec == "dict" else rle
+        return mod.encode_from_codes(
+            *dictionary.canonical_codes(pc.dictionary_encode(arr))
+        )
+    buf, lengths = arrow_ops.string_buf_lengths(arr)
+    if codec == "strnum":
+        return strnum.encode_from_buf(buf, lengths, strnum.analyze(buf, lengths))
+    mod = {"raw": raw, "fsst": fsst, "zstdhi": zstdhi}[codec]
+    return mod.encode_from_buf(buf, lengths)
+
+
+def _str_roundtrip(codec: str, vals) -> list:
+    payload, aux, meta = _str_block(codec, vals)
+    return arrow_ops.decode_string_column(
+        codec, payload, aux, meta, len(vals)
+    ).to_pylist()
+
+
+def _size(block) -> int:
+    return len(block[0]) + len(block[1])
+
+
 @pytest.mark.parametrize("name", list(INT_CASES))
 @pytest.mark.parametrize("codec", ["bitpack", "fordelta", "raw"])
 def test_int_roundtrip(codec, name):
@@ -59,10 +95,7 @@ def test_int_roundtrip(codec, name):
 @pytest.mark.parametrize("codec", ["dict", "rle", "fsst", "raw"])
 def test_str_roundtrip(codec, name):
     vals = STR_CASES[name]
-    payload, aux, meta = codecs.encode(codec, vals)
-    out = codecs.decode(codec, payload, aux, meta, len(vals))
-    assert out.dtype == object
-    assert list(out) == list(vals)
+    assert _str_roundtrip(codec, vals) == list(vals)
 
 
 def test_bitpack_width_zero():
@@ -79,17 +112,14 @@ def test_fordelta_zero_delta():
 
 def test_dict_compresses_low_cardinality():
     vals = np.array(["user", "assistant", "tool", "user"] * 1000, dtype=object)
-    payload, aux, meta = codecs.encode("dict", vals)
-    raw_p, raw_a, _ = codecs.encode("raw", vals)
-    assert len(payload) + len(aux) < (len(raw_p) + len(raw_a)) / 4
+    assert _size(_str_block("dict", vals)) < _size(_str_block("raw", vals)) / 4
 
 
 def test_rle_compresses_runs():
     vals = np.repeat(np.array([f"conv-{i:04d}" for i in range(10)], dtype=object), 500)
-    payload, aux, meta = codecs.encode("rle", vals)
-    assert meta["n_runs"] == 10
-    raw_p, raw_a, _ = codecs.encode("raw", vals)
-    assert len(payload) + len(aux) < (len(raw_p) + len(raw_a)) / 20
+    block = _str_block("rle", vals)
+    assert block[2]["n_runs"] == 10
+    assert _size(block) < _size(_str_block("raw", vals)) / 20
 
 
 def test_fsst_compresses_repetitive_text():
@@ -98,17 +128,13 @@ def test_fsst_compresses_repetitive_text():
          for i in range(500)],
         dtype=object,
     )
-    payload, aux, meta = codecs.encode("fsst", vals)
-    raw_p, _, _ = codecs.encode("raw", vals)
-    assert len(payload) + len(aux) < len(raw_p) / 2
+    assert _size(_str_block("fsst", vals)) < len(_str_block("raw", vals)[0]) / 2
 
 
 def test_fsst_escape_byte_255_in_data():
     # literal 0xFF bytes in utf-8 multi-byte chars stress the escape path
     vals = np.array(["￿￿", "ÿÿÿ", "a￿b"], dtype=object)
-    payload, aux, meta = codecs.encode("fsst", vals)
-    out = codecs.decode("fsst", payload, aux, meta, 3)
-    assert list(out) == list(vals)
+    assert _str_roundtrip("fsst", vals) == list(vals)
 
 
 def test_fsst_buffer_roundtrip_adversarial():
@@ -129,9 +155,7 @@ def test_fordelta_property(xs):
 @settings(max_examples=50, deadline=None)
 @given(st.lists(st.text(max_size=40), max_size=100))
 def test_fsst_property(xs):
-    vals = np.array(xs, dtype=object)
-    payload, aux, meta = fsst.encode(vals)
-    assert list(fsst.decode(payload, aux, meta, len(vals))) == xs
+    assert _str_roundtrip("fsst", xs) == xs
 
 
 @settings(max_examples=50, deadline=None)
@@ -163,9 +187,7 @@ STRNUM_CASES = {
 @pytest.mark.parametrize("name", list(STRNUM_CASES))
 def test_strnum_roundtrip(name):
     vals = STRNUM_CASES[name]
-    payload, aux, meta = codecs.encode("strnum", vals)
-    out = codecs.decode("strnum", payload, aux, meta, len(vals))
-    assert list(out) == list(vals)
+    assert _str_roundtrip("strnum", vals) == list(vals)
 
 
 @pytest.mark.parametrize(
@@ -178,10 +200,7 @@ def test_strnum_roundtrip(name):
     ],
 )
 def test_strnum_rejects_nonconforming(vals):
-    from vcf2df_spark.codecs import strnum, strutil
-
-    arr = np.array(vals, dtype=object)
-    buf, lengths = strutil.strings_to_bytes_and_lengths(arr)
+    buf, lengths = arrow_ops.string_buf_lengths(pa.array(vals, type=pa.string()))
     assert strnum.analyze(buf, lengths) is None
 
 
@@ -189,17 +208,13 @@ def test_strnum_beats_dict_on_sorted_ids():
     vals = np.repeat(
         np.array([f"conv-{i:08d}" for i in range(500)], dtype=object), 10
     )
-    payload, aux, meta = codecs.encode("strnum", vals)
-    dp, da, _ = codecs.encode("dict", vals)
-    assert len(payload) + len(aux) < (len(dp) + len(da)) / 4
+    assert _size(_str_block("strnum", vals)) < _size(_str_block("dict", vals)) / 4
 
 
 @pytest.mark.parametrize("name", list(STR_CASES))
 def test_zstdhi_roundtrip(name):
     vals = STR_CASES[name]
-    payload, aux, meta = codecs.encode("zstdhi", vals)
-    out = codecs.decode("zstdhi", payload, aux, meta, len(vals))
-    assert list(out) == list(vals)
+    assert _str_roundtrip("zstdhi", vals) == list(vals)
 
 
 # --- float64 codecs (fshuffle, fdict) -----------------------------------------
@@ -276,19 +291,16 @@ def test_boolpack_is_one_bit_per_value():
 
 
 def test_zstdhi_multiframe_roundtrip_and_range():
-    from vcf2df_spark import arrow_ops
-    from vcf2df_spark.codecs import zstdhi
-
     rng = np.random.default_rng(5)
     # > 2 segments of utf8
     vals = np.array(
         ["row-%06d " % i + "x" * int(rng.integers(20, 120)) for i in range(40000)],
         dtype=object,
     )
-    payload, aux, meta = codecs.encode("zstdhi", vals)
+    payload, aux, meta = _str_block("zstdhi", vals)
     assert len(meta["seg_code_lens"]) >= 3  # actually multi-frame
-    out = codecs.decode("zstdhi", payload, aux, meta, len(vals))
-    assert np.array_equal(vals, out)
+    out = arrow_ops.decode_string_column("zstdhi", payload, aux, meta, len(vals))
+    assert out.to_pylist() == list(vals)
 
     # random access decodes only covering frames, matches the full decode
     for lo, hi in ((0, 5), (17000, 17040), (39990, 40000), (100, 100)):
@@ -302,13 +314,9 @@ def test_zstdhi_legacy_single_frame_range():
     """Pre-framing blocks (meta without seg_code_lens) must random-access
     correctly past the 1MB boundary: the legacy buffer is based at byte 0,
     not at a frame index (regression: shifted slice returned wrong rows)."""
-    from vcf2df_spark import arrow_ops
-    from vcf2df_spark.codecs import zstdhi
-    from vcf2df_spark.codecs import bitpack, strutil
-
     vals = np.array(["row-%06d-" % i + "y" * 60 for i in range(30000)],
                     dtype=object)
-    buf, lengths = strutil.strings_to_bytes_and_lengths(vals)
+    buf, lengths = arrow_ops.string_buf_lengths(pa.array(vals, type=pa.string()))
     # legacy layout: one frame over the whole buffer, no seg_code_lens
     payload = bytes(zstdhi._CODEC.compress(buf))
     lmin = int(lengths.min())
@@ -317,10 +325,50 @@ def test_zstdhi_legacy_single_frame_range():
     meta = {"lwidth": lwidth, "lmin": lmin, "raw_len": len(buf),
             "level": zstdhi.LEVEL}
 
-    assert np.array_equal(codecs.decode("zstdhi", payload, aux, meta,
-                                        len(vals)), vals)
+    out = arrow_ops.decode_string_column("zstdhi", payload, aux, meta, len(vals))
+    assert out.to_pylist() == list(vals)
     for lo, hi in ((0, 3), (20000, 20005), (29995, 30000)):
         got = arrow_ops.decode_string_rows(
             "zstdhi", payload, aux, meta, len(vals), lo, hi
         ).to_pylist()
         assert got == list(vals[lo:hi]), (lo, hi)
+
+
+# --- dict / rle with the zstd-12 wrap of the code stream ------------------------
+
+
+def test_z12_wrapped_dict_and_rle_roundtrip():
+    """A 50-label Zipf column selects ``dict`` with the zstd-12 wrap
+    (meta ``z``); short runs of the same labels select a wrapped ``rle``.
+    Both decode through the chunk decoder and through row-range access;
+    the numeric registry refuses them with a pointer to the string path."""
+    from vcf2df_spark.decode import decode_chunk_arrow
+    from vcf2df_spark.encode import encode_chunk_arrow
+
+    n = 65536
+    labels = np.array([f"label-{chr(97 + i // 26)}{chr(97 + i % 26)}"
+                       for i in range(50)])
+    rng = np.random.default_rng(42)
+    z = rng.zipf(3.0, size=8 * n)
+    runs = np.repeat(rng.zipf(3.0, size=n) % 50, rng.integers(1, 11, n))[:n]
+    chunk = pa.table({"zipf": pa.array(labels[z[z <= 50][:n] - 1]),
+                      "runs": pa.array(labels[runs])})
+    rows = encode_chunk_arrow(chunk, 0, 0)
+    by_col = {r["column"]: r for r in rows}
+    assert {c: r["codec"] for c, r in by_col.items()} == {"zipf": "dict",
+                                                          "runs": "rle"}
+    for r in rows:
+        assert "z" in json.loads(r["meta"])
+
+    decoded = decode_chunk_arrow(rows)
+    for col in by_col:
+        assert decoded.column(col).equals(chunk.column(col))
+    lo, hi = 30001, 30417
+    for col, r in by_col.items():
+        got = arrow_ops.decode_string_rows(
+            r["codec"], r["payload"], r["aux"], json.loads(r["meta"]), n, lo, hi
+        )
+        assert got.to_pylist() == chunk.column(col).to_pylist()[lo:hi]
+        with pytest.raises(ValueError, match="arrow_ops.decode_string_column"):
+            codecs.decode(r["codec"], r["payload"], r["aux"],
+                          json.loads(r["meta"]), n)

@@ -158,6 +158,13 @@ def test_fetch_conversation_with_extras(spark, tmp_path):
     )
     assert (got["flagged"].to_numpy() == want["flagged"].to_numpy()).all()
     assert (got["model"].to_numpy() == want["model"].to_numpy()).all()
+    assert {c: str(t) for c, t in got.dtypes.items()} == {
+        "conv_id": "object", "turn_idx": "int32", "role": "object",
+        "text": "object", "tool": "object", "ts": "datetime64[ns]",
+        "flagged": "bool", "model": "object", "score": "float64",
+        "tags": "object", "tokens_out": "int64",
+    }
+    assert (got["ts"].to_numpy() == want["ts"].to_numpy()).all()
 
 
 def test_decode_rejects_heterogeneous_warehouse(spark, tmp_path):

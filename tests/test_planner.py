@@ -2,67 +2,94 @@
 
 Pure-function golden style mirrors the reference's schema-derivation test
 (converter/schema_test.go:10-62): fixed inputs -> exact expected plan.
+Integer columns go through ``planner.candidate_codecs``/``encode_best``;
+string columns through ``arrow_ops.encode_string_column``, the one string
+selector.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
-from vcf2df_spark import planner
+from vcf2df_spark import arrow_ops, planner
+
+WORDS = np.array(["alpha", "beta", "gamma", "delta", "status", "completed",
+                  "result", "tool", "call", "user"])
+
+
+def _string_choice(vals) -> tuple[str, dict]:
+    codec, _, _, meta, _ = arrow_ops.encode_string_column(
+        pa.array(list(vals), type=pa.string())
+    )
+    return codec, meta
 
 
 def test_choose_low_cardinality_strings_dict():
-    stats = planner.ColumnStats(n=10000, ndv=4, mean_run_len=1.2, is_int=False)
-    assert planner.choose_codec(stats) == "dict"
+    rng = np.random.default_rng(0)
+    roles = np.array(["user", "assistant", "tool", "system"])
+    codec, meta = _string_choice(roles[rng.integers(0, 4, 10000)])
+    assert (codec, meta["ndv"]) == ("dict", 4)
 
 
 def test_choose_long_runs_rle():
-    stats = planner.ColumnStats(n=10000, ndv=800, mean_run_len=12.5, is_int=False)
-    assert planner.choose_codec(stats) == "rle"
+    rng = np.random.default_rng(0)
+    labels = np.array([f"conv-{chr(97 + i % 26)}{i}" for i in range(800)])
+    runs = np.repeat(rng.integers(0, 800, 1000), rng.integers(8, 18, 1000))
+    codec, meta = _string_choice(labels[runs][:10000])
+    assert codec == "rle" and meta["n_runs"] < 1000
 
 
 def test_choose_high_entropy_text_fsst():
-    stats = planner.ColumnStats(n=10000, ndv=9900, mean_run_len=1.0,
-                                is_int=False, avg_len=120.0)
-    assert planner.choose_codec(stats) == "fsst"
+    rng = np.random.default_rng(0)
+    text = [" ".join(WORDS[rng.integers(0, 10, 8)]) + f" {i}" for i in range(2000)]
+    assert _string_choice(text)[0] == "fsst"
 
 
 def test_choose_small_ints_bitpack():
-    stats = planner.ColumnStats(n=10000, ndv=200, mean_run_len=1.0, is_int=True,
-                                int_min=0, int_max=199, sorted_frac=0.3)
-    assert planner.choose_codec(stats) == "bitpack"
+    vals = np.random.default_rng(0).integers(0, 200, 10000)
+    assert planner.candidate_codecs(vals) == ["bitpack"]
+    assert planner.encode_best(vals)[0] == "bitpack"
 
 
 def test_choose_monotone_ts_fordelta():
-    stats = planner.ColumnStats(n=10000, ndv=10000, mean_run_len=1.0, is_int=True,
-                                int_min=0, int_max=10**15, sorted_frac=0.97)
-    assert planner.choose_codec(stats) == "fordelta"
+    vals = np.cumsum(np.random.default_rng(0).integers(0, 10**6, 10000))
+    assert planner.candidate_codecs(vals) == ["bitpack", "fordelta"]
+    assert planner.encode_best(vals)[0] == "fordelta"
 
 
 def test_empty_column_raw():
-    assert planner.choose_codec(planner.ColumnStats(0, 0, 0.0, False)) == "raw"
+    assert _string_choice([])[0] == "raw"
+    empty = np.array([], dtype=np.int64)
+    assert planner.candidate_codecs(empty) == []
+    assert planner.encode_best(empty)[0] == "raw"
 
 
-def test_column_stats_runs_and_ndv():
-    vals = np.array(["a"] * 10 + ["b"] * 10 + ["a"] * 10, dtype=object)
-    s = planner.column_stats(vals)
-    assert (s.n, s.ndv) == (30, 2)
-    assert s.mean_run_len == 10.0
+def test_string_run_count_in_rle_meta():
+    vals = np.repeat(
+        np.array(["assistant-reply", "user-question", "assistant-reply"]), 400
+    )
+    codec, meta = _string_choice(vals)
+    assert (codec, meta["n_runs"]) == ("rle", 3)
 
 
-def test_column_stats_sorted_frac():
+def test_candidate_codecs_sorted_frac():
+    # 8 of 9 deltas non-negative: near-monotone, fordelta is tried
     vals = np.array([1, 2, 3, 4, 5, 4, 6, 7, 8, 9], dtype=np.int64)
-    s = planner.column_stats(vals)
-    assert s.is_int and 0.8 <= s.sorted_frac < 1.0
+    assert planner.candidate_codecs(vals) == ["bitpack", "fordelta"]
+    # 4 of 9: not monotone enough
+    vals = np.array([1, 0, 2, 1, 3, 2, 4, 3, 5, 4], dtype=np.int64)
+    assert planner.candidate_codecs(vals) == ["bitpack"]
 
 
 def test_encode_best_never_loses_to_raw():
     # adversarial: all-distinct long random strings — fsst may not win; the
     # measured fallback must cap encoded size at raw
     rng = np.random.default_rng(0)
-    vals = np.array(
-        ["".join(map(chr, rng.integers(0x4E00, 0x9FFF, 50))) for _ in range(200)],
-        dtype=object,
+    vals = [
+        "".join(map(chr, rng.integers(0x4E00, 0x9FFF, 50))) for _ in range(200)
+    ]
+    codec, payload, aux, meta, raw_bytes = arrow_ops.encode_string_column(
+        pa.array(vals, type=pa.string())
     )
-    codec, payload, aux, meta, raw_bytes = planner.encode_best(vals)
     assert len(payload) + len(aux) <= raw_bytes

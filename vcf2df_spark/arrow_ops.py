@@ -1,4 +1,4 @@
-"""Arrow-native column encode/decode — the engine's hot data plane.
+"""Arrow-native string column encode/decode — the engine's hot data plane.
 
 Strings never materialize as Python objects here: the utf8 payload and
 lengths come straight from the Arrow buffers, dictionary encoding is
@@ -8,9 +8,13 @@ keeps the per-byte cost compute-bound (codec kernels) instead of
 bandwidth-bound (object churn) — the property that lets encode scale
 with cores on a real cluster.
 
-Block payload/aux/meta formats are identical to the numpy codec layer
-(``codecs/``), so blocks are interchangeable between both paths and the
-kernel unit tests cover this layer's formats too.
+This module is the only string entry. It holds the Arrow adapters
+(:func:`string_buf_lengths`, :func:`strings_from_buf`), the measured
+selector (:func:`encode_string_column`) and the one decode entry
+(:func:`decode_string_column`, :func:`decode_string_rows`). Each block
+format's layout lives only in its codec module (``codecs/raw.py``,
+``dictionary.py``, ``rle.py``, ``fsst.py``, ``strnum.py``,
+``zstdhi.py``), behind a buffer-level encoder and ``decode_to_buf``.
 """
 
 from __future__ import annotations
@@ -20,10 +24,12 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from . import planner
-from .codecs import bitpack, fsst, strnum, strutil, zstdhi
+from .codecs import dictionary, fsst, raw, rle, strnum, zstdhi
 from .planner import _disk_proxy
 
-# ---------------------------------------------------------------- strings
+_FORMATS = {m.NAME: m for m in (raw, dictionary, rle, fsst, strnum, zstdhi)}
+
+# ---------------------------------------------------------------- adapters
 
 
 def string_buf_lengths(arr: pa.Array) -> tuple[bytes, np.ndarray]:
@@ -61,46 +67,23 @@ def strings_from_buf(buf: bytes, lengths: np.ndarray) -> pa.Array:
     )
 
 
-def _pack_lengths(lengths: np.ndarray) -> tuple[bytes, dict]:
-    if len(lengths) == 0:
-        return b"", {"lwidth": 0, "lmin": 0}
-    lmin = int(lengths.min())
-    lwidth = bitpack._bit_width(int(lengths.max()) - lmin)
-    return (
-        bitpack.pack_u64((lengths - lmin).astype(np.uint64), lwidth),
-        {"lwidth": lwidth, "lmin": lmin},
-    )
-
-
-def _unpack_lengths(aux: bytes, meta: dict, n: int) -> np.ndarray:
-    return bitpack.unpack_u64(aux, meta["lwidth"], n).astype(np.int64) + meta["lmin"]
-
+# ---------------------------------------------------------------- selector
 
 _ZSTDHI_TRIAL_BYTES = 1 << 18
 
-_Z12 = pa.Codec("zstd", compression_level=12)
-_ZDEC = pa.Codec("zstd")
 
+def _maybe_z12(cand: tuple) -> tuple[tuple, int]:
+    """Measured choice between a dict/rle code stream and its zstd-12 wrap.
 
-def _maybe_z12(codec: str, payload: bytes, aux: bytes, meta: dict):
-    """Measured choice between the raw payload and its zstd-12 wrap.
-
-    Meta key ``z`` records the unwrapped length (the decompress size hint);
-    its presence tells decode to unwrap first. The sink's page zstd leaves
-    an already-compressed payload untouched, so the proxy comparison is
-    exactly the on-disk outcome."""
+    The sink's page zstd leaves an already-compressed payload untouched,
+    so the proxy comparison is exactly the on-disk outcome."""
+    codec, payload, aux, meta = cand
     size = _disk_proxy(payload, aux)
-    z = bytes(_Z12.compress(payload))
+    z, zmeta = dictionary.wrap_z12(payload, meta)
     zsize = _disk_proxy(z, aux)
     if zsize < size:
-        return (codec, z, aux, {**meta, "z": len(payload)}), zsize
-    return (codec, payload, aux, meta), size
-
-
-def _unz12(payload: bytes, meta: dict) -> bytes:
-    if "z" in meta:
-        return _ZDEC.decompress(payload, meta["z"]).to_pybytes()
-    return payload
+        return (codec, z, aux, zmeta), zsize
+    return cand, size
 
 
 def _zstdhi_sample_wins(buf: bytes) -> bool:
@@ -135,72 +118,40 @@ def encode_string_column(
         arr = arr.combine_chunks()
     n = len(arr)
     buf, lengths = string_buf_lengths(arr)
-    lpack, lmeta = _pack_lengths(lengths)
-    raw = ("raw", buf, lpack, {"kind": "str", **lmeta})
-    raw_bytes = len(buf) + len(lpack)
+    best = ("raw", *raw.encode_from_buf(buf, lengths))
+    raw_bytes = len(best[1]) + len(best[2])
     if n == 0:
-        return (*raw, raw_bytes)
-    best, best_size = raw, _disk_proxy(buf, lpack)
+        return (*best, raw_bytes)
+    best_size = _disk_proxy(best[1], best[2])
+
+    def consider(cand: tuple, size: int | None = None) -> None:
+        nonlocal best, best_size
+        if size is None:
+            size = _disk_proxy(cand[1], cand[2])
+        if size < best_size:
+            best, best_size = cand, size
 
     # structured-id candidate: uniform length + constant prefix + digit
     # suffix (cheap uniform-length pre-check gates the matrix analysis)
-    if len(lengths) and lengths[0] == lengths.max() == lengths.min():
+    if lengths[0] == lengths.max() == lengths.min():
         shape = strnum.analyze(buf, lengths)
         if shape is not None:
-            payload, aux, meta = strnum.encode_from_buf(buf, lengths, shape)
-            size = _disk_proxy(payload, aux)
-            if size < best_size:
-                best, best_size = ("strnum", payload, aux, meta), size
+            consider(("strnum", *strnum.encode_from_buf(buf, lengths, shape)))
 
     denc = pc.dictionary_encode(arr)
-    table = denc.dictionary
-    ndv = len(table)
-    codes = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-
+    ndv = len(denc.dictionary)
     if 0 < ndv <= 4096 and ndv <= max(n / 4, 1):
-        # canonical (sorted) dictionary order. pyarrow assigns codes by
-        # FIRST OCCURRENCE, which differs chunk to chunk — the sink's page
-        # zstd then compresses adjacent chunks' packed-code payloads with
-        # ONE entropy table over a MIXTURE of distributions (measured +6%
-        # on role vs per-blob compression). Sorting aligns every chunk's
-        # code assignment, so cross-chunk payload bytes share a single
-        # distribution; this closes the role-column gap vs parquet's
-        # RLE_DICT. (Gated to the dict/rle branch — a high-ndv chunk that
-        # can't take these codecs must not pay the O(n) remap.)
-        order = pc.sort_indices(table).to_numpy(zero_copy_only=False)
-        rank = np.empty(ndv, dtype=np.int64)
-        rank[order] = np.arange(ndv, dtype=np.int64)
-        codes = rank[codes]
-        table = table.take(pa.array(order))
-        tbuf, tlens = string_buf_lengths(table)
-        aux_table = strutil.pack_str_list(
-            [bytes(memoryview(tbuf)[s:e]) for s, e in _spans(tlens)]
-        )
-        width = bitpack._bit_width(ndv - 1)
-        # dict candidate (+ measured zstd-12 wrap of the packed codes: the
-        # 1MB zstdhi gate protects RAW TEXT whose blobs share vocabulary
-        # across chunks; packed code streams are self-similar, so the
-        # per-chunk level-12 pass wins ~3% on e.g. alternating role codes —
-        # this is what closes the role gap vs parquet RLE_DICT)
-        payload = bitpack.pack_u64(codes.astype(np.uint64), width)
-        cand, size = _maybe_z12(
-            "dict", payload, aux_table, {"width": width, "ndv": ndv}
-        )
-        if size < best_size:
-            best, best_size = cand, size
-        # rle candidate over the same codes
-        starts = np.concatenate(([0], np.flatnonzero(codes[1:] != codes[:-1]) + 1))
-        run_vals = codes[starts].astype(np.uint64)
-        run_lens = np.diff(np.concatenate((starts, [n]))).astype(np.uint64)
-        lwidth = bitpack._bit_width(int(run_lens.max()))
-        vpack = bitpack.pack_u64(run_vals, width)
-        lpack2 = bitpack.pack_u64(run_lens, lwidth)
-        payload = vpack + lpack2
-        meta = {"n_runs": int(len(starts)), "vwidth": width, "lwidth": lwidth,
-                "vbytes": len(vpack)}
-        cand, size = _maybe_z12("rle", payload, aux_table, meta)
-        if size < best_size:
-            best, best_size = cand, size
+        # dict and rle over the same canonical codes, each with a measured
+        # zstd-12 wrap of its code stream: the 1MB zstdhi gate protects RAW
+        # TEXT whose blobs share vocabulary across chunks; packed code
+        # streams are self-similar, so the per-chunk level-12 pass wins ~3%
+        # on e.g. alternating role codes — this is what closes the role gap
+        # vs parquet RLE_DICT. (Gated here — a high-ndv chunk that can't
+        # take these codecs must not pay the O(n) remap.)
+        codes, ndv, table_aux = dictionary.canonical_codes(denc)
+        for mod in (dictionary, rle):
+            block = mod.encode_from_codes(codes, ndv, table_aux)
+            consider(*_maybe_z12((mod.NAME, *block)))
     else:
         # high-level zstd candidate: wins when extra encode CPU buys bytes.
         # Gated to large buffers: below ~1MB the sink's page-level zstd
@@ -211,70 +162,27 @@ def encode_string_column(
             if "zstdhi" not in hints:
                 hints["zstdhi"] = _zstdhi_sample_wins(buf)
             if hints["zstdhi"]:
-                payload, zaux, zmeta = zstdhi.encode_from_buf(buf, lengths)
-                size = _disk_proxy(payload, zaux)
-                if size < best_size:
-                    best, best_size = ("zstdhi", payload, zaux, zmeta), size
+                consider(("zstdhi", *zstdhi.encode_from_buf(buf, lengths)))
         if "fsst" not in hints:
             hints["fsst"] = planner.fsst_sample_wins_buf(buf, lengths)
         if hints["fsst"]:
-            symbols = fsst.train(buf)
-            segs = [
-                fsst.encode_buffer(buf[i : i + fsst.SEGMENT_BYTES], symbols)
-                for i in range(0, len(buf), fsst.SEGMENT_BYTES)
-            ] or [b""]
-            payload = b"".join(segs)
-            tablebuf = strutil.pack_str_list(symbols)
-            aux = tablebuf + lpack
-            meta = {"table_bytes": len(tablebuf), **lmeta,
-                    "seg_code_lens": [len(s) for s in segs]}
-            size = _disk_proxy(payload, aux)
-            if size < best_size:
-                best, best_size = ("fsst", payload, aux, meta), size
+            consider(("fsst", *fsst.encode_from_buf(buf, lengths)))
     return (*best, raw_bytes)
 
 
-def _spans(lengths: np.ndarray):
-    offs = np.zeros(len(lengths) + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offs[1:])
-    return zip(offs[:-1], offs[1:])
+# ------------------------------------------------------------------ decode
+
+
+def _format(codec: str):
+    try:
+        return _FORMATS[codec]
+    except KeyError:
+        raise ValueError(f"unknown string codec {codec}") from None
 
 
 def decode_string_column(codec: str, payload: bytes, aux: bytes, meta: dict,
                          n: int) -> pa.Array:
-    if codec == "raw":
-        return strings_from_buf(payload, _unpack_lengths(aux, meta, n))
-    if codec == "dict":
-        items = strutil.unpack_str_list(aux)
-        payload = _unz12(payload, meta)
-        codes = bitpack.unpack_u64(payload, meta["width"], n).astype(np.int32)
-        table = pa.array([b.decode("utf-8") for b in items], type=pa.string())
-        return pc.take(table, pa.array(codes))
-    if codec == "rle":
-        items = strutil.unpack_str_list(aux)
-        payload = _unz12(payload, meta)
-        k, vb = meta["n_runs"], meta["vbytes"]
-        run_vals = bitpack.unpack_u64(payload[:vb], meta["vwidth"], k).astype(np.int64)
-        run_lens = bitpack.unpack_u64(payload[vb:], meta["lwidth"], k).astype(np.int64)
-        codes = np.repeat(run_vals, run_lens).astype(np.int32)
-        table = pa.array([b.decode("utf-8") for b in items], type=pa.string())
-        return pc.take(table, pa.array(codes))
-    if codec == "fsst":
-        tb = meta["table_bytes"]
-        symbols = strutil.unpack_str_list(aux[:tb])
-        lengths = _unpack_lengths(aux[tb:], meta, n)
-        parts, pos = [], 0
-        for cl in meta["seg_code_lens"]:
-            parts.append(fsst.decode_buffer(payload[pos : pos + cl], symbols))
-            pos += cl
-        return strings_from_buf(b"".join(parts), lengths)
-    if codec == "strnum":
-        buf2, lengths = strnum.decode_to_buf(payload, aux, meta, n)
-        return strings_from_buf(buf2, lengths)
-    if codec == "zstdhi":
-        buf2, lengths = zstdhi.decode_to_buf(payload, aux, meta, n)
-        return strings_from_buf(buf2, lengths)
-    raise ValueError(f"unknown string codec {codec}")
+    return strings_from_buf(*_format(codec).decode_to_buf(payload, aux, meta, n))
 
 
 def decode_string_rows(codec: str, payload: bytes, aux: bytes, meta: dict,
@@ -282,39 +190,13 @@ def decode_string_rows(codec: str, payload: bytes, aux: bytes, meta: dict,
     """Random access: decode only rows [row_lo, row_hi) of a string block.
 
     raw: direct payload slice. fsst / zstdhi: decode only the covering
-    segments (their decode_byte_range). Other codecs decode fully (their
-    blocks are small) and slice.
+    segments. Other codecs decode fully (their blocks are small) and slice.
     """
     row_lo, row_hi = max(0, row_lo), min(n, row_hi)
     if row_hi <= row_lo:
         return pa.array([], type=pa.string())
-    if codec in ("raw", "fsst", "zstdhi"):
-        if codec == "fsst":
-            tb = meta["table_bytes"]
-            symbols = strutil.unpack_str_list(aux[:tb])
-            lengths = _unpack_lengths(aux[tb:], meta, n)
-        else:
-            lengths = _unpack_lengths(aux, meta, n)
-            body = payload
-            base = 0
-        offs = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lengths, out=offs[1:])
-        lo_b, hi_b = int(offs[row_lo]), int(offs[row_hi])
-        if codec == "fsst":
-            body, base = fsst.decode_byte_range(
-                payload, symbols, meta["seg_code_lens"], lo_b, hi_b
-            )
-        elif codec == "zstdhi":
-            body, base = zstdhi.decode_byte_range(payload, meta, lo_b, hi_b)
-        return strings_from_buf(
-            body[lo_b - base : hi_b - base], lengths[row_lo:row_hi]
-        )
+    rows_to_buf = getattr(_format(codec), "decode_rows_to_buf", None)
+    if rows_to_buf is not None:
+        return strings_from_buf(*rows_to_buf(payload, aux, meta, n, row_lo, row_hi))
     full = decode_string_column(codec, payload, aux, meta, n)
     return full.slice(row_lo, row_hi - row_lo)
-
-
-# ------------------------------------------------------------------- ints
-
-
-def encode_int_column(values: np.ndarray) -> tuple[str, bytes, bytes, dict, int]:
-    return planner.encode_best(values)

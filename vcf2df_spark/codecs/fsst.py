@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from . import bitpack, strutil
+from . import strutil
 
 NAME = "fsst"
 
@@ -233,29 +233,28 @@ def decode_buffer(data: bytes, symbols: list[bytes]) -> bytes:
 SEGMENT_BYTES = 1 << 18
 
 
-def encode(values: np.ndarray) -> tuple[bytes, bytes, dict]:
-    values = np.asarray(values, dtype=object)
-    buf, lengths = strutil.strings_to_bytes_and_lengths(values)
+def encode_from_buf(buf: bytes, lengths: np.ndarray) -> tuple[bytes, bytes, dict]:
+    """Train on the buffer, parse it segment by segment.
+
+    aux = packed symbol table ++ packed lengths; meta records the table's
+    size and every segment's code length (the random-access index)."""
     symbols = train(buf)
     segs = [
         encode_buffer(buf[i : i + SEGMENT_BYTES], symbols)
         for i in range(0, len(buf), SEGMENT_BYTES)
     ] or [b""]
-    payload = b"".join(segs)
     table = strutil.pack_str_list(symbols)
-    if len(lengths):
-        lmin = int(lengths.min())
-        lwidth = bitpack._bit_width(int(lengths.max()) - lmin)
-        lpack = bitpack.pack_u64((lengths - lmin).astype(np.uint64), lwidth)
-    else:
-        lmin, lwidth, lpack = 0, 0, b""
-    aux = table + lpack
-    return payload, aux, {
-        "table_bytes": len(table),
-        "lwidth": lwidth,
-        "lmin": lmin,
+    lpack, lmeta = strutil.pack_lengths(lengths)
+    return b"".join(segs), table + lpack, {
+        "table_bytes": len(table), **lmeta,
         "seg_code_lens": [len(s) for s in segs],
     }
+
+
+def _symbols_and_lengths(aux: bytes, meta: dict,
+                         n: int) -> tuple[list[bytes], np.ndarray]:
+    tb = meta["table_bytes"]
+    return strutil.unpack_str_list(aux[:tb]), strutil.unpack_lengths(aux[tb:], meta, n)
 
 
 def decode_byte_range(payload: bytes, symbols: list[bytes],
@@ -281,13 +280,16 @@ def decode_byte_range(payload: bytes, symbols: list[bytes],
     return b"".join(parts), s0 * SEGMENT_BYTES
 
 
-def decode(payload: bytes, aux: bytes, meta: dict, n: int) -> np.ndarray:
-    tb = meta["table_bytes"]
-    symbols = strutil.unpack_str_list(aux[:tb])
-    lengths = bitpack.unpack_u64(aux[tb:], meta["lwidth"], n).astype(np.int64) + meta["lmin"]
-    parts = []
-    pos = 0
-    for cl in meta["seg_code_lens"]:
-        parts.append(decode_buffer(payload[pos : pos + cl], symbols))
-        pos += cl
-    return strutil.split_bytes(b"".join(parts), lengths)
+def decode_rows_to_buf(payload: bytes, aux: bytes, meta: dict, n: int,
+                       row_lo: int, row_hi: int) -> tuple[bytes, np.ndarray]:
+    """Rows [row_lo, row_hi) only: decodes just the covering segments."""
+    symbols, lengths = _symbols_and_lengths(aux, meta, n)
+    lo_b, hi_b = strutil.byte_span(lengths, row_lo, row_hi)
+    body, base = decode_byte_range(payload, symbols, meta["seg_code_lens"],
+                                   lo_b, hi_b)
+    return body[lo_b - base : hi_b - base], lengths[row_lo:row_hi]
+
+
+def decode_to_buf(payload: bytes, aux: bytes, meta: dict,
+                  n: int) -> tuple[bytes, np.ndarray]:
+    return decode_rows_to_buf(payload, aux, meta, n, 0, n)

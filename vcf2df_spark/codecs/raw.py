@@ -4,43 +4,41 @@ The selector's floor (SURVEY.md §4.3): every column always has a codec whose
 encoded size is never worse than the input, so measured auto-selection can
 always fall back. Block-level zstd at the Parquet sink still applies on top.
 
-Strings: payload = utf8 concat, lengths bitpacked into aux.
-Ints: payload = raw little-endian buffer.
+Numbers (registry entry): payload = raw little-endian buffer.
+Strings (buffer level): payload = utf8 concat, lengths packed into aux.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from . import bitpack, strutil
+from . import strutil
 
 NAME = "raw"
 
 
-def encode_str(values: np.ndarray) -> tuple[bytes, bytes, dict]:
-    buf, lengths = strutil.strings_to_bytes_and_lengths(np.asarray(values, dtype=object))
-    if len(lengths) == 0:
-        return b"", b"", {"kind": "str", "lwidth": 0, "lmin": 0}
-    lmin = int(lengths.min())
-    lwidth = bitpack._bit_width(int(lengths.max()) - lmin)
-    aux = bitpack.pack_u64((lengths - lmin).astype(np.uint64), lwidth)
-    return buf, aux, {"kind": "str", "lwidth": lwidth, "lmin": lmin}
-
-
-def encode_int(values: np.ndarray) -> tuple[bytes, bytes, dict]:
+def encode(values: np.ndarray) -> tuple[bytes, bytes, dict]:
     values = np.asarray(values)
     return values.tobytes(), b"", {"kind": "int", "dtype": str(values.dtype)}
 
 
-def encode(values: np.ndarray) -> tuple[bytes, bytes, dict]:
-    values = np.asarray(values)
-    if values.dtype == object:
-        return encode_str(values)
-    return encode_int(values)
-
-
 def decode(payload: bytes, aux: bytes, meta: dict, n: int) -> np.ndarray:
-    if meta["kind"] == "int":
-        return np.frombuffer(payload, dtype=meta["dtype"]).copy()
-    lengths = bitpack.unpack_u64(aux, meta["lwidth"], n).astype(np.int64) + meta["lmin"]
-    return strutil.split_bytes(payload, lengths)
+    return np.frombuffer(payload, dtype=meta["dtype"]).copy()
+
+
+def encode_from_buf(buf: bytes, lengths: np.ndarray) -> tuple[bytes, bytes, dict]:
+    lpack, lmeta = strutil.pack_lengths(lengths)
+    return buf, lpack, {"kind": "str", **lmeta}
+
+
+def decode_rows_to_buf(payload: bytes, aux: bytes, meta: dict, n: int,
+                       row_lo: int, row_hi: int) -> tuple[bytes, np.ndarray]:
+    """Rows [row_lo, row_hi) only: a direct payload slice."""
+    lengths = strutil.unpack_lengths(aux, meta, n)
+    lo_b, hi_b = strutil.byte_span(lengths, row_lo, row_hi)
+    return payload[lo_b:hi_b], lengths[row_lo:row_hi]
+
+
+def decode_to_buf(payload: bytes, aux: bytes, meta: dict,
+                  n: int) -> tuple[bytes, np.ndarray]:
+    return decode_rows_to_buf(payload, aux, meta, n, 0, n)

@@ -8,43 +8,28 @@ construction (chunk = contiguous subrange of a sorted partition).
 
 Layout: payload = bitpacked run values (dict codes) ++ bitpacked run
 lengths; aux = dictionary symbol table. meta carries both widths and the
-run count.
+run count. Codes, table and the optional zstd-12 wrap are the dict
+format's (``dictionary.py``).
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from . import bitpack, dictionary, strutil
+from . import bitpack, dictionary
 
 NAME = "rle"
 
 
-def run_bounds(arr: np.ndarray) -> np.ndarray:
-    """Indices where each run starts (vectorized boundary detection)."""
-    if len(arr) == 0:
-        return np.zeros(0, dtype=np.int64)
-    change = np.flatnonzero(arr[1:] != arr[:-1]) + 1
-    return np.concatenate(([0], change)).astype(np.int64)
-
-
-def encode(values: np.ndarray) -> tuple[bytes, bytes, dict]:
-    values = np.asarray(values, dtype=object)
-    n = len(values)
-    if n == 0:
-        return b"", strutil.pack_str_list([]), {
-            "n_runs": 0, "vwidth": 0, "lwidth": 0, "vbytes": 0,
-        }
-    codes, table = dictionary.codes_and_table(values)
-    starts = run_bounds(codes)
+def encode_from_codes(codes: np.ndarray, ndv: int,
+                      table_aux: bytes) -> tuple[bytes, bytes, dict]:
+    starts = np.flatnonzero(np.diff(codes, prepend=codes[:1] - 1))
     run_vals = codes[starts].astype(np.uint64)
-    run_lens = np.diff(np.concatenate((starts, [n]))).astype(np.uint64)
-    vwidth = bitpack._bit_width(len(table) - 1)
-    lwidth = bitpack._bit_width(int(run_lens.max()))
+    run_lens = np.diff(np.append(starts, len(codes))).astype(np.uint64)
+    vwidth = bitpack._bit_width(ndv - 1)
+    lwidth = bitpack._bit_width(int(run_lens.max(initial=0)))
     vpack = bitpack.pack_u64(run_vals, vwidth)
-    lpack = bitpack.pack_u64(run_lens, lwidth)
-    aux = strutil.pack_str_list([s.encode("utf-8") for s in table])
-    return vpack + lpack, aux, {
+    return vpack + bitpack.pack_u64(run_lens, lwidth), table_aux, {
         "n_runs": int(len(starts)),
         "vwidth": vwidth,
         "lwidth": lwidth,
@@ -52,14 +37,10 @@ def encode(values: np.ndarray) -> tuple[bytes, bytes, dict]:
     }
 
 
-def decode(payload: bytes, aux: bytes, meta: dict, n: int) -> np.ndarray:
-    if n == 0:
-        return np.empty(0, dtype=object)
-    table = np.array(
-        [b.decode("utf-8") for b in strutil.unpack_str_list(aux)], dtype=object
-    )
-    k = meta["n_runs"]
-    vb = meta["vbytes"]
+def decode_to_buf(payload: bytes, aux: bytes, meta: dict,
+                  n: int) -> tuple[bytes, np.ndarray]:
+    payload = dictionary.unwrap(payload, meta)
+    k, vb = meta["n_runs"], meta["vbytes"]
     run_vals = bitpack.unpack_u64(payload[:vb], meta["vwidth"], k).astype(np.int64)
     run_lens = bitpack.unpack_u64(payload[vb:], meta["lwidth"], k).astype(np.int64)
-    return np.repeat(table[run_vals], run_lens)
+    return dictionary.gather(aux, np.repeat(run_vals, run_lens))

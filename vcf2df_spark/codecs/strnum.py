@@ -59,23 +59,7 @@ def encode_from_buf(buf: bytes, lengths: np.ndarray,
     return payload, prefix, {"L": L, "k": k, **fmeta}
 
 
-def decode(payload: bytes, aux: bytes, meta: dict, n: int) -> np.ndarray:
-    L, k = meta["L"], meta["k"]
-    values = fordelta.decode(payload, b"", meta, n)
-    m = np.empty((n, L), dtype=np.uint8)
-    m[:, : L - k] = np.frombuffer(aux, dtype=np.uint8)[None, :]
-    rem = values.copy()
-    for j in range(k - 1, -1, -1):
-        m[:, L - k + j] = (rem % 10 + ord("0")).astype(np.uint8)
-        rem //= 10
-    buf = m.tobytes()
-    from . import strutil
-
-    return strutil.split_bytes(buf, np.full(n, L, dtype=np.int64))
-
-
 def decode_to_buf(payload: bytes, aux: bytes, meta: dict, n: int) -> tuple[bytes, np.ndarray]:
-    """Arrow-path decode: (utf8 buffer, lengths) without Python strings."""
     L, k = meta["L"], meta["k"]
     values = fordelta.decode(payload, b"", meta, n)
     m = np.empty((n, L), dtype=np.uint8)
@@ -85,16 +69,3 @@ def decode_to_buf(payload: bytes, aux: bytes, meta: dict, n: int) -> tuple[bytes
         m[:, L - k + j] = (rem % 10 + ord("0")).astype(np.uint8)
         rem //= 10
     return m.tobytes(), np.full(n, L, dtype=np.int64)
-
-
-def encode(values: np.ndarray) -> tuple[bytes, bytes, dict]:
-    """Object-array entry point (numpy codec registry contract)."""
-    from . import strutil
-
-    buf, lengths = strutil.strings_to_bytes_and_lengths(
-        np.asarray(values, dtype=object)
-    )
-    shape = analyze(buf, lengths)
-    if shape is None:
-        raise ValueError("strnum: column does not fit prefix+digits shape")
-    return encode_from_buf(buf, lengths, shape)

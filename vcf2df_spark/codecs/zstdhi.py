@@ -20,7 +20,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
-from . import bitpack, strutil
+from . import strutil
 
 NAME = "zstdhi"
 LEVEL = 12
@@ -36,15 +36,9 @@ def encode_from_buf(buf: bytes, lengths: np.ndarray) -> tuple[bytes, bytes, dict
         bytes(_CODEC.compress(view[i : i + SEGMENT_BYTES]))
         for i in range(0, len(buf), SEGMENT_BYTES)
     ]
-    payload = b"".join(frames)
-    if len(lengths):
-        lmin = int(lengths.min())
-        lwidth = bitpack._bit_width(int(lengths.max()) - lmin)
-        lpack = bitpack.pack_u64((lengths - lmin).astype(np.uint64), lwidth)
-    else:
-        lmin, lwidth, lpack = 0, 0, b""
-    return payload, lpack, {
-        "lwidth": lwidth, "lmin": lmin, "raw_len": len(buf), "level": LEVEL,
+    lpack, lmeta = strutil.pack_lengths(lengths)
+    return b"".join(frames), lpack, {
+        **lmeta, "raw_len": len(buf), "level": LEVEL,
         "seg_code_lens": [len(f) for f in frames],
     }
 
@@ -86,21 +80,15 @@ def decode_byte_range(payload: bytes, meta: dict, lo_b: int,
     return decode_frames(payload, meta, lo_f, hi_f), lo_f * SEGMENT_BYTES
 
 
-def decode_to_buf(payload: bytes, aux: bytes, meta: dict, n: int) -> tuple[bytes, np.ndarray]:
-    lengths = bitpack.unpack_u64(aux, meta["lwidth"], n).astype(np.int64) + meta["lmin"]
-    if not payload:
-        return b"", lengths
-    n_frames = len(meta.get("seg_code_lens") or [None])
-    return decode_frames(payload, meta, 0, n_frames), lengths
+def decode_rows_to_buf(payload: bytes, aux: bytes, meta: dict, n: int,
+                       row_lo: int, row_hi: int) -> tuple[bytes, np.ndarray]:
+    """Rows [row_lo, row_hi) only: inflates just the covering frames."""
+    lengths = strutil.unpack_lengths(aux, meta, n)
+    lo_b, hi_b = strutil.byte_span(lengths, row_lo, row_hi)
+    body, base = decode_byte_range(payload, meta, lo_b, hi_b)
+    return body[lo_b - base : hi_b - base], lengths[row_lo:row_hi]
 
 
-def encode(values: np.ndarray) -> tuple[bytes, bytes, dict]:
-    buf, lengths = strutil.strings_to_bytes_and_lengths(
-        np.asarray(values, dtype=object)
-    )
-    return encode_from_buf(buf, lengths)
-
-
-def decode(payload: bytes, aux: bytes, meta: dict, n: int) -> np.ndarray:
-    buf, lengths = decode_to_buf(payload, aux, meta, n)
-    return strutil.split_bytes(buf, lengths)
+def decode_to_buf(payload: bytes, aux: bytes, meta: dict,
+                  n: int) -> tuple[bytes, np.ndarray]:
+    return decode_rows_to_buf(payload, aux, meta, n, 0, n)

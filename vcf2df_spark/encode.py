@@ -129,7 +129,7 @@ def encode_chunk_arrow(chunk: pa.Table, partition_id: int, chunk_idx: int,
             else:
                 ctype = "i32" if t.bit_width <= 32 else "i64"
                 values = arr.to_numpy(zero_copy_only=False)
-            codec, payload, aux, meta, raw_bytes = arrow_ops.encode_int_column(values)
+            codec, payload, aux, meta, raw_bytes = planner.encode_best(values)
             if n:
                 smin_num = int(values.min())
                 smax_num = int(values.max())

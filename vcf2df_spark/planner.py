@@ -1,98 +1,46 @@
-"""Statistics-driven codec auto-selection.
+"""Statistics-driven, measured codec selection for numeric and boolean columns.
 
 The engine's optimizer. Mirrors the *move* of the reference's schema
 inference — metadata in, encode plan out (``converter/schema.go:17-107``
 chooses an encoding per declared INFO type) — but drives the choice from
-observed per-chunk data statistics instead of declared types, the way
-Parquet picks per-page encodings below the query optimizer (SURVEY.md §4.2).
+observed per-chunk data instead of declared types, the way Parquet picks
+per-page encodings below the query optimizer (SURVEY.md §4.2).
 
-Two layers:
-- :func:`column_stats` / :func:`choose_codec`: pure functions, golden-tested
-  like the reference's ``TestDefineSchemaMsg`` (``schema_test.go:10-62``).
-- :func:`encode_best`: measure-and-fallback — encodes with the chosen codec,
-  verifies it actually beats RAW on real bytes, else falls back. Guarantees
-  encoded size <= raw size per chunk (the selector's floor, SURVEY.md §4.3).
+Every candidate is measured, never predicted by a rule: whether a codec
+wins depends on the column's actual run and value structure. Each
+``encode_best*`` entry builds a cheap per-type candidate list and
+:func:`_encode_measured` keeps the smallest by post-sink-zstd size, with
+RAW as the floor — encoded size <= raw size per chunk (SURVEY.md §4.3).
+Goldens in ``tests/test_planner.py`` pin the candidate lists and choices
+on fixed arrays. String columns are selected the same way in
+``arrow_ops.encode_string_column``; :func:`fsst_sample_wins_buf` is its
+FSST trial.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from . import codecs
-from .codecs import rle as rle_mod
+from .codecs import fsst
 
 SAMPLE_ROWS = 65536
 
 
-@dataclass(frozen=True)
-class ColumnStats:
-    n: int
-    ndv: int
-    mean_run_len: float
-    is_int: bool
-    int_min: int = 0
-    int_max: int = 0
-    sorted_frac: float = 0.0  # fraction of non-negative deltas (ints)
-    avg_len: float = 0.0  # strings: mean utf8 length
+def candidate_codecs(values: np.ndarray) -> list[str]:
+    """Integer candidates measured by :func:`encode_best`.
 
-
-def column_stats(values: np.ndarray) -> ColumnStats:
-    n = len(values)
-    if n == 0:
-        return ColumnStats(0, 0, 0.0, np.asarray(values).dtype != object)
-    sample = values[:SAMPLE_ROWS]
-    ndv = len(pd.unique(sample))
-    runs = len(rle_mod.run_bounds(sample))
-    mean_run = len(sample) / max(runs, 1)
-    if np.asarray(values).dtype != object:
-        ints = np.asarray(sample, dtype=np.int64)
-        deltas = np.diff(ints) if len(ints) > 1 else np.zeros(0, dtype=np.int64)
-        sorted_frac = float((deltas >= 0).mean()) if len(deltas) else 1.0
-        return ColumnStats(
-            n, ndv, mean_run, True,
-            int(ints.min()), int(ints.max()), sorted_frac,
-        )
-    lens = np.fromiter((len(s) for s in sample[:4096]), dtype=np.int64,
-                       count=min(len(sample), 4096))
-    return ColumnStats(n, ndv, mean_run, False, avg_len=float(lens.mean()))
-
-
-def choose_codec(stats: ColumnStats) -> str:
-    """Pure rule-based choice; :func:`encode_best` still measures."""
-    if stats.n == 0:
-        return "raw"
-    if stats.is_int:
-        # near-monotone (timestamps, positions) -> delta beats plain FOR
-        if stats.sorted_frac >= 0.9 and stats.ndv > 256:
-            return "fordelta"
-        return "bitpack"
-    if stats.mean_run_len >= 4.0 and stats.ndv <= stats.n / 4:
-        return "rle"
-    if stats.ndv <= 4096 and stats.ndv <= stats.n / 4:
-        return "dict"
-    return "fsst"
-
-
-def candidate_codecs(stats: ColumnStats) -> list[str]:
-    """Cheap candidate set actually measured by :func:`encode_best`.
-
-    Int codecs are cheap enough to always try both; low-cardinality string
-    codecs likewise. FSST (training cost) is only tried when stats point
-    at high-entropy text.
+    Both int codecs are cheap; fordelta only pays off on near-monotone
+    columns (timestamps, positions), so it is tried when at least 70% of
+    a sample's deltas are non-negative.
     """
-    if stats.n == 0:
+    if len(values) == 0:
         return []
-    if stats.is_int:
-        cands = ["bitpack"]
-        if stats.sorted_frac >= 0.7:
-            cands.append("fordelta")
-        return cands
-    if stats.ndv <= 4096 and stats.ndv <= max(stats.n / 4, 1):
-        return ["dict", "rle"] if stats.mean_run_len >= 1.5 else ["dict"]
-    return ["fsst"]
+    deltas = np.diff(np.asarray(values[:SAMPLE_ROWS], dtype=np.int64))
+    sorted_frac = float((deltas >= 0).mean()) if len(deltas) else 1.0
+    return ["bitpack", "fordelta"] if sorted_frac >= 0.7 else ["bitpack"]
 
 
 # sink-compression proxy: the blocks table is written as Parquet/zstd, so the
@@ -102,48 +50,45 @@ def candidate_codecs(stats: ColumnStats) -> list[str]:
 # candidate would dominate encode time.
 _PROXY_CAP = 1 << 19
 
-try:
-    import pyarrow as pa
-
-    _ZSTD = pa.Codec("zstd")
-
-    def _disk_proxy(payload: bytes, aux: bytes) -> int:
-        out = 0
-        if payload:
-            scale = max(1.0, len(payload) / _PROXY_CAP)
-            out += int(len(_ZSTD.compress(payload[:_PROXY_CAP])) * scale)
-        if aux:
-            scale = max(1.0, len(aux) / _PROXY_CAP)
-            out += int(len(_ZSTD.compress(aux[:_PROXY_CAP])) * scale)
-        return out
-
-except Exception:  # pragma: no cover - pyarrow always present in target env
-
-    def _disk_proxy(payload: bytes, aux: bytes) -> int:
-        return len(payload) + len(aux)
+_ZSTD = pa.Codec("zstd")
 
 
-def encode_best(values: np.ndarray) -> tuple[str, bytes, bytes, dict, int]:
-    """Encode with the stats-chosen codec; measured fallback to raw.
+def _disk_proxy(payload: bytes, aux: bytes) -> int:
+    out = 0
+    if payload:
+        scale = max(1.0, len(payload) / _PROXY_CAP)
+        out += int(len(_ZSTD.compress(payload[:_PROXY_CAP])) * scale)
+    if aux:
+        scale = max(1.0, len(aux) / _PROXY_CAP)
+        out += int(len(_ZSTD.compress(aux[:_PROXY_CAP])) * scale)
+    return out
 
-    The comparison applies the sink's zstd to both candidates (what actually
+
+def _encode_measured(values: np.ndarray,
+                     cands: list[str]) -> tuple[str, bytes, bytes, dict, int]:
+    """Encode with every candidate; keep the smallest, raw as the floor.
+
+    The comparison applies the sink's zstd to both sides (what actually
     hits disk), so a codec that shrinks pre-zstd bytes but destroys zstd's
-    own match opportunities (e.g. FSST over word-repetitive text) loses
-    honestly. Returns (codec, payload, aux, meta, raw_bytes).
+    own match opportunities loses honestly. Returns (codec, payload, aux,
+    meta, raw_bytes).
     """
-    values = np.asarray(values)
     raw_payload, raw_aux, raw_meta = codecs.encode("raw", values)
     raw_bytes = len(raw_payload) + len(raw_aux)
     best = ("raw", raw_payload, raw_aux, raw_meta)
     best_size = _disk_proxy(raw_payload, raw_aux)
-    for codec in candidate_codecs(column_stats(values)):
-        if codec == "fsst" and not _fsst_sample_wins(values):
-            continue  # skip the expensive full parse when a trial loses
+    for codec in cands:
         payload, aux, meta = codecs.encode(codec, values)
         size = _disk_proxy(payload, aux)
         if size < best_size:
             best, best_size = (codec, payload, aux, meta), size
     return (*best, raw_bytes)
+
+
+def encode_best(values: np.ndarray) -> tuple[str, bytes, bytes, dict, int]:
+    """Integer columns: measured choice among raw / bitpack / fordelta."""
+    values = np.asarray(values)
+    return _encode_measured(values, candidate_codecs(values))
 
 
 def encode_best_float(values: np.ndarray) -> tuple[str, bytes, bytes, dict, int]:
@@ -153,40 +98,21 @@ def encode_best_float(values: np.ndarray) -> tuple[str, bytes, bytes, dict, int]
     and rating columns often are); fshuffle is always cheap to try.
     """
     values = np.ascontiguousarray(np.asarray(values), dtype=np.float64)
-    raw_payload, raw_aux, raw_meta = codecs.encode("raw", values)
-    raw_bytes = len(raw_payload) + len(raw_aux)
-    best = ("raw", raw_payload, raw_aux, raw_meta)
-    best_size = _disk_proxy(raw_payload, raw_aux)
-    if len(values) == 0:
-        return (*best, raw_bytes)
-    cands = ["fshuffle"]
-    sample_ndv = len(pd.unique(values[:SAMPLE_ROWS].view(np.int64)))
-    if sample_ndv <= 4096 and sample_ndv <= max(len(values) / 4, 1):
-        cands.append("fdict")
-    for codec in cands:
-        payload, aux, meta = codecs.encode(codec, values)
-        size = _disk_proxy(payload, aux)
-        if size < best_size:
-            best, best_size = (codec, payload, aux, meta), size
-    return (*best, raw_bytes)
+    cands = []
+    if len(values):
+        cands.append("fshuffle")
+        sample_ndv = len(pd.unique(values[:SAMPLE_ROWS].view(np.int64)))
+        if sample_ndv <= 4096 and sample_ndv <= max(len(values) / 4, 1):
+            cands.append("fdict")
+    return _encode_measured(values, cands)
 
 
 def encode_best_bool(values: np.ndarray) -> tuple[str, bytes, bytes, dict, int]:
     """Boolean columns: boolpack (1 bit/value) vs the raw floor, measured."""
     values = np.asarray(values, dtype=np.bool_)
-    raw_payload, raw_aux, raw_meta = codecs.encode("raw", values)
-    raw_bytes = len(raw_payload) + len(raw_aux)
-    best = ("raw", raw_payload, raw_aux, raw_meta)
-    best_size = _disk_proxy(raw_payload, raw_aux)
-    if len(values):
-        payload, aux, meta = codecs.encode("boolpack", values)
-        size = _disk_proxy(payload, aux)
-        if size < best_size:
-            best = ("boolpack", payload, aux, meta)
-    return (*best, raw_bytes)
+    return _encode_measured(values, ["boolpack"] if len(values) else [])
 
 
-_FSST_TRIAL_ROWS = 2048
 # 64KB trial: train already caps its sample at TRAIN_SAMPLE_BYTES (64KB),
 # so a larger trial buffer only inflated the trial's own encode pass
 # (measured 78ms -> 40ms per chunk at 256KB -> 64KB with the same verdict:
@@ -199,28 +125,11 @@ _FSST_TRIAL_BYTES = 1 << 16
 
 def fsst_sample_wins_buf(buf: bytes, lengths: np.ndarray) -> bool:
     """Buffer-level FSST trial for the Arrow path: no string objects."""
-    from .codecs import fsst as fsst_mod
-
     sample = buf[:_FSST_TRIAL_BYTES]
     if not sample:
         return False
-    symbols = fsst_mod.train(sample)
-    enc = fsst_mod.encode_buffer(sample, symbols)
+    symbols = fsst.train(sample)
+    enc = fsst.encode_buffer(sample, symbols)
     table_bytes = sum(len(s) for s in symbols) + 4 * len(symbols)
     return _disk_proxy(enc, b"") + table_bytes < _disk_proxy(sample, b"")
 
-
-def _fsst_sample_wins(values: np.ndarray) -> bool:
-    """Trial-encode a strided sample; only full-encode FSST if it wins there.
-
-    FSST is the one candidate whose encode cost is significant, so the
-    measured selection runs on a sample first (same move as the reference's
-    fail-fast before expensive parse, parseVariant.go:20-24).
-    """
-    if len(values) <= _FSST_TRIAL_ROWS:
-        sample = values
-    else:
-        sample = values[:: max(1, len(values) // _FSST_TRIAL_ROWS)][:_FSST_TRIAL_ROWS]
-    payload, aux, _ = codecs.encode("fsst", sample)
-    raw_payload, raw_aux, _ = codecs.encode("raw", sample)
-    return _disk_proxy(payload, aux) < _disk_proxy(raw_payload, raw_aux)

@@ -243,8 +243,8 @@ def fetch_conversation(spark: SparkSession, warehouse: str, conv_id: str):
     import pandas as pd
     import pyarrow.dataset as pads
 
-    from . import arrow_ops, codecs
-    from .decode import _column_order, resolve_ctype
+    from . import arrow_ops
+    from .decode import _column_order, _decode_one, resolve_ctype
 
     root = f"{warehouse}/blocks"
 
@@ -358,23 +358,12 @@ def fetch_conversation(spark: SparkSession, warehouse: str, conv_id: str):
             if col == "conv_id":
                 continue
             r = cols[col]
-            meta = json.loads(r["meta"])
-            ctype = resolve_ctype(col, meta.get("ctype"))
-            if ctype == "str":
+            if resolve_ctype(col, json.loads(r["meta"]).get("ctype")) == "str":
                 out[col] = _decode_str_row(r, n, lo, hi).to_pylist()
                 continue
-            vals = codecs.decode(
-                r["codec"], bytes(r["payload"] or b""), bytes(r["aux"] or b""),
-                meta, n,
-            )[lo:hi]
-            if ctype == "ts":
-                out[col] = pd.to_datetime(vals.astype("int64"), unit="us")
-            elif ctype == "i32":
-                out[col] = vals.astype("int32")
-            elif ctype == "bool":
-                out[col] = vals.astype(bool)
-            else:  # i64 / f64 keep their numpy dtype
-                out[col] = vals
+            vals = _decode_one(r, n).slice(lo, hi - lo).to_numpy(zero_copy_only=False)
+            # ts: naive datetime64[ns] holding the UTC wall clock
+            out[col] = vals.astype("datetime64[ns]") if vals.dtype.kind == "M" else vals
         frames.append(pd.DataFrame(out))
     return (
         pd.concat(frames, ignore_index=True)
