@@ -54,7 +54,7 @@ def run_compact(
     way. Returns the verdict dict."""
     import os
 
-    from pyspark import StorageLevel
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from vcf2df_spark import manifest
@@ -99,24 +99,24 @@ def run_compact(
         # it (filter(~NULL) would silently drop it)
         df = df.filter(~F.coalesce(F.expr(drop_where), F.lit(False)))
     keyed = with_partition_key(df, partitions)
-    blocks = encode_keyed(keyed).persist(StorageLevel.MEMORY_AND_DISK)
-    after = blocks.agg(
-        F.sum(F.when(F.col("column") == "conv_id", F.col("n_rows"))).alias("rows"),
-        F.count_distinct("partition_id", "chunk_idx").alias("chunks"),
+    # one pass, no cache: the counts ride the blocks write through
+    # observe() (a chunk is its conv_id block), and the manifests read back
+    # the fresh output dirs instead of re-running the encode
+    is_conv = F.col("column") == "conv_id"
+    obs = Observation("compact")
+    blocks = encode_keyed(keyed).observe(
+        obs,
+        F.sum(F.when(is_conv, F.col("n_rows"))).alias("rows"),
+        F.count(F.when(is_conv, 1)).alias("chunks"),
         F.sum("enc_bytes").alias("enc"),
-    ).collect()[0]
-
-    if shard_dirs:
-        blocks.withColumn(
-            "shard", F.pmod(F.col("partition_id"), F.lit(shard_dirs))
-        ).write.partitionBy("shard", "partition_id").parquet(f"{out}/blocks")
-    else:
-        blocks.write.partitionBy("partition_id").parquet(f"{out}/blocks")
+    )
+    blocks, part_cols = manifest.with_layout(blocks, shard_dirs)
+    blocks.write.partitionBy(*part_cols).parquet(f"{out}/blocks")
+    after = obs.get
     manifest.build_manifests(
-        blocks, job_id, warehouse, num_partitions=partitions,
-        shard_dirs=shard_dirs or None,
+        manifest.read_blocks(spark, f"{out}/blocks"), job_id, warehouse,
+        num_partitions=partitions, shard_dirs=shard_dirs or None,
     ).write.parquet(f"{out}/manifests")
-    blocks.unpersist()
 
     verdict = {
         "status": "ok",

@@ -32,12 +32,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--master", default=None)
     p.add_argument("--fail-after", type=int, default=None,
                    help="encode only the first K pending partitions, then exit(3)")
-    p.add_argument("--persist", choices=["memory_and_disk", "disk_only"],
-                   default="memory_and_disk",
-                   help="storage level for the encoded blocks between the "
-                        "stats pass and the writes; disk_only avoids "
-                        "evicting executor memory when blocks-per-executor "
-                        "exceed RAM at large scale")
     p.add_argument("--shard-dirs", type=int, default=0,
                    help="two-level blocks layout: shard=partition_id%%N dirs "
                         "above the partition_id dirs. At ~400k partitions a "
@@ -52,13 +46,13 @@ def main(argv: list[str] | None = None) -> None:
                         "multi-allelic warning, parseVariant.go:16-18 — but loud)")
     args = p.parse_args(argv)
 
+    from pyspark.errors import PythonException
+    from pyspark.sql import Observation, SparkSession
     from pyspark.sql import functions as F
 
     from vcf2df_spark import manifest
-    from vcf2df_spark.encode import encode_keyed, with_partition_key
+    from vcf2df_spark.encode import DUPLICATE_KEYS, encode_keyed, with_partition_key
     from vcf2df_spark.session import get_spark
-
-    from pyspark.sql import SparkSession
 
     owns_session = SparkSession.getActiveSession() is None
     spark = get_spark(master=args.master, app_name=f"encode:{args.job_id}")
@@ -74,10 +68,10 @@ def main(argv: list[str] | None = None) -> None:
 
     # input invariant (SURVEY.md §1.5 B3): (conv_id, turn_idx) unique.
     # fail (the default) is FUSED into the encode pass below — the UDF sees
-    # each partition sorted by (conv_id, turn_idx) and counts adjacent
-    # duplicates, surfacing them as __dup__ marker block rows: one shuffle,
-    # one pass over the input. quarantine must materialize the dropped rows,
-    # so only that explicit repair mode pays for the windowed pre-pass.
+    # each partition sorted by (conv_id, turn_idx) and raises on adjacent
+    # duplicates, which aborts the blocks write: one shuffle, one pass over
+    # the input. quarantine must materialize the dropped rows, so only that
+    # explicit repair mode pays for the windowed pre-pass.
     n_dup_rows = 0
     if args.on_duplicates == "quarantine":
         from pyspark.sql.window import Window
@@ -96,10 +90,7 @@ def main(argv: list[str] | None = None) -> None:
 
     # materialize the committed set on the driver: cuts the plan's lineage to
     # the manifests table we append to below (self-referential read-write)
-    committed_ids = [
-        r.partition_id
-        for r in manifest.committed_partitions(spark, manifests_path, args.job_id).collect()
-    ]
+    committed_ids = manifest.committed_partitions(spark, manifests_path, args.job_id)
     n_committed = len(committed_ids)
     pending = keyed
     if committed_ids:
@@ -120,66 +111,62 @@ def main(argv: list[str] | None = None) -> None:
         pending = pending.join(F.broadcast(keep), "_pkey", "inner")
         truncated = True
 
-    from pyspark import StorageLevel
-
-    level = (StorageLevel.DISK_ONLY if args.persist == "disk_only"
-             else StorageLevel.MEMORY_AND_DISK)
+    # ONE pass, no cache: the stats ride the blocks write through observe()
+    # (observed metrics reject DISTINCT: a partition is its chunk-0 conv_id
+    # block), and the written partition ids scope the manifests read below
     detect = args.on_duplicates == "fail"
-    cached = encode_keyed(pending, detect_dups=detect).persist(level)
-    blocks = cached
+    is_conv = F.col("column") == "conv_id"
+    obs = Observation("encode")
+    blocks = encode_keyed(pending, detect_dups=detect).observe(
+        obs,
+        F.sum(F.when(is_conv, F.col("n_rows"))).alias("rows"),
+        F.count(F.when(is_conv & (F.col("chunk_idx") == 0), 1)).alias("parts"),
+        F.sum("raw_bytes").alias("raw"),
+        F.sum("enc_bytes").alias("enc"),
+        F.sort_array(F.collect_set("partition_id")).alias("pids"),
+    )
+    blocks, part_cols = manifest.with_layout(blocks, args.shard_dirs)
     try:
-        n_blocks = blocks.count()
-        if n_blocks == 0:
+        # blocks first (idempotent per-partition overwrite), manifest commit
+        # last. The dynamic-overwrite commit stages every dir and moves them
+        # only at job commit, so a write aborted by duplicate keys leaves
+        # the live blocks untouched.
+        try:
+            blocks.write.mode("overwrite").partitionBy(*part_cols).parquet(
+                blocks_path
+            )
+        except PythonException as e:
+            if DUPLICATE_KEYS not in str(e):
+                raise
+            # the error path alone pays for the exact count
+            dup_total = (
+                pending.groupBy("conv_id", "turn_idx").count()
+                .agg(F.sum(F.col("count") - 1)).collect()[0][0]
+            )
+            print(json.dumps({"job_id": args.job_id, "status": "invalid-input",
+                              "duplicate_rows": int(dup_total)}))
+            sys.exit(5)
+        stats = obs.get
+        if not stats["pids"]:
             print(json.dumps({"job_id": args.job_id, "status": "noop",
                               "committed_before": n_committed}))
             return
 
-        if detect:
-            from vcf2df_spark.encode import DUP_MARKER
-
-            dup_total = (
-                blocks.filter(F.col("column") == DUP_MARKER)
-                .agg(F.sum("n_rows")).collect()[0][0]
-            )
-            if dup_total:
-                print(json.dumps({"job_id": args.job_id, "status": "invalid-input",
-                                  "duplicate_rows": int(dup_total)}))
-                sys.exit(5)
-            blocks = blocks.filter(F.col("column") != DUP_MARKER)
-
-        # stats from the materialized cache BEFORE writes mutate the warehouse
-        stats = blocks.agg(
-            F.sum(F.when(F.col("column") == "conv_id", F.col("n_rows"))).alias("rows"),
-            F.countDistinct("partition_id").alias("parts"),
-            F.sum("raw_bytes").alias("raw"),
-            F.sum("enc_bytes").alias("enc"),
-        ).collect()[0]
-        rows = stats["rows"]
-
-        # skew report: per-partition row counts from the block metadata (free)
-        psizes = (
-            blocks.filter(F.col("column") == "conv_id")
-            .groupBy("partition_id").agg(F.sum("n_rows").alias("n"))
-            .agg(F.max("n").alias("mx"), F.avg("n").alias("mean")).collect()[0]
-        )
-        balance = round(psizes["mx"] / max(psizes["mean"], 1), 3)
-
-        # blocks first (idempotent per-partition overwrite), manifest commit last
-        if args.shard_dirs:
-            blocks.withColumn(
-                "shard", F.pmod(F.col("partition_id"), F.lit(args.shard_dirs))
-            ).write.mode("overwrite").partitionBy("shard", "partition_id").parquet(
-                blocks_path
-            )
-        else:
-            blocks.write.mode("overwrite").partitionBy("partition_id").parquet(
-                blocks_path
-            )
-        manifests = manifest.build_manifests(
-            blocks, args.job_id, args.input, num_partitions=args.partitions,
+        # manifests from exactly the dirs this run wrote: the encode UDF
+        # never re-runs, and committed or foreign partitions are never read
+        obs_m = Observation("manifests")
+        manifest.build_manifests(
+            manifest.read_blocks(spark, blocks_path, stats["pids"],
+                                 args.shard_dirs or None),
+            args.job_id, args.input, num_partitions=args.partitions,
             shard_dirs=args.shard_dirs or None,
-        )
-        manifests.write.mode("append").parquet(manifests_path)
+        ).observe(
+            obs_m, F.max("n_rows").alias("mx"), F.avg("n_rows").alias("mean")
+        ).write.mode("append").parquet(manifests_path)
+        # skew report: per-partition row counts from the manifest rows (free)
+        psizes = obs_m.get
+        balance = round(psizes["mx"] / max(psizes["mean"], 1), 3)
+        rows = stats["rows"]
         wall = time.time() - t0
         print(json.dumps({
             "job_id": args.job_id,
@@ -198,9 +185,6 @@ def main(argv: list[str] | None = None) -> None:
         if truncated:
             sys.exit(3)
     finally:
-        # every exit path drops the cache: in a shared session a later
-        # encode of the same input would otherwise read these blocks
-        cached.unpersist()
         if owns_session:
             spark.stop()
 

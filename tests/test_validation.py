@@ -4,6 +4,12 @@ encoded (the reference only logs a warning, parseVariant.go:16-18)."""
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
+import io
+import json
+import os
+
 import pandas as pd
 import pytest
 
@@ -33,6 +39,44 @@ def test_duplicates_fail_by_default(spark, dup_input, tmp_path):
     rc = _run(["--input", path, "--out", str(tmp_path / "w1"),
                "--partitions", "2", "--master", "local[2]"])
     assert rc == 5
+
+
+def _tree(root):
+    """{relative path: sha256} of every file under ``root``."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = hashlib.sha256(fh.read()).hexdigest()
+    return out
+
+
+def test_duplicate_contract(spark, tmp_path):
+    """Duplicate keys abort the blocks write: exit 5 with the exact count,
+    every live blocks and manifests file untouched, no staging left."""
+    wh = str(tmp_path / "wh")
+    small = fixtures.transcripts_small()
+    clean = str(tmp_path / "clean.parquet")
+    fixtures.write_parquet(small, clean)
+    common = ["--out", wh, "--partitions", "4", "--master", "local[4]"]
+    assert _run(["--input", clean, "--job-id", "a", *common]) == 0
+    live = {sub: _tree(f"{wh}/{sub}") for sub in ("blocks", "manifests")}
+
+    dup = str(tmp_path / "dup.parquet")
+    fixtures.write_parquet(
+        pd.concat([small, small.iloc[[1, 3, 500]]], ignore_index=True), dup
+    )
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        rc = _run(["--input", dup, "--job-id", "b", *common])
+    assert rc == 5
+    out = json.loads([x for x in buf.getvalue().splitlines()
+                      if x.startswith("{")][-1])
+    assert out == {"job_id": "b", "status": "invalid-input",
+                   "duplicate_rows": 3}
+    assert {sub: _tree(f"{wh}/{sub}") for sub in live} == live
+    assert not [d for d, _, _ in os.walk(wh) if ".spark-staging" in d]
 
 
 def test_duplicates_quarantine(spark, dup_input, tmp_path):

@@ -155,7 +155,9 @@ def encode_chunk_arrow(chunk: pa.Table, partition_id: int, chunk_idx: int,
     return rows
 
 
-DUP_MARKER = "__dup__"  # sentinel block row: duplicate keys found in-pass
+# tag of the error a group raises on duplicate (conv_id, turn_idx) keys;
+# the encode job matches it in the failed write's message
+DUPLICATE_KEYS = "VCF2DF_DUPLICATE_KEYS"
 
 
 def _count_adjacent_dups(table: pa.Table) -> int:
@@ -181,20 +183,14 @@ def _make_encode_group(chunk_rows: int = CHUNK_ROWS, detect_dups: bool = False):
             table, sort_keys=[("conv_id", "ascending"), ("turn_idx", "ascending")]
         )
         table = table.take(idx)
-        out: list[dict] = []
         if detect_dups:
             n_dups = _count_adjacent_dups(table)
             if n_dups:
-                out.append(
-                    {
-                        "partition_id": partition_id, "chunk_idx": -1,
-                        "column": DUP_MARKER, "codec": "none",
-                        "n_rows": n_dups, "payload": None, "aux": None,
-                        "meta": "{}", "raw_bytes": 0, "enc_bytes": 0,
-                        "stat_min_str": None, "stat_max_str": None,
-                        "stat_min_num": None, "stat_max_num": None,
-                    }
+                raise ValueError(
+                    f"{DUPLICATE_KEYS}: {n_dups} duplicate (conv_id, turn_idx) "
+                    f"rows in partition {partition_id}"
                 )
+        out: list[dict] = []
         fsst_cache: dict = {}
         for chunk_idx, lo in enumerate(range(0, table.num_rows, chunk_rows)):
             chunk = table.slice(lo, chunk_rows)
@@ -307,9 +303,10 @@ def encode_keyed(keyed: DataFrame, chunk_rows: int = CHUNK_ROWS,
     min/max pruning within each hash partition.
 
     ``detect_dups`` fuses the (conv_id, turn_idx)-uniqueness validation
-    into the encode pass itself: duplicate counts surface as ``__dup__``
-    marker block rows instead of costing a separate windowed pass + action
-    over the full input (the validate-then-encode default used to read the
+    into the encode pass itself: a group holding duplicate keys raises an
+    error tagged ``DUPLICATE_KEYS``, which fails the action that consumes
+    the blocks, instead of costing a separate windowed pass + action over
+    the full input (the validate-then-encode default used to read the
     100-TB input twice).
     """
     return keyed.groupBy("_pkey").applyInArrow(

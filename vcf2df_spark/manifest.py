@@ -17,14 +17,13 @@ manifests append-only, manifest-write-last as the commit point.
 
 from __future__ import annotations
 
-import json
 import time
 
-import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .blocks import MANIFEST_SCHEMA
+from .blocks import BLOCKS_SCHEMA
 
 # per-column data dictionary (reference: human-readable column descriptions
 # in the Parquet footer, converter/reservedColumns.go:31-56, README.md:75-77)
@@ -199,16 +198,61 @@ def build_manifests(
     )
 
 
-def committed_partitions(spark: SparkSession, manifests_path: str, job_id: str) -> DataFrame:
-    """Partitions already durable for this job (empty DF if no manifests yet)."""
+def committed_partitions(spark: SparkSession, manifests_path: str, job_id: str) -> list[int]:
+    """Sorted ids of the partitions already durable for this job.
+
+    A missing manifests table (a fresh warehouse) fails the read, on any
+    filesystem, and yields no ids without a Spark job. The read names the
+    three columns it needs, so an existing table costs one scan job and no
+    footer-inference job; duplicate commits are dropped on the driver.
+    """
     try:
-        m = spark.read.parquet(manifests_path)
-    except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA).select("partition_id")
-    return (
+        m = spark.read.schema("job_id STRING, partition_id INT, status STRING").parquet(
+            manifests_path
+        )
+    except AnalysisException:
+        return []
+    rows = (
         m.filter((F.col("job_id") == job_id) & (F.col("status") == "committed"))
         .select("partition_id")
-        .distinct()
+        .collect()
+    )
+    return sorted({r.partition_id for r in rows})
+
+
+def blocks_dir(root: str, pid: int, shard_dirs: int | None) -> str:
+    """The hive directory that holds partition ``pid``'s blocks."""
+    return (f"{root}/shard={pid % shard_dirs}/partition_id={pid}"
+            if shard_dirs else f"{root}/partition_id={pid}")
+
+
+def with_layout(blocks: DataFrame, shard_dirs: int | None) -> tuple[DataFrame, list[str]]:
+    """``blocks`` and the hive partition columns of the warehouse layout
+    (a ``shard`` level above the partition dirs when ``shard_dirs``)."""
+    if not shard_dirs:
+        return blocks, ["partition_id"]
+    return (
+        blocks.withColumn("shard", F.pmod(F.col("partition_id"), F.lit(shard_dirs))),
+        ["shard", "partition_id"],
+    )
+
+
+def read_blocks(
+    spark: SparkSession,
+    root: str,
+    pids: list[int] | None = None,
+    shard_dirs: int | None = None,
+) -> DataFrame:
+    """The blocks under ``root``, or only partitions ``pids`` read by
+    directory (basePath keeps the partition columns): the manifests of a
+    write are built from exactly the dirs it wrote, never from other
+    partitions' payloads. The read carries the blocks schema, so it plans
+    without a footer-inference job."""
+    reader = spark.read.schema(BLOCKS_SCHEMA)
+    if pids is None:
+        return reader.parquet(root)
+    return reader.option("basePath", root).parquet(
+        *[blocks_dir(root, p, shard_dirs) for p in pids]
     )
 
 

@@ -130,11 +130,6 @@ def routed_rewrite(
         raise RewriteError(str(e)) from None
 
 
-def _blocks_dir(root: str, pid: int, shard_dirs: int | None) -> str:
-    return (f"{root}/shard={pid % shard_dirs}/partition_id={pid}"
-            if shard_dirs else f"{root}/partition_id={pid}")
-
-
 def _routed_rewrite_locked(
     spark: SparkSession,
     wh: str,
@@ -210,7 +205,7 @@ def _routed_rewrite_locked(
     for pid in sorted(pids):
         cands = [f"{root}/partition_id={pid}"]
         if shard_dirs:
-            cands.insert(0, _blocks_dir(root, pid, shard_dirs))
+            cands.insert(0, manifest.blocks_dir(root, pid, shard_dirs))
         for d in cands:
             if os.path.isdir(d):
                 routed_dirs.append(d)
@@ -247,13 +242,7 @@ def _routed_rewrite_locked(
     keyed = with_partition_key(kept, num_partitions)
     staging = f"{wh}/.rewrite_staging"
     fsutil.rmtree_checked(staging)
-    staged = encode_keyed(keyed)
-    part_cols = ["partition_id"]
-    if shard_dirs:
-        staged = staged.withColumn(
-            "shard", F.pmod(F.col("partition_id"), F.lit(shard_dirs))
-        )
-        part_cols = ["shard", "partition_id"]
+    staged, part_cols = manifest.with_layout(encode_keyed(keyed), shard_dirs)
     staged.write.partitionBy(*part_cols).parquet(f"{staging}/blocks")
     n_before = int(obs_before.get["n"])
     n_after = int(obs_after.get["n"])
@@ -304,13 +293,12 @@ def _routed_rewrite_locked(
     # a partition emptied by the delete has no staged dir — removed.
     emptied = sorted(set(pids) - live_pids)
     for pid in sorted(pids):
-        dst = _blocks_dir(root, pid, shard_dirs)
+        dst = manifest.blocks_dir(root, pid, shard_dirs)
         legacy = f"{root}/partition_id={pid}"
         for d in {dst, legacy}:
             if os.path.isdir(d):
                 fsutil.rmtree_checked(d)
-        src = (f"{staging}/blocks/shard={pid % shard_dirs}/partition_id={pid}"
-               if shard_dirs else f"{staging}/blocks/partition_id={pid}")
+        src = manifest.blocks_dir(f"{staging}/blocks", pid, shard_dirs)
         if os.path.isdir(src):
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.rename(src, dst)
