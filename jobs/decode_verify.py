@@ -45,6 +45,7 @@ def main(argv: list[str] | None = None) -> None:
     spark = get_spark(master=args.master, app_name="decode_verify")
     t0 = time.time()
 
+    meta = manifest_mod.WarehouseMeta.load(args.warehouse)
     blocks = spark.read.parquet(f"{args.warehouse}/blocks")
     if args.reader == "scan":
         from vcf2df_spark.datasource import read_warehouse
@@ -55,37 +56,29 @@ def main(argv: list[str] | None = None) -> None:
         # schema-derivation aggregate — one Spark job of pure overhead
         # (~0.3 s measured, the r3 grouped-decode regression); warehouses
         # without manifests keep the loud heterogeneity-checking derivation
-        from vcf2df_spark.datasource import ctypes_from_manifests
         from vcf2df_spark.decode import schema_from_ctypes
 
-        ctypes = ctypes_from_manifests(args.warehouse)
+        ctypes = meta.ctypes()
         pre = schema_from_ctypes(ctypes) if ctypes is not None else None
         decoded = decode_blocks(blocks, out_schema=pre)
     source = normalize_input(spark.read.parquet(args.source))
 
     # manifest integrity: recompute each partition's content checksum from
-    # the stored blocks and compare to the committed manifest row
+    # the stored blocks and compare it to every manifest row of that
+    # partition. Only a warehouse without manifests (e.g. a bench
+    # warehouse) skips the check (-1); any other error fails the job.
     checksum_mismatches = -1
     column_desc = None
-    try:
-        manifests = spark.read.parquet(f"{args.warehouse}/manifests")
-        committed = manifests.select(
-            "partition_id", F.col("checksum").alias("committed_checksum")
+    if meta.exists:
+        column_desc = meta.column_desc()  # self-describing output
+        recomputed = dict(
+            manifest_mod.build_manifests(blocks, "verify", args.source)
+            .select("partition_id", "checksum").collect()
         )
-        if "column_desc" in manifests.columns:  # self-describing output
-            row = manifests.select("column_desc").first()
-            if row is not None:
-                column_desc = json.loads(row["column_desc"])
-        recomputed = manifest_mod.build_manifests(blocks, "verify", args.source).select(
-            "partition_id", "checksum"
+        checksum_mismatches = sum(
+            1 for pid, committed in meta.checksums()
+            if pid in recomputed and recomputed[pid] != committed
         )
-        checksum_mismatches = (
-            recomputed.join(committed, "partition_id")
-            .filter(F.col("checksum") != F.col("committed_checksum"))
-            .count()
-        )
-    except Exception:
-        pass  # no manifests table (e.g. bench warehouse) -> skip
 
     if args.deep:
         # exact: column SETS must match (a warehouse missing a whole column

@@ -90,7 +90,7 @@ def main(argv: list[str] | None = None) -> None:
 
     # materialize the committed set on the driver: cuts the plan's lineage to
     # the manifests table we append to below (self-referential read-write)
-    committed_ids = manifest.committed_partitions(spark, manifests_path, args.job_id)
+    committed_ids = manifest.committed_partitions(args.out, args.job_id)
     n_committed = len(committed_ids)
     pending = keyed
     if committed_ids:

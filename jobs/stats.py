@@ -21,23 +21,16 @@ import time
 
 
 def warehouse_stats(warehouse: str) -> dict:
-    import pyarrow.dataset as pads
-
     from vcf2df_spark.decode import ctypes_from_signatures
+    from vcf2df_spark.manifest import WarehouseMeta
 
-    d = pads.dataset(
-        f"{warehouse}/manifests", format="parquet", partitioning="hive"
-    )
-    names = d.schema.names
-    cols = [
-        c for c in (
-            "job_id", "partition_id", "n_chunks", "n_rows", "codecs",
-            "raw_bytes", "enc_bytes", "status", "num_partitions",
-            "shard_dirs", "schema_sig", "epoch",
-        ) if c in names
-    ]
-    flt = pads.field("status") == "committed" if "status" in names else None
-    rows = d.to_table(columns=cols, filter=flt).to_pylist()
+    meta = WarehouseMeta.load(warehouse)
+    if not meta.exists:
+        raise FileNotFoundError(f"{warehouse}/manifests")
+    rows = meta.rows((
+        "job_id", "partition_id", "n_chunks", "n_rows", "codecs",
+        "raw_bytes", "enc_bytes", "schema_sig", "epoch",
+    ), committed=True)
     if not rows:
         return {"status": "empty", "warehouse": warehouse}
 

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from jobs import compact
 from vcf2df_spark import datasource, fixtures, scan
+from vcf2df_spark.manifest import WarehouseMeta
 from vcf2df_spark.encode import encode_transcripts, normalize_input
 
 
@@ -56,7 +57,7 @@ def test_compact_epoch_warehouse(spark, tmp_path, capsys):
 
     # routed point lookup works against the compacted warehouse
     target = want[len(want) // 2].conv_id
-    pids = scan._manifest_conv_partitions(out, target)
+    pids = WarehouseMeta.load(out).route([target])[0]
     assert pids is not None and len(pids) == 1
     hit = scan.fetch_conversation(spark, out, target)
     assert len(hit) == sum(1 for r in want if r.conv_id == target) > 0

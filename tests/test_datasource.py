@@ -25,6 +25,7 @@ from vcf2df_spark import datasource, fixtures
 from vcf2df_spark.datasource import PrunedTranscriptDataSource, chunk_overlaps
 from vcf2df_spark.decode import decode_blocks
 from vcf2df_spark.encode import encode_transcripts, normalize_input
+from vcf2df_spark.manifest import WarehouseMeta
 
 
 @pytest.fixture(scope="module")
@@ -356,7 +357,7 @@ def test_planning_reads_manifests_not_blocks(spark, mwh, monkeypatch):
 
 
 def test_ctypes_from_manifests_matches_blocks_scan(mwh):
-    sig = datasource.ctypes_from_manifests(mwh)
+    sig = WarehouseMeta.load(mwh).ctypes()
     full = datasource._ctypes_from_blocks(f"{mwh}/blocks")
     assert sig == full
     assert sig["score"] == "f64" and sig["conv_id"] == "str"
@@ -372,7 +373,7 @@ def test_legacy_manifests_without_sig_fall_back(spark, mwh, tmp_path):
     spark.read.parquet(f"{mwh}/manifests").drop("schema_sig").write.parquet(
         f"{root}/manifests"
     )
-    assert datasource.ctypes_from_manifests(root) is None
+    assert WarehouseMeta.load(root).ctypes() is None
     got = datasource.infer_ctypes(f"{root}/blocks")
     assert got == datasource._ctypes_from_blocks(f"{root}/blocks")
 

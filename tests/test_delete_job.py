@@ -342,18 +342,11 @@ def test_bulk_delete_via_ids_file_and_anti_join(spark, wh, tmp_path,
     manifests read for the whole batch), and — with the isin threshold
     forced to 0 — the broadcast anti-join drop filter, all through the
     job surface."""
+    import pyarrow.dataset as pads
+
     import vcf2df_spark.rewrite as rewrite_mod
-    import vcf2df_spark.scan as scan_mod
 
     monkeypatch.setattr(rewrite_mod, "_ISIN_MAX_IDS", 0)
-    route_calls: list[int] = []
-    real_route_many = scan_mod._route_many
-
-    def counting_route_many(warehouse, conv_ids):
-        route_calls.append(len(list(conv_ids)))
-        return real_route_many(warehouse, conv_ids)
-
-    monkeypatch.setattr(scan_mod, "_route_many", counting_route_many)
 
     full = read_warehouse(spark, wh)
     cids = [r[0] for r in
@@ -363,14 +356,24 @@ def test_bulk_delete_via_ids_file_and_anti_join(spark, wh, tmp_path,
 
     ids_file = tmp_path / "erase.txt"
     ids_file.write_text("\n".join(cids[1:]) + "\n\n")
+    opens: list[str] = []
+    real_dataset = pads.dataset
+
+    def counting(source, *a, **kw):
+        if str(source).rstrip("/").endswith("/manifests"):
+            opens.append(source)
+        return real_dataset(source, *a, **kw)
+
+    monkeypatch.setattr(pads, "dataset", counting)
     code, rec = _run(delete_job.main, [
         "--warehouse", wh, "--conv-id", cids[0],
         "--conv-ids-file", str(ids_file), "--master", "local[4]",
     ])
     assert code == 0 and rec["status"] == "ok"
     assert rec["rows_deleted"] == n_del
-    # the whole batch routed in ONE _route_many call (no per-id loop)
-    assert route_calls == [4]
+    # the whole batch routed from ONE manifests open (no per-id loop)
+    assert len(opens) == 1
+    monkeypatch.setattr(pads, "dataset", real_dataset)
 
     after = read_warehouse(spark, wh)
     assert after.filter(F.col("conv_id").isin(cids)).count() == 0
@@ -384,7 +387,7 @@ def test_bulk_delete_via_ids_file_and_anti_join(spark, wh, tmp_path,
 
 def test_route_many_matches_per_id_routes(spark, wh):
     """Batch routing returns exactly the union of single-id routes."""
-    from vcf2df_spark.scan import _route, _route_many
+    from vcf2df_spark.manifest import WarehouseMeta
 
     full = read_warehouse(spark, wh)
     cids = [r[0] for r in
@@ -392,9 +395,9 @@ def test_route_many_matches_per_id_routes(spark, wh):
     want: set = set()
     shard = None
     for c in cids:
-        p, shard = _route(wh, c)
+        p, shard = WarehouseMeta.load(wh).route([c])
         want.update(p)
-    got, got_shard = _route_many(wh, cids)
+    got, got_shard = WarehouseMeta.load(wh).route(cids)
     assert sorted(want) == got and shard == got_shard
 
 

@@ -230,7 +230,7 @@ def test_fetch_conversation_hash_routed_partition_pruning(spark, tmp_path):
     blocks.unpersist()
 
     target = "conv-00000123"
-    pids = scan._manifest_conv_partitions(wh, target)
+    pids = manifest.WarehouseMeta.load(wh).route([target])[0]
     # fixture convs are < 256 turns -> exactly one split -> one partition
     assert pids is not None and len(pids) == 1
     got = scan.fetch_conversation(spark, wh, target)
@@ -242,7 +242,8 @@ def test_fetch_conversation_hash_routed_partition_pruning(spark, tmp_path):
     manifest.build_manifests(blocks, "t2", "src").write.mode("overwrite").parquet(
         f"{wh}/manifests"
     )
-    pids_range = scan._manifest_conv_partitions(wh, target)
+    pids_range = manifest.WarehouseMeta.load(wh).route([target])[0]
     assert pids_range == list(range(8))
     # warehouses without manifests (bench/test layout) degrade gracefully
-    assert scan._manifest_conv_partitions(str(tmp_path / "nope"), target) is None
+    nope = manifest.WarehouseMeta.load(str(tmp_path / "nope"))
+    assert nope.route([target])[0] is None

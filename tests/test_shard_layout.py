@@ -12,6 +12,7 @@ import pytest
 import jobs.decode_verify as decode_job
 import jobs.encode as encode_job
 from vcf2df_spark import datasource, fixtures, scan
+from vcf2df_spark.manifest import WarehouseMeta
 
 
 def _run(mainfn, argv):
@@ -64,7 +65,7 @@ def test_sharded_datasource_and_pruned_scan(spark, sharded):
 
 def test_sharded_routed_point_lookup(spark, sharded):
     _, wh = sharded
-    pids, shard_dirs = scan._route(wh, "conv-00000042")
+    pids, shard_dirs = WarehouseMeta.load(wh).route(["conv-00000042"])
     assert shard_dirs == 4 and pids is not None and len(pids) == 1
     hit = scan.fetch_conversation(spark, wh, "conv-00000042")
     assert len(hit) > 0 and (hit["conv_id"] == "conv-00000042").all()

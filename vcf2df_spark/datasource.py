@@ -75,46 +75,6 @@ def _dataset(root: str):
     return pads.dataset(root, format="parquet", partitioning="hive")
 
 
-def ctypes_from_manifests(warehouse: str) -> dict[str, str] | None:
-    """column -> ctype from the manifests' ``schema_sig`` rows: O(partitions)
-    metadata instead of the full blocks pull — the read-planning analogue of
-    opening ONE Parquet footer (``converter/convert_test.go:63-97``) rather
-    than all of them.
-
-    The manifests are the commit log, so committed ``schema_sig`` rows ARE
-    the warehouse schema. Distinct signatures (e.g. epochs that added an
-    extra column) union at planning; a ctype conflict fails loudly. Returns
-    None (caller falls back to the blocks scan) when the signature is
-    unavailable: no manifests dir, pre-r4 manifests without the column, or
-    any null signature rows mixed in.
-    """
-    import pyarrow.dataset as pads
-
-    from .decode import ctypes_from_signatures
-
-    try:
-        d = pads.dataset(
-            f"{warehouse}/manifests", format="parquet", partitioning="hive"
-        )
-        if "schema_sig" not in d.schema.names:
-            return None
-        flt = (
-            pads.field("status") == "committed"
-            if "status" in d.schema.names else None
-        )
-        sigs = set(
-            d.to_table(columns=["schema_sig"], filter=flt)
-            .column("schema_sig").to_pylist()
-        )
-    except (FileNotFoundError, OSError):
-        return None
-    if not sigs or None in sigs:
-        return None
-    return ctypes_from_signatures(
-        (json.loads(sig).items() for sig in sigs), merge=True
-    )
-
-
 def infer_ctypes(root: str) -> dict[str, str]:
     """column -> ctype for the warehouse whose blocks live at ``root``.
 
@@ -128,7 +88,9 @@ def infer_ctypes(root: str) -> dict[str, str]:
     :meth:`TranscriptReader.read`, where the chunk's rows are already in
     hand.
     """
-    sig = ctypes_from_manifests(os.path.dirname(root.rstrip("/")))
+    from .manifest import WarehouseMeta
+
+    sig = WarehouseMeta.load(os.path.dirname(root.rstrip("/"))).ctypes()
     if sig is not None:
         return sig
     return _ctypes_from_blocks(root)
@@ -449,7 +411,7 @@ class PrunedTranscriptReader(TranscriptReader):
         point keys, from ONE read of the manifests' hash-routing metadata.
         (None, None) = no routable filter or no routing metadata (then
         every file is planned as usual)."""
-        from .scan import _route_many
+        from .manifest import WarehouseMeta
 
         for f in self.pushed:
             if f.attribute[0] != "conv_id":
@@ -463,7 +425,9 @@ class PrunedTranscriptReader(TranscriptReader):
             else:
                 continue
             # one conjunct suffices; others only narrow further
-            return _route_many(self.warehouse, keys) if keys else (None, None)
+            if not keys:
+                return None, None
+            return WarehouseMeta.load(self.warehouse).route(keys)
         return None, None
 
     def partitions(self) -> Sequence[InputPartition]:
@@ -475,28 +439,16 @@ class PrunedTranscriptReader(TranscriptReader):
         (the same move as scan.fetch_conversation). Layouts without
         per-partition dirs (flat files, streaming epochs) fall back to the
         full listing, and chunk zone maps still prune inside every task."""
-        import pyarrow.dataset as pads
+        from .manifest import routed_blocks_dirs
 
         pids, shard_dirs = self._routed_pids()
         if pids is None:
             return super().partitions()
-        files: list[_BlocksFilePartition] = []
-        for pid in sorted(pids):
-            cand = [f"{self.root}/partition_id={pid}"]
-            if shard_dirs:
-                cand.insert(
-                    0, f"{self.root}/shard={pid % shard_dirs}/partition_id={pid}"
-                )
-            for d in cand:
-                try:
-                    dirfiles = pads.dataset(d, format="parquet").files
-                except (FileNotFoundError, OSError):
-                    continue
-                files.extend(
-                    _BlocksFilePartition(f, {"partition_id": pid})
-                    for f in dirfiles
-                )
-                break
+        files = [
+            _BlocksFilePartition(f, {"partition_id": pid})
+            for pid, _d, dset in routed_blocks_dirs(self.root, pids, shard_dirs)
+            for f in dset.files
+        ]
         if files:
             return files
         # routed dirs absent (flat/epoch layout) or a routed miss: plan the

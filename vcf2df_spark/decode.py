@@ -380,7 +380,7 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
 
     ``out_schema`` skips that derivation when the caller already holds the
     warehouse schema (e.g. from the manifests' ``schema_sig`` via
-    ``datasource.ctypes_from_manifests``). Callers passing it take over the
+    ``manifest.WarehouseMeta.ctypes``). Callers passing it take over the
     heterogeneity guarantee the derivation enforces (manifest signatures
     carry the same check).
 

@@ -9,6 +9,10 @@ to resume after failure (SURVEY.md §4.3). Blocks are written partitioned
 by partition_id with dynamic partition overwrite, so re-encoding a
 partition is idempotent.
 
+Only this module knows the manifests' columns: it writes them
+(:func:`build_manifests`), reads them driver-side (:class:`WarehouseMeta`)
+and rewrites them distributed (:func:`rewritten_manifests`).
+
 Sandbox note: the production target is Iceberg (atomic snapshot commits);
 no Iceberg runtime jar ships with this pyspark, so the documented fallback
 is the same layout on plain Parquet — blocks partitioned by partition_id,
@@ -17,13 +21,14 @@ manifests append-only, manifest-write-last as the commit point.
 
 from __future__ import annotations
 
+import functools
+import json
 import time
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .blocks import BLOCKS_SCHEMA
+from .blocks import BLOCKS_SCHEMA, MANIFEST_SCHEMA
 
 # per-column data dictionary (reference: human-readable column descriptions
 # in the Parquet footer, converter/reservedColumns.go:31-56, README.md:75-77)
@@ -125,7 +130,7 @@ def build_manifests(
             ).alias("_conv_max_raw"),
             # a chunk whose conv_id/turn_idx stats are null (suppressed or
             # legacy) is NOT covered by the min/max above — F.min/F.max skip
-            # nulls, so without this flag _route's range fallback would
+            # nulls, so without this flag the route's range fallback would
             # silently prune partitions that do hold the key (ADVICE r3)
             F.max(
                 F.when(
@@ -145,7 +150,7 @@ def build_manifests(
                 ).otherwise(0)
             ).alias("_turn_stat_nulls"),
             # per-partition (column -> ctype) signature: O(partitions)
-            # read planning (datasource.ctypes_from_manifests) instead of
+            # read planning (WarehouseMeta.ctypes) instead of
             # the full blocks-metadata pull; null ctype entries are legacy
             # blocks whose type decode.resolve_ctype supplies
             F.to_json(
@@ -182,7 +187,7 @@ def build_manifests(
         F.lit(input_path).alias("input_path"),
         F.lit("committed").alias("status"),
         F.lit(int(time.time() * 1_000_000)).alias("committed_at"),
-        # null conv range = "this partition is unprunable" (_route keeps it)
+        # null conv range = "this partition is unprunable" (route keeps it)
         F.when(F.col("_conv_stat_nulls") == 0, F.col("_conv_min_raw")).alias(
             "conv_min"
         ),
@@ -198,32 +203,194 @@ def build_manifests(
     )
 
 
-def committed_partitions(spark: SparkSession, manifests_path: str, job_id: str) -> list[int]:
-    """Sorted ids of the partitions already durable for this job.
+_ROUTING_COLUMNS = ("partition_id", "status", "conv_min", "conv_max",
+                    "num_partitions", "turn_max", "shard_dirs")
 
-    A missing manifests table (a fresh warehouse) fails the read, on any
-    filesystem, and yields no ids without a Spark job. The read names the
-    three columns it needs, so an existing table costs one scan job and no
-    footer-inference job; duplicate commits are dropped on the driver.
+
+class WarehouseMeta:
+    """The one reader of a warehouse's manifests table, driver-side.
+
+    :meth:`load` runs one pyarrow dataset discovery of ``{warehouse}/
+    manifests`` (local paths and URIs alike, no Spark job); each view then
+    reads only its own columns, O(partitions) narrow rows. Only
+    ``FileNotFoundError`` means "no manifests" (bench/test warehouses):
+    every view is then empty or None. Any other error propagates — an
+    unreachable remote URI must not look like a fresh warehouse, or encode
+    would resume from zero and decode_verify would skip its check.
     """
-    try:
-        m = spark.read.schema("job_id STRING, partition_id INT, status STRING").parquet(
-            manifests_path
+
+    def __init__(self, dataset):
+        self._ds = dataset
+        self.exists = dataset is not None
+        self.names = set(dataset.schema.names) if self.exists else set()
+        self.has_epoch = "epoch" in self.names  # a streaming warehouse
+
+    @classmethod
+    def load(cls, warehouse: str) -> WarehouseMeta:
+        import pyarrow.dataset as pads
+
+        try:
+            ds = pads.dataset(f"{warehouse}/manifests", format="parquet",
+                              partitioning="hive")
+        except FileNotFoundError:
+            ds = None
+        return cls(ds)
+
+    def rows(self, columns, committed: bool = False) -> list[dict]:
+        """The manifest rows projected onto whichever of ``columns`` exist;
+        ``committed`` keeps status='committed' rows (when status exists)."""
+        import pyarrow.dataset as pads
+
+        cols = [c for c in columns if c in self.names]
+        if not cols:
+            return []
+        flt = (pads.field("status") == "committed"
+               if committed and "status" in self.names else None)
+        return self._ds.to_table(columns=cols, filter=flt).to_pylist()
+
+    @functools.cached_property
+    def _routing_rows(self) -> list[dict]:
+        return self.rows(_ROUTING_COLUMNS)
+
+    @property
+    def mods(self) -> set:
+        """num_partitions values over ALL rows, committed or not."""
+        return {r.get("num_partitions") for r in self._routing_rows}
+
+    @property
+    def turn_max(self) -> int | None:
+        """Max persisted turn_max; None when any row lacks it."""
+        tm = [r.get("turn_max") for r in self._routing_rows]
+        return None if not tm or None in tm else max(tm)
+
+    def route(self, conv_ids) -> tuple[list[int] | None, int | None]:
+        """(sorted partition ids that can hold any of ``conv_ids``,
+        shard_dirs), or (None, None) when the manifests cannot prune.
+
+        Preferred route: the encode partitioner is a deterministic hash
+        (``pmod(xxhash64(conv_id, turn_idx // 256), N)``), so with the
+        modulus and the max turn index on record a batch of K keys
+        COMPUTES its partition dirs (sparkhash.pkey_for) from this one
+        read. Conv min/max ranges cannot prune a hash layout, but serve
+        as the fallback for manifests without routing metadata; a row
+        with a null range (legacy or stat-suppressed) is always kept."""
+        from .encode import TURNS_PER_SPLIT
+        from .sparkhash import pkey_for
+
+        if "conv_min" not in self.names or "conv_max" not in self.names:
+            return None, None
+        t = [r for r in self._routing_rows if r.get("status") == "committed"]
+        if not t:
+            return None, None
+
+        shard_vals = {r.get("shard_dirs") for r in t} - {None}
+        shard_dirs = shard_vals.pop() if len(shard_vals) == 1 else None
+
+        mods = {r.get("num_partitions") for r in t}
+        turn_maxes = [r.get("turn_max") for r in t]
+        if None not in mods and None not in turn_maxes:
+            n_splits = max(turn_maxes) // TURNS_PER_SPLIT + 1
+            return sorted(
+                {
+                    pkey_for(cid, s, n)
+                    for cid in conv_ids for n in mods for s in range(n_splits)
+                }
+            ), shard_dirs
+        return sorted(
+            {
+                r["partition_id"]
+                for r in t
+                if r["conv_min"] is None
+                or any(r["conv_min"] <= cid <= r["conv_max"] for cid in conv_ids)
+            }
+        ), shard_dirs
+
+    def ctypes(self) -> dict[str, str] | None:
+        """column -> ctype from the committed ``schema_sig`` rows (the
+        read-planning analogue of opening ONE Parquet footer); None when a
+        signature is unavailable (no manifests, pre-r4 manifests, or any
+        null signature), so the caller derives it from the blocks."""
+        from .decode import ctypes_from_signatures
+
+        if "schema_sig" not in self.names:
+            return None
+        sigs = {r["schema_sig"] for r in self.rows(["schema_sig"], committed=True)}
+        if not sigs or None in sigs:
+            return None
+        return ctypes_from_signatures(
+            (json.loads(sig).items() for sig in sigs), merge=True
         )
-    except AnalysisException:
-        return []
-    rows = (
-        m.filter((F.col("job_id") == job_id) & (F.col("status") == "committed"))
-        .select("partition_id")
-        .collect()
-    )
-    return sorted({r.partition_id for r in rows})
+
+    def committed_ids(self, job_id: str) -> list[int]:
+        """Sorted ids of the partitions ``job_id`` has committed."""
+        return sorted({
+            r["partition_id"]
+            for r in self.rows(["partition_id", "job_id"], committed=True)
+            if r.get("job_id") == job_id
+        })
+
+    def checksums(self) -> list[tuple[int, str]]:
+        """(partition_id, checksum) of every manifest row."""
+        return [(r["partition_id"], r.get("checksum"))
+                for r in self.rows(["partition_id", "checksum"])]
+
+    def column_desc(self) -> dict[str, str] | None:
+        """column -> description, merged over the committed rows."""
+        merged: dict[str, str] = {}
+        for r in self.rows(["column_desc"], committed=True):
+            merged.update(json.loads(r["column_desc"] or "{}"))
+        return dict(sorted(merged.items())) or None
+
+
+def committed_partitions(warehouse: str, job_id: str) -> list[int]:
+    """Sorted ids of the partitions already durable for this job; a fresh
+    warehouse has none. A driver read, no Spark job."""
+    return WarehouseMeta.load(warehouse).committed_ids(job_id)
+
+
+def rewritten_manifests(
+    spark: SparkSession, warehouse: str, pids, fresh: DataFrame | None
+) -> DataFrame:
+    """The manifests table after partitions ``pids`` were rewritten: every
+    other row, read and filtered by executors (never collected to the
+    driver), plus the ``fresh`` rows, both projected by name onto
+    MANIFEST_SCHEMA (pre-r4 rows get a null schema_sig)."""
+
+    def project(df: DataFrame) -> DataFrame:
+        have = set(df.columns)
+        return df.select(*[
+            (F.col(f.name) if f.name in have else F.lit(None))
+            .cast(f.dataType).alias(f.name)
+            for f in MANIFEST_SCHEMA.fields
+        ])
+
+    out = project(spark.read.parquet(f"{warehouse}/manifests")
+                  .filter(~F.col("partition_id").isin(sorted(pids))))
+    return out if fresh is None else out.unionByName(project(fresh))
 
 
 def blocks_dir(root: str, pid: int, shard_dirs: int | None) -> str:
     """The hive directory that holds partition ``pid``'s blocks."""
     return (f"{root}/shard={pid % shard_dirs}/partition_id={pid}"
             if shard_dirs else f"{root}/partition_id={pid}")
+
+
+def routed_blocks_dirs(root: str, pids, shard_dirs: int | None) -> list[tuple]:
+    """(pid, dir, pyarrow dataset) for each of ``pids`` whose blocks dir
+    exists: the shard dir first, then the legacy single-level dir. Opens
+    only those dirs — never a whole-tree listing."""
+    import pyarrow.dataset as pads
+
+    out = []
+    for pid in sorted(pids):
+        for d in dict.fromkeys([blocks_dir(root, pid, shard_dirs),
+                                blocks_dir(root, pid, None)]):
+            try:
+                out.append((pid, d, pads.dataset(d, format="parquet")))
+                break
+            except FileNotFoundError:
+                continue
+    return out
 
 
 def with_layout(blocks: DataFrame, shard_dirs: int | None) -> tuple[DataFrame, list[str]]:

@@ -74,21 +74,6 @@ def _without_ids(spark: SparkSession, df: DataFrame, conv_ids: list) -> DataFram
     return df.join(F.broadcast(ids_df), "conv_id", "left_anti")
 
 
-def _manifest_projection(df: DataFrame) -> DataFrame:
-    """By-name projection onto the current MANIFEST_SCHEMA: pre-r4 rows
-    (no schema_sig) rewrite cleanly with a null signature."""
-    from .blocks import MANIFEST_SCHEMA
-
-    cols = []
-    have = set(df.columns)
-    for f in MANIFEST_SCHEMA.fields:
-        if f.name in have:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
-
-
 def routed_rewrite(
     spark: SparkSession,
     warehouse: str,
@@ -143,15 +128,14 @@ def _routed_rewrite_locked(
     from . import fsutil, manifest
     from .decode import decode_blocks
     from .encode import TURNS_PER_SPLIT, encode_keyed, with_partition_key
-    from .scan import _route_many, _routing_meta
     from .sparkhash import pkey_for
 
     conv_ids = sorted(set(conv_ids))
     # ONE driver-side manifests read (no Spark distinct job, r6) plans the
     # rewrite and routes the whole batch (a per-id loop would pay K full
     # metadata reads on a bulk GDPR delete)
-    meta = _routing_meta(wh)
-    p_list, shard_dirs = _route_many(meta, conv_ids)
+    meta = manifest.WarehouseMeta.load(wh)
+    p_list, shard_dirs = meta.route(conv_ids)
     if p_list is None:
         raise RewriteError(
             "warehouse has no manifests routing metadata "
@@ -160,7 +144,7 @@ def _routed_rewrite_locked(
         )
     pids: set = set(p_list)
 
-    if meta["has_epoch"]:
+    if meta.has_epoch:
         raise RewriteError(
             "streaming (epoch-partitioned) warehouses cannot be rewritten "
             "in place; compact to a batch warehouse first "
@@ -168,7 +152,7 @@ def _routed_rewrite_locked(
             "--via-compact --out NEW_WH folds the erasure into that "
             "compaction"
         )
-    mods = meta["mods"]
+    mods = meta.mods
     num_partitions = mods.pop() if len(mods) == 1 and None not in mods else None
     if num_partitions is None:
         raise RewriteError(
@@ -187,8 +171,8 @@ def _routed_rewrite_locked(
             F.count(F.lit(1)).alias("n"), F.max("turn_idx").alias("tmax")
         ).collect()[0]
         n_inserted = int(rep_agg["n"])
-        if rep_agg["tmax"] is not None and meta["turn_max"] is not None:
-            lo = meta["turn_max"] // TURNS_PER_SPLIT + 1
+        if rep_agg["tmax"] is not None and meta.turn_max is not None:
+            lo = meta.turn_max // TURNS_PER_SPLIT + 1
             hi = int(rep_agg["tmax"]) // TURNS_PER_SPLIT + 1
             for cid in conv_ids:
                 for s in range(lo, hi):
@@ -201,15 +185,8 @@ def _routed_rewrite_locked(
     # blocks relation a bare scan, so decode's schema derivation stays
     # driver-side (no Spark aggregate job).
     root = f"{wh}/blocks"
-    routed_dirs = []
-    for pid in sorted(pids):
-        cands = [f"{root}/partition_id={pid}"]
-        if shard_dirs:
-            cands.insert(0, manifest.blocks_dir(root, pid, shard_dirs))
-        for d in cands:
-            if os.path.isdir(d):
-                routed_dirs.append(d)
-                break
+    routed_dirs = [d for _pid, d, _ds in
+                   manifest.routed_blocks_dirs(root, pids, shard_dirs)]
     if routed_dirs:
         blocks = spark.read.option("basePath", root).parquet(*routed_dirs)
     else:
@@ -273,21 +250,13 @@ def _routed_rewrite_locked(
     # materialization of the warehouse-sized table, and no plan ever
     # reads and overwrites wh/manifests in one lineage (the staging
     # write reads wh/manifests, the swap is driver-side fs ops).
-    manifests_all = spark.read.parquet(f"{wh}/manifests")
-    untouched = _manifest_projection(
-        manifests_all.filter(~F.col("partition_id").isin(sorted(pids)))
+    fresh = manifest.build_manifests(
+        spark.read.parquet(f"{staging}/blocks"), job_id, desc,
+        num_partitions=num_partitions, shard_dirs=shard_dirs,
+    ) if live_pids else None
+    manifest.rewritten_manifests(spark, wh, pids, fresh).coalesce(4).write.parquet(
+        f"{staging}/manifests"
     )
-    if live_pids:
-        fresh = _manifest_projection(
-            manifest.build_manifests(
-                spark.read.parquet(f"{staging}/blocks"), job_id, desc,
-                num_partitions=num_partitions, shard_dirs=shard_dirs,
-            )
-        )
-        staged_manifests = untouched.unionByName(fresh)
-    else:
-        staged_manifests = untouched
-    staged_manifests.coalesce(4).write.parquet(f"{staging}/manifests")
 
     # commit blocks: swap the routed dirs for their staged replacements;
     # a partition emptied by the delete has no staged dir — removed.

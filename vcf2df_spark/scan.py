@@ -112,113 +112,6 @@ def qualifying_chunks(
     return qual
 
 
-def _manifest_conv_partitions(warehouse: str, conv_id: str) -> list[int] | None:
-    """Partition ids that can contain ``conv_id``, from the manifests table
-    (one tiny row per partition — O(partitions) metadata, never blocks).
-
-    Preferred route: the encode partitioner is a deterministic hash
-    (``pmod(xxhash64(conv_id, turn_idx // 256), N)``), so with the modulus
-    and the max turn index on record the lookup COMPUTES its partition dirs
-    (sparkhash.pkey_for) — ~1 dir per 256-turn split, independent of
-    warehouse size. Conv min/max ranges can't prune a hash layout (every
-    partition spans the keyspace), but serve as the fallback for manifests
-    written without routing metadata and for future range layouts.
-
-    Returns None when no pruning is possible (no manifests dir —
-    bench/test warehouses — or legacy columns); rows with null metadata
-    (legacy appends) conservatively disable the affected route.
-    """
-    return _route(warehouse, conv_id)[0]
-
-
-def _route(warehouse: str, conv_id: str):
-    """(partition ids or None, shard_dirs or None) from the manifests."""
-    return _route_many(warehouse, [conv_id])
-
-
-def _route_many(source, conv_ids):
-    """Batch routing: (sorted partition ids or None, shard_dirs or None)
-    for ALL of ``conv_ids`` from ONE manifests read. A per-id `_route`
-    loop re-reads the manifests table per key — at ~400k manifest rows a
-    bulk GDPR delete of K conversations would pay K full metadata reads;
-    this pays one read plus K hash computations.
-
-    ``source`` is a warehouse path, or the :func:`_routing_meta` of one
-    when the caller plans more than routing from the same read (the
-    routed rewrite)."""
-    from .encode import TURNS_PER_SPLIT
-    from .sparkhash import pkey_for
-
-    meta = source if isinstance(source, dict) else _routing_meta(source)
-    t = meta["committed"]
-    if not t:
-        return None, None
-
-    shard_vals = {r.get("shard_dirs") for r in t} - {None}
-    shard_dirs = shard_vals.pop() if len(shard_vals) == 1 else None
-
-    mods = {r.get("num_partitions") for r in t}
-    turn_maxes = [r.get("turn_max") for r in t]
-    if None not in mods and mods and None not in turn_maxes:
-        n_splits = max(turn_maxes) // TURNS_PER_SPLIT + 1
-        return sorted(
-            {
-                pkey_for(cid, s, n)
-                for cid in conv_ids for n in mods for s in range(n_splits)
-            }
-        ), shard_dirs
-
-    # range fallback: keep rows whose conv range covers ANY key (or whose
-    # range is unknown)
-    return sorted(
-        {
-            r["partition_id"]
-            for r in t
-            if r["conv_min"] is None
-            or any(r["conv_min"] <= cid <= r["conv_max"] for cid in conv_ids)
-        }
-    ), shard_dirs
-
-
-def _routing_meta(warehouse: str) -> dict:
-    """Routing and rewrite-planning metadata from ONE driver-side
-    manifests read (pyarrow, O(partitions), no Spark job). Two views of
-    the same rows:
-
-    - ``committed``: the committed rows key routing uses; empty without
-      conv ranges on record (no routing metadata).
-    - ``mods`` (num_partitions values) and ``turn_max`` (max persisted
-      turn_max, None when any row lacks it) over ALL rows, committed or
-      not — mirroring the rewrite's ambiguity check.
-
-    plus ``has_epoch`` (a streaming warehouse)."""
-    import pyarrow.dataset as pads
-
-    out = {"committed": [], "mods": set(), "turn_max": None,
-           "has_epoch": False}
-    try:
-        d = pads.dataset(
-            f"{warehouse}/manifests", format="parquet", partitioning="hive"
-        )
-        names = d.schema.names
-        out["has_epoch"] = "epoch" in names
-        cols = [c for c in ("partition_id", "status", "conv_min", "conv_max",
-                            "num_partitions", "turn_max", "shard_dirs")
-                if c in names]
-        rows = d.to_table(columns=cols).to_pylist() if cols else []
-    except (FileNotFoundError, OSError):
-        return out
-    if not rows:
-        return out
-    if "conv_min" in names and "conv_max" in names:
-        out["committed"] = [r for r in rows if r.get("status") == "committed"]
-    out["mods"] = {r.get("num_partitions") for r in rows}
-    tm = [r.get("turn_max") for r in rows]
-    if None not in tm:
-        out["turn_max"] = max(tm)
-    return out
-
-
 def fetch_conversation(spark: SparkSession, warehouse: str, conv_id: str):
     """Point lookup: one conversation, decoding the minimum possible —
     WITHOUT launching a Spark job.
@@ -245,6 +138,7 @@ def fetch_conversation(spark: SparkSession, warehouse: str, conv_id: str):
 
     from . import arrow_ops
     from .decode import _column_order, _decode_one, resolve_ctype
+    from .manifest import WarehouseMeta, routed_blocks_dirs
 
     root = f"{warehouse}/blocks"
 
@@ -252,24 +146,11 @@ def fetch_conversation(spark: SparkSession, warehouse: str, conv_id: str):
     # partition dirs — no whole-tree dataset discovery, which at ~400k
     # partition dirs is the dominant cost. Falls back to one hive-discovered
     # dataset over the tree (bench/flat/epoch layouts, legacy manifests).
-    pids, shard_dirs = _route(warehouse, conv_id)
-    sources: list[tuple] = []  # (dataset, fixed_key_dict)
-    if pids is not None:
-        for pid in pids:
-            cand_dirs = [f"{root}/partition_id={pid}"]
-            if shard_dirs:
-                cand_dirs.insert(
-                    0, f"{root}/shard={pid % shard_dirs}/partition_id={pid}"
-                )
-            for d in cand_dirs:
-                try:
-                    sources.append(
-                        (pads.dataset(d, format="parquet"),
-                         {"partition_id": pid})
-                    )
-                    break
-                except (FileNotFoundError, OSError):
-                    continue
+    pids, shard_dirs = WarehouseMeta.load(warehouse).route([conv_id])
+    sources: list[tuple] = [  # (dataset, fixed_key_dict)
+        (dset, {"partition_id": pid})
+        for pid, _d, dset in routed_blocks_dirs(root, pids or [], shard_dirs)
+    ]
     if not sources:
         dset = pads.dataset(root, format="parquet", partitioning="hive")
         sources = [(dset, {})]
