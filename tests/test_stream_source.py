@@ -4,6 +4,7 @@ reader, advancing offsets only over manifests-committed epochs."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from vcf2df_spark import datasource, fixtures, manifest
@@ -93,3 +94,27 @@ def test_stream_source_over_batch_warehouse(spark, tmp_path):
     q.awaitTermination(120)
     n = spark.sql("SELECT count(*) FROM stream_sink_batch").collect()[0][0]
     assert n == src.count()
+
+
+def test_manifests_listing_failure_is_not_a_batch_warehouse(tmp_path,
+                                                            monkeypatch):
+    """Only a missing manifests dir means "batch warehouse, one epoch 0": a
+    transient listing failure must raise, not expose uncommitted epoch=0
+    blocks."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    wh = tmp_path / "wh"
+    (wh / "blocks" / "epoch=0").mkdir(parents=True)
+    pq.write_table(pa.table({"x": [1]}), wh / "blocks" / "epoch=0" / "b.parquet")
+    reader = datasource.TranscriptStreamReader({"path": str(wh)}, None, ctypes={})
+    assert reader.latestOffset() == {"epoch": 0}  # no manifests dir
+
+    class Unreachable(pafs.LocalFileSystem):
+        def get_file_info(self, selector):
+            raise OSError("network")
+
+    monkeypatch.setattr(pafs, "LocalFileSystem", Unreachable)
+    with pytest.raises(OSError, match="network"):
+        reader.latestOffset()

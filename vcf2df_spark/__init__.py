@@ -19,3 +19,7 @@ idiomatic Spark design:
 """
 
 __version__ = "0.1.0"
+
+from .shipping import install_zip_cache_hook
+
+install_zip_cache_hook()

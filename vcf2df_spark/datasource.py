@@ -493,7 +493,6 @@ class TranscriptStreamReader(DataSourceStreamReader):
     def _committed_epochs(self) -> list[int]:
         import re
 
-        import pyarrow.dataset as pads
         from pyarrow import fs as pafs
 
         root = f"{self.warehouse}/manifests"
@@ -503,12 +502,14 @@ class TranscriptStreamReader(DataSourceStreamReader):
             infos = filesystem.get_file_info(
                 pafs.FileSelector(path, recursive=False)
             )
-        except (FileNotFoundError, OSError):
-            # no manifests at all: a plain batch warehouse is one epoch
+        except FileNotFoundError:
+            # no manifests at all: a plain batch warehouse is one epoch. Any
+            # other OSError (a transient listing failure) propagates: read as
+            # "batch", it would expose epoch=0 blocks never committed
             try:
                 if _dataset(self._batch.root).files:
                     return [0]
-            except (FileNotFoundError, OSError):
+            except FileNotFoundError:
                 pass
             return []
         out = []

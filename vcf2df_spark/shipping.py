@@ -6,6 +6,13 @@ from the repo root (or on a real cluster without --py-files), that import
 fails. ``ensure_shipped`` zips the installed package once per process and
 registers it via ``addPyFile`` — the programmatic twin of the
 ``spark-submit --py-files`` contract the jobs use.
+
+It also owns what importing the package costs a worker: pyspark calls
+``importlib.invalidate_caches()`` at the start of every Python task and
+DataSource planning call, and on CPython 3.11 each ``zipimporter`` then
+re-reads its archive's central directory (17 reads in a worker, 12 of them
+of pyspark.zip: 105-200 CPU-ms per call). ``install_zip_cache_hook``, run
+when the package is imported, makes that re-read stat-checked.
 """
 
 from __future__ import annotations
@@ -13,8 +20,11 @@ from __future__ import annotations
 import os
 import threading
 import zipfile
+import zipimport
+from typing import TYPE_CHECKING
 
-from pyspark.sql import SparkSession
+if TYPE_CHECKING:
+    from pyspark.sql import SparkSession
 
 _shipped: set[int] = set()
 _lock = threading.Lock()  # concurrent driver threads (verify.multiset_equal)
@@ -46,3 +56,35 @@ def ensure_shipped(spark: SparkSession) -> None:
             os.replace(tmp, zip_path)
         spark.sparkContext.addPyFile(zip_path)
         _shipped.add(key)
+
+
+def install_zip_cache_hook() -> None:
+    """Replace ``zipimporter.invalidate_caches`` with a stat-checked one.
+
+    An importer re-reads its archive only when the archive's
+    ``(st_ino, st_size, st_mtime_ns)``, taken before the read, differ from
+    the key recorded at its own last read; a first call, or an archive that
+    cannot be stat'ed, goes through the original method. A rebuilt zip
+    (``ensure_shipped``'s ``os.replace``, an overwritten ``--py-files``)
+    changes the key and is still re-read. Idempotent: the class method is
+    wrapped once per process.
+    """
+    with _lock:
+        original = zipimport.zipimporter.invalidate_caches
+        if getattr(original, "stat_checked", False):
+            return
+
+        def invalidate_caches(self):
+            try:
+                st = os.stat(self.archive)
+                key = (st.st_ino, st.st_size, st.st_mtime_ns)
+            except OSError:
+                key = None
+            if key is not None and key == getattr(self, "_read_key", None):
+                return
+            original(self)
+            self._read_key = key
+
+        invalidate_caches.stat_checked = True
+        invalidate_caches.__wrapped__ = original
+        zipimport.zipimporter.invalidate_caches = invalidate_caches
