@@ -26,16 +26,12 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--deep", action="store_true",
                    help="exact exceptAll comparison (two full-data shuffles) "
                         "instead of the O(1)-shuffle multiset signature")
-    p.add_argument("--reader", choices=["scan", "grouped"], default="scan",
-                   help="scan = shuffle-free datasource read (production "
-                        "path; also asserts chunk-group completeness); "
-                        "grouped = groupBy+applyInArrow decode")
     args = p.parse_args(argv)
 
     from pyspark.sql import functions as F
 
     from vcf2df_spark import manifest as manifest_mod
-    from vcf2df_spark.decode import decode_blocks
+    from vcf2df_spark.datasource import read_warehouse
     from vcf2df_spark.encode import normalize_input
     from vcf2df_spark.session import get_spark
 
@@ -47,20 +43,8 @@ def main(argv: list[str] | None = None) -> None:
 
     meta = manifest_mod.WarehouseMeta.load(args.warehouse)
     blocks = spark.read.parquet(f"{args.warehouse}/blocks")
-    if args.reader == "scan":
-        from vcf2df_spark.datasource import read_warehouse
-
-        decoded = read_warehouse(spark, args.warehouse)
-    else:
-        # the manifests' schema_sig (when present) skips the per-call
-        # schema-derivation aggregate — one Spark job of pure overhead
-        # (~0.3 s measured, the r3 grouped-decode regression); warehouses
-        # without manifests keep the loud heterogeneity-checking derivation
-        from vcf2df_spark.decode import schema_from_ctypes
-
-        ctypes = meta.ctypes()
-        pre = schema_from_ctypes(ctypes) if ctypes is not None else None
-        decoded = decode_blocks(blocks, out_schema=pre)
+    # shuffle-free datasource read; also asserts chunk-group completeness
+    decoded = read_warehouse(spark, args.warehouse)
     source = normalize_input(spark.read.parquet(args.source))
 
     # manifest integrity: recompute each partition's content checksum from

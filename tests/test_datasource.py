@@ -26,6 +26,7 @@ from vcf2df_spark.datasource import PrunedTranscriptDataSource, chunk_overlaps
 from vcf2df_spark.decode import decode_blocks
 from vcf2df_spark.encode import encode_transcripts, normalize_input
 from vcf2df_spark.manifest import WarehouseMeta
+from vcf2df_spark.zonemap import f64_key
 
 
 @pytest.fixture(scope="module")
@@ -70,6 +71,8 @@ def test_full_read_matches_decode_blocks(spark, wh, ref):
         ("tokens_out < 64", lambda r: r.tokens_out < 64),
         ("turn_idx IN (0, 3)", lambda r: r.turn_idx in (0, 3)),
         ("role = 'assistant'", lambda r: r.role == "assistant"),
+        # text stats are null (the width guard): never prunes
+        ("text >= ' ' AND text <= '~'", lambda r: " " <= r.text <= "~"),
     ],
 )
 def test_pushed_filters_match_exact(spark, wh, ref, cond, pred):
@@ -207,6 +210,21 @@ def test_chunk_overlaps_pure():
         [EqualTo(("conv_id",), "c-150"), LessThan(("turn_idx",), 5)],
         stats, ctypes,
     )
+    # null string stats (the width guard) -> keep
+    text = {"text": {"stat_min_str": None, "stat_max_str": None}}
+    assert chunk_overlaps(
+        [GreaterThanOrEqual(("text",), " ")], text, {"text": "str"}
+    )
+    # an int bound on an f64 column maps through the f64 key
+    f64 = {"score": "f64"}
+    high = {"score": {"stat_min_num": f64_key(4.0),
+                      "stat_max_num": f64_key(5.0)}}
+    low = {"score": {"stat_min_num": f64_key(0.0),
+                     "stat_max_num": f64_key(1.0)}}
+    assert chunk_overlaps([EqualTo(("score",), 4)], high, f64)
+    assert not chunk_overlaps([EqualTo(("score",), 4)], low, f64)
+    # a float bound on an integer column cannot be mapped -> keep
+    assert chunk_overlaps([EqualTo(("turn_idx",), 30.5)], stats, ctypes)
 
 
 def test_incomplete_chunk_group_fails_loudly(spark, tmp_path, wh):
@@ -239,14 +257,6 @@ def test_negative_zero_predicates_never_drop_rows(spark, tmp_path):
         truth = full.filter(cond).count()
         got = datasource.scan_warehouse(spark, wh, cond).count()
         assert got == truth > 0, cond
-
-    # programmatic scan path uses the same expansion
-    from vcf2df_spark import scan
-
-    got = scan.scan_transcripts(
-        spark, wh, columns=["conv_id", "score"], col_ranges={"score": (0.0, 0.0)}
-    ).count()
-    assert got == full.filter("score >= 0.0 AND score <= 0.0").count() > 0
 
 
 def test_nan_payload_chunks_are_safe(spark, tmp_path):

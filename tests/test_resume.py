@@ -67,31 +67,6 @@ def test_partial_then_resume_then_noop(spark, source_path, tmp_path):
     assert spark.read.parquet(f"{wh}/manifests").count() == 8
 
 
-def test_decode_verify_grouped_uses_manifest_schema(spark, source_path,
-                                                    tmp_path, monkeypatch):
-    """--reader grouped on a manifested warehouse resolves the output
-    schema from the manifests' schema_sig (no per-call derivation
-    aggregate, the r3 grouped-decode regression) and still verdicts
-    bit-identical."""
-    wh = str(tmp_path / "gwh")
-    rc = _run(encode_job.main, ["--input", source_path, "--out", wh,
-                                "--partitions", "4", "--job-id", "g",
-                                "--master", "local[4]"])
-    assert rc == 0
-
-    import vcf2df_spark.decode as decode_mod
-
-    def boom(*a, **kw):
-        raise AssertionError("schema derivation ran despite manifests sig")
-
-    monkeypatch.setattr(decode_mod, "_file_signatures", boom)
-    monkeypatch.setattr(decode_mod, "_spark_signatures", boom)
-    rc = _run(decode_job.main, ["--warehouse", wh, "--source", source_path,
-                                "--master", "local[4]",
-                                "--reader", "grouped"])
-    assert rc == 0
-
-
 def test_encode_job_drops_its_cache(spark, source_path, tmp_path):
     """The encode job caches nothing: its stats ride the one blocks write.
     No exit path (here ok, then noop) may leave a persisted RDD behind, or

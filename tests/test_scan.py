@@ -3,9 +3,16 @@
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow.dataset as pads
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import (
+    EqualTo,
+    GreaterThanOrEqual,
+    LessThanOrEqual,
+)
 
 from vcf2df_spark import fixtures, scan
+from vcf2df_spark.datasource import chunk_overlaps, infer_ctypes, scan_warehouse
 from vcf2df_spark.decode import decode_blocks
 from vcf2df_spark.encode import encode_transcripts
 
@@ -23,17 +30,35 @@ def _warehouse(spark, tmp_path):
     return src, path
 
 
+def _kept_chunks(wh, *filters):
+    """(chunks chunk_overlaps keeps, total chunks) for pushed ``filters``:
+    the stats rows grouped per (partition_id, chunk_idx), as a scan task
+    groups them."""
+    root = f"{wh}/blocks"
+    rows = pads.dataset(root, format="parquet").to_table(columns=[
+        "partition_id", "chunk_idx", "column", "stat_min_str",
+        "stat_max_str", "stat_min_num", "stat_max_num",
+    ]).to_pylist()
+    by_chunk: dict[tuple, dict[str, dict]] = {}
+    for r in rows:
+        by_chunk.setdefault((r["partition_id"], r["chunk_idx"]), {})[r["column"]] = r
+    ctypes = infer_ctypes(root)
+    kept = sum(chunk_overlaps(filters, cols, ctypes) for cols in by_chunk.values())
+    return kept, len(by_chunk)
+
+
 def test_conv_id_range_scan_prunes_and_matches(spark, tmp_path):
     src, wh = _warehouse(spark, tmp_path)
-    blocks = spark.read.parquet(f"{wh}/blocks")
-    total_chunks = blocks.select("partition_id", "chunk_idx").distinct().count()
-
     rng = ("conv-00000100", "conv-00000120")
-    qual = scan.qualifying_chunks(blocks, conv_id_range=rng).count()
-    assert qual < total_chunks, "zone maps must prune some chunks"
+    qual, total_chunks = _kept_chunks(
+        wh, GreaterThanOrEqual(("conv_id",), rng[0]),
+        LessThanOrEqual(("conv_id",), rng[1]),
+    )
+    assert (qual, total_chunks) == (4, 26), "zone maps must prune some chunks"
 
     got = (
-        scan.scan_transcripts(spark, wh, conv_id_range=rng)
+        scan_warehouse(spark, wh, [F.col("conv_id") >= rng[0],
+                                   F.col("conv_id") <= rng[1]])
         .toPandas()
         .sort_values(["conv_id", "turn_idx"])
         .reset_index(drop=True)
@@ -49,11 +74,12 @@ def test_conv_id_range_scan_prunes_and_matches(spark, tmp_path):
 
 def test_ts_range_scan_matches(spark, tmp_path):
     src, wh = _warehouse(spark, tmp_path)
-    lo = pd.Timestamp("2026-03-01")
-    hi = pd.Timestamp("2026-03-15")
-    got = scan.scan_transcripts(
-        spark, wh, columns=["conv_id", "turn_idx", "ts"],
-        ts_range=(lo.to_pydatetime(), hi.to_pydatetime()),
+    lo = pd.Timestamp("2026-03-01", tz="UTC")
+    hi = pd.Timestamp("2026-03-15", tz="UTC")
+    got = scan_warehouse(
+        spark, wh,
+        [F.col("ts") >= lo.to_pydatetime(), F.col("ts") <= hi.to_pydatetime()],
+        columns=["conv_id", "turn_idx", "ts"],
     ).toPandas()
     src_us = src["ts"].astype("datetime64[us]").astype("int64")
     mask = (src_us >= lo.value // 1000) & (src_us <= hi.value // 1000)
@@ -77,8 +103,9 @@ def test_column_pruned_decode(spark, tmp_path):
 
 def test_turn_idx_pruning(spark, tmp_path):
     src, wh = _warehouse(spark, tmp_path)
-    got = scan.scan_transcripts(
-        spark, wh, columns=["conv_id", "turn_idx"], turn_idx_range=(150, None)
+    assert _kept_chunks(wh, GreaterThanOrEqual(("turn_idx",), 150)) == (0, 26)
+    got = scan_warehouse(
+        spark, wh, F.col("turn_idx") >= 150, columns=["conv_id", "turn_idx"]
     ).toPandas()
     want = src[src.turn_idx >= 150]
     assert len(got) == len(want)
@@ -128,16 +155,17 @@ def test_f64_zone_maps_prune_and_match(spark, tmp_path):
     # dynamic-column zone maps (round-3): a range on the f64 extra must
     # prune chunks via the order-preserving key AND return exact rows
     src, wh = _ext_warehouse(spark, tmp_path)
-    blocks = spark.read.parquet(f"{wh}/blocks")
-    total = blocks.select("partition_id", "chunk_idx").distinct().count()
-
     rng = (4.9, 5.0)  # top sliver of the uniform [0, 5) score
-    qual = scan.qualifying_chunks(blocks, col_ranges={"score": rng}).count()
-    assert qual <= total  # pruning is best-effort; correctness is exact:
+    qual, total = _kept_chunks(
+        wh, GreaterThanOrEqual(("score",), rng[0]),
+        LessThanOrEqual(("score",), rng[1]),
+    )
+    assert (qual, total) == (16, 16)  # pruning is best-effort; rows exact:
 
     got = (
-        scan.scan_transcripts(spark, wh, columns=["conv_id", "turn_idx", "score"],
-                              col_ranges={"score": rng})
+        scan_warehouse(spark, wh, [F.col("score") >= rng[0],
+                                   F.col("score") <= rng[1]],
+                       columns=["conv_id", "turn_idx", "score"])
         .toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     )
     want = (
@@ -147,23 +175,26 @@ def test_f64_zone_maps_prune_and_match(spark, tmp_path):
     )
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
     # and a range matching nothing prunes EVERY chunk
-    assert scan.qualifying_chunks(blocks, col_ranges={"score": (9.0, 99.0)}).count() == 0
+    assert _kept_chunks(
+        wh, GreaterThanOrEqual(("score",), 9.0),
+        LessThanOrEqual(("score",), 99.0),
+    )[0] == 0
 
 
 def test_bool_and_int_extra_zone_maps(spark, tmp_path):
     src, wh = _ext_warehouse(spark, tmp_path)
     blocks = spark.read.parquet(f"{wh}/blocks")
     # bool stats: all-False chunks must be pruned for flagged=True
-    qual_true = scan.qualifying_chunks(blocks, col_ranges={"flagged": (True, True)})
+    qual_true, _ = _kept_chunks(wh, EqualTo(("flagged",), True))
+    assert qual_true == 16
     stats = blocks.filter(F.col("column") == "flagged")
     all_false = stats.filter(F.col("stat_max_num") == 0).count()
-    assert qual_true.count() + all_false == stats.count()
+    assert qual_true + all_false == stats.count()
     # int64 extra stats recorded and usable
-    got = (
-        scan.scan_transcripts(spark, wh, columns=["conv_id", "turn_idx"],
-                              col_ranges={"tokens_out": (0, 10)})
-        .count()
-    )
+    got = scan_warehouse(
+        spark, wh, [F.col("tokens_out") >= 0, F.col("tokens_out") <= 10],
+        columns=["conv_id", "turn_idx", "tokens_out"],
+    ).count()
     want = int((src["tokens_out"] <= 10).sum())
     assert got == want
 
@@ -174,14 +205,35 @@ def test_string_extra_zone_maps(spark, tmp_path):
     # low-cardinality string extra carries lexical min/max
     stats = blocks.filter(F.col("column") == "model")
     assert stats.filter(F.col("stat_min_str").isNull()).count() == 0
-    got = scan.scan_transcripts(
-        spark, wh, columns=["conv_id", "turn_idx", "model"],
-        col_ranges={"model": ("m-turbo", "m-turbo")},
+    assert _kept_chunks(wh, EqualTo(("model",), "m-turbo")) == (16, 16)
+    got = scan_warehouse(
+        spark, wh, F.col("model") == "m-turbo",
+        columns=["conv_id", "turn_idx", "model"],
     ).count()
     assert got == int((src["model"] == "m-turbo").sum())
     # long-text columns stay null (the width guard) — pruning is optional
     tx = blocks.filter(F.col("column") == "text")
     assert tx.filter(F.col("stat_min_str").isNotNull()).count() == 0
+
+
+def test_bounds_of_another_type_never_drop_rows(spark, tmp_path):
+    """A bound whose Python type differs from the column's ctype, or a
+    column whose stats are null, must keep the chunk: each of these three
+    ranges once returned 0 rows through a zone-map evaluator that picked
+    the key domain from the bound's type and dropped null-stats chunks."""
+    src, wh = _ext_warehouse(spark, tmp_path)
+    cases = [
+        ("score", 4, 5),  # int bounds, f64 column
+        ("tokens_out", 0.5, 10.0),  # float bounds, i64 column
+        ("text", " ", "~"),  # null stats (the width guard)
+    ]
+    for col, lo, hi in cases:
+        got = scan_warehouse(
+            spark, wh, [F.col(col) >= lo, F.col(col) <= hi],
+            columns=["conv_id", col],
+        ).count()
+        want = int(((src[col] >= lo) & (src[col] <= hi)).sum())
+        assert got == want > 0, col
 
 
 def test_fetch_conversation_zero_match_keeps_extended_schema(spark, tmp_path):

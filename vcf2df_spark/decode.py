@@ -364,7 +364,7 @@ def _file_signatures(
 
 
 def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
-                  out_schema=None, merge_schemas: bool = False) -> DataFrame:
+                  merge_schemas: bool = False) -> DataFrame:
     """blocks -> transcripts (row order unspecified; sort to compare).
 
     ``columns`` prunes the decode to the requested columns: only those
@@ -378,12 +378,6 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
     one narrow aggregate (:func:`_spark_signatures`), and either way
     :func:`ctypes_from_signatures` decides.
 
-    ``out_schema`` skips that derivation when the caller already holds the
-    warehouse schema (e.g. from the manifests' ``schema_sig`` via
-    ``manifest.WarehouseMeta.ctypes``). Callers passing it take over the
-    heterogeneity guarantee the derivation enforces (manifest signatures
-    carry the same check).
-
     ``merge_schemas`` opts into additive schema evolution: heterogeneous
     chunk signatures decode against their UNION schema, with typed
     zero-defaults for chunks written before a column existed. The strict
@@ -392,11 +386,11 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
     silently paper over.
     """
     data = _data_blocks(blocks, columns)
-    if merge_schemas or out_schema is None:
-        sigs = _file_signatures(blocks, columns)
-        if sigs is None:
-            sigs = _spark_signatures(data)
-        ctypes = ctypes_from_signatures(sigs, columns, merge_schemas)
-        out_schema = schema_from_ctypes(ctypes)
+    sigs = _file_signatures(blocks, columns)
+    if sigs is None:
+        sigs = _spark_signatures(data)
+    ctypes = ctypes_from_signatures(sigs, columns, merge_schemas)
     fn = _decode_group_filling(ctypes) if merge_schemas else _decode_group
-    return data.groupBy(*group_keys(data)).applyInArrow(fn, out_schema)
+    return data.groupBy(*group_keys(data)).applyInArrow(
+        fn, schema_from_ctypes(ctypes)
+    )

@@ -299,8 +299,9 @@ def encode_keyed(keyed: DataFrame, chunk_rows: int = CHUNK_ROWS,
 
     ``chunk_rows`` trades compression ratio against zone-map pruning
     granularity: chunks are contiguous (conv_id, turn_idx)-sorted slices of
-    a partition, so smaller chunks give the scan path (scan.py) finer
-    min/max pruning within each hash partition.
+    a partition, so smaller chunks give the pruned read
+    (datasource.scan_warehouse) finer min/max pruning within each hash
+    partition.
 
     ``detect_dups`` fuses the (conv_id, turn_idx)-uniqueness validation
     into the encode pass itself: a group holding duplicate keys raises an

@@ -76,24 +76,23 @@ def q_dynamic_roundtrip(spark, sf_dir):
 
 
 def q_scan_pruned(spark, sf_dir):
-    """Engine-through scan, BOTH read paths against one oracle: encode the
-    derived table, then (a) the programmatic scan — zone-map chunk pruning
-    on a turn_idx range AND an f64 extra-column range (order-preserving
-    key), column-pruned decode, exact residual filter — and (b) the
-    Catalyst path — the same predicate pushed through the
-    ``transcripts_pruned`` Python DataSource over the written warehouse
-    (task-side zone-map pruning, shuffle-free decode, Spark re-applies the
-    filters exactly). Checksums of both answers in one row; the oracle
+    """Engine-through scan, pruned against unpruned, both against one
+    oracle: encode the derived table, then (a) the unpruned reference —
+    every chunk of the in-memory blocks decoded, the exact filter applied
+    after — and (b) the pruned read — a turn_idx range AND an f64
+    extra-column range pushed through the ``transcripts_pruned`` Python
+    DataSource over the written warehouse (task-side zone-map pruning via
+    the order-preserving f64 key, shuffle-free decode, Spark re-applies
+    the filters exactly). Checksums of both answers in one row; the oracle
     recomputes the filter on the derived table directly and aliases each
-    checksum twice — equality proves neither path drops a qualifying row
-    and both decode bit-exactly."""
+    checksum twice — equality proves pruning drops no qualifying row and
+    both paths decode bit-exactly."""
     import re
     import shutil
 
     from vcf2df_spark.datasource import scan_warehouse
-    from vcf2df_spark.decode import decode_blocks, group_keys
+    from vcf2df_spark.decode import decode_blocks
     from vcf2df_spark.encode import encode_transcripts
-    from vcf2df_spark.scan import qualifying_chunks
     from vcf2df_spark.shipping import ensure_shipped
 
     ensure_shipped(spark)
@@ -112,18 +111,16 @@ def q_scan_pruned(spark, sf_dir):
             _h(F.format_string("%.6f", "score")).alias("h_score"),
         )
 
-    # (a) programmatic scan over the in-memory blocks
-    qual = qualifying_chunks(
-        blocks, turn_idx_range=(2, 5), col_ranges={"score": (100.0, 300.0)}
+    # (a) unpruned reference: every chunk of the in-memory blocks
+    dec = decode_blocks(
+        blocks, columns=["conv_id", "turn_idx", "role", "score"]
     )
-    pruned = blocks.join(F.broadcast(qual), group_keys(blocks), "left_semi")
-    dec = decode_blocks(pruned, columns=["conv_id", "turn_idx", "role", "score"])
     hit = dec.filter(
         (F.col("turn_idx") >= 2) & (F.col("turn_idx") <= 5)
         & (F.col("score") >= 100.0) & (F.col("score") <= 300.0)
     )
 
-    # (b) Catalyst pushdown over the written warehouse (hive layout);
+    # (b) pruned: Catalyst pushdown over the written warehouse (hive layout);
     # fixed sf-keyed path, rebuilt per run (idempotent)
     wh = "/tmp/vcf2df_scanpruned_" + re.sub(r"\W", "_", sf_dir.strip("/"))
     shutil.rmtree(wh, ignore_errors=True)

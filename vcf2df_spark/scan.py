@@ -1,115 +1,18 @@
-"""Predicate-driven scan over the encoded warehouse: zone-map chunk pruning
-plus column-pruned decode.
+"""Point lookups and the SQL surface's helpers over the encoded warehouse.
 
-Each block row carries its chunk's min/max (conv_id as strings; turn_idx and
-ts as int64 — ts in unix micros) — the engine's analogue of Parquet
-row-group statistics, made queryable because blocks are themselves a table.
-A scan with predicates first selects the qualifying (partition_id,
-chunk_idx) pairs from the tiny stats projection, semi-joins the blocks table
-down to those chunks and the requested columns, decodes, and applies the
-exact residual filter. Chunks that can't match never leave the scan —
-at 100 TB that is the difference between touching terabytes and megabytes.
+:func:`fetch_conversation` answers one conversation with no Spark job
+(manifests routing, then the chunk zone maps, then a row-span decode).
+:func:`register_transcript_view`, :func:`pushable_predicates` and
+:func:`referenced_columns` back ``jobs/query.py``. Predicate scans go
+through :func:`vcf2df_spark.datasource.scan_warehouse`, whose task-side
+``chunk_overlaps`` is the one zone-map evaluator: each block row carries
+its chunk's min/max (the engine's analogue of Parquet row-group
+statistics), so chunks that cannot match are never decoded.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from .blocks import TRANSCRIPT_COLUMNS
-from .decode import decode_blocks, group_keys
-
-
-def _overlap_str(lo: str | None, hi: str | None):
-    cond = F.lit(True)
-    if lo is not None:
-        cond = cond & (F.col("stat_max_str") >= F.lit(lo))
-    if hi is not None:
-        cond = cond & (F.col("stat_min_str") <= F.lit(hi))
-    return cond
-
-
-def _overlap_num(lo: int | None, hi: int | None):
-    cond = F.lit(True)
-    if lo is not None:
-        cond = cond & (F.col("stat_max_num") >= F.lit(int(lo)))
-    if hi is not None:
-        cond = cond & (F.col("stat_min_num") <= F.lit(int(hi)))
-    return cond
-
-
-def _to_micros(v) -> int:
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is None:
-            v = v.replace(tzinfo=_dt.timezone.utc)
-        return int(v.timestamp() * 1_000_000)
-    return int(v)
-
-
-def _range_spec(col: str, lo, hi):
-    """Overlap condition for an arbitrary column, dispatched on the Python
-    type of the bounds: str -> string stats; float -> the order-preserving
-    f64 key transform (zonemap.py, matching what encode recorded); bool ->
-    0/1 ints; datetime -> unix micros; int -> raw int64 stats."""
-    from . import zonemap
-
-    probe = lo if lo is not None else hi
-    if isinstance(probe, str):
-        return _overlap_str(lo, hi)
-    if isinstance(probe, bool):
-        return _overlap_num(
-            None if lo is None else int(lo), None if hi is None else int(hi)
-        )
-    if isinstance(probe, float):
-        # lo/hi mapped separately: Spark-equal -0.0/+0.0 expand to cover
-        # both keys (zonemap.f64_lo_key docstring)
-        return _overlap_num(
-            None if lo is None else zonemap.f64_lo_key(lo),
-            None if hi is None else zonemap.f64_hi_key(hi),
-        )
-    if isinstance(probe, _dt.datetime):
-        return _overlap_num(
-            None if lo is None else _to_micros(lo),
-            None if hi is None else _to_micros(hi),
-        )
-    return _overlap_num(lo, hi)
-
-
-def qualifying_chunks(
-    blocks: DataFrame,
-    conv_id_range: tuple[str | None, str | None] | None = None,
-    turn_idx_range: tuple[int | None, int | None] | None = None,
-    ts_range: tuple | None = None,
-    col_ranges: dict[str, tuple] | None = None,
-) -> DataFrame:
-    """Chunk keys whose zone maps overlap every given predicate range.
-
-    ``col_ranges`` prunes on ANY column with recorded stats — including
-    dynamic extras (f64 via the total-order key, bool as 0/1, int/ts as
-    int64, short strings lexically)."""
-    ck = group_keys(blocks)  # includes epoch for streaming warehouses
-    qual = blocks.select(*ck).distinct()
-    specs = []
-    if conv_id_range is not None:
-        specs.append(("conv_id", _overlap_str(*conv_id_range)))
-    if turn_idx_range is not None:
-        specs.append(("turn_idx", _overlap_num(*turn_idx_range)))
-    if ts_range is not None:
-        lo, hi = ts_range
-        specs.append(
-            ("ts", _overlap_num(
-                None if lo is None else _to_micros(lo),
-                None if hi is None else _to_micros(hi),
-            ))
-        )
-    for col, (lo, hi) in (col_ranges or {}).items():
-        specs.append((col, _range_spec(col, lo, hi)))
-    for col, cond in specs:
-        keys = blocks.filter(F.col("column") == col).filter(cond).select(*ck)
-        qual = qual.join(keys, ck, "left_semi")
-    return qual
+from pyspark.sql import SparkSession
 
 
 def fetch_conversation(spark: SparkSession, warehouse: str, conv_id: str):
@@ -127,8 +30,8 @@ def fetch_conversation(spark: SparkSession, warehouse: str, conv_id: str):
     covering those rows). pyarrow.dataset handles local/S3/HDFS paths
     alike. Returns a pandas DataFrame ordered by turn_idx.
 
-    ``spark`` is unused (kept for call-site compatibility with the scan
-    DataFrame APIs and so the CLI can share one entry path).
+    ``spark`` is unused (kept for call-site compatibility with the
+    datasource read APIs and so the CLI can share one entry path).
     """
     import bisect
     import json
@@ -378,66 +281,3 @@ def referenced_columns(sql: str, available: list[str]) -> list[str] | None:
         hit = ["turn_idx"] if "turn_idx" in available else [sorted(available)[0]]
     return hit
 
-
-def scan_transcripts(
-    spark: SparkSession,
-    warehouse: str,
-    columns: list[str] | None = None,
-    conv_id_range: tuple[str | None, str | None] | None = None,
-    turn_idx_range: tuple[int | None, int | None] | None = None,
-    ts_range: tuple | None = None,
-    col_ranges: dict[str, tuple] | None = None,
-) -> DataFrame:
-    """Decode only the chunks/columns a predicate can touch, then filter
-    exactly. Residual filters need their predicate columns decoded too.
-    ``col_ranges``: {column: (lo, hi)} range predicates on any stats-bearing
-    column, dynamic extras included (f64/bool/int/ts/short strings)."""
-    blocks = spark.read.parquet(f"{warehouse}/blocks")
-    qual = qualifying_chunks(
-        blocks, conv_id_range, turn_idx_range, ts_range, col_ranges
-    )
-    pruned = blocks.join(F.broadcast(qual), group_keys(blocks), "left_semi")
-
-    if columns is None:
-        decoded = decode_blocks(pruned)  # all columns, extras included
-    else:
-        need = set(columns)
-        if conv_id_range is not None:
-            need.add("conv_id")
-        if turn_idx_range is not None:
-            need.add("turn_idx")
-        if ts_range is not None:
-            need.add("ts")
-        need.update(col_ranges or {})
-        decoded = decode_blocks(pruned, columns=sorted(need))
-
-    if conv_id_range is not None:
-        lo, hi = conv_id_range
-        if lo is not None:
-            decoded = decoded.filter(F.col("conv_id") >= lo)
-        if hi is not None:
-            decoded = decoded.filter(F.col("conv_id") <= hi)
-    if turn_idx_range is not None:
-        lo, hi = turn_idx_range
-        if lo is not None:
-            decoded = decoded.filter(F.col("turn_idx") >= lo)
-        if hi is not None:
-            decoded = decoded.filter(F.col("turn_idx") <= hi)
-    if ts_range is not None:
-        lo, hi = ts_range
-        if lo is not None:
-            decoded = decoded.filter(F.unix_micros("ts") >= _to_micros(lo))
-        if hi is not None:
-            decoded = decoded.filter(F.unix_micros("ts") <= _to_micros(hi))
-    for col, (lo, hi) in (col_ranges or {}).items():
-        if lo is not None:
-            decoded = decoded.filter(F.col(col) >= F.lit(lo))
-        if hi is not None:
-            decoded = decoded.filter(F.col(col) <= F.lit(hi))
-    if columns is not None:
-        from .decode import _column_order
-
-        decoded = decoded.select(
-            *[c for c in _column_order(set(columns)) if c in decoded.columns]
-        )
-    return decoded

@@ -28,8 +28,9 @@ def get_spark(master: str | None = None, app_name: str = "vcf2df_spark",
         # task count (18 -> 33 on the sf0.1 bench) but bought nothing —
         # after the FSST-trial fix the stage is JVM<->Arrow transfer
         # bound, not kernel bound — while the extra output files taxed
-        # every later datasource read (+0.04-0.10s each) and cost 1.5%
-        # disk (page-zstd loses cross-chunk sharing). Override via env
+        # every later datasource read (one Python task per file, ~0.03-0.05
+        # CPU-s each on warm workers) and cost 1.5% disk (page-zstd loses
+        # cross-chunk sharing). Override via env
         # SPARK_GRAFT_AQE_MIN_PARTITION if a future kernel gets heavier.
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
