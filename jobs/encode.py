@@ -56,7 +56,6 @@ def main(argv: list[str] | None = None) -> None:
 
     owns_session = SparkSession.getActiveSession() is None
     spark = get_spark(master=args.master, app_name=f"encode:{args.job_id}")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     blocks_path = f"{args.out}/blocks"
     manifests_path = f"{args.out}/manifests"
@@ -128,13 +127,13 @@ def main(argv: list[str] | None = None) -> None:
     blocks, part_cols = manifest.with_layout(blocks, args.shard_dirs)
     try:
         # blocks first (idempotent per-partition overwrite), manifest commit
-        # last. The dynamic-overwrite commit stages every dir and moves them
-        # only at job commit, so a write aborted by duplicate keys leaves
-        # the live blocks untouched.
+        # last. The dynamic-overwrite commit (per write: the session is the
+        # caller's) stages every dir and moves them only at job commit, so
+        # a write aborted by duplicate keys leaves the live blocks untouched.
         try:
-            blocks.write.mode("overwrite").partitionBy(*part_cols).parquet(
-                blocks_path
-            )
+            blocks.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy(*part_cols).parquet(blocks_path)
         except PythonException as e:
             if DUPLICATE_KEYS not in str(e):
                 raise

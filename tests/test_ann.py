@@ -211,7 +211,7 @@ def test_append_equals_full_rebuild(spark, tmp_path):
 def test_forget_removes_ids_and_bounds_rewrite(spark, tmp_path):
     """The delete cascade: forgotten ids never come back from a probe, and
     only the cells that held them are rewritten (untouched cell dirs keep
-    their exact file set)."""
+    their exact file set), in at most 3 Spark jobs."""
     import os
 
     emb, vecs = _emb_df(spark, n=40)
@@ -230,7 +230,16 @@ def test_forget_removes_ids_and_bounds_rewrite(spark, tmp_path):
         for c in untouched
     }
 
-    rec = ann.forget(spark, root, victims)
+    sc = spark.sparkContext
+    sc.setJobGroup("forget-budget", "forget-budget")
+    try:
+        rec = ann.forget(spark, root, victims)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    # both trees staged by Spark, then one driver-side swap: no
+    # overwrite pass, no live-cell collect (7 jobs with those)
+    assert len(sc.statusTracker().getJobIdsForGroup("forget-budget")) <= 3
     assert rec["n_forgotten"] == 2
     assert set(rec["cells_rewritten"]) | set(rec["cells_emptied"]) <= hit
 
@@ -277,13 +286,13 @@ def test_index_job_append_and_forget_cli(spark, tmp_path, capsys):
 
 def test_index_mutation_lock(spark, tmp_path):
     """forget/append exclude each other via .index_lock: an append racing
-    forget's dynamic overwrite would lose appended rows in rewritten
-    cells. The lock is released after a successful mutation."""
+    forget's swap would lose appended rows in rewritten cells. The lock
+    is released after a successful mutation."""
     import os
 
     import pytest as _pytest
 
-    from vcf2df_spark.fsutil import LockHeldError
+    from vcf2df_spark.commit import LockHeldError
 
     emb, _ = _emb_df(spark, n=20)
     root = str(tmp_path / "lockidx")

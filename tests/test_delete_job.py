@@ -518,18 +518,35 @@ def test_stats_job_consistent_after_rewrite(spark, wh, capsys):
     )
 
 
-def test_delete_restores_overwrite_mode(spark, wh):
-    """partitionOverwriteMode is session-shared state: the job must
-    restore whatever was set before it ran."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+def test_delete_restores_overwrite_mode(spark, wh, tmp_path):
+    """partitionOverwriteMode is session-shared state: encode, delete and
+    forget must each leave whatever was set before they ran."""
+    from vcf2df_spark import ann
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    code, rec = _run(encode_job.main, [
+        "--input", str(tmp_path / "src.parquet"),
+        "--out", str(tmp_path / "ewh"), "--partitions", "4",
+        "--job-id", "e0", "--master", "local[4]",
+    ])
+    assert code == 0 and rec["status"] == "ok"
+    assert spark.conf.get(key).lower() == "static"
+
     full = read_warehouse(spark, wh)
     cid = full.select("conv_id").first()[0]
     code, rec = _run(delete_job.main, [
         "--warehouse", wh, "--conv-id", cid, "--master", "local[4]",
     ])
     assert code == 0 and rec["status"] == "ok"
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower()
-        == "static"
+    assert spark.conf.get(key).lower() == "static"
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 5), float(i % 7), 1.0]) for i in range(20)],
+        "vec_id long, embedding array<double>",
     )
-    spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    idx = str(tmp_path / "idx")
+    ann.build_index(spark, emb, idx, k_cells=4)
+    assert ann.forget(spark, idx, [3])["n_forgotten"] == 1
+    assert spark.conf.get(key).lower() == "static"
+    spark.conf.unset(key)

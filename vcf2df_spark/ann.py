@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import commit
+
 _SIM_DECIMALS = 6  # assignment rounds sims before argmax (cross-engine parity)
 
 # k_cells * dim above which assignment switches from the literal-folded
@@ -306,20 +308,18 @@ def _count_rows(path: str, **filter_kwargs) -> int:
 
 
 def _index_lock(index: str, owner: str):
-    """Exclusive index-mutation lock (append racing forget's dynamic
-    overwrite would lose the appended rows in rewritten cells). Taken
-    when the index is a local path; a remote index only supports the
-    Spark-side append, which has nothing to race."""
+    """Exclusive index-mutation lock (append racing forget's swap would
+    lose the appended rows in rewritten cells), recovering forget's
+    staging dir. Taken when the index is a local path; a remote index
+    only supports the Spark-side append, which has nothing to race."""
     import contextlib
 
-    from . import fsutil
-
     try:
-        local = fsutil.require_local(index, "index")
+        local = commit.require_local(index, "index")
     except ValueError:
         return contextlib.nullcontext()
-    return fsutil.exclusive_lock(f"{local}/.index_lock", owner,
-                                 "index mutation")
+    return commit.locked(local, ".index_lock", ".forget_staging", owner,
+                         "index mutation")
 
 
 def append_index(
@@ -394,16 +394,13 @@ def forget(
     id filter is pushed into the parquet scan, so untouched cells prune at
     the row-group level); survivors are staged to a scratch dir first
     (lineage cut — never read-then-overwrite one path in a single lazy
-    plan) and swapped in via dynamic partition overwrite. A cell emptied
-    entirely has its dir removed. Local-filesystem indexes only (loud
-    failure otherwise — see fsutil).
+    plan) and swapped in with the routing sidecar's cells as one
+    journaled commit (``commit.swap``). A cell emptied entirely has its
+    dirs removed. Local-filesystem indexes only (see commit).
     """
-    from . import fsutil
-
-    local = fsutil.require_local(index, "index")
-    with fsutil.exclusive_lock(f"{local}/.index_lock", "forget",
-                               "index mutation"):
-        return _forget_locked(spark, index, local, ids, id_col)
+    local = commit.require_local(index, "index")
+    with _index_lock(index, "forget") as staging:
+        return _forget_locked(spark, index, local, staging, ids, id_col)
 
 
 def _routed_hit_cells(index, local, ids, id_col):
@@ -435,10 +432,10 @@ def _routed_hit_cells(index, local, ids, id_col):
     return sorted(set(t.column("cell").to_pylist()))
 
 
-def _forget_locked(spark, index, local, ids, id_col):
+def _forget_locked(spark, index, local, staging, ids, id_col):
     import os
 
-    from . import fsutil
+    import pyarrow.dataset as pads
 
     ids = sorted(set(ids))
     hit_cells = _routed_hit_cells(index, local, ids, id_col)
@@ -466,67 +463,29 @@ def _forget_locked(spark, index, local, ids, id_col):
         "basePath", f"{index}/assignments"
     ).parquet(*hit_dirs)
 
-    staging = f"{local}/.forget_staging"
-    fsutil.rmtree_checked(staging)
+    # survivors staged hive-partitioned like the index, and the sidecar's
+    # hit cells from them (GDPR: forgotten ids leave the sidecar too)
     kept = touched.filter(~F.col(id_col).isin(ids))
-    kept.write.parquet(staging)
-
-    import pyarrow.dataset as pads
+    kept.write.partitionBy("cell").parquet(f"{staging}/assignments")
+    has_routing = os.path.isdir(f"{local}/routing")
+    if has_routing:
+        _write_routing(spark, staging, id_col, mode="error", source=kept)
 
     n_touched = _count_rows(
         f"{index}/assignments", filter=pads.field("cell").isin(hit_cells)
     )
-    staged = spark.read.parquet(staging)
-    n_kept = _count_rows(staging)
-
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        staged.write.mode("overwrite").partitionBy("cell").parquet(
-            f"{index}/assignments"
-        )
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
-
-    live = {
-        r["cell"] for r in staged.select("cell").distinct().collect()
-    }
-    emptied = sorted(set(hit_cells) - live)
-    for c in emptied:
-        fsutil.rmtree_checked(f"{local}/assignments/cell={c}")
-
-    # keep the routing sidecar in step: the hit cells' routing dirs
-    # rewrite from the same staged survivors (GDPR: the forgotten vec_ids
-    # must leave the sidecar too). A crash before this point leaves
-    # routing a superset — harmless for lookups, see _routed_hit_cells.
-    if os.path.isdir(f"{local}/routing"):
-        prior = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", None
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            _write_routing(spark, index, id_col, mode="overwrite",
-                           source=staged)
-        finally:
-            if prior is None:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-            else:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prior
-                )
-        for c in emptied:
-            fsutil.rmtree_checked(f"{local}/routing/cell={c}")
-
-    fsutil.rmtree_checked(staging)
+    n_kept = _count_rows(f"{staging}/assignments")
+    live = {int(d[len("cell="):]) for d in os.listdir(f"{staging}/assignments")
+            if d.startswith("cell=")}
+    trees = ("assignments", "routing") if has_routing else ("assignments",)
+    commit.swap(local, staging, [
+        (f"{local}/{t}/cell={c}", f"{staging}/{t}/cell={c}")
+        for t in trees for c in hit_cells
+    ])
     return {
         "n_forgotten": n_touched - n_kept,
         "cells_rewritten": sorted(live & set(hit_cells)),
-        "cells_emptied": emptied,
+        "cells_emptied": sorted(set(hit_cells) - live),
     }
 
 

@@ -7,7 +7,7 @@ routes to — at the 100-TB design point that is a couple of dirs out of
 re-running the CLI on it (``converter/convert_test.go:25-31`` deletes and
 regenerates the whole output); ours is partition-bounded.
 
-Commit discipline (same as jobs/encode.py):
+Commit discipline:
 
 1. route: manifests hash-routing metadata -> candidate partition ids
    (loud failure without it — never a silent full scan); the route covers
@@ -27,12 +27,11 @@ Commit discipline (same as jobs/encode.py):
    filtered and written by executors, NEVER collected to the driver (at
    ~400k manifest rows a driver materialization is a multi-hundred-MB
    single-threaded round-trip on every delete);
-4. commit: the routed block dirs swap for their staged replacements
-   (driver-side renames — partitions emptied by a delete just lose their
-   dir), then the manifests dir swaps LAST. A crash between the two
-   leaves stale checksums over new blocks, which decode_verify flags.
+4. commit: the routed block dirs and ``manifests/`` publish as ONE
+   journaled swap (``commit.swap``; an emptied partition loses its dir),
+   which the next taker of the lock rolls forward after a crash.
 
-Local-filesystem warehouses only (loud failure otherwise — see fsutil):
+Local-filesystem warehouses only (loud failure otherwise — see commit):
 the directory swaps use os/shutil, which silently no-op on remote URIs.
 One rewrite at a time per warehouse (O_EXCL ``.rewrite_lock``; concurrent
 rewrites would race on the staging dir and the manifests swap). The lock
@@ -45,10 +44,11 @@ windows (or against quiesced warehouses), like any compaction.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import commit
 
 
 class RewriteError(RuntimeError):
@@ -86,38 +86,30 @@ def routed_rewrite(
     rows (already normalized, same schema as the decoded warehouse) if
     given. Returns a JSON-able summary dict. Raises RewriteError when the
     warehouse cannot be rewritten in place."""
-    from . import fsutil
-
     try:
-        local = fsutil.require_local(warehouse, "warehouse")
+        local = commit.require_local(warehouse, "warehouse")
     except ValueError as e:
         raise RewriteError(str(e)) from e
     wh = local.rstrip("/")
 
     # one rewrite at a time per warehouse: two concurrent staged rewrites
     # would race on the staging dir and the manifests swap (last writer
-    # silently drops the other's rows)
+    # silently drops the other's rows). Taking the lock finishes (or
+    # wipes) whatever a crashed rewrite left in the staging dir.
     try:
-        with fsutil.exclusive_lock(f"{wh}/.rewrite_lock", job_id, "rewrite"):
-            # crash recovery: a rewrite that died between the manifests
-            # rename and the staging move leaves NO manifests dir (every
-            # read breaks). Restore the pre-swap manifests — over the
-            # possibly-new blocks they may carry stale checksums, which
-            # decode_verify flags, the same observable state as a crash
-            # between the blocks and manifests commits.
-            old_m = f"{wh}/.manifests_old"
-            if not os.path.exists(f"{wh}/manifests") and os.path.exists(old_m):
-                os.rename(old_m, f"{wh}/manifests")
+        with commit.locked(wh, ".rewrite_lock", ".rewrite_staging", job_id,
+                           "rewrite") as staging:
             return _routed_rewrite_locked(
-                spark, wh, conv_ids, job_id, desc, replacement
+                spark, wh, staging, conv_ids, job_id, desc, replacement
             )
-    except fsutil.LockHeldError as e:
+    except commit.LockHeldError as e:
         raise RewriteError(str(e)) from None
 
 
 def _routed_rewrite_locked(
     spark: SparkSession,
     wh: str,
+    staging: str,
     conv_ids: list[str],
     job_id: str,
     desc: str,
@@ -125,7 +117,7 @@ def _routed_rewrite_locked(
 ) -> dict:
     from pyspark.sql import Observation
 
-    from . import fsutil, manifest
+    from . import manifest
     from .decode import decode_blocks
     from .encode import TURNS_PER_SPLIT, encode_keyed, with_partition_key
     from .sparkhash import pkey_for
@@ -217,15 +209,12 @@ def _routed_rewrite_locked(
     # commit becomes driver-side directory swaps instead of a second
     # Spark read+repartition+overwrite pass over the staged bytes.
     keyed = with_partition_key(kept, num_partitions)
-    staging = f"{wh}/.rewrite_staging"
-    fsutil.rmtree_checked(staging)
     staged, part_cols = manifest.with_layout(encode_keyed(keyed), shard_dirs)
     staged.write.partitionBy(*part_cols).parquet(f"{staging}/blocks")
     n_before = int(obs_before.get["n"])
     n_after = int(obs_after.get["n"])
 
     if n_after == n_before and n_inserted == 0:
-        fsutil.rmtree_checked(staging)
         return {
             "status": "noop", "rows_deleted": 0, "rows_inserted": 0,
             "partitions_routed": sorted(pids),
@@ -239,17 +228,16 @@ def _routed_rewrite_locked(
                 live_pids.add(int(d.split("=", 1)[1]))
     stray = live_pids - set(pids)
     if stray:  # explicit raise: survives python -O (ADVICE r5)
-        fsutil.rmtree_checked(staging)
         raise RewriteError(
             f"re-keyed rows left the routed partitions: {sorted(stray)}"
         )
 
-    # manifests staged FIRST (they read the staged blocks, which must
-    # still exist), committed LAST: untouched rows + fresh rows for the
-    # rewritten partitions, written by executors — no driver
-    # materialization of the warehouse-sized table, and no plan ever
-    # reads and overwrites wh/manifests in one lineage (the staging
-    # write reads wh/manifests, the swap is driver-side fs ops).
+    # manifests staged after the blocks (they read the staged blocks,
+    # which must still be there) and committed with them: untouched rows
+    # + fresh rows for the rewritten partitions, written by executors —
+    # no driver materialization of the warehouse-sized table, and no
+    # plan ever reads and overwrites wh/manifests in one lineage (the
+    # staging write reads wh/manifests, the swap is driver-side fs ops).
     fresh = manifest.build_manifests(
         spark.read.parquet(f"{staging}/blocks"), job_id, desc,
         num_partitions=num_partitions, shard_dirs=shard_dirs,
@@ -258,29 +246,14 @@ def _routed_rewrite_locked(
         f"{staging}/manifests"
     )
 
-    # commit blocks: swap the routed dirs for their staged replacements;
-    # a partition emptied by the delete has no staged dir — removed.
-    emptied = sorted(set(pids) - live_pids)
+    pairs = []
     for pid in sorted(pids):
-        dst = manifest.blocks_dir(root, pid, shard_dirs)
-        legacy = f"{root}/partition_id={pid}"
-        for d in {dst, legacy}:
-            if os.path.isdir(d):
-                fsutil.rmtree_checked(d)
-        src = manifest.blocks_dir(f"{staging}/blocks", pid, shard_dirs)
-        if os.path.isdir(src):
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.rename(src, dst)
-
-    # commit manifests LAST. A crash between the blocks swap and here
-    # leaves stale checksums over new blocks, which decode_verify flags —
-    # the same observable state as before.
-    old = f"{wh}/.manifests_old"
-    fsutil.rmtree_checked(old)
-    os.rename(f"{wh}/manifests", old)
-    shutil.move(f"{staging}/manifests", f"{wh}/manifests")
-    fsutil.rmtree_checked(old)
-    fsutil.rmtree_checked(staging)
+        pairs.append((manifest.blocks_dir(root, pid, shard_dirs),
+                      manifest.blocks_dir(f"{staging}/blocks", pid, shard_dirs)))
+        if shard_dirs:  # a legacy single-level dir goes too
+            pairs.append((manifest.blocks_dir(root, pid, None), None))
+    pairs.append((f"{wh}/manifests", f"{staging}/manifests"))
+    commit.swap(wh, staging, pairs)
 
     return {
         "status": "ok",
@@ -288,5 +261,5 @@ def _routed_rewrite_locked(
         "rows_inserted": int(n_inserted),
         "partitions_routed": sorted(pids),
         "partitions_rewritten": sorted(live_pids),
-        "partitions_emptied": emptied,
+        "partitions_emptied": sorted(set(pids) - live_pids),
     }
