@@ -10,12 +10,21 @@ Reference analogue: the CLI conversion entry point ``vcf2df --vcf X --out D``
 (``vcf2df.go:13-37`` -> ``converter/convert.go:17``), generalized to a
 resumable, partition-parallel job. ``--fail-after`` injects a failure after
 K partitions for the resume test (SURVEY.md §5.2-4).
+
+Encode appends (SURVEY.md §4.3): it stages its partition dirs and the
+manifests and publishes them with one journaled swap under the
+warehouse's ``.rewrite_lock`` (vcf2df_spark/rewrite.py ``stage_and_swap``,
+shared with delete and upsert). A committed partition the new rows hash
+to is merged with them; a key already committed exits 5 like an in-input
+duplicate (replacing rows is jobs/upsert.py's job), and a warehouse
+written with another ``--partitions``/``--shard-dirs`` exits 2.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
@@ -46,29 +55,71 @@ def main(argv: list[str] | None = None) -> None:
                         "multi-allelic warning, parseVariant.go:16-18 — but loud)")
     args = p.parse_args(argv)
 
-    from pyspark.errors import PythonException
-    from pyspark.sql import Observation, SparkSession
-    from pyspark.sql import functions as F
+    from pyspark.sql import SparkSession
 
-    from vcf2df_spark import manifest
-    from vcf2df_spark.encode import DUPLICATE_KEYS, encode_keyed, with_partition_key
+    from vcf2df_spark import commit, manifest
     from vcf2df_spark.session import get_spark
 
     owns_session = SparkSession.getActiveSession() is None
     spark = get_spark(master=args.master, app_name=f"encode:{args.job_id}")
+    try:
+        try:
+            wh = commit.require_local(args.out, "warehouse").rstrip("/")
+        except ValueError as e:
+            # a remote warehouse cannot be locked or swapped: only a fresh
+            # one (no manifests) gets a direct write
+            if manifest.WarehouseMeta.load(args.out).exists:
+                code, out = 2, {"job_id": args.job_id, "status": "error",
+                                "error": str(e)}
+            else:
+                code, out = _encode(spark, args, args.out, None)
+        else:
+            os.makedirs(wh, exist_ok=True)
+            try:
+                with commit.locked(wh, ".rewrite_lock", ".rewrite_staging",
+                                   args.job_id, "encode") as staging:
+                    code, out = _encode(spark, args, wh, staging)
+            except commit.LockHeldError as e:
+                code, out = 2, {"job_id": args.job_id, "status": "error",
+                                "error": str(e)}
+    finally:
+        if owns_session:
+            spark.stop()
+    print(json.dumps(out))
+    if code:
+        sys.exit(code)
 
-    blocks_path = f"{args.out}/blocks"
-    manifests_path = f"{args.out}/manifests"
+
+def _encode(spark, args, wh: str, staging: str | None) -> tuple[int, dict]:
+    """Encode ``args.input`` into warehouse ``wh`` through the staged write
+    path (``staging`` None: direct write); (exit code, JSON line)."""
+    from pyspark.errors import PythonException
+    from pyspark.sql import functions as F
+
+    from vcf2df_spark import manifest
+    from vcf2df_spark.encode import DUPLICATE_KEYS, with_partition_key
+    from vcf2df_spark.rewrite import stage_and_swap
+    from vcf2df_spark.sources import read_transcripts
 
     t0 = time.time()
-    from vcf2df_spark.sources import read_transcripts
+    # read under the lock: the manifests cannot change until the swap
+    meta = manifest.WarehouseMeta.load(wh)
+    shard_dirs = args.shard_dirs or None
+    if meta.has_epoch or meta.mods - {args.partitions} \
+            or meta.shards - {shard_dirs}:
+        return 2, {"job_id": args.job_id, "status": "error", "error": (
+            f"warehouse partitioner (num_partitions {sorted(meta.mods, key=str)}, "
+            f"shard_dirs {sorted(meta.shards, key=str)}"
+            f"{', streaming epochs' if meta.has_epoch else ''}) differs from "
+            f"--partitions {args.partitions} --shard-dirs {args.shard_dirs}; "
+            "encode into a warehouse with the same partitioner, or compact")}
 
     df = read_transcripts(spark, args.input, args.format)
 
     # input invariant (SURVEY.md §1.5 B3): (conv_id, turn_idx) unique.
     # fail (the default) is FUSED into the encode pass below — the UDF sees
     # each partition sorted by (conv_id, turn_idx) and raises on adjacent
-    # duplicates, which aborts the blocks write: one shuffle, one pass over
+    # duplicates, which aborts the staging write: one shuffle, one pass over
     # the input. quarantine must materialize the dropped rows, so only that
     # explicit repair mode pays for the windowed pre-pass.
     n_dup_rows = 0
@@ -82,15 +133,14 @@ def main(argv: list[str] | None = None) -> None:
         dupes = ranked.filter(F.col("_rn") > 1).drop("_rn")
         n_dup_rows = dupes.count()
         if n_dup_rows:
-            dupes.write.mode("append").parquet(f"{args.out}/quarantine")
+            dupes.write.mode("append").parquet(f"{wh}/quarantine")
             df = ranked.filter(F.col("_rn") == 1).drop("_rn")
 
     keyed = with_partition_key(df, args.partitions)
 
-    # materialize the committed set on the driver: cuts the plan's lineage to
-    # the manifests table we append to below (self-referential read-write)
-    committed_ids = manifest.committed_partitions(args.out, args.job_id)
-    n_committed = len(committed_ids)
+    # the committed set is materialized on the driver: it cuts the plan's
+    # lineage to the manifests table the swap replaces
+    committed_ids = meta.committed_ids(args.job_id)
     pending = keyed
     if committed_ids:
         # broadcast left-anti join, NOT an isin literal list: at the SCALE.md
@@ -101,91 +151,65 @@ def main(argv: list[str] | None = None) -> None:
         )
         pending = manifest.resume_filter(keyed, committed_df)
 
-    truncated = False
-    if args.fail_after is not None:
-        keep = (
-            pending.select("_pkey").distinct().orderBy("_pkey")
-            .limit(args.fail_after)
-        )
-        pending = pending.join(F.broadcast(keep), "_pkey", "inner")
-        truncated = True
+    # a partition that already holds committed rows is merged: its live
+    # dir decodes into the same encode group as the new rows, so the fused
+    # duplicate check also sees re-inserted keys. Learning which ones is
+    # one small job; a fresh warehouse pays it only for --fail-after.
+    merge: set = set()
+    committed = set(meta.committed_ids())
+    if committed or args.fail_after is not None:
+        new_pids = sorted(r[0] for r in
+                          pending.select("_pkey").distinct().collect())
+        if args.fail_after is not None:
+            new_pids = new_pids[:args.fail_after]
+            keep = spark.createDataFrame([(p,) for p in new_pids], "_pkey int")
+            pending = pending.join(F.broadcast(keep), "_pkey")
+        merge = committed & set(new_pids)
 
-    # ONE pass, no cache: the stats ride the blocks write through observe()
-    # (observed metrics reject DISTINCT: a partition is its chunk-0 conv_id
-    # block), and the written partition ids scope the manifests read below
-    detect = args.on_duplicates == "fail"
-    is_conv = F.col("column") == "conv_id"
-    obs = Observation("encode")
-    blocks = encode_keyed(pending, detect_dups=detect).observe(
-        obs,
-        F.sum(F.when(is_conv, F.col("n_rows"))).alias("rows"),
-        F.count(F.when(is_conv & (F.col("chunk_idx") == 0), 1)).alias("parts"),
-        F.sum("raw_bytes").alias("raw"),
-        F.sum("enc_bytes").alias("enc"),
-        F.sort_array(F.collect_set("partition_id")).alias("pids"),
-    )
-    blocks, part_cols = manifest.with_layout(blocks, args.shard_dirs)
     try:
-        # blocks first (idempotent per-partition overwrite), manifest commit
-        # last. The dynamic-overwrite commit (per write: the session is the
-        # caller's) stages every dir and moves them only at job commit, so
-        # a write aborted by duplicate keys leaves the live blocks untouched.
-        try:
-            blocks.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy(*part_cols).parquet(blocks_path)
-        except PythonException as e:
-            if DUPLICATE_KEYS not in str(e):
-                raise
-            # the error path alone pays for the exact count
-            dup_total = (
-                pending.groupBy("conv_id", "turn_idx").count()
-                .agg(F.sum(F.col("count") - 1)).collect()[0][0]
-            )
-            print(json.dumps({"job_id": args.job_id, "status": "invalid-input",
-                              "duplicate_rows": int(dup_total)}))
-            sys.exit(5)
-        stats = obs.get
-        if not stats["pids"]:
-            print(json.dumps({"job_id": args.job_id, "status": "noop",
-                              "committed_before": n_committed}))
-            return
+        stats = stage_and_swap(
+            spark, wh, staging, meta, merge, pending, args.job_id, args.input,
+            args.partitions, shard_dirs,
+            detect_dups=args.on_duplicates == "fail",
+        )
+    except PythonException as e:
+        if DUPLICATE_KEYS not in str(e):
+            raise
+        # the error path alone pays for the exact count
+        dup_total = int(
+            pending.groupBy("conv_id", "turn_idx").count()
+            .agg(F.sum(F.col("count") - 1)).collect()[0][0] or 0
+        )
+        out = {"job_id": args.job_id, "status": "invalid-input",
+               "duplicate_rows": dup_total}
+        if not dup_total:
+            out["reinserted"] = (
+                "the input repeats (conv_id, turn_idx) keys already in the "
+                "warehouse; replace conversations with jobs/upsert.py")
+        return 5, out
+    if stats is None:
+        return 0, {"job_id": args.job_id, "status": "noop",
+                   "committed_before": len(committed_ids)}
 
-        # manifests from exactly the dirs this run wrote: the encode UDF
-        # never re-runs, and committed or foreign partitions are never read
-        obs_m = Observation("manifests")
-        manifest.build_manifests(
-            manifest.read_blocks(spark, blocks_path, stats["pids"],
-                                 args.shard_dirs or None),
-            args.job_id, args.input, num_partitions=args.partitions,
-            shard_dirs=args.shard_dirs or None,
-        ).observe(
-            obs_m, F.max("n_rows").alias("mx"), F.avg("n_rows").alias("mean")
-        ).write.mode("append").parquet(manifests_path)
-        # skew report: per-partition row counts from the manifest rows (free)
-        psizes = obs_m.get
-        balance = round(psizes["mx"] / max(psizes["mean"], 1), 3)
-        rows = stats["rows"]
-        wall = time.time() - t0
-        print(json.dumps({
-            "job_id": args.job_id,
-            "status": "partial" if truncated else "ok",
-            "committed_before": n_committed,
-            "partitions_encoded": int(stats["parts"]),
-            "rows_encoded": int(rows),
-            "raw_bytes": int(stats["raw"]),
-            "enc_bytes": int(stats["enc"]),
-            "ratio": round(stats["raw"] / max(stats["enc"], 1), 3),
-            "quarantined_rows": n_dup_rows,
-            "partition_max_over_mean": balance,
-            "wall_sec": round(wall, 2),
-            "turns_per_sec": int(rows / wall),
-        }))
-        if truncated:
-            sys.exit(3)
-    finally:
-        if owns_session:
-            spark.stop()
+    rows = stats["rows"] - stats["kept"]
+    wall = time.time() - t0
+    return (3 if args.fail_after is not None else 0), {
+        "job_id": args.job_id,
+        "status": "partial" if args.fail_after is not None else "ok",
+        "committed_before": len(committed_ids),
+        "partitions_encoded": stats["parts"],
+        "partitions_merged": len(merge),
+        "rows_encoded": rows,
+        "raw_bytes": stats["raw"],
+        "enc_bytes": stats["enc"],
+        "ratio": round(stats["raw"] / max(stats["enc"], 1), 3),
+        "quarantined_rows": n_dup_rows,
+        # skew report: per-partition row counts of the fresh manifest rows
+        "partition_max_over_mean": round(
+            stats["max_rows"] / max(stats["mean_rows"], 1), 3),
+        "wall_sec": round(wall, 2),
+        "turns_per_sec": int(rows / wall),
+    }
 
 
 if __name__ == "__main__":

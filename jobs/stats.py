@@ -89,4 +89,9 @@ def main(argv: list[str] | None = None) -> None:
 
 
 if __name__ == "__main__":
+    # `python jobs/stats.py` puts jobs/ on sys.path, not the checkout root
+    # that holds the package; appended, so a --py-files zip still wins
+    import os
+
+    sys.path.append(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     main()

@@ -22,6 +22,10 @@ plus any typed extras, passed through ``encode.normalize_input``. The
 input's EXTRA columns must match the warehouse's (the staged union is
 by-name and fails loudly on schema drift).
 
+Input rows must be unique on (conv_id, turn_idx), as for jobs/encode.py:
+a repeated key exits 5 (``"status": "invalid-input"``) before anything
+is staged.
+
 Prints one JSON line: rows_deleted, rows_inserted, partitions_rewritten.
 """
 
@@ -46,6 +50,7 @@ def main(argv: list[str] | None = None) -> None:
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
     from vcf2df_spark.rewrite import RewriteError, routed_rewrite
     from vcf2df_spark.session import get_spark
@@ -59,10 +64,20 @@ def main(argv: list[str] | None = None) -> None:
 
     # read_transcripts already routes through encode.normalize_input
     replacement = read_transcripts(spark, args.input, args.format)
-    conv_ids = sorted(
-        r["conv_id"]
-        for r in replacement.select("conv_id").distinct().collect()
-    )
+    # the job that collects the conv ids also counts repeated keys: the
+    # input invariant of jobs/encode.py, checked before anything is staged
+    per_conv = replacement.groupBy("conv_id").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.size(F.collect_set("turn_idx")).alias("keys"),
+    ).collect()
+    conv_ids = sorted(r["conv_id"] for r in per_conv)
+    dup_rows = sum(r["n"] - r["keys"] for r in per_conv)
+    if dup_rows:
+        print(json.dumps({"status": "invalid-input",
+                          "duplicate_rows": int(dup_rows)}))
+        if owns_session:
+            spark.stop()
+        sys.exit(5)
     if not conv_ids:
         print(json.dumps({"status": "noop", "rows_inserted": 0,
                           "wall_sec": round(time.time() - t0, 2)}))

@@ -1,8 +1,9 @@
 """The one commit protocol (vcf2df_spark/commit.py), proven by fault
 injection: every filesystem step of the swap — each rename, replace,
 unlink and rmtree, enumerated from a clean run — is failed in turn for
-delete, upsert and ANN forget. Taking the lock again must leave exactly
-the before or the after state, with every manifest checksum intact."""
+delete, upsert, an encode append and ANN forget. Taking the lock again
+must leave exactly the before or the after state, with every manifest
+checksum intact."""
 
 from __future__ import annotations
 
@@ -78,7 +79,8 @@ def _swap_steps(fail_at=None):
 @pytest.fixture(scope="module")
 def base(spark, tmp_path_factory):
     """A 60-conversation, 8-partition warehouse, the before/after sources
-    of one delete and one upsert, and a 4-cell ANN index."""
+    of one delete, one upsert and one encode append, and a 4-cell ANN
+    index."""
     d = tmp_path_factory.mktemp("commit")
     df = fixtures.transcripts_small(n_convs=60)
     before = str(d / "before.parquet")
@@ -108,6 +110,14 @@ def base(spark, tmp_path_factory):
         upserted,
     )
 
+    # encode append: one new conversation merged into a committed partition
+    extra = df[df["conv_id"] == cids[2]].head(4).copy()
+    extra["conv_id"] = "conv-88888888"
+    appended = str(d / "appended.parquet")
+    fixtures.write_parquet(extra, appended)
+    union = str(d / "union.parquet")
+    fixtures.write_parquet(pd.concat([df, extra], ignore_index=True), union)
+
     rng = np.random.default_rng(7)
     vecs = rng.normal(size=(40, 8))
     emb = spark.createDataFrame(
@@ -118,7 +128,8 @@ def base(spark, tmp_path_factory):
     ann.build_index(spark, emb, idx, k_cells=4, iters=0)
     return {"before": before, "wh": wh, "victim": victim,
             "deleted": deleted, "replacement": replacement,
-            "upserted": upserted, "idx": idx}
+            "upserted": upserted, "appended": appended, "union": union,
+            "idx": idx}
 
 
 def _wh_state(wh, sources):
@@ -187,6 +198,15 @@ def _mutations(spark, base):
             wh_recover,
             lambda root: _wh_state(root, [before, ("after", base["upserted"])]),
         ),
+        "encode": (
+            base["wh"],
+            lambda root: _run(encode_job.main, [
+                "--input", base["appended"], "--out", root, "--partitions",
+                "8", "--job-id", "c1", "--master", "local[4]",
+            ]),
+            wh_recover,
+            lambda root: _wh_state(root, [before, ("after", base["union"])]),
+        ),
         "forget": (
             base["idx"], lambda root: ann.forget(spark, root, victims),
             idx_recover, forget_state,
@@ -194,7 +214,7 @@ def _mutations(spark, base):
     }
 
 
-@pytest.mark.parametrize("mutation", ["delete", "upsert", "forget"])
+@pytest.mark.parametrize("mutation", ["delete", "upsert", "encode", "forget"])
 def test_every_swap_step_fails_safe(spark, base, tmp_path, mutation):
     src, mutate, recover, state = _mutations(spark, base)[mutation]
     lock = {"forget": ".index_lock"}.get(mutation, ".rewrite_lock")

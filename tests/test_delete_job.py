@@ -202,7 +202,7 @@ def test_delete_never_collects_manifests_to_driver(spark, wh, monkeypatch):
 def test_delete_keeps_chunk_groups_whole_per_file(spark, tmp_path):
     """Blocks write invariant under rewrite: every (partition, chunk)
     group's block rows land in ONE file — the staged blocks are
-    repartitioned by partition_id before the dynamic overwrite, so a
+    grouped by partition_id before the staging write, so a
     staging scan split can never scatter a group across files (at
     production dir sizes Spark splits scans at row-group boundaries)."""
     import os

@@ -11,6 +11,7 @@ import contextlib
 import hashlib
 import io
 import json
+import os
 
 import pytest
 
@@ -152,26 +153,129 @@ def test_encode_job_one_pass_budget_and_golden(spark, source_path, tmp_path):
     assert _digest(rows) == GOLDEN_MANIFESTS_SHA
 
 
-def test_second_job_manifests_only_its_partitions(spark, source_path, tmp_path):
-    """The manifests build reads back only the dirs its own write touched:
-    a second job into the same warehouse that encodes one conversation
-    commits one manifest row, and the first job's rows stay as they were."""
-    from vcf2df_spark import fixtures as fx
+def _tree(root):
+    """{relative path: sha256} of every file under ``root``."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            with open(os.path.join(d, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(d, f), root)] = \
+                    hashlib.sha256(fh.read()).hexdigest()
+    return out
+
+
+def _new_conversation(small, n_turns, conv_id="conv-77777777"):
+    """The first ``n_turns`` of an existing conversation under a new id."""
+    one = small[small["conv_id"] == small["conv_id"].iloc[0]].head(n_turns).copy()
+    one["conv_id"] = conv_id
+    return one
+
+
+def test_second_job_appends_a_new_conversation(spark, source_path, tmp_path):
+    """A second job that encodes one new conversation into a partition of
+    the first job merges into it: the warehouse holds the union, which
+    decodes bit-identical to the union source, and the manifests agree."""
+    import pandas as pd
+
+    from jobs.stats import warehouse_stats
     from vcf2df_spark.sparkhash import pkey_for
 
     wh = str(tmp_path / "swh")
-    assert _run(encode_job.main, ["--input", source_path, "--out", wh,
-                                  "--partitions", "4", "--job-id", "a"]) == 0
-    rows_a = _manifest_rows(spark, wh, "a")
-    small = fx.transcripts_small()
-    conv = small["conv_id"].iloc[0]
-    one = small[small["conv_id"] == conv]
-    assert len(one) <= 256  # one split: one partition
+    argv = ["--out", wh, "--partitions", "4", "--master", "local[4]"]
+    assert _run(encode_job.main, ["--input", source_path, "--job-id", "a",
+                                  *argv]) == 0
+    small = fixtures.transcripts_small()
+    one = _new_conversation(small, 5)
     one_path = str(tmp_path / "one.parquet")
-    fx.write_parquet(one, one_path)
-    assert _run(encode_job.main, ["--input", one_path, "--out", wh,
-                                  "--partitions", "4", "--job-id", "b"]) == 0
+    fixtures.write_parquet(one, one_path)
+    rc, _, out = _run_counted(
+        spark, ["--input", one_path, "--job-id", "b", *argv], "append")
+    assert rc == 0 and out["status"] == "ok", out
+    assert out["rows_encoded"] == 5 and out["partitions_merged"] == 1
+    pid = pkey_for("conv-77777777", 0, 4)
     rows_b = _manifest_rows(spark, wh, "b")
-    assert [(r["partition_id"], r["n_rows"]) for r in rows_b] \
-        == [(pkey_for(conv, 0, 4), len(one))]
-    assert _manifest_rows(spark, wh, "a") == rows_a
+    assert [(r["partition_id"], r["n_rows"]) for r in rows_b] == \
+        [(pid, [n for p, n, _ in GOLDEN_PARTITIONS if p == pid][0] + 5)]
+    assert {r["partition_id"] for r in _manifest_rows(spark, wh, "a")} \
+        == {0, 1, 2, 3} - {pid}
+
+    union = str(tmp_path / "union.parquet")
+    fixtures.write_parquet(pd.concat([small, one], ignore_index=True), union)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        rc = _run(decode_job.main, ["--warehouse", wh, "--source", union,
+                                    "--master", "local[4]"])
+    verdict = json.loads(buf.getvalue().splitlines()[-1])
+    assert rc == 0 and verdict["status"] == "bit-identical", verdict
+    assert verdict["rows_decoded"] == 25525
+    assert verdict["manifest_checksum_mismatches"] == 0
+    stats = warehouse_stats(wh)
+    assert stats["n_rows"] == 25525 and stats["partitions"] == 4
+
+
+def test_second_job_reinsert_is_refused(spark, source_path, tmp_path):
+    """Re-inserting an existing conversation is a duplicate key against
+    the merged partition: exit 5, every blocks and manifests file as it
+    was, no staging or lock left. Replacing rows is jobs/upsert.py's job."""
+    wh = str(tmp_path / "rwh")
+    argv = ["--out", wh, "--partitions", "4", "--master", "local[4]"]
+    assert _run(encode_job.main, ["--input", source_path, "--job-id", "a",
+                                  *argv]) == 0
+    live = _tree(wh)
+    small = fixtures.transcripts_small()
+    one = small[small["conv_id"] == small["conv_id"].iloc[0]]
+    one_path = str(tmp_path / "again.parquet")
+    fixtures.write_parquet(one, one_path)
+    rc, _, out = _run_counted(
+        spark, ["--input", one_path, "--job-id", "b", *argv], "reinsert")
+    assert rc == 5 and out["status"] == "invalid-input", out
+    assert out["duplicate_rows"] == 0 and "upsert" in out["reinserted"]
+    assert _tree(wh) == live
+
+
+def test_mismatched_partitioner_is_refused(spark, tmp_path):
+    """Encode into a warehouse whose manifests record another
+    num_partitions or shard_dirs exits 2 and writes nothing: its rows
+    would hash to partitions that were never merged."""
+    small = fixtures.transcripts_small(200)
+    src = str(tmp_path / "s.parquet")
+    fixtures.write_parquet(small, src)
+    one = str(tmp_path / "one.parquet")
+    fixtures.write_parquet(_new_conversation(small, 5), one)
+    wh = str(tmp_path / "pwh")
+    assert _run(encode_job.main, ["--input", src, "--out", wh, "--partitions",
+                                  "4", "--job-id", "a",
+                                  "--master", "local[4]"]) == 0
+    live = _tree(wh)
+    for extra in (["--partitions", "8"],
+                  ["--partitions", "4", "--shard-dirs", "2"]):
+        rc, n_jobs, out = _run_counted(
+            spark, ["--input", one, "--out", wh, "--job-id", "b", *extra,
+                    "--master", "local[4]"], "mismatch")
+        assert rc == 2 and out["status"] == "error" and n_jobs == 0, out
+        assert "partitioner" in out["error"]
+        assert _tree(wh) == live
+
+
+def test_remote_warehouse_fresh_direct_write_else_refused(
+        spark, source_path, tmp_path, monkeypatch):
+    """A warehouse that cannot be locked (a remote URI, here a local path
+    the test declares remote) takes a direct write only while it has no
+    manifests; an encode into one that has them fails loudly (exit 2)
+    and writes nothing."""
+    from vcf2df_spark import commit
+
+    def remote(path, what="path"):
+        raise ValueError(f"{what} '{path}' is not a local filesystem path")
+
+    monkeypatch.setattr(commit, "require_local", remote)
+    wh = str(tmp_path / "remote")
+    argv = ["--input", source_path, "--out", wh, "--partitions", "4",
+            "--master", "local[4]"]
+    assert _run(encode_job.main, argv + ["--job-id", "a"]) == 0
+    assert sorted(os.listdir(wh)) == ["blocks", "manifests"]
+    assert _digest(_manifest_rows(spark, wh, "a")) == GOLDEN_MANIFESTS_SHA
+    live = _tree(wh)
+    rc, _, out = _run_counted(spark, argv + ["--job-id", "b"], "remote")
+    assert rc == 2 and out["status"] == "error" and "local" in out["error"]
+    assert _tree(wh) == live

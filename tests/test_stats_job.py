@@ -135,3 +135,29 @@ def test_stats_ctype_conflict_is_an_error(tmp_path, capsys):
     assert exc.value.code == 2
     rec = json.loads(capsys.readouterr().out.strip())
     assert rec["status"] == "error" and "two ctypes" in rec["error"]
+
+
+def test_stats_runs_as_plain_script_from_checkout(spark, tmp_path):
+    """`python jobs/stats.py --warehouse WH` from the checkout root, with
+    no PYTHONPATH: the script finds the package next to jobs/."""
+    import os
+    import subprocess
+    import sys
+
+    src = normalize_input(
+        spark.createDataFrame(fixtures.transcripts_small(n_convs=10))
+    )
+    wh = str(tmp_path / "pwh")
+    blocks = encode_transcripts(src, num_partitions=2)
+    manifest.build_manifests(blocks, "plain", "mem", num_partitions=2).write.parquet(
+        f"{wh}/manifests"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "jobs/stats.py", "--warehouse", wh],
+        cwd=root, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+    rec = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert rec["status"] == "ok" and rec["n_rows"] == src.count()

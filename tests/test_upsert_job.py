@@ -216,3 +216,22 @@ def test_upsert_turns_beyond_warehouse_turn_max(spark, wh, tmp_path):
     m = spark.read.parquet(f"{wh}/manifests").toPandas()
     assert m["partition_id"].is_unique
     assert int(m["n_rows"].sum()) == n_total - n_old + 5
+
+
+def test_upsert_refuses_duplicate_keys(spark, wh, tmp_path):
+    """An input that repeats (conv_id, turn_idx) keys is invalid, as for
+    encode: exit 5 before anything is staged, no warehouse file touched."""
+    import pandas as pd
+
+    small = fixtures.transcripts_small(n_convs=60)
+    one = small[small["conv_id"] == small["conv_id"].iloc[0]]
+    rep = str(tmp_path / "dup.parquet")
+    fixtures.write_parquet(pd.concat([one, one.iloc[[0, 2]]],
+                                     ignore_index=True), rep)
+    live = _dir_snapshot(wh)
+    code, rec = _run(upsert_job.main, [
+        "--warehouse", wh, "--input", rep, "--master", "local[4]",
+    ])
+    assert code == 5
+    assert rec == {"status": "invalid-input", "duplicate_rows": 2}
+    assert _dir_snapshot(wh) == live

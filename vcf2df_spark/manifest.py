@@ -5,9 +5,10 @@ generalization of the reference's self-describing Parquet footer metadata
 (``converter/convert.go:64``, ``converter/reservedColumns.go:31-56``).
 A partition is durable iff its manifest row has status='committed'; the
 encode job left-anti-joins planned partitions against committed manifests
-to resume after failure (SURVEY.md §4.3). Blocks are written partitioned
-by partition_id with dynamic partition overwrite, so re-encoding a
-partition is idempotent.
+to resume after failure (SURVEY.md §4.3). Every writer stages its
+partition dirs and the whole manifests table and publishes both with one
+``commit.swap`` (rewrite.stage_and_swap), so re-encoding a partition is
+idempotent and blocks never exist without their manifest rows.
 
 Only this module knows the manifests' columns: it writes them
 (:func:`build_manifests`), reads them driver-side (:class:`WarehouseMeta`)
@@ -16,7 +17,7 @@ and rewrites them distributed (:func:`rewritten_manifests`).
 Sandbox note: the production target is Iceberg (atomic snapshot commits);
 no Iceberg runtime jar ships with this pyspark, so the documented fallback
 is the same layout on plain Parquet — blocks partitioned by partition_id,
-manifests append-only, manifest-write-last as the commit point.
+the journaled directory swap (commit.py) as the commit point.
 """
 
 from __future__ import annotations
@@ -258,6 +259,11 @@ class WarehouseMeta:
         return {r.get("num_partitions") for r in self._routing_rows}
 
     @property
+    def shards(self) -> set:
+        """shard_dirs values over ALL rows (None = single-level dirs)."""
+        return {r.get("shard_dirs") for r in self._routing_rows}
+
+    @property
     def turn_max(self) -> int | None:
         """Max persisted turn_max; None when any row lacks it."""
         tm = [r.get("turn_max") for r in self._routing_rows]
@@ -321,12 +327,13 @@ class WarehouseMeta:
             (json.loads(sig).items() for sig in sigs), merge=True
         )
 
-    def committed_ids(self, job_id: str) -> list[int]:
-        """Sorted ids of the partitions ``job_id`` has committed."""
+    def committed_ids(self, job_id: str | None = None) -> list[int]:
+        """Sorted ids of the partitions ``job_id`` (any job when None) has
+        committed."""
         return sorted({
             r["partition_id"]
             for r in self.rows(["partition_id", "job_id"], committed=True)
-            if r.get("job_id") == job_id
+            if job_id is None or r.get("job_id") == job_id
         })
 
     def checksums(self) -> list[tuple[int, str]]:

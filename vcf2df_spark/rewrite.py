@@ -1,11 +1,14 @@
-"""Routed staged rewrite: the shared core of targeted delete and upsert.
+"""Routed staged rewrite: targeted delete and upsert, and the one staged
+write path (``stage_and_swap``) every warehouse writer publishes through.
 
 The point-write analogue of the routed point read (scan.fetch_conversation):
 given a set of conversation ids, rewrite ONLY the partition dirs their hash
 routes to — at the 100-TB design point that is a couple of dirs out of
 ~400k, never a warehouse scan. Reference analogue: correcting a file means
 re-running the CLI on it (``converter/convert_test.go:25-31`` deletes and
-regenerates the whole output); ours is partition-bounded.
+regenerates the whole output); ours is partition-bounded. jobs/encode.py
+appends through the same path: its merged partitions are the committed
+ones its new rows hash to.
 
 Commit discipline:
 
@@ -14,8 +17,8 @@ Commit discipline:
    the replacement's own turn range too, so an upsert beyond the
    warehouse's persisted turn_max stays inside the routed set;
 2. stage: ONLY the routed partition dirs are read (basePath read — no
-   full-tree listing), target conversations drop out, replacement rows
-   (if any) union in, survivors re-encode through the SAME salted hash
+   full-tree listing), target conversations drop out, new rows (if any)
+   union in, survivors re-encode through the SAME salted hash
    partitioner and land in a scratch dir ALREADY hive-partitioned like
    the warehouse. Row counts ride this one job via observe() — no
    cache/count pre-passes. The applyInArrow group key IS partition_id,
@@ -27,23 +30,18 @@ Commit discipline:
    filtered and written by executors, NEVER collected to the driver (at
    ~400k manifest rows a driver materialization is a multi-hundred-MB
    single-threaded round-trip on every delete);
-4. commit: the routed block dirs and ``manifests/`` publish as ONE
-   journaled swap (``commit.swap``; an emptied partition loses its dir),
-   which the next taker of the lock rolls forward after a crash.
+4. commit: the block dirs and ``manifests/`` publish as ONE journaled
+   swap (``commit.swap``; an emptied partition loses its dir), which the
+   next taker of the lock rolls forward after a crash.
 
 Local-filesystem warehouses only (loud failure otherwise — see commit):
 the directory swaps use os/shutil, which silently no-op on remote URIs.
-One rewrite at a time per warehouse (O_EXCL ``.rewrite_lock``; concurrent
-rewrites would race on the staging dir and the manifests swap). The lock
-does NOT coordinate with a concurrent encode-append or streaming epoch
-writer to the same warehouse — a manifest file appended during the swap
-window would be lost with the old directory. Run rewrites in maintenance
-windows (or against quiesced warehouses), like any compaction.
+One writer at a time per warehouse (O_EXCL ``.rewrite_lock``, taken by
+encode, delete and upsert alike). The lock does NOT coordinate with a
+streaming epoch writer; streaming warehouses are refused in place.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -115,11 +113,8 @@ def _routed_rewrite_locked(
     desc: str,
     replacement: DataFrame | None,
 ) -> dict:
-    from pyspark.sql import Observation
-
     from . import manifest
-    from .decode import decode_blocks
-    from .encode import TURNS_PER_SPLIT, encode_keyed, with_partition_key
+    from .encode import TURNS_PER_SPLIT, with_partition_key
     from .sparkhash import pkey_for
 
     conv_ids = sorted(set(conv_ids))
@@ -156,7 +151,7 @@ def _routed_rewrite_locked(
     # beyond the warehouse's persisted turn_max would re-key rows into
     # partitions OUTSIDE the manifest-derived routed set. Extend the route
     # with the replacement's own turn range (one tiny agg on the small
-    # side); the post-staging stray check below stays as the loud guard.
+    # side); stage_and_swap's stray check stays as the loud guard.
     n_inserted = 0
     if replacement is not None:
         rep_agg = replacement.agg(
@@ -170,96 +165,143 @@ def _routed_rewrite_locked(
                 for s in range(lo, hi):
                     pids.add(pkey_for(cid, s, num_partitions))
 
-    # decode ONLY the routed partitions. Reading the routed dirs directly
-    # (basePath keeps the hive partition_id column) skips the full-tree
-    # file listing a filtered whole-warehouse read pays — at ~400k
-    # partition dirs the listing IS the planning cost — and keeps the
-    # blocks relation a bare scan, so decode's schema derivation stays
-    # driver-side (no Spark aggregate job).
-    root = f"{wh}/blocks"
-    routed_dirs = [d for _pid, d, _ds in
-                   manifest.routed_blocks_dirs(root, pids, shard_dirs)]
-    if routed_dirs:
-        blocks = spark.read.option("basePath", root).parquet(*routed_dirs)
-    else:
-        # no routed dir exists (pure insert into fresh partitions, or a
-        # miss): fall back to the tree + filter — also the path that keeps
-        # non-hive layouts failing exactly as before
-        blocks = spark.read.parquet(root).filter(
-            F.col("partition_id").isin(sorted(pids))
-        )
-    dec = decode_blocks(blocks)
-
-    # counts ride the staging write via observe() — no cache, no separate
-    # count jobs, the routed decode+encode runs exactly once (r6; the
-    # same move VERDICT r5 prescribed for append_index's bookkeeping)
-    obs_before, obs_after = Observation(), Observation()
-    dec = dec.observe(obs_before, F.count(F.lit(1)).alias("n"))
-    kept = _without_ids(spark, dec, conv_ids).observe(
-        obs_after, F.count(F.lit(1)).alias("n")
-    )
-    if replacement is not None:
-        kept = kept.unionByName(replacement)
-
-    # stage: survivors (+ replacements) re-key through the same salted
-    # hash partitioner and land in a scratch dir, hive-partitioned the
-    # same way as the warehouse. Each applyInArrow task holds whole
-    # groups (group key == partition_id), so partitionBy writes every
-    # chunk group into one file — the blocks write invariant — and the
-    # commit becomes driver-side directory swaps instead of a second
-    # Spark read+repartition+overwrite pass over the staged bytes.
-    keyed = with_partition_key(kept, num_partitions)
-    staged, part_cols = manifest.with_layout(encode_keyed(keyed), shard_dirs)
-    staged.write.partitionBy(*part_cols).parquet(f"{staging}/blocks")
-    n_before = int(obs_before.get["n"])
-    n_after = int(obs_after.get["n"])
-
-    if n_after == n_before and n_inserted == 0:
+    new = (None if replacement is None
+           else with_partition_key(replacement, num_partitions))
+    stats = stage_and_swap(spark, wh, staging, meta, pids, new, job_id, desc,
+                           num_partitions, shard_dirs, drop_ids=conv_ids)
+    if stats is None:
         return {
             "status": "noop", "rows_deleted": 0, "rows_inserted": 0,
             "partitions_routed": sorted(pids),
         }
+    written = set(stats["pids"])
+    return {
+        "status": "ok",
+        "rows_deleted": stats["before"] - stats["kept"],
+        "rows_inserted": int(n_inserted),
+        "partitions_routed": sorted(pids),
+        "partitions_rewritten": sorted(written),
+        "partitions_emptied": sorted(pids - written),
+    }
 
-    # staged partition dirs ARE the rewritten-partition set
-    live_pids: set[int] = set()
-    for dirpath, dirs, _files in os.walk(f"{staging}/blocks"):
-        for d in dirs:
-            if d.startswith("partition_id="):
-                live_pids.add(int(d.split("=", 1)[1]))
-    stray = live_pids - set(pids)
-    if stray:  # explicit raise: survives python -O (ADVICE r5)
+
+def stage_and_swap(
+    spark: SparkSession,
+    wh: str,
+    staging: str | None,
+    meta,
+    merge,
+    new: DataFrame | None,
+    job_id: str,
+    desc: str,
+    num_partitions: int,
+    shard_dirs: int | None,
+    drop_ids=(),
+    detect_dups: bool = False,
+) -> dict | None:
+    """The one write path of every warehouse writer (encode, delete,
+    upsert): decode the live dirs of partitions ``merge``, drop
+    ``drop_ids``' rows, union the ``new`` rows (keyed by
+    ``encode.with_partition_key``), re-encode, write hive-partitioned
+    into ``{staging}/blocks``, stage the manifests (fresh rows for the
+    written partitions plus every other row of ``meta``'s table), then
+    publish the blocks dirs and ``manifests/`` as ONE ``commit.swap``.
+    ``staging`` None writes straight into the warehouse: only for one
+    with no manifests and nothing to merge (a fresh remote encode).
+
+    Returns the observed counts (``before``/``kept``: rows of the merged
+    dirs; ``rows``/``parts``/``raw``/``enc``/``pids``: the written
+    blocks; ``max_rows``/``mean_rows``: the fresh manifest rows), or None
+    when no row was dropped or added."""
+    from pyspark.sql import Observation
+
+    from . import manifest
+    from .decode import decode_blocks
+    from .encode import encode_keyed, with_partition_key
+
+    merge = set(merge)
+    root = f"{wh}/blocks"
+    dest = staging or wh
+    # decode ONLY the merged partitions' dirs (basePath keeps the hive
+    # partition_id column): no full-tree listing — at ~400k partition
+    # dirs the listing IS the planning cost — and a bare scan keeps
+    # decode's schema derivation driver-side (no Spark aggregate job).
+    # Counts ride the staging write via observe(): no cache, no count
+    # jobs, the decode+encode runs exactly once.
+    dirs = [d for _pid, d, _ds in
+            manifest.routed_blocks_dirs(root, merge, shard_dirs)]
+    obs = {k: Observation() for k in ("before", "kept", "blocks")}
+    rows = new
+    if dirs:
+        dec = decode_blocks(spark.read.option("basePath", root).parquet(*dirs))
+        dec = dec.observe(obs["before"], F.count(F.lit(1)).alias("n"))
+        kept = _without_ids(spark, dec, drop_ids) if drop_ids else dec
+        kept = with_partition_key(kept, num_partitions).observe(
+            obs["kept"], F.count(F.lit(1)).alias("n"))
+        rows = kept if new is None else kept.unionByName(new)
+    if rows is None:
+        return None
+
+    # one applyInArrow group per partition_id, so partitionBy writes every
+    # chunk group into one file (the blocks write invariant). The target
+    # is always new: the staging dir is wiped when the lock is taken, and
+    # a direct write only goes to a warehouse with no manifests.
+    is_conv = F.col("column") == "conv_id"
+    blocks = encode_keyed(rows, detect_dups=detect_dups).observe(
+        obs["blocks"],
+        F.sum(F.when(is_conv, F.col("n_rows"))).alias("rows"),
+        F.count(F.when(is_conv & (F.col("chunk_idx") == 0), 1)).alias("parts"),
+        F.sum("raw_bytes").alias("raw"),
+        F.sum("enc_bytes").alias("enc"),
+        F.sort_array(F.collect_set("partition_id")).alias("pids"),
+    )
+    blocks, part_cols = manifest.with_layout(blocks, shard_dirs)
+    blocks.write.mode("overwrite").partitionBy(*part_cols).parquet(
+        f"{dest}/blocks")
+    got = obs["blocks"].get
+    stats = {k: int(got[k] or 0) for k in ("rows", "parts", "raw", "enc")}
+    stats["pids"] = list(got["pids"] or [])
+    stats["before"] = int(obs["before"].get["n"]) if dirs else 0
+    stats["kept"] = int(obs["kept"].get["n"]) if dirs else 0
+    if stats["before"] == stats["kept"] == stats["rows"]:
+        return None
+
+    # the staged partitions ARE the written set; one that already holds
+    # committed rows but was not merged would lose them in the swap
+    written = set(stats["pids"])
+    stray = (written - merge) & set(meta.committed_ids())
+    if stray:  # explicit raise: survives python -O
         raise RewriteError(
-            f"re-keyed rows left the routed partitions: {sorted(stray)}"
+            f"re-keyed rows left the merged partitions: {sorted(stray)}"
         )
 
-    # manifests staged after the blocks (they read the staged blocks,
-    # which must still be there) and committed with them: untouched rows
-    # + fresh rows for the rewritten partitions, written by executors —
-    # no driver materialization of the warehouse-sized table, and no
-    # plan ever reads and overwrites wh/manifests in one lineage (the
-    # staging write reads wh/manifests, the swap is driver-side fs ops).
+    # manifests read the written blocks (which must still be there) and
+    # commit with them: every untouched row + fresh rows for the written
+    # partitions, filtered and written by executors — never collected to
+    # the driver, and no plan reads and overwrites wh/manifests in one
+    # lineage (the swap is driver-side fs ops).
+    obs_m = Observation()
+    swapped = merge | written
     fresh = manifest.build_manifests(
-        spark.read.parquet(f"{staging}/blocks"), job_id, desc,
-        num_partitions=num_partitions, shard_dirs=shard_dirs,
-    ) if live_pids else None
-    manifest.rewritten_manifests(spark, wh, pids, fresh).coalesce(4).write.parquet(
-        f"{staging}/manifests"
-    )
+        manifest.read_blocks(spark, f"{dest}/blocks", sorted(written),
+                             shard_dirs),
+        job_id, desc, num_partitions=num_partitions, shard_dirs=shard_dirs,
+    ).observe(obs_m, F.max("n_rows").alias("mx"), F.avg("n_rows").alias("mean")
+              ) if written else None
+    staged_m = (manifest.rewritten_manifests(spark, wh, swapped, fresh)
+                if meta.exists else fresh)
+    staged_m.coalesce(4).write.mode("overwrite").parquet(f"{dest}/manifests")
+    if fresh is not None:
+        stats["max_rows"], stats["mean_rows"] = obs_m.get["mx"], obs_m.get["mean"]
+    if staging is None:
+        return stats
 
     pairs = []
-    for pid in sorted(pids):
+    for pid in sorted(swapped):
         pairs.append((manifest.blocks_dir(root, pid, shard_dirs),
                       manifest.blocks_dir(f"{staging}/blocks", pid, shard_dirs)))
         if shard_dirs:  # a legacy single-level dir goes too
             pairs.append((manifest.blocks_dir(root, pid, None), None))
     pairs.append((f"{wh}/manifests", f"{staging}/manifests"))
     commit.swap(wh, staging, pairs)
-
-    return {
-        "status": "ok",
-        "rows_deleted": int(n_before - n_after),
-        "rows_inserted": int(n_inserted),
-        "partitions_routed": sorted(pids),
-        "partitions_rewritten": sorted(live_pids),
-        "partitions_emptied": sorted(set(pids) - live_pids),
-    }
+    return stats
