@@ -78,18 +78,11 @@ def run_compact(
         .alias("rows"),
     ).collect()[0]
 
-    if merge_schemas:
-        # additive schema evolution: epochs/batches with DIFFERENT extra
-        # columns decode against their union schema, typed zero-defaults
-        # filling the pre-evolution chunks (decode.ctypes_from_signatures).
-        # Uses the grouped decode (one shuffle) instead of the shuffle-free
-        # datasource scan — the price of unifying, paid once here so every
-        # later read of the output is homogeneous and shuffle-free again.
-        from vcf2df_spark.decode import decode_blocks
-
-        df = decode_blocks(old_blocks, merge_schemas=True)
-    else:
-        df = read_warehouse(spark, warehouse)  # epoch-aware, shuffle-free
+    # epoch-aware and shuffle-free; merge_schemas is additive schema
+    # evolution: epochs/batches with DIFFERENT extra columns decode against
+    # their union schema, typed zero-defaults filling the pre-evolution
+    # chunks, so every later read of the output is homogeneous and strict
+    df = read_warehouse(spark, warehouse, merge_schemas=merge_schemas)
     if exclude_conv_ids:
         from vcf2df_spark.rewrite import _without_ids
 

@@ -17,7 +17,8 @@ warehouse's ``.rewrite_lock`` (vcf2df_spark/rewrite.py ``stage_and_swap``,
 shared with delete and upsert). A committed partition the new rows hash
 to is merged with them; a key already committed exits 5 like an in-input
 duplicate (replacing rows is jobs/upsert.py's job), and a warehouse
-written with another ``--partitions``/``--shard-dirs`` exits 2.
+written with another ``--partitions``/``--shard-dirs``, or input whose
+columns differ from the committed schema, exits 2.
 """
 
 from __future__ import annotations
@@ -98,7 +99,7 @@ def _encode(spark, args, wh: str, staging: str | None) -> tuple[int, dict]:
 
     from vcf2df_spark import manifest
     from vcf2df_spark.encode import DUPLICATE_KEYS, with_partition_key
-    from vcf2df_spark.rewrite import stage_and_swap
+    from vcf2df_spark.rewrite import RewriteError, stage_and_swap
     from vcf2df_spark.sources import read_transcripts
 
     t0 = time.time()
@@ -172,6 +173,8 @@ def _encode(spark, args, wh: str, staging: str | None) -> tuple[int, dict]:
             args.partitions, shard_dirs,
             detect_dups=args.on_duplicates == "fail",
         )
+    except RewriteError as e:
+        return 2, {"job_id": args.job_id, "status": "error", "error": str(e)}
     except PythonException as e:
         if DUPLICATE_KEYS not in str(e):
             raise

@@ -19,8 +19,8 @@ output); ours is partition-bounded.
 
 Input contract: same as jobs/encode.py — the six core transcript columns
 plus any typed extras, passed through ``encode.normalize_input``. The
-input's EXTRA columns must match the warehouse's (the staged union is
-by-name and fails loudly on schema drift).
+input's columns and types must match the warehouse's: drift exits 2
+(``"status": "error"``) before anything is staged.
 
 Input rows must be unique on (conv_id, turn_idx), as for jobs/encode.py:
 a repeated key exits 5 (``"status": "invalid-input"``) before anything

@@ -104,9 +104,10 @@ def test_compact_retention_sweep(spark, tmp_path, capsys):
     assert got == want
 
 
-def _evolved_wh(spark, tmp_path) -> tuple[str, int, int]:
+def _evolved_wh(spark, tmp_path):
     """Epoch 0: core six columns. Epoch 1: adds (score f64, model str) —
-    the streaming schema-change case the strict decode refuses."""
+    the streaming schema-change case the strict decode refuses. Returns
+    (warehouse, epoch 0 source frame, epoch 1 source frame)."""
     root = str(tmp_path / "evwh")
     pdf0 = fixtures.transcripts_small(n_convs=30, seed=5)
     pdf0["conv_id"] = "a-" + pdf0["conv_id"]
@@ -122,34 +123,43 @@ def _evolved_wh(spark, tmp_path) -> tuple[str, int, int]:
     encode_transcripts(src1, num_partitions=2, chunk_rows=64).write.parquet(
         f"{root}/blocks/epoch=1"
     )
-    return root, len(pdf0), len(pdf1)
+    return root, pdf0, pdf1
 
 
 def test_merge_schemas_decode_and_compact(spark, tmp_path, capsys):
     """Additive schema evolution: strict reads fail loudly with the
-    remedy in the message; decode_blocks(merge_schemas=True) unions the
+    remedy in the message; read_warehouse(merge_schemas=True) unions the
     schema with typed zero-defaults; compact --merge-schemas re-encodes
     to ONE homogeneous schema that every strict read then serves."""
+    import pandas as pd
     import pytest as _pytest
 
     from vcf2df_spark.decode import decode_blocks
 
-    root, n0, n1 = _evolved_wh(spark, tmp_path)
-    blocks = spark.read.parquet(f"{root}/blocks")
+    root, pdf0, pdf1 = _evolved_wh(spark, tmp_path)
+    n0, n1 = len(pdf0), len(pdf1)
 
     with _pytest.raises(Exception, match="merge-schemas"):
-        decode_blocks(blocks).count()
+        decode_blocks(spark.read.parquet(f"{root}/blocks")).count()
+    with _pytest.raises(Exception, match="incomplete chunk group"):
+        datasource.read_warehouse(spark, root).count()
 
-    merged = decode_blocks(blocks, merge_schemas=True)
+    # the reference: the source frames, pre-evolution rows carrying the
+    # SAME typed defaults normalize_input imputes (so they read as if
+    # encoded after the evolution)
+    old = pdf0.assign(score=0.0, model="")
+    want = (
+        normalize_input(spark.createDataFrame(pd.concat([old, pdf1])))
+        .orderBy("conv_id", "turn_idx").collect()
+    )
+    merged = datasource.read_warehouse(spark, root, merge_schemas=True)
     assert {"score", "model"} <= set(merged.columns)
-    pdf = merged.toPandas()
-    assert len(pdf) == n0 + n1
-    old = pdf[pdf.conv_id.str.startswith("a-")]
-    new = pdf[pdf.conv_id.str.startswith("b-")]
-    # pre-evolution rows carry the SAME typed defaults normalize_input
-    # imputes (so they read as if encoded after the evolution)
-    assert (old["score"] == 0.0).all() and (old["model"] == "").all()
-    assert (new["model"] != "").all()
+    # a column-pruned merge would skip the chunks that lack every
+    # requested column (the old rows, for ["score"]) instead of filling
+    with _pytest.raises(ValueError, match="merge_schemas"):
+        datasource.read_warehouse(spark, root, columns=["score"],
+                                  merge_schemas=True)
+    assert merged.orderBy("conv_id", "turn_idx").collect() == want
 
     out = str(tmp_path / "evout")
     compact.main(["--warehouse", root, "--out", out, "--partitions", "4",
@@ -161,18 +171,13 @@ def test_merge_schemas_decode_and_compact(spark, tmp_path, capsys):
     uni = datasource.read_warehouse(spark, out)
     assert {"score", "model"} <= set(uni.columns)
     assert uni.count() == n0 + n1
-    want = merged.orderBy("conv_id", "turn_idx").collect()
     got = uni.orderBy("conv_id", "turn_idx").collect()
     assert got == want
 
 
-@pytest.mark.parametrize("reader", ["decode_blocks", "read_warehouse"])
-def test_merge_schemas_rejects_type_change(spark, tmp_path, reader):
-    """A column whose ctype CHANGES across batches is never merged — by
-    the merging grouped decode and by the datasource's union planning,
-    with the same message."""
-    from vcf2df_spark.decode import decode_blocks
-
+def test_merge_schemas_rejects_type_change(spark, tmp_path):
+    """A column whose ctype CHANGES across batches is never merged: the
+    datasource's union planning refuses it, merge_schemas or not."""
     root = str(tmp_path / "tcwh")
     pdf0 = fixtures.transcripts_small(n_convs=10, seed=7)
     pdf0["flag"] = [float(i) for i in range(len(pdf0))]  # f64
@@ -188,8 +193,6 @@ def test_merge_schemas_rejects_type_change(spark, tmp_path, reader):
         f"{root}/blocks/epoch=1"
     )
     with pytest.raises(Exception, match="two ctypes"):
-        if reader == "decode_blocks":
-            blocks = spark.read.parquet(f"{root}/blocks")
-            decode_blocks(blocks, merge_schemas=True).count()
-        else:
-            datasource.read_warehouse(spark, root).count()
+        datasource.read_warehouse(spark, root).count()
+    with pytest.raises(Exception, match="two ctypes"):
+        datasource.read_warehouse(spark, root, merge_schemas=True).count()

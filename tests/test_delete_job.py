@@ -128,6 +128,29 @@ def test_batch_delete(spark, wh):
     assert int(m["n_rows"].sum()) == n_total - n_del
 
 
+def test_delete_with_pre_r4_manifests(spark, wh):
+    """Manifests written before schema_sig existed: the delete reads them
+    with the manifests schema (the missing column reads null), succeeds,
+    and the warehouse decodes bit-identical to the survivors."""
+    import shutil
+
+    legacy = spark.read.parquet(f"{wh}/manifests").drop("schema_sig")
+    legacy.write.parquet(f"{wh}/manifests_legacy")
+    shutil.rmtree(f"{wh}/manifests")
+    shutil.move(f"{wh}/manifests_legacy", f"{wh}/manifests")
+
+    full = read_warehouse(spark, wh)
+    cid = full.select("conv_id").orderBy("conv_id").first()[0]
+    want = (full.filter(F.col("conv_id") != cid)
+            .orderBy("conv_id", "turn_idx").collect())
+    code, rec = _run(delete_job.main, [
+        "--warehouse", wh, "--conv-id", cid, "--master", "local[4]",
+    ])
+    assert code == 0 and rec["status"] == "ok" and rec["rows_deleted"] > 0
+    got = read_warehouse(spark, wh).orderBy("conv_id", "turn_idx").collect()
+    assert got == want
+
+
 def test_delete_on_sharded_layout(spark, tmp_path):
     """The two-level shard=N/partition_id=M layout: the delete rewrites the
     correct shard subdirs and the routed lookup stays consistent."""

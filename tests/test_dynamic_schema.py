@@ -199,46 +199,3 @@ def test_decode_rejects_heterogeneous_warehouse(spark, tmp_path):
     b_base.unionByName(b_ext).write.parquet(path_b)
     with pytest.raises(Exception, match="heterogeneous chunk schemas"):
         decode_blocks(spark.read.parquet(path_b)).collect()
-
-
-def test_fast_schema_path_on_bare_parquet_scan(spark, tmp_path, monkeypatch):
-    """r6: decode_blocks on a BARE parquet scan derives the output schema
-    driver-side (pyarrow over the scan's own files) — no Spark aggregate
-    job — and matches the distributed derivation exactly. Filtered or
-    in-memory lineages must keep the distributed path."""
-    import vcf2df_spark.decode as decode_mod
-
-    pdf = fixtures.transcripts_extended(n_convs=50)
-    src = spark.createDataFrame(pdf)
-    path = str(tmp_path / "fastwh")
-    encode_transcripts(src, num_partitions=4).write.parquet(f"{path}/blocks")
-    stored = spark.read.parquet(f"{path}/blocks")
-
-    slow = decode_mod.ctypes_from_signatures(
-        decode_mod._spark_signatures(
-            stored.filter(~F.col("column").startswith("__"))
-        )
-    )
-    fast = decode_mod.ctypes_from_signatures(
-        decode_mod._file_signatures(stored, None)
-    )
-    assert fast == slow  # identical map, no Spark job needed
-
-    # pruned decode: the requested-columns filter is mirrored too
-    fast_pruned = decode_mod.ctypes_from_signatures(
-        decode_mod._file_signatures(stored, ["conv_id", "score"])
-    )
-    assert fast_pruned == {"conv_id": "str", "score": "f64"}
-
-    # the bench/grouped decode path must not launch the derivation job
-    def boom(*a, **kw):
-        raise AssertionError("distributed schema derivation ran on a bare scan")
-
-    monkeypatch.setattr(decode_mod, "_spark_signatures", boom)
-    assert decode_blocks(stored).count() == len(pdf)
-
-    # a FILTERED lineage is not a bare scan: fast path declines (the
-    # distributed derivation keeps the heterogeneity guarantee there)
-    assert decode_mod._file_signatures(
-        stored.filter(F.col("partition_id") == 0), None
-    ) is None

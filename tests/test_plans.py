@@ -98,3 +98,34 @@ def test_datasource_read_is_shuffle_free(spark, tmp_path):
     # the predicate must survive in the plan: pruning is conservative,
     # exactness is Catalyst's re-applied Filter
     assert _nodes(p, "Filter") == 1
+
+
+def test_rewrite_input_decodes_in_place(spark, tmp_path):
+    """The staged rewrite's input (rewrite.stage_and_swap): the datasource
+    read restricted to the merged partitions is a BatchScan with zero
+    Exchange, and the staged encode over it (ids dropped, new rows
+    unioned, re-keyed) moves data exactly once."""
+    import os
+
+    from vcf2df_spark import datasource
+    from vcf2df_spark.encode import (
+        encode_keyed, normalize_input, with_partition_key,
+    )
+    from vcf2df_spark.rewrite import _without_ids
+
+    src = normalize_input(spark.createDataFrame(fixtures.transcripts_tiny()))
+    wh = str(tmp_path / "rwh")
+    encode_transcripts(src, num_partitions=4).write.partitionBy(
+        "partition_id"
+    ).parquet(f"{wh}/blocks")
+    pids = sorted(int(d.split("=")[1]) for d in os.listdir(f"{wh}/blocks")
+                  if d.startswith("partition_id="))[:2]
+
+    dec = datasource.read_warehouse(spark, wh, partition_ids=pids)
+    p = _fmt(dec)
+    assert "BatchScan transcripts" in p and _nodes(p, "Exchange") == 0
+
+    kept = with_partition_key(_without_ids(spark, dec, ["absent"]), 4)
+    p = _fmt(encode_keyed(kept.unionByName(with_partition_key(src, 4))))
+    assert _nodes(p, "Exchange") == 1
+    assert "FlatMapGroupsInArrow" in p

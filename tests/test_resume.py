@@ -257,6 +257,40 @@ def test_mismatched_partitioner_is_refused(spark, tmp_path):
         assert _tree(wh) == live
 
 
+def test_schema_drift_is_refused(spark, tmp_path):
+    """An append whose rows carry a column the warehouse lacks exits 2
+    with a JSON error before anything is staged, whether the rows hash to
+    an uncommitted partition or to a committed one: every file stays as
+    it was and the warehouse still decodes (a drifted partition would
+    fail every later read as an incomplete chunk group)."""
+    from vcf2df_spark.datasource import read_warehouse
+    from vcf2df_spark.manifest import WarehouseMeta
+    from vcf2df_spark.sparkhash import pkey_for
+
+    small = fixtures.transcripts_small(3)
+    src = str(tmp_path / "s.parquet")
+    fixtures.write_parquet(small, src)
+    wh = str(tmp_path / "dwh")
+    argv = ["--out", wh, "--partitions", "16", "--master", "local[4]"]
+    assert _run(encode_job.main, ["--input", src, "--job-id", "a",
+                                  *argv]) == 0
+    committed = set(WarehouseMeta.load(wh).committed_ids())
+    assert 0 < len(committed) < 16
+    live = _tree(wh)
+    for into_committed in (False, True):
+        cid = next(c for c in (f"conv-9{i:07d}" for i in range(1000))
+                   if (pkey_for(c, 0, 16) in committed) == into_committed)
+        one = str(tmp_path / f"drift-{into_committed}.parquet")
+        fixtures.write_parquet(
+            _new_conversation(small, 5, cid).assign(score=0.5), one)
+        rc, _, out = _run_counted(
+            spark, ["--input", one, "--job-id", "b", *argv], "drift")
+        assert rc == 2 and out["status"] == "error", out
+        assert "score" in out["error"]
+        assert _tree(wh) == live
+    assert read_warehouse(spark, wh).count() == len(small)
+
+
 def test_remote_warehouse_fresh_direct_write_else_refused(
         spark, source_path, tmp_path, monkeypatch):
     """A warehouse that cannot be locked (a remote URI, here a local path

@@ -107,8 +107,8 @@ def test_legacy_null_ctypes_resolve_alike_everywhere(spark, tmp_path, capsys):
 
     stored = spark.read.parquet(f"{wh}/blocks")
     for df in (
-        decode_blocks(stored),  # bare scan: driver file reader
-        decode_blocks(stored.filter(F.col("partition_id") >= 0)),  # Spark
+        decode_blocks(stored),  # grouped decode: Spark aggregate
+        decode_blocks(stored.filter(F.col("partition_id") >= 0)),  # filtered
         datasource.read_warehouse(spark, wh),
     ):
         types = {f.name: f.dataType.simpleString() for f in df.schema.fields}

@@ -235,3 +235,27 @@ def test_upsert_refuses_duplicate_keys(spark, wh, tmp_path):
     assert code == 5
     assert rec == {"status": "invalid-input", "duplicate_rows": 2}
     assert _dir_snapshot(wh) == live
+
+
+def test_upsert_refuses_schema_drift(spark, wh, tmp_path):
+    """Replacement rows with a column the warehouse lacks (here one
+    replaced and one new conversation carrying ``score``) exit 2 with a
+    JSON error before anything is staged: no warehouse file touched, and
+    the warehouse still decodes (a drifted partition would fail every
+    later read as an incomplete chunk group)."""
+    import pandas as pd
+
+    small = fixtures.transcripts_small(n_convs=60)
+    one = small[small["conv_id"] == small["conv_id"].iloc[0]]
+    fresh = one.head(3).assign(conv_id="conv-zz-drift")
+    rep = str(tmp_path / "drift.parquet")
+    fixtures.write_parquet(
+        pd.concat([one, fresh], ignore_index=True).assign(score=0.5), rep)
+    live = _dir_snapshot(wh)
+    code, rec = _run(upsert_job.main, [
+        "--warehouse", wh, "--input", rep, "--master", "local[4]",
+    ])
+    assert code == 2 and rec["status"] == "error", rec
+    assert "score" in rec["error"]
+    assert _dir_snapshot(wh) == live
+    assert read_warehouse(spark, wh).count() == len(small)

@@ -5,6 +5,9 @@ with one recomputed from the stored blocks; only a warehouse WITHOUT
 manifests may skip it. Absence means ``FileNotFoundError`` and nothing
 else: any other read error (an unreachable remote store) must fail the
 caller instead of looking like a fresh or manifest-less warehouse.
+
+The Spark job budgets of verify, delete and append on one clean
+warehouse are gated here too.
 """
 
 from __future__ import annotations
@@ -146,6 +149,49 @@ def test_clean_warehouse_verifies_within_job_budget(spark, built, wh):
     assert rec["column_desc"] == PARENT_COLUMN_DESC
     assert list(rec["column_desc"]) == sorted(PARENT_COLUMN_DESC)
     assert n_jobs <= 8
+
+
+def _delete(spark, wh, conv_ids, group):
+    import jobs.delete as delete_job
+
+    argv = ["--warehouse", wh, "--master", "local[4]"]
+    for c in conv_ids:
+        argv += ["--conv-id", c]
+    return _run(delete_job.main, argv, spark, group)
+
+
+def test_delete_within_job_budget(spark, wh):
+    """A routed delete of 2 conversations decodes its merged partitions in
+    place through the datasource and reads the manifests with their
+    schema: at most 4 Spark jobs (7 with the grouped decode over a
+    schema-less parquet read of the dirs)."""
+    cids = sorted(fixtures.transcripts_small()["conv_id"].unique())[:2]
+    rc, rec, n_jobs = _delete(spark, wh, cids, "delete-budget")
+    assert rc == 0 and rec["status"] == "ok" and rec["rows_deleted"] > 0
+    assert n_jobs <= 4
+
+
+def test_unmatched_delete_within_job_budget(spark, wh):
+    """A delete that matches nothing is a noop of at most 2 Spark jobs
+    (4 with the grouped decode)."""
+    rc, rec, n_jobs = _delete(spark, wh, ["conv-absent"], "noop-budget")
+    assert rc == 0 and rec["status"] == "noop" and rec["rows_deleted"] == 0
+    assert n_jobs <= 2
+
+
+def test_append_encode_within_job_budget(spark, wh, tmp_path):
+    """An encode of one new conversation into the committed partition it
+    hashes to: at most 7 Spark jobs (10 with the grouped decode)."""
+    small = fixtures.transcripts_small()
+    one = small[small["conv_id"] == small["conv_id"].iloc[0]].head(5)
+    path = str(tmp_path / "one.parquet")
+    fixtures.write_parquet(one.assign(conv_id="conv-77777777"), path)
+    rc, rec, n_jobs = _run(encode_job.main, [
+        "--input", path, "--out", wh, "--partitions", "4", "--job-id", "b",
+        "--master", "local[4]"], spark, "append-budget")
+    assert rc == 0 and rec["status"] == "ok", rec
+    assert rec["rows_encoded"] == 5 and rec["partitions_merged"] == 1
+    assert n_jobs <= 7
 
 
 def test_verify_without_manifests_skips_the_check(spark, built, wh):

@@ -52,7 +52,7 @@ def _compact(plan: str, keep: int = 28) -> str:
 def main() -> None:
     from pyspark.sql import SparkSession
 
-    from vcf2df_spark.encode import encode_transcripts
+    from vcf2df_spark.encode import encode_transcripts, normalize_input
     from vcf2df_spark import fixtures
     from vcf2df_spark.operators import relational, textops
 
@@ -162,21 +162,31 @@ def main() -> None:
         "pruning against zone maps) AND stays in the plan as an exact "
         "Filter — pruning is conservative, exactness is Catalyst's:", p))
 
-    from pyspark.sql import functions as F
+    from vcf2df_spark.encode import encode_keyed, with_partition_key
+    from vcf2df_spark.rewrite import _without_ids
 
-    q = spark.read.parquet(f"{wh}/blocks").filter(
-        F.col("partition_id").isin([1, 2])
-    )
+    q = datasource.read_warehouse(spark, wh, partition_ids=[1, 2])
     p = _fmt(q)
-    pf = re.search(r"PartitionFilters: \[[^\]]*partition_id[^\]]*\]", p)
-    assert pf, "routed rewrite's partition_id IN filter must be a " \
-               "PartitionFilter (hive dir pruning), not a data filter"
+    assert "BatchScan transcripts" in p and _nodes(p, "Exchange") == 0, (
+        "the rewrite's decode must be a shuffle-free scan"
+    )
     sections.append((
-        "routed rewrite: blocks decode input (hive partition pruning)",
-        "delete/upsert decode ONLY the hash-routed partition dirs — the "
-        "partition_id IN filter prunes at directory-listing time "
-        "(PartitionFilters), so a point write never lists the other "
-        "~400k dirs into tasks:", p))
+        "routed rewrite: decode input (the merged partitions, in place)",
+        "delete/upsert/append decode ONLY the partitions they merge: "
+        "read_warehouse(partition_ids=...) lists just those dirs (never the "
+        "other ~400k) and decodes each file in place — a BatchScan with "
+        "ZERO Exchange:", p))
+
+    kept = with_partition_key(_without_ids(spark, q, ["absent"]), 4)
+    q = encode_keyed(kept.unionByName(with_partition_key(
+        normalize_input(src), 4)))
+    p = _fmt(q)
+    assert _nodes(p, "Exchange") == 1, "the staged rewrite moves data once"
+    sections.append((
+        "routed rewrite: staged re-encode",
+        "Survivors minus the dropped ids, unioned with the new rows, "
+        "re-encode through the salted `_pkey`: the rewrite's one Exchange:",
+        p))
 
     with open("PLANS.md", "w") as f:
         f.write(

@@ -6,10 +6,15 @@ The Catalyst-integrated read path (PySpark 4.1 DataSource API):
     df = spark.read.format("transcripts").load("/path/warehouse")
     df.filter("conv_id = 'u000017' AND turn_idx < 5")   # pruned at the scan
 
-Why this beats the ``groupBy(keys).applyInArrow`` decode for reads:
+This is the one decoder of blocks on disk: SQL and the views,
+decode_verify, compaction (``merge_schemas`` fills the columns a chunk
+predates with typed defaults) and the staged rewrite behind encode,
+delete and upsert (``partition_ids`` lists only the partitions it
+merges). ``decode.decode_blocks`` is left for blocks that exist only in
+memory. Why it beats that ``groupBy(keys).applyInArrow`` decode:
 
 - **No decode shuffle.** ``decode_blocks`` must shuffle every encoded
-  payload to co-locate a chunk's column blocks. But the encode job already
+  payload to co-locate a chunk's column blocks. But every writer already
   wrote each chunk's blocks into ONE parquet file (a single Spark task
   writes a whole (partition, chunk) group — the write invariant). One scan
   task per blocks file decodes its complete groups in place: at 100 TB the
@@ -256,6 +261,18 @@ class _BlocksFilePartition(InputPartition):
         self.hive = hive
 
 
+def _routed_files(root: str, pids, shard_dirs: int | None) -> list:
+    """One scan task per file of partitions ``pids``' dirs, opening only
+    those dirs (never a whole-tree listing)."""
+    from .manifest import routed_blocks_dirs
+
+    return [
+        _BlocksFilePartition(f, {"partition_id": pid})
+        for pid, _d, dset in routed_blocks_dirs(root, pids, shard_dirs)
+        for f in dset.files
+    ]
+
+
 class TranscriptReader(DataSourceReader):
     """The always-correct scan: no ``pushFilters`` on purpose.
 
@@ -277,18 +294,32 @@ class TranscriptReader(DataSourceReader):
         ctypes: dict[str, str] | None = None,
     ):
         self.root = _blocks_root(options)
+        self.warehouse = os.path.dirname(self.root)
         self.schema = schema
         # the metadata projection is computed once per load (DataSource
         # pickles it through to every planning cycle); only a
         # user-specified-schema load has to infer here
         self.ctypes = ctypes if ctypes is not None else infer_ctypes(self.root)
         self.pushed: list[Filter] = []
+        pids = options.get("partition_ids")
+        self.partition_ids = (
+            None if pids is None else [int(p) for p in pids.split(",") if p]
+        )
+        self.merge_schemas = options.get("merge_schemas") == "true"
 
     def partitions(self) -> Sequence[InputPartition]:
         """One task per blocks parquet file. Listing is O(files) driver
         work (the same contract as any file source); chunk-level zone-map
         pruning happens inside the tasks, against stats rows that are
-        already local to each file — pruning itself is distributed."""
+        already local to each file — pruning itself is distributed. A
+        ``partition_ids`` read lists only those partitions' dirs."""
+        if self.partition_ids is not None:
+            from .manifest import WarehouseMeta
+
+            return _routed_files(
+                self.root, self.partition_ids,
+                WarehouseMeta.load(self.warehouse).shard_dirs,
+            )
         files = _dataset(self.root).files
         return [_BlocksFilePartition(f, _hive_keys(f, self.root)) for f in files]
 
@@ -297,7 +328,7 @@ class TranscriptReader(DataSourceReader):
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from .decode import decode_chunk_arrow
+        from .decode import _default_array, decode_chunk_arrow
 
         want = [f.name for f in self.schema.fields]
         want_set = set(want)
@@ -367,25 +398,21 @@ class TranscriptReader(DataSourceReader):
         data_cols = [c for c in self.ctypes if c in want_set]
         for key, cols in groups.items():
             missing = [c for c in data_cols if c not in cols]
-            if missing:
+            if missing and not self.merge_schemas:
                 raise ValueError(
                     f"chunk {key} in {partition.file_path} is missing column "
                     f"blocks {missing} — incomplete chunk group (write "
                     "invariant violated or heterogeneous appends)"
                 )
             chunk = decode_chunk_arrow([cols[c] for c in want if c in cols])
+            for c in missing:  # merge_schemas: a chunk older than column c
+                chunk = chunk.append_column(
+                    c, _default_array(self.ctypes[c], chunk.num_rows))
             chunk = chunk.select(want).cast(out_schema)
             yield from chunk.to_batches()
 
 
 class PrunedTranscriptReader(TranscriptReader):
-    def __init__(self, options: dict, schema: T.StructType,
-                 ctypes: dict[str, str] | None = None):
-        super().__init__(options, schema, ctypes)
-        self.warehouse = (
-            options.get("path") or options.get("warehouse")
-        ).rstrip("/")
-
     def pushFilters(self, filters: list[Filter]) -> list[Filter]:
         """Record every filter usable for zone-map pruning; return ALL of
         them (eagerly — a lazy generator would never run if the engine
@@ -439,16 +466,10 @@ class PrunedTranscriptReader(TranscriptReader):
         (the same move as scan.fetch_conversation). Layouts without
         per-partition dirs (flat files, streaming epochs) fall back to the
         full listing, and chunk zone maps still prune inside every task."""
-        from .manifest import routed_blocks_dirs
-
         pids, shard_dirs = self._routed_pids()
         if pids is None:
             return super().partitions()
-        files = [
-            _BlocksFilePartition(f, {"partition_id": pid})
-            for pid, _d, dset in routed_blocks_dirs(self.root, pids, shard_dirs)
-            for f in dset.files
-        ]
+        files = _routed_files(self.root, pids, shard_dirs)
         if files:
             return files
         # routed dirs absent (flat/epoch layout) or a routed miss: plan the
@@ -619,13 +640,39 @@ def register(spark) -> None:
     _registered.add(key)
 
 
-def read_warehouse(spark, warehouse: str, columns: list[str] | None = None):
+def read_warehouse(
+    spark,
+    warehouse: str,
+    columns: list[str] | None = None,
+    partition_ids=None,
+    merge_schemas: bool = False,
+):
     """Full-scan read path: shuffle-free decode, safe to reuse and to wrap
-    in a view (no pushdown state; see TranscriptReader)."""
+    in a view (no pushdown state; see TranscriptReader).
+
+    ``partition_ids`` restricts the read to those partitions' dirs (the
+    staged rewrite decodes only the partitions it merges); only dirs that
+    exist are read, so pass at least one that does.
+
+    ``merge_schemas`` opts into additive schema evolution: a chunk written
+    before a column of the warehouse's union schema existed decodes it as
+    the typed zero-default ``normalize_input`` imputes (str "", numbers 0,
+    bool false, ts epoch-0), so old rows read as if encoded after the
+    evolution. The strict default refuses such a chunk as an incomplete
+    chunk group; a type CHANGE fails either way. It reads whole chunks:
+    a column-pruned merge would drop the rows of chunks holding none of
+    the requested columns instead of filling them, so it is refused.
+    """
+    if merge_schemas and columns:
+        raise ValueError("merge_schemas reads every column; drop columns=")
     register(spark)
     r = spark.read.format("transcripts")
     if columns:
         r = r.option("columns", ",".join(columns))
+    if partition_ids is not None:
+        r = r.option("partition_ids", ",".join(map(str, sorted(partition_ids))))
+    if merge_schemas:
+        r = r.option("merge_schemas", "true")
     return r.load(warehouse)
 
 

@@ -5,7 +5,10 @@ The independent-reader half of the round-trip contract (reference analogue:
 ``converter/convert_test.go:63-97``). Groups the column blocks of each
 (partition, chunk) and reverses the codec kernels; bit-identical by the
 codec contract, verified in tests by per-turn ``text`` equality and full
-column comparison under stable (conv_id, turn_idx) ordering.
+column comparison under stable (conv_id, turn_idx) ordering. The chunk
+kernel (``decode_chunk_arrow``) is shared with the datasource, the one
+decoder of blocks on disk; the grouped ``decode_blocks`` serves blocks
+that exist only in memory.
 
 Dynamic schema: each block's meta carries ``ctype`` (str/i32/i64/ts/f64/
 bool), so decode rebuilds exactly the columns the table was encoded with —
@@ -109,7 +112,7 @@ def _decode_group(table: pa.Table) -> pa.Table:
 
 
 def _default_array(ctype: str, n: int) -> pa.Array:
-    """Typed zero-default column for merged-schema decode — the SAME
+    """Typed zero-default column for a merged-schema read — the SAME
     defaults ``normalize_input`` imputes on encode (str "", int 0,
     f64 0.0, bool false, ts epoch-0), so an evolved column reads back
     exactly as if the old rows had been encoded after the evolution."""
@@ -123,25 +126,6 @@ def _default_array(ctype: str, n: int) -> pa.Array:
                 "bool": np.bool_}[ctype]
     return pa.array(np.zeros(n, dtype=np_dtype),
                     type=_CTYPE_TO_ARROW[ctype])
-
-
-def _decode_group_filling(ctypes: dict):
-    """Closure for merged-schema decode: chunks missing a merged column
-    emit its typed default array (cloudpickle ships the closure; the
-    module import itself still needs shipping.ensure_shipped)."""
-    order = _column_order(ctypes)
-
-    def fn(table: pa.Table) -> pa.Table:
-        t = decode_chunk_arrow(table.to_pylist())
-        n = len(t)
-        arrays = [
-            t[c].combine_chunks() if c in t.column_names
-            else _default_array(ctypes[c], n)
-            for c in order
-        ]
-        return pa.Table.from_arrays(arrays, names=order)
-
-    return fn
 
 
 def schema_from_ctypes(ctypes: dict[str, str]):
@@ -251,8 +235,7 @@ def _spark_signatures(blocks: DataFrame) -> list:
     deduplicated, from one aggregation over the narrow (keys, column,
     ctype) projection of the data blocks. Cost is O(chunks) metadata rows
     — parquet column pruning keeps the scan narrow; the result is
-    O(distinct signatures). Serves every lineage the driver file reader
-    declines (in-memory encode output, semi-joined or filtered scans)."""
+    O(distinct signatures)."""
     import pyspark.sql.functions as F
 
     per_chunk = (
@@ -271,101 +254,13 @@ def _spark_signatures(blocks: DataFrame) -> list:
     return [r["sig"] for r in rows]
 
 
-# the driver file reader only engages on small metadata sets; past these
-# caps the Spark reader (one narrow aggregate) is the right tool — opening
-# 400k footers on the driver is the anti-move
-_FAST_SCHEMA_MAX_FILES = 256
-_FAST_SCHEMA_MAX_ROWS = 1_000_000
-
-
-def _bare_parquet_files(df: DataFrame) -> list[str] | None:
-    """Local parquet file paths when ``df`` is a BARE parquet scan — an
-    analyzed plan that is exactly one LogicalRelation, no filters or
-    projections. Only such a plan is safe to read driver-side: any other
-    lineage (pruning joins, in-memory encode output, unions) must keep the
-    Spark reader. Returns None on any doubt."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() != "LogicalRelation":
-            return None
-        if "arquet" not in plan.relation().fileFormat().toString():
-            return None
-        files = [
-            f[len("file:"):] if f.startswith("file:") else f
-            for f in df.inputFiles()
-        ]
-        if not files or any("://" in f for f in files):
-            return None  # remote URIs: keep the distributed path
-        return files
-    except Exception:
-        return None
-
-
-def _file_signatures(
-    blocks: DataFrame, requested: list[str] | None
-) -> list | None:
-    """Driver file reader: the same per-chunk signatures as
-    :func:`_spark_signatures`, read straight from the footprint of a bare
-    parquet scan. Below the caps reading (keys, column, meta) costs
-    milliseconds where the Spark job costs a full scheduling round-trip
-    PER DECODE (measured ~0.45 s of the 0.83 s decode phase at sf0.1 — r6
-    guide §1/§5: driver O(metadata) work).
-
-    Applies the same marker and ``requested`` filters as
-    :func:`_data_blocks` and the same collision refusal. Returns None
-    whenever it cannot PROVE equivalence (non-bare plan, caps exceeded,
-    unreadable files) — the caller then runs the Spark reader.
-    """
-    import pyarrow.parquet as pq
-
-    if not {"partition_id", "chunk_idx", "column", "meta"} <= set(blocks.columns):
-        return None
-    files = _bare_parquet_files(blocks)
-    if files is None or len(files) > _FAST_SCHEMA_MAX_FILES:
-        return None
-    key_cols = group_keys(blocks)
-    keep = None if requested is None else set(requested)
-    ctype_of: dict[str, str | None] = {}
-    per_chunk: dict[tuple, list[tuple[str, str | None]]] = {}
-    total = 0
-    try:
-        for f in files:
-            pf = pq.ParquetFile(f)
-            total += pf.metadata.num_rows
-            if total > _FAST_SCHEMA_MAX_ROWS:
-                return None
-            phys = set(pf.schema_arrow.names)
-            t = pf.read(columns=[c for c in key_cols + ["column", "meta"]
-                                 if c in phys])
-            # hive-partitioned keys (partition_id / epoch) live in the path
-            hive = dict(seg.split("=", 1) for seg in f.split("/")[:-1]
-                        if "=" in seg)
-            keys = []
-            for k in key_cols:
-                if k in phys:
-                    keys.append(t.column(k).to_pylist())
-                elif k in hive:
-                    keys.append([int(hive[k])] * t.num_rows)
-                else:
-                    return None  # key neither physical nor in the path
-            for key, col, m in zip(zip(*keys), t.column("column").to_pylist(),
-                                   t.column("meta").to_pylist()):
-                if col.startswith("__") or (keep is not None and col not in keep):
-                    continue
-                if m not in ctype_of:
-                    ctype_of[m] = json.loads(m).get("ctype")
-                per_chunk.setdefault(key, []).append((col, ctype_of[m]))
-    except Exception:
-        return None
-    refuse_colliding_chunks(
-        any(len(e) > len({c for c, _ in e}) for e in per_chunk.values())
-    )
-    return list(per_chunk.values())
-
-
-def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
-                  merge_schemas: bool = False) -> DataFrame:
+def decode_blocks(blocks: DataFrame, columns: list[str] | None = None
+                  ) -> DataFrame:
     """blocks -> transcripts (row order unspecified; sort to compare).
+
+    The grouped decode of in-memory blocks (the oracle operators, bench
+    and the tests' reference reader); blocks on disk are decoded in place
+    by the datasource (``datasource.read_warehouse``), with no shuffle.
 
     ``columns`` prunes the decode to the requested columns: only those
     columns' block rows are shuffled and decoded — the columnar read path
@@ -373,24 +268,14 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
     encoded blocks).
 
     The output schema is derived from the blocks' own metadata (footer
-    analogue): a bare parquet scan is read driver-side
-    (:func:`_file_signatures`, no Spark job), any other lineage through
-    one narrow aggregate (:func:`_spark_signatures`), and either way
-    :func:`ctypes_from_signatures` decides.
-
-    ``merge_schemas`` opts into additive schema evolution: heterogeneous
-    chunk signatures decode against their UNION schema, with typed
-    zero-defaults for chunks written before a column existed. The strict
-    default stays the loud failure — evolution is a deliberate maintenance
-    action (jobs/compact.py --merge-schemas), not something a read should
-    silently paper over.
+    analogue) by one narrow aggregate (:func:`_spark_signatures`), and
+    :func:`ctypes_from_signatures` decides, strictly: heterogeneous chunk
+    signatures fail loudly (additive evolution is
+    ``read_warehouse(..., merge_schemas=True)``, as jobs/compact.py
+    --merge-schemas uses it).
     """
     data = _data_blocks(blocks, columns)
-    sigs = _file_signatures(blocks, columns)
-    if sigs is None:
-        sigs = _spark_signatures(data)
-    ctypes = ctypes_from_signatures(sigs, columns, merge_schemas)
-    fn = _decode_group_filling(ctypes) if merge_schemas else _decode_group
+    ctypes = ctypes_from_signatures(_spark_signatures(data), columns)
     return data.groupBy(*group_keys(data)).applyInArrow(
-        fn, schema_from_ctypes(ctypes)
+        _decode_group, schema_from_ctypes(ctypes)
     )

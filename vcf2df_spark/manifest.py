@@ -264,6 +264,14 @@ class WarehouseMeta:
         return {r.get("shard_dirs") for r in self._routing_rows}
 
     @property
+    def shard_dirs(self) -> int | None:
+        """The committed rows' one shard_dirs value; None for single-level
+        dirs (or no single value), where readers open the legacy dir."""
+        vals = {r.get("shard_dirs") for r in self._routing_rows
+                if r.get("status") == "committed"} - {None}
+        return vals.pop() if len(vals) == 1 else None
+
+    @property
     def turn_max(self) -> int | None:
         """Max persisted turn_max; None when any row lacks it."""
         tm = [r.get("turn_max") for r in self._routing_rows]
@@ -288,9 +296,7 @@ class WarehouseMeta:
         t = [r for r in self._routing_rows if r.get("status") == "committed"]
         if not t:
             return None, None
-
-        shard_vals = {r.get("shard_dirs") for r in t} - {None}
-        shard_dirs = shard_vals.pop() if len(shard_vals) == 1 else None
+        shard_dirs = self.shard_dirs
 
         mods = {r.get("num_partitions") for r in t}
         turn_maxes = [r.get("turn_max") for r in t]
@@ -361,7 +367,8 @@ def rewritten_manifests(
     """The manifests table after partitions ``pids`` were rewritten: every
     other row, read and filtered by executors (never collected to the
     driver), plus the ``fresh`` rows, both projected by name onto
-    MANIFEST_SCHEMA (pre-r4 rows get a null schema_sig)."""
+    MANIFEST_SCHEMA (pre-r4 rows get a null schema_sig). The read carries
+    that schema, so it plans without a footer-inference job."""
 
     def project(df: DataFrame) -> DataFrame:
         have = set(df.columns)
@@ -371,7 +378,8 @@ def rewritten_manifests(
             for f in MANIFEST_SCHEMA.fields
         ])
 
-    out = project(spark.read.parquet(f"{warehouse}/manifests")
+    out = project(spark.read.schema(MANIFEST_SCHEMA)
+                  .parquet(f"{warehouse}/manifests")
                   .filter(~F.col("partition_id").isin(sorted(pids))))
     return out if fresh is None else out.unionByName(project(fresh))
 

@@ -16,16 +16,19 @@ Commit discipline:
    (loud failure without it — never a silent full scan); the route covers
    the replacement's own turn range too, so an upsert beyond the
    warehouse's persisted turn_max stays inside the routed set;
-2. stage: ONLY the routed partition dirs are read (basePath read — no
-   full-tree listing), target conversations drop out, new rows (if any)
-   union in, survivors re-encode through the SAME salted hash
-   partitioner and land in a scratch dir ALREADY hive-partitioned like
-   the warehouse. Row counts ride this one job via observe() — no
-   cache/count pre-passes. The applyInArrow group key IS partition_id,
-   so each task holds whole groups and partitionBy writes every chunk
-   group into one file (the blocks write invariant). Every later action
-   reads the STAGING files — never a read-then-overwrite of live dirs
-   in one lineage (the CLAUDE.md rule, applied to blocks);
+2. stage: ONLY the routed partition dirs are read, decoded in place by
+   the datasource (``read_warehouse(partition_ids=...)`` — no full-tree
+   listing, no decode shuffle), target conversations drop out, new rows
+   (if any) union in, survivors re-encode through the SAME salted hash
+   partitioner (the one Exchange) and land in a scratch dir ALREADY
+   hive-partitioned like the warehouse. New rows whose columns differ
+   from the committed schema are refused before anything is staged. Row
+   counts ride this one job via observe() — no cache/count pre-passes.
+   The applyInArrow group key IS partition_id, so each task holds whole
+   groups and partitionBy writes every chunk group into one file (the
+   blocks write invariant). Every later action reads the STAGING files —
+   never a read-then-overwrite of live dirs in one lineage (the
+   CLAUDE.md rule, applied to blocks);
 3. stage manifests (they read the staged blocks): untouched rows are
    filtered and written by executors, NEVER collected to the driver (at
    ~400k manifest rows a driver materialization is a multi-hundred-MB
@@ -51,7 +54,8 @@ from . import commit
 
 class RewriteError(RuntimeError):
     """Warehouse not rewritable in place (missing routing metadata,
-    streaming epochs, ambiguous partitioner, remote URI)."""
+    streaming epochs, ambiguous partitioner, remote URI), or new rows
+    whose columns differ from the committed schema."""
 
 
 # above this many ids, drop-filters use a broadcast LEFT ANTI join instead
@@ -185,6 +189,27 @@ def _routed_rewrite_locked(
     }
 
 
+def _refuse_schema_drift(meta, new: DataFrame) -> None:
+    """RewriteError when ``new``'s (column, type) set differs from the
+    committed schema: written, it would leave partitions that every later
+    read refuses as incomplete chunk groups."""
+    from .decode import schema_from_ctypes
+
+    have = meta.ctypes()
+    if have is None:
+        return
+    want = {(f.name, f.dataType.simpleString())
+            for f in schema_from_ctypes(have).fields}
+    cols = {(f.name, f.dataType.simpleString())
+            for f in new.schema.fields if f.name != "_pkey"}
+    if cols != want:
+        raise RewriteError(
+            "new rows' columns differ from the warehouse schema: "
+            f"extra {sorted(cols - want)}, missing {sorted(want - cols)}; "
+            "write rows with exactly the warehouse's columns and types, "
+            "or re-encode the whole table into a new warehouse")
+
+
 def stage_and_swap(
     spark: SparkSession,
     wh: str,
@@ -212,28 +237,32 @@ def stage_and_swap(
     Returns the observed counts (``before``/``kept``: rows of the merged
     dirs; ``rows``/``parts``/``raw``/``enc``/``pids``: the written
     blocks; ``max_rows``/``mean_rows``: the fresh manifest rows), or None
-    when no row was dropped or added."""
+    when no row was dropped or added. Raises RewriteError, before
+    anything is staged, when ``new``'s columns differ from the committed
+    schema (a warehouse without manifests, or with pre-r4 ones, is not
+    checked)."""
     from pyspark.sql import Observation
 
     from . import manifest
-    from .decode import decode_blocks
+    from .datasource import read_warehouse
     from .encode import encode_keyed, with_partition_key
 
+    if new is not None:
+        _refuse_schema_drift(meta, new)
     merge = set(merge)
     root = f"{wh}/blocks"
     dest = staging or wh
-    # decode ONLY the merged partitions' dirs (basePath keeps the hive
-    # partition_id column): no full-tree listing — at ~400k partition
-    # dirs the listing IS the planning cost — and a bare scan keeps
-    # decode's schema derivation driver-side (no Spark aggregate job).
-    # Counts ride the staging write via observe(): no cache, no count
-    # jobs, the decode+encode runs exactly once.
-    dirs = [d for _pid, d, _ds in
+    # decode ONLY the merged partitions' dirs, in place (no decode
+    # shuffle): no full-tree listing — at ~400k partition dirs the
+    # listing IS the planning cost. Counts ride the staging write via
+    # observe(): no cache, no count jobs, the decode+encode runs exactly
+    # once.
+    live = [pid for pid, _d, _ds in
             manifest.routed_blocks_dirs(root, merge, shard_dirs)]
     obs = {k: Observation() for k in ("before", "kept", "blocks")}
     rows = new
-    if dirs:
-        dec = decode_blocks(spark.read.option("basePath", root).parquet(*dirs))
+    if live:
+        dec = read_warehouse(spark, wh, partition_ids=live)
         dec = dec.observe(obs["before"], F.count(F.lit(1)).alias("n"))
         kept = _without_ids(spark, dec, drop_ids) if drop_ids else dec
         kept = with_partition_key(kept, num_partitions).observe(
@@ -261,8 +290,8 @@ def stage_and_swap(
     got = obs["blocks"].get
     stats = {k: int(got[k] or 0) for k in ("rows", "parts", "raw", "enc")}
     stats["pids"] = list(got["pids"] or [])
-    stats["before"] = int(obs["before"].get["n"]) if dirs else 0
-    stats["kept"] = int(obs["kept"].get["n"]) if dirs else 0
+    stats["before"] = int(obs["before"].get["n"]) if live else 0
+    stats["kept"] = int(obs["kept"].get["n"]) if live else 0
     if stats["before"] == stats["kept"] == stats["rows"]:
         return None
 
