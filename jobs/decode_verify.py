@@ -8,6 +8,15 @@ Reference analogue: the independent re-read verification loop
 block, reassemble under stable (conv_id, turn_idx) ordering, and compare
 every column bit-identical to the source (ts as unix_micros int64 — the
 north_rule per-turn text-equality invariant plus full bit identity).
+
+Each side is read once. The decode is the verified datasource read: the
+scan task of a file holding a whole partition recomputes its manifest
+checksum from the block rows it already holds and counts the mismatches,
+which ride the decoded side's signature aggregate. Only the files that do
+not each hold a whole partition (a dir of several files, flat or epoch
+layouts) are checksummed by one Spark aggregate over just those files.
+A single-file source plans its schema from the parquet footer. On a clean
+batch warehouse that is 4 Spark jobs: the two signature aggregates.
 """
 
 from __future__ import annotations
@@ -16,6 +25,28 @@ import argparse
 import json
 import sys
 import time
+
+
+def verify_frames(spark, warehouse: str, source: str, meta):
+    """(decoded, source, other_blocks, expected): the verified read of the
+    blocks (its tally columns only when ``meta`` exists), the normalized
+    source, the block rows of the files no scan task checks alone (None
+    when every file holds a whole partition), and how many manifest rows
+    the scan tasks must compare."""
+    from vcf2df_spark.blocks import BLOCKS_SCHEMA
+    from vcf2df_spark.datasource import checksum_split, read_warehouse
+    from vcf2df_spark.sources import read_transcripts
+
+    decoded = read_warehouse(spark, warehouse, verify_checksums=meta.exists)
+    other_blocks, expected = None, 0
+    if meta.exists:
+        root = f"{warehouse}/blocks"
+        whole, rest = checksum_split(root, meta)
+        expected = sum(map(len, whole.values()))
+        if rest:
+            other_blocks = (spark.read.schema(BLOCKS_SCHEMA)
+                            .option("basePath", root).parquet(*rest))
+    return decoded, read_transcripts(spark, source), other_blocks, expected
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -31,8 +62,7 @@ def main(argv: list[str] | None = None) -> None:
     from pyspark.sql import functions as F
 
     from vcf2df_spark import manifest as manifest_mod
-    from vcf2df_spark.datasource import read_warehouse
-    from vcf2df_spark.encode import normalize_input
+    from vcf2df_spark.datasource import VERIFY_COLUMNS
     from vcf2df_spark.session import get_spark
 
     from pyspark.sql import SparkSession
@@ -41,35 +71,24 @@ def main(argv: list[str] | None = None) -> None:
     spark = get_spark(master=args.master, app_name="decode_verify")
     t0 = time.time()
 
+    # manifest integrity: every manifest row of a partition that has
+    # blocks is compared with the checksum recomputed from them. Only a
+    # warehouse without manifests (e.g. a bench warehouse) skips the
+    # check (-1); any other error fails the job.
     meta = manifest_mod.WarehouseMeta.load(args.warehouse)
-    blocks = spark.read.parquet(f"{args.warehouse}/blocks")
-    # shuffle-free datasource read; also asserts chunk-group completeness
-    decoded = read_warehouse(spark, args.warehouse)
-    source = normalize_input(spark.read.parquet(args.source))
-
-    # manifest integrity: recompute each partition's content checksum from
-    # the stored blocks and compare it to every manifest row of that
-    # partition. Only a warehouse without manifests (e.g. a bench
-    # warehouse) skips the check (-1); any other error fails the job.
-    checksum_mismatches = -1
-    column_desc = None
-    if meta.exists:
-        column_desc = meta.column_desc()  # self-describing output
-        recomputed = dict(
-            manifest_mod.build_manifests(blocks, "verify", args.source)
-            .select("partition_id", "checksum").collect()
-        )
-        checksum_mismatches = sum(
-            1 for pid, committed in meta.checksums()
-            if pid in recomputed and recomputed[pid] != committed
-        )
+    decoded, source, other_blocks, expected = verify_frames(
+        spark, args.warehouse, args.source, meta)
+    tallies = VERIFY_COLUMNS if meta.exists else ()
+    recomputed = ({} if other_blocks is None
+                  else manifest_mod.partition_checksums(other_blocks))
 
     if args.deep:
         # exact: column SETS must match (a warehouse missing a whole column
         # must not verify), then exceptAll in both directions is empty
         # (timestamps compared as unix_micros)
-        cols_equal = set(decoded.columns) == set(source.columns)
-        common = sorted(set(decoded.columns) & set(source.columns))
+        data_cols = set(decoded.columns) - set(tallies)
+        cols_equal = data_cols == set(source.columns)
+        common = sorted(data_cols & set(source.columns))
 
         def canon(df):
             from pyspark.sql import types as T
@@ -97,16 +116,39 @@ def main(argv: list[str] | None = None) -> None:
         missing = s.exceptAll(d).count()
         extra = d.exceptAll(s).count()
         n_src = s.count()
-        n_dec = d.count()
+        counts = decoded.select(
+            F.count("*").alias("n"),
+            *[F.coalesce(F.sum(c), F.lit(0)).alias(c) for c in tallies],
+        ).collect()[0]
+        n_dec, sums = counts.n, {c: counts[c] for c in tallies}
         rows_equal = (cols_equal and missing == 0 and extra == 0
                       and n_src == n_dec)
     else:
         from vcf2df_spark.verify import multiset_equal
 
-        res = multiset_equal(source, decoded)
-        n_src, n_dec = res["rows_left"], res["rows_right"]
+        res = multiset_equal(source, decoded, sums=tallies)
+        n_src, n_dec, sums = res["rows_left"], res["rows_right"], res["sums"]
         rows_equal = res["equal"]
         missing = extra = 0 if rows_equal else -1
+
+    checksum_mismatches = compared = -1
+    column_desc = None
+    if meta.exists:
+        column_desc = meta.column_desc()  # self-describing output
+        if sums[VERIFY_COLUMNS[1]] != expected:
+            raise RuntimeError(
+                f"checksum check incomplete: the scan compared "
+                f"{sums[VERIFY_COLUMNS[1]]} of the {expected} manifest rows "
+                "of its whole-partition files"
+            )
+        # the other files' partitions, recomputed by the aggregate
+        rest = [
+            c != recomputed[key]
+            for key, committed in meta.checksums().items()
+            if key in recomputed for c in committed
+        ]
+        checksum_mismatches = sums[VERIFY_COLUMNS[0]] + sum(rest)
+        compared = expected + len(rest)
     ok = rows_equal and checksum_mismatches <= 0
 
     print(json.dumps({
@@ -116,6 +158,7 @@ def main(argv: list[str] | None = None) -> None:
         "rows_missing": missing,
         "rows_extra": extra,
         "manifest_checksum_mismatches": checksum_mismatches,
+        "manifest_rows_compared": compared,
         "column_desc": column_desc,
         "wall_sec": round(time.time() - t0, 2),
     }))

@@ -175,6 +175,22 @@ def test_merge_schemas_decode_and_compact(spark, tmp_path, capsys):
     assert got == want
 
 
+def test_strict_pruned_read_refuses_chunks_without_the_column(spark, tmp_path):
+    """A strict read pruned to a column the epoch-0 chunks predate refuses
+    them as incomplete chunk groups, as the unpruned read does, instead
+    of returning only the rows of the chunks that have the column."""
+    root, _pdf0, pdf1 = _evolved_wh(spark, tmp_path)
+    with pytest.raises(Exception, match="incomplete chunk group"):
+        datasource.read_warehouse(spark, root, columns=["score"]).count()
+    with pytest.raises(Exception, match="incomplete chunk group"):
+        datasource.scan_warehouse(spark, root, "score >= 0",
+                                  columns=["score"]).count()
+    # the chunks that have every requested column still serve it
+    n1 = datasource.scan_warehouse(
+        spark, root, "conv_id >= 'b-'", columns=["conv_id", "score"]).count()
+    assert n1 == len(pdf1)
+
+
 def test_merge_schemas_rejects_type_change(spark, tmp_path):
     """A column whose ctype CHANGES across batches is never merged: the
     datasource's union planning refuses it, merge_schemas or not."""

@@ -129,3 +129,32 @@ def test_rewrite_input_decodes_in_place(spark, tmp_path):
     p = _fmt(encode_keyed(kept.unionByName(with_partition_key(src, 4))))
     assert _nodes(p, "Exchange") == 1
     assert "FlatMapGroupsInArrow" in p
+
+
+def test_decode_verify_reads_blocks_once(spark, tmp_path):
+    """decode_verify on a batch warehouse: the verified datasource read is
+    its one BatchScan of the blocks, and no parquet scan of blocks/
+    (the old checksum recompute) appears in any of its plans."""
+    from jobs.decode_verify import verify_frames
+    from vcf2df_spark.datasource import VERIFY_COLUMNS
+    from vcf2df_spark.manifest import (
+        WarehouseMeta, build_manifests, read_blocks,
+    )
+    from vcf2df_spark.verify import signature_frame
+
+    pdf = fixtures.transcripts_tiny()
+    wh, src_path = str(tmp_path / "vwh"), str(tmp_path / "src.parquet")
+    fixtures.write_parquet(pdf, src_path)
+    encode_transcripts(spark.createDataFrame(pdf), num_partitions=2) \
+        .write.partitionBy("partition_id").parquet(f"{wh}/blocks")
+    build_manifests(read_blocks(spark, f"{wh}/blocks"), "p", src_path) \
+        .write.parquet(f"{wh}/manifests")
+
+    decoded, source, other_blocks, expected = verify_frames(
+        spark, wh, src_path, WarehouseMeta.load(wh))
+    assert other_blocks is None and expected == 2
+    p = _fmt(signature_frame(decoded, VERIFY_COLUMNS))
+    assert _nodes(p, "BatchScan transcripts") == 1
+    for plan in (p, _fmt(signature_frame(source))):
+        assert not [l for l in plan.splitlines()
+                    if "Location" in l and "/blocks" in l]

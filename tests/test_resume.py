@@ -133,9 +133,11 @@ GOLDEN_MANIFESTS_SHA = (
 
 def test_encode_job_one_pass_budget_and_golden(spark, source_path, tmp_path):
     """A fresh-warehouse encode is one observed blocks write plus the
-    manifests build: at most 6 Spark jobs (17 with the persisted cache and
-    its separate count/duplicate/stats/skew aggregates), no persisted RDD,
-    and the same JSON stats and manifest rows as that design."""
+    manifests build, its single-file source planned from the parquet
+    footer: at most 4 Spark jobs (5 with a source schema inference job, 17
+    with the persisted cache and its separate count/duplicate/stats/skew
+    aggregates), no persisted RDD, and the same JSON stats and manifest
+    rows as that design."""
     wh = str(tmp_path / "owh")
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
@@ -143,7 +145,7 @@ def test_encode_job_one_pass_budget_and_golden(spark, source_path, tmp_path):
         spark, ["--input", source_path, "--out", wh, "--partitions", "4",
                 "--job-id", "a", "--master", "local[4]"], "encode-budget")
     assert rc == 0 and out["status"] == "ok"
-    assert n_jobs <= 6
+    assert n_jobs <= 4
     assert jsc.getPersistentRDDs().size() == before
     assert {k: out[k] for k in GOLDEN_STATS} == GOLDEN_STATS
     assert out["partitions_encoded"] == 4 and out["quarantined_rows"] == 0

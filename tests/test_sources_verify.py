@@ -192,3 +192,93 @@ def test_tsv_source_roundtrip(spark, tmp_path):
     from_parq = sources.read_transcripts(spark, ppath, "parquet")
     res = verify.multiset_equal(from_tsv, from_parq)
     assert res["equal"], res
+
+
+def _parquet_jobs(spark, fn, group):
+    """Spark jobs ``fn`` runs under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_footer_schema_equals_spark_inference(spark, tmp_path):
+    """The footer schema of a single pyarrow-written file is exactly the
+    schema Spark infers, for a naive and a tz-aware ts (ms and us) and
+    every extra type normalize_input accepts, and read_transcripts plans
+    it without a Spark job."""
+    import datetime as dt
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n, day = 3, dt.datetime(2024, 5, 1, 12, 30)
+    table = pa.table({
+        "conv_id": pa.array(["c"] * n), "turn_idx": pa.array([0, 1, 2], pa.int32()),
+        "role": pa.array(["user"] * n), "text": pa.array(["t"] * n),
+        "tool": pa.array([""] * n),
+        "ts": pa.array([day] * n, pa.timestamp("us")),
+        "ts_tz": pa.array([day] * n, pa.timestamp("us", tz="UTC")),
+        "ts_ms": pa.array([day] * n, pa.timestamp("ms")),
+        "ts_ms_tz": pa.array([day] * n, pa.timestamp("ms", tz="Asia/Tokyo")),
+        "s": pa.array(["x", None, "z"]), "ls": pa.array(["x"] * n, pa.large_string()),
+        "i8": pa.array([1] * n, pa.int8()), "i16": pa.array([1] * n, pa.int16()),
+        "i32": pa.array([1] * n, pa.int32()), "i64": pa.array([1] * n, pa.int64()),
+        "f32": pa.array([0.5] * n, pa.float32()), "f64": pa.array([0.5] * n),
+        "dec": pa.array([decimal.Decimal("1.25")] * n, pa.decimal128(9, 2)),
+        "dec_wide": pa.array([decimal.Decimal("1.25")] * n, pa.decimal128(30, 4)),
+        "flag": pa.array([True, False, None]),
+        "day": pa.array([day.date()] * n, pa.date32()),
+        "li": pa.array([[1, 2]] * n, pa.list_(pa.int64())),
+        "li32": pa.array([[1]] * n, pa.list_(pa.int32())),
+        "lf": pa.array([[0.5]] * n, pa.list_(pa.float64())),
+        "lf32": pa.array([[0.5]] * n, pa.list_(pa.float32())),
+    }).replace_schema_metadata(None)
+    table = table.cast(pa.schema(  # non-nullable fields read as nullable
+        [pa.field("conv_id", pa.string(), nullable=False)] + list(table.schema)[1:]))
+    path = str(tmp_path / "typed.parquet")
+    pq.write_table(table, path)
+
+    want = spark.read.parquet(path).schema
+    assert sources.footer_schema(spark, path) == want
+    assert spark.read.schema(want).parquet(path).schema == want
+    ours = sources.read_transcripts(spark, path)
+    assert ours.schema == sources.normalize_input(spark.read.parquet(path)).schema
+    assert _parquet_jobs(
+        spark, lambda: sources.read_transcripts(spark, path), "footer") == 0
+    assert verify.multiset_equal(
+        ours, sources.normalize_input(spark.read.parquet(path)))["equal"]
+
+
+def test_footer_schema_falls_back_to_inference(spark, tmp_path):
+    """A directory input, a file Spark wrote and a type the footer mapping
+    does not cover exactly all go through Spark's inference: one
+    inference job for the directory, and the same frame as before."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = fixtures.transcripts_small(n_convs=20)
+    d = tmp_path / "dir"
+    d.mkdir()
+    fixtures.write_parquet(src, str(d / "a.parquet"))
+    assert sources.footer_schema(spark, str(d)) is None
+    assert _parquet_jobs(
+        spark, lambda: sources.read_transcripts(spark, str(d)), "dir-infer") >= 1
+    got = sources.read_transcripts(spark, str(d))
+    assert got.schema == sources.normalize_input(spark.read.parquet(str(d))).schema
+
+    spark.read.parquet(str(d)).coalesce(1).write.parquet(str(tmp_path / "sw"))
+    [spark_file] = (tmp_path / "sw").glob("*.parquet")
+    assert sources.footer_schema(spark, str(spark_file)) is None
+
+    odd = str(tmp_path / "odd.parquet")
+    for col in (pa.array([1], pa.uint8()), pa.array([b"x"]),
+                pa.array([1], pa.timestamp("ns")),
+                pa.array([{"a": 1}])):
+        pq.write_table(pa.table({"c": col}), odd)
+        assert sources.footer_schema(spark, odd) is None

@@ -2,7 +2,10 @@
 
 decode_verify's integrity check compares every manifest row's checksum
 with one recomputed from the stored blocks; only a warehouse WITHOUT
-manifests may skip it. Absence means ``FileNotFoundError`` and nothing
+manifests may skip it. The scan task of a file holding a whole partition
+compares its checksums; every other layout (a dir of several files, flat
+files, epoch dirs) goes through the Spark aggregate, keyed by (epoch,
+partition_id). Absence means ``FileNotFoundError`` and nothing
 else: any other read error (an unreachable remote store) must fail the
 caller instead of looking like a fresh or manifest-less warehouse.
 
@@ -140,15 +143,111 @@ def test_corrupted_payload_byte_is_a_mismatch(spark, built, wh):
 
 def test_clean_warehouse_verifies_within_job_budget(spark, built, wh):
     """A clean warehouse: bit-identical, the parent's column_desc, every
-    checksum matched, and no more Spark jobs than the 8 of the one
-    driver-side manifests read (the design that read them through Spark
-    ran 12)."""
+    checksum matched by the scan tasks, and no more Spark jobs than the 4
+    of the two signature aggregates (8 with a blocks re-read for the
+    checksums and a source schema inference job; 12 reading the
+    manifests through Spark)."""
     rc, rec, n_jobs = _verify(spark, wh, built[0], group="verify-budget")
     assert rc == 0 and rec["status"] == "bit-identical"
     assert rec["manifest_checksum_mismatches"] == 0
+    assert rec["manifest_rows_compared"] == 4
     assert rec["column_desc"] == PARENT_COLUMN_DESC
     assert list(rec["column_desc"]) == sorted(PARENT_COLUMN_DESC)
-    assert n_jobs <= 8
+    assert n_jobs <= 4
+
+
+def _split_partition_file(wh):
+    """partition_id=0's one blocks file rewritten as two files, each
+    holding whole chunks (the write invariant still holds)."""
+    [path] = glob.glob(f"{wh}/blocks/partition_id=0/*.parquet")
+    t = pq.read_table(path)
+    first = pads.field("chunk_idx") == 0
+    os.remove(path)
+    pq.write_table(t.filter(first), path.replace(".parquet", "-a.parquet"))
+    pq.write_table(t.filter(~first), path.replace(".parquet", "-b.parquet"))
+
+
+def _flatten(wh):
+    """The partition dirs rewritten as flat ``blocks/*.parquet`` files that
+    carry partition_id as a column."""
+    import pyarrow as pa
+
+    for i, d in enumerate(sorted(glob.glob(f"{wh}/blocks/partition_id=*"))):
+        pid = int(d.rsplit("=", 1)[1])
+        t = pads.dataset(d, format="parquet").to_table()
+        t = t.add_column(0, "partition_id",
+                         pa.array([pid] * t.num_rows, pa.int32()))
+        pq.write_table(t, f"{wh}/blocks/part-{i}.parquet")
+        shutil.rmtree(d)
+
+
+@pytest.mark.parametrize("layout", ["split-dir", "flat", "deep"])
+def test_tampered_checksum_in_every_layout(spark, built, wh, layout):
+    """Every layout compares every manifest row: intact, it verifies with
+    all 4 rows compared; one tampered checksum is exactly 1 mismatch,
+    whether a scan task compares it (``--deep`` included) or the Spark
+    aggregate over a dir of two files or over flat files does."""
+    if layout == "split-dir":
+        _split_partition_file(wh)
+        assert len(glob.glob(f"{wh}/blocks/partition_id=0/*.parquet")) == 2
+    elif layout == "flat":
+        _flatten(wh)
+    argv = ["--warehouse", wh, "--source", built[0], "--master", "local[4]"]
+    argv += ["--deep"] if layout == "deep" else []
+    rc, rec, _ = _run(decode_job.main, argv)
+    assert rc == 0 and rec["status"] == "bit-identical", rec
+    assert rec["manifest_checksum_mismatches"] == 0
+    assert rec["manifest_rows_compared"] == 4
+    _tamper_manifest_checksum(wh, keep_crc=False)
+    rc, rec, _ = _run(decode_job.main, argv)
+    assert rc == 4 and rec["status"] == "MISMATCH"
+    assert rec["manifest_checksum_mismatches"] == 1
+    assert rec["rows_missing"] == 0 and rec["rows_extra"] == 0
+
+
+def test_epoch_warehouse_keys_checksums_by_epoch(spark, tmp_path):
+    """Two epochs reuse partition ids 0 and 1. Intact, the warehouse
+    verifies bit-identical (a recompute keyed by partition_id alone
+    reported 4 mismatches); one tampered epoch checksum is exactly 1."""
+    import pandas as pd
+
+    from tests.test_stream_source import _write_epoch
+
+    wh = str(tmp_path / "ewh")
+    n = sum(_write_epoch(spark, wh, e) for e in (0, 1))
+    frames = []
+    for e in (0, 1):
+        pdf = fixtures.transcripts_small(n_convs=25, seed=100 + e)
+        frames.append(pdf.assign(conv_id=f"e{e}-" + pdf["conv_id"]))
+    src = str(tmp_path / "union.parquet")
+    fixtures.write_parquet(pd.concat(frames, ignore_index=True), src)
+    assert manifest.WarehouseMeta.load(wh).has_epoch
+    rc, rec, _ = _verify(spark, wh, src)
+    assert rc == 0 and rec["status"] == "bit-identical", rec
+    assert rec["rows_decoded"] == n
+    assert rec["manifest_checksum_mismatches"] == 0
+    assert rec["manifest_rows_compared"] == 4
+    path = sorted(glob.glob(f"{wh}/manifests/epoch=1/*.parquet"))[0]
+    _rewrite_one(path, "checksum", 0, lambda c: "0" * len(c), keep_crc=False)
+    rc, rec, _ = _verify(spark, wh, src)
+    assert rc == 4 and rec["status"] == "MISMATCH"
+    assert rec["manifest_checksum_mismatches"] == 1
+
+
+def test_uncompared_manifest_rows_fail_loudly(spark, built, wh, monkeypatch):
+    """A manifest row the scan tasks did not compare fails the job; it
+    never reports 0 mismatches. (The patch adds a row on the driver
+    only: the read's planning runs in its own Python process.)"""
+    real = manifest.WarehouseMeta.checksums
+
+    def one_more(self):
+        out = real(self)
+        out[(None, 0)] = out[(None, 0)] + ["0" * 64]
+        return out
+
+    monkeypatch.setattr(manifest.WarehouseMeta, "checksums", one_more)
+    with pytest.raises(RuntimeError, match="compared 4 of the 5"):
+        _verify(spark, wh, built[0])
 
 
 def _delete(spark, wh, conv_ids, group):

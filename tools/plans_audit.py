@@ -140,6 +140,7 @@ def main() -> None:
 
     wh = "/tmp/vcf2df_plans_wh"
     shutil.rmtree(wh, ignore_errors=True)
+    shutil.rmtree(f"{wh}_source.parquet", ignore_errors=True)
     enc.write.partitionBy("partition_id").parquet(f"{wh}/blocks")
     q = datasource.read_warehouse(spark, wh)
     p = _fmt(q)
@@ -151,6 +152,31 @@ def main() -> None:
         "format('transcripts'): one scan task per blocks file decodes its "
         "co-located chunk groups — a BatchScan with ZERO Exchange, vs the "
         "decode shuffle above. The production read path for views/SQL:", p))
+
+    from jobs.decode_verify import verify_frames
+    from vcf2df_spark.datasource import VERIFY_COLUMNS
+    from vcf2df_spark.manifest import WarehouseMeta, build_manifests, read_blocks
+    from vcf2df_spark.verify import signature_frame
+
+    build_manifests(read_blocks(spark, f"{wh}/blocks"), "plans", "audit") \
+        .write.parquet(f"{wh}/manifests")
+    src_path = f"{wh}_source.parquet"
+    fixtures.write_parquet(fixtures.transcripts_small(n_convs=100), src_path)
+    decoded, source, other_blocks, _ = verify_frames(
+        spark, wh, src_path, WarehouseMeta.load(wh))
+    p = _fmt(signature_frame(decoded, VERIFY_COLUMNS))
+    plans = [p, _fmt(signature_frame(source))]
+    assert other_blocks is None, "every file holds a whole partition"
+    assert _nodes(p, "BatchScan transcripts") == 1
+    assert not any("/blocks" in l for pl in plans for l in pl.splitlines()
+                   if "Location" in l), "decode_verify must not re-read blocks/"
+    sections.append((
+        "decode_verify: one read of each side",
+        "The verified datasource read is the only read of the blocks: each "
+        "scan task compares its partition's manifest checksums and the "
+        "counts ride the signature aggregate (its one Exchange is the "
+        "single-row partial aggregate). No parquet scan of blocks/ "
+        "recomputes checksums:", p))
 
     q = datasource.scan_warehouse(spark, wh, ["turn_idx >= 2", "turn_idx <= 3"])
     p = _fmt(q)

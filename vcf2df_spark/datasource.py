@@ -29,7 +29,13 @@ memory. Why it beats that ``groupBy(keys).applyInArrow`` decode:
 - **Column pruning** via the ``columns`` option (Spark does not yet prune
   columns through Python data sources): only the requested columns' block
   rows are read from parquet (parquet-level column+row filters) and only
-  they are decoded.
+  they are decoded. Each chunk's ``conv_id`` row is read too, undecoded,
+  so a strict read refuses a chunk that lacks a requested column.
+- **Checksums where the bytes are.** decode_verify's read
+  (``verify_checksums``) hands each file that holds a whole partition its
+  committed manifest checksums; the scan task recomputes the checksum
+  from the block rows it reads anyway and reports the mismatches in two
+  extra columns, so verifying re-reads no blocks.
 
 Layout coverage (all produced by this engine, all hive-discovered):
 ``blocks/partition_id=N/*.parquet`` (batch jobs), ``blocks/*.parquet``
@@ -256,9 +262,46 @@ def _overlap_prefix(stats: dict, ctype: str, prefix: str) -> bool:
 
 
 class _BlocksFilePartition(InputPartition):
-    def __init__(self, file_path: str, hive: dict[str, int]):
+    def __init__(self, file_path: str, hive: dict[str, int],
+                 checksums: list[str] | None = None):
         self.file_path = file_path
         self.hive = hive
+        # a verified read's committed checksums of the one partition this
+        # file holds whole (see checksum_split)
+        self.checksums = checksums
+
+
+# the two columns a verified read appends (read_warehouse(verify_checksums=
+# True)): per file, the manifest rows whose checksum differs from the one
+# recomputed from its block rows, and the manifest rows it compared. Each
+# file's counts ride its first decoded row; every other row carries 0.
+VERIFY_COLUMNS = ("__checksum_mismatches", "__checksums_compared")
+
+
+def checksum_split(root: str, meta) -> tuple[dict[str, list[str]], list[str]]:
+    """``({file: committed checksums}, other files)`` for a verified read.
+
+    A file that is the only one of its (epoch, partition_id), the one
+    file of a ``partition_id=N`` dir, holds every block row of its
+    partition, so its scan task recomputes the checksum and compares it
+    with the partition's manifest rows (``meta.checksums()``). Every
+    other file (a dir holding several files, flat ``blocks/*.parquet``,
+    ``epoch=E`` dirs, whose files carry partition_id as a column) is left
+    to the distributed aggregate, ``manifest.partition_checksums``."""
+    by_key: dict[tuple, list[str]] = {}
+    for f in _dataset(root).files:
+        hive = _hive_keys(f, root)
+        by_key.setdefault(
+            (hive.get("epoch"), hive.get("partition_id")), []).append(f)
+    committed = meta.checksums()
+    whole: dict[str, list[str]] = {}
+    rest: list[str] = []
+    for key, files in by_key.items():
+        if key[1] is not None and len(files) == 1:
+            whole[files[0]] = committed.get(key, [])
+        else:
+            rest += files
+    return whole, rest
 
 
 def _routed_files(root: str, pids, shard_dirs: int | None) -> list:
@@ -306,32 +349,50 @@ class TranscriptReader(DataSourceReader):
             None if pids is None else [int(p) for p in pids.split(",") if p]
         )
         self.merge_schemas = options.get("merge_schemas") == "true"
+        self.verify = options.get("verify_checksums") == "true"
 
     def partitions(self) -> Sequence[InputPartition]:
         """One task per blocks parquet file. Listing is O(files) driver
         work (the same contract as any file source); chunk-level zone-map
         pruning happens inside the tasks, against stats rows that are
         already local to each file — pruning itself is distributed. A
-        ``partition_ids`` read lists only those partitions' dirs."""
-        if self.partition_ids is not None:
-            from .manifest import WarehouseMeta
+        ``partition_ids`` read lists only those partitions' dirs; a
+        verified read hands each whole-partition file its committed
+        checksums."""
+        from .manifest import WarehouseMeta
 
+        if self.partition_ids is not None:
             return _routed_files(
                 self.root, self.partition_ids,
                 WarehouseMeta.load(self.warehouse).shard_dirs,
             )
-        files = _dataset(self.root).files
-        return [_BlocksFilePartition(f, _hive_keys(f, self.root)) for f in files]
+        if self.verify:
+            whole, rest = checksum_split(
+                self.root, WarehouseMeta.load(self.warehouse))
+            files = list(whole) + rest
+        else:
+            whole, files = {}, _dataset(self.root).files
+        return [_BlocksFilePartition(f, _hive_keys(f, self.root), whole.get(f))
+                for f in files]
 
     def read(self, partition: _BlocksFilePartition) -> Iterator:
+        import numpy as np
+        import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
         from .decode import _default_array, decode_chunk_arrow
+        from .manifest import checksum_of
 
-        want = [f.name for f in self.schema.fields]
+        want = [f.name for f in self.schema.fields
+                if f.name not in VERIFY_COLUMNS]
         want_set = set(want)
+        # every chunk forms a group through its conv_id block row (its
+        # payload is decoded only when conv_id is wanted), so a strict
+        # column-pruned read refuses a chunk that lacks a wanted column
+        # instead of silently dropping its rows
+        keep = sorted(want_set | {"conv_id"})
         id_cols = [] if "partition_id" in partition.hive else ["partition_id"]
 
         def _key(r: dict):
@@ -341,7 +402,7 @@ class TranscriptReader(DataSourceReader):
                 partition.hive.get("epoch"),
             )
 
-        chunk_filter = pc.field("column").isin(sorted(want_set))
+        chunk_filter = pc.field("column").isin(keep)
         if self.pushed:
             # two-phase read: chunk pruning must run BEFORE any payload
             # bytes load, or a point lookup still pays the parquet read of
@@ -349,7 +410,7 @@ class TranscriptReader(DataSourceReader):
             # tiny stats rows (predicate columns included even when pruned
             # out of the projection — their payloads are never loaded);
             # phase 2 restricts the payload read to surviving chunks.
-            need_cols = want_set | {
+            need_cols = set(keep) | {
                 f.attribute[0]
                 for f in self.pushed if getattr(f, "attribute", None)
             }
@@ -378,20 +439,27 @@ class TranscriptReader(DataSourceReader):
                 expr = e if expr is None else expr | e
             chunk_filter = chunk_filter & expr
 
-        # row filter in the parquet reader: payloads of columns outside the
-        # projection (and "__" marker rows, and pruned chunks) never become
-        # Python objects
-        tbl = pq.read_table(
-            partition.file_path,
-            columns=id_cols + [
-                "chunk_idx", "column", "codec", "n_rows", "payload", "aux",
-                "meta", "stat_min_str", "stat_max_str", "stat_min_num",
-                "stat_max_num",
-            ],
-            filters=chunk_filter,
-        )
+        columns = id_cols + [
+            "chunk_idx", "column", "codec", "n_rows", "payload", "aux",
+            "meta", "stat_min_str", "stat_max_str", "stat_min_num",
+            "stat_max_num",
+        ]
+        tally = (0, 0)  # (checksum mismatches, manifest rows compared)
+        if partition.checksums:
+            # verified: the checksum covers every block row of the file
+            rows = pq.read_table(partition.file_path, columns=columns).to_pylist()
+            got = checksum_of(rows)
+            tally = (sum(c != got for c in partition.checksums),
+                     len(partition.checksums))
+            rows = [r for r in rows if r["column"] in keep]
+        else:
+            # row filter in the parquet reader: payloads of columns outside
+            # the projection (and "__" marker rows, and pruned chunks) never
+            # become Python objects
+            rows = pq.read_table(partition.file_path, columns=columns,
+                                 filters=chunk_filter).to_pylist()
         groups: dict[tuple, dict[str, dict]] = {}
-        for r in tbl.to_pylist():
+        for r in rows:
             groups.setdefault(_key(r), {})[r["column"]] = r
 
         out_schema = to_arrow_schema(self.schema)
@@ -408,8 +476,15 @@ class TranscriptReader(DataSourceReader):
             for c in missing:  # merge_schemas: a chunk older than column c
                 chunk = chunk.append_column(
                     c, _default_array(self.ctypes[c], chunk.num_rows))
-            chunk = chunk.select(want).cast(out_schema)
-            yield from chunk.to_batches()
+            chunk = chunk.select(want)
+            if self.verify:
+                for name, count in zip(VERIFY_COLUMNS, tally):
+                    vals = np.zeros(chunk.num_rows, np.int64)
+                    vals[:1] = count
+                    chunk = chunk.append_column(name, pa.array(vals))
+                if chunk.num_rows:
+                    tally = (0, 0)
+            yield from chunk.cast(out_schema).to_batches()
 
 
 class PrunedTranscriptReader(TranscriptReader):
@@ -592,7 +667,11 @@ class TranscriptDataSource(DataSource):
                     f"unknown columns {unknown}; have {_column_order(ctypes)}"
                 )
             ctypes = {c: ctypes[c] for c in keep}
-        return schema_from_ctypes(ctypes)
+        schema = schema_from_ctypes(ctypes)
+        if self.options.get("verify_checksums") == "true":
+            for name in VERIFY_COLUMNS:
+                schema = schema.add(name, T.LongType(), False)
+        return schema
 
     def reader(self, schema: T.StructType) -> TranscriptReader:
         return TranscriptReader(
@@ -646,6 +725,7 @@ def read_warehouse(
     columns: list[str] | None = None,
     partition_ids=None,
     merge_schemas: bool = False,
+    verify_checksums: bool = False,
 ):
     """Full-scan read path: shuffle-free decode, safe to reuse and to wrap
     in a view (no pushdown state; see TranscriptReader).
@@ -662,9 +742,17 @@ def read_warehouse(
     chunk group; a type CHANGE fails either way. It reads whole chunks:
     a column-pruned merge would drop the rows of chunks holding none of
     the requested columns instead of filling them, so it is refused.
+
+    ``verify_checksums`` is decode_verify's integrity check riding its
+    decode: the read appends :data:`VERIFY_COLUMNS`, whose sums are the
+    manifest checksum mismatches and the manifest rows compared by the
+    scan tasks of the files that each hold a whole partition
+    (:func:`checksum_split`; the caller checks the other files). Without
+    it the read loads no manifests and hashes nothing.
     """
-    if merge_schemas and columns:
-        raise ValueError("merge_schemas reads every column; drop columns=")
+    if (merge_schemas or verify_checksums) and columns:
+        raise ValueError("merge_schemas and verify_checksums read every "
+                         "column; drop columns=")
     register(spark)
     r = spark.read.format("transcripts")
     if columns:
@@ -673,6 +761,8 @@ def read_warehouse(
         r = r.option("partition_ids", ",".join(map(str, sorted(partition_ids))))
     if merge_schemas:
         r = r.option("merge_schemas", "true")
+    if verify_checksums:
+        r = r.option("verify_checksums", "true")
     return r.load(warehouse)
 
 

@@ -58,6 +58,56 @@ def _column_desc_expr():
     )
 
 
+def _block_hash():
+    """One block row's hash; :func:`checksum_of` is its Python twin."""
+    return F.sha2(
+        F.concat_ws(
+            "|",
+            F.col("column"),
+            F.col("chunk_idx").cast("string"),
+            F.col("codec"),
+            F.sha2(F.coalesce(F.col("payload"), F.lit(b"")), 256),
+            F.sha2(F.coalesce(F.col("aux"), F.lit(b"")), 256),
+        ),
+        256,
+    )
+
+
+def _checksum_agg():
+    """Order-insensitive: sha256 over the sorted per-block hashes."""
+    return F.sha2(F.concat_ws("", F.sort_array(F.collect_list("_bh"))), 256)
+
+
+def checksum_of(rows) -> str:
+    """A partition's manifest checksum from all its block rows (dicts): the
+    Python twin of :func:`build_manifests`' aggregate, for a scan task
+    that already holds every block row of the partition."""
+    import hashlib
+
+    def hx(b) -> str:
+        return hashlib.sha256(b or b"").hexdigest()
+
+    hashes = sorted(
+        hashlib.sha256(
+            f"{r['column']}|{r['chunk_idx']}|{r['codec']}|"
+            f"{hx(r['payload'])}|{hx(r['aux'])}".encode()
+        ).hexdigest()
+        for r in rows
+    )
+    return hashlib.sha256("".join(hashes).encode()).hexdigest()
+
+
+def partition_checksums(blocks: DataFrame) -> dict[tuple, str]:
+    """{(epoch, partition_id): checksum} recomputed from ``blocks`` (epoch
+    None without an ``epoch`` column): the distributed check of files
+    that do not each hold a whole partition."""
+    epoch = F.col("epoch") if "epoch" in blocks.columns else F.lit(None)
+    rows = (blocks.withColumn("_bh", _block_hash())
+            .groupBy(epoch.cast("int").alias("epoch"), "partition_id")
+            .agg(_checksum_agg().alias("checksum")).collect())
+    return {(r.epoch, r.partition_id): r.checksum for r in rows}
+
+
 def build_manifests(
     blocks: DataFrame,
     job_id: str,
@@ -71,17 +121,6 @@ def build_manifests(
     codec map, byte totals, and an order-insensitive checksum from the
     per-block payload hashes.
     """
-    per_block_hash = F.sha2(
-        F.concat_ws(
-            "|",
-            F.col("column"),
-            F.col("chunk_idx").cast("string"),
-            F.col("codec"),
-            F.sha2(F.coalesce(F.col("payload"), F.lit(b"")), 256),
-            F.sha2(F.coalesce(F.col("aux"), F.lit(b"")), 256),
-        ),
-        256,
-    )
     # n_rows from one designated column's blocks (conv_id is always present):
     # dividing sum(n_rows) by a hardcoded column count silently mis-reports on
     # column-pruned or partially-written blocks, and breaks with extra columns.
@@ -91,7 +130,7 @@ def build_manifests(
     # column->codec MAP would throw DUPLICATED_MAP_KEY.
     is_data = ~F.col("column").startswith("__")  # marker rows excluded
     agg = (
-        blocks.withColumn("_bh", per_block_hash)
+        blocks.withColumn("_bh", _block_hash())
         .withColumn("_desc", _column_desc_expr())
         .groupBy("partition_id")
         .agg(
@@ -117,9 +156,7 @@ def build_manifests(
             ).alias("column_desc"),
             F.sum("raw_bytes").alias("raw_bytes"),
             F.sum("enc_bytes").alias("enc_bytes"),
-            F.sha2(F.concat_ws("", F.sort_array(F.collect_list("_bh"))), 256).alias(
-                "checksum"
-            ),
+            _checksum_agg().alias("checksum"),
             # partition-level conv_id zone map (min/max over the chunk zone
             # maps): the manifests table alone prunes a point lookup to ~1
             # partition dir, so the interactive read never lists blocks
@@ -342,10 +379,15 @@ class WarehouseMeta:
             if job_id is None or r.get("job_id") == job_id
         })
 
-    def checksums(self) -> list[tuple[int, str]]:
-        """(partition_id, checksum) of every manifest row."""
-        return [(r["partition_id"], r.get("checksum"))
-                for r in self.rows(["partition_id", "checksum"])]
+    def checksums(self) -> dict[tuple, list[str]]:
+        """(epoch, partition_id) -> the checksums of its manifest rows
+        (epoch None outside a streaming warehouse): a streaming warehouse
+        commits one row per partition of each epoch."""
+        out: dict[tuple, list[str]] = {}
+        for r in self.rows(["epoch", "partition_id", "checksum"]):
+            out.setdefault((r.get("epoch"), r["partition_id"]), []).append(
+                r.get("checksum"))
+        return out
 
     def column_desc(self) -> dict[str, str] | None:
         """column -> description, merged over the committed rows."""

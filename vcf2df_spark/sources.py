@@ -48,6 +48,73 @@ def _parse_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+# (physical type, logical type) -> the Spark type its parquet converter infers
+_PARQUET_TYPES = {
+    ("BOOLEAN", "None"): T.BooleanType(), ("FLOAT", "None"): T.FloatType(),
+    ("DOUBLE", "None"): T.DoubleType(), ("BYTE_ARRAY", "String"): T.StringType(),
+    ("INT32", "None"): T.IntegerType(), ("INT32", "Date"): T.DateType(),
+    ("INT32", "Int8"): T.ByteType(), ("INT32", "Int16"): T.ShortType(),
+    ("INT32", "Int32"): T.IntegerType(), ("INT64", "None"): T.LongType(),
+    ("INT64", "Int64"): T.LongType(),
+}
+
+
+def _leaf_type(col, ntz: bool):
+    """The Spark type of one parquet leaf column as Spark's converter
+    infers it; None where this mapping is not exact."""
+    import json
+
+    logical = json.loads(col.logical_type.to_json())
+    kind = logical["Type"]
+    if kind == "Decimal":
+        return T.DecimalType(logical["precision"], logical["scale"])
+    if kind == "Int":
+        kind = f"Int{logical['bitWidth']}" if logical["isSigned"] else "UInt"
+    if kind == "Timestamp" and logical["timeUnit"] != "nanoseconds":
+        utc = logical["isAdjustedToUTC"] or not ntz
+        return T.TimestampType() if utc else T.TimestampNTZType()
+    return _PARQUET_TYPES.get((col.physical_type, kind))
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers for a single local
+    parquet file, read from its footer on the driver, so the read plans
+    without Spark's one-task inference job.
+
+    Spark's converter is followed leaf by leaf: a naive timestamp is
+    ``timestamp_ntz`` (``spark.sql.parquet.inferTimestampNTZ.enabled``),
+    a UTC-adjusted one ``timestamp``, and every field is nullable. Returns
+    None, and the caller infers as before, for a directory or remote
+    input, a file Spark wrote (its footer carries Spark's own schema) and
+    any type or nesting this mapping does not cover exactly.
+    """
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if "://" in path or not os.path.isfile(path):
+        return None
+    md = pq.read_metadata(path)
+    if b"org.apache.spark.sql.parquet.row.metadata" in (md.metadata or {}):
+        return None
+    ntz = spark.conf.get(
+        "spark.sql.parquet.inferTimestampNTZ.enabled", "true") == "true"
+    fields, leaf = [], 0
+    for f in md.schema.to_arrow_schema():
+        listed = pa.types.is_list(f.type) or pa.types.is_large_list(f.type)
+        if (pa.types.is_nested(f.type) and not listed) or (
+                listed and pa.types.is_nested(f.type.value_type)):
+            return None
+        t = _leaf_type(md.schema.column(leaf), ntz)
+        leaf += 1
+        if t is None:
+            return None
+        fields.append(T.StructField(
+            f.name, T.ArrayType(t, True) if listed else t, True))
+    return T.StructType(fields) if leaf == md.num_columns else None
+
+
 def read_transcripts(
     spark: SparkSession, path: str, fmt: str = "parquet", schema=None
 ) -> DataFrame:
@@ -60,7 +127,9 @@ def read_transcripts(
     zero-defaults, lexical order, unsupported shapes dropped).
     """
     if fmt == "parquet":
-        df = spark.read.parquet(path)
+        schema = footer_schema(spark, path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(path)
     elif fmt == "orc":
         # the other schema-carrying columnar landing format Spark ships
         # with; same typed path as parquet (no inference pass needed)

@@ -19,7 +19,11 @@ from pyspark.sql import functions as F
 _P = 2_147_483_629  # large 31-bit prime: modular sum stays overflow-free
 
 
-def _signature(df: DataFrame):
+def signature_frame(df: DataFrame, sums=()) -> DataFrame:
+    """The one-row signature aggregate of ``df``: row count, XOR and
+    modular sum of the per-row content hashes over every column but
+    ``sums``, and the sum of each of ``sums`` (a count riding the scan,
+    such as the verified read's checksum tallies)."""
     from pyspark.sql import types as T
 
     # hash EVERY column (dynamic schema), sorted by name so both sides
@@ -28,7 +32,7 @@ def _signature(df: DataFrame):
     # would mask a codec corrupting those bits — ADVICE r2)
     exprs = []
     needs_udf = False
-    for name in sorted(df.columns):
+    for name in sorted(set(df.columns) - set(sums)):
         field = df.schema[name]
         if isinstance(field.dataType, (T.TimestampType, T.TimestampNTZType)):
             exprs.append(F.unix_micros(name))
@@ -48,11 +52,14 @@ def _signature(df: DataFrame):
         F.count("*").alias("n"),
         F.bit_xor(sig).alias("h_xor"),
         F.sum(F.pmod(sig, F.lit(_P))).alias("h_sum"),
-    ).collect()[0]
+        *[F.coalesce(F.sum(c), F.lit(0)).alias(c) for c in sums],
+    )
 
 
-def multiset_equal(left: DataFrame, right: DataFrame) -> dict:
-    """Order-insensitive multiset equality over all shared columns.
+def multiset_equal(left: DataFrame, right: DataFrame, sums=()) -> dict:
+    """Order-insensitive multiset equality over all shared columns;
+    ``sums`` are columns of ``right`` left out of the comparison and
+    summed in its aggregate (``"sums"`` of the result).
 
     The two signature aggregates are independent Spark jobs — submitted
     from two driver threads so the cheaper side's tasks back-fill the
@@ -62,18 +69,20 @@ def multiset_equal(left: DataFrame, right: DataFrame) -> dict:
 
     from pyspark import inheritable_thread_target
 
-    cols_equal = set(left.columns) == set(right.columns)
-    common = sorted(set(left.columns) & set(right.columns))
-    left, right = left.select(*common), right.select(*common)
+    right_cols = set(right.columns) - set(sums)
+    cols_equal = set(left.columns) == right_cols
+    common = sorted(set(left.columns) & right_cols)
+    left, right = left.select(*common), right.select(*common, *sums)
     spark = left.sparkSession
     with ThreadPoolExecutor(max_workers=2) as pool:
         fl = pool.submit(inheritable_thread_target(spark)(
-            lambda: _signature(left)))
+            lambda: signature_frame(left).collect()[0]))
         fr = pool.submit(inheritable_thread_target(spark)(
-            lambda: _signature(right)))
+            lambda: signature_frame(right, sums).collect()[0]))
         l, r = fl.result(), fr.result()
     return {
         "equal": cols_equal and (l.n, l.h_xor, l.h_sum) == (r.n, r.h_xor, r.h_sum),
         "rows_left": l.n,
         "rows_right": r.n,
+        "sums": {c: r[c] for c in sums},
     }
