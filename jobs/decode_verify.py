@@ -9,14 +9,14 @@ block, reassemble under stable (conv_id, turn_idx) ordering, and compare
 every column bit-identical to the source (ts as unix_micros int64 — the
 north_rule per-turn text-equality invariant plus full bit identity).
 
-Each side is read once. The decode is the verified datasource read: the
-scan task of a file holding a whole partition recomputes its manifest
-checksum from the block rows it already holds and counts the mismatches,
-which ride the decoded side's signature aggregate. Only the files that do
-not each hold a whole partition (a dir of several files, flat or epoch
-layouts) are checksummed by one Spark aggregate over just those files.
-A single-file source plans its schema from the parquet footer. On a clean
-batch warehouse that is 4 Spark jobs: the two signature aggregates.
+Each side is read once. The decode is the verified datasource read: a
+scan task holds one partition's files (``TranscriptReader.plan``), so it
+recomputes the manifest checksum of each partition from the block rows it
+already holds and counts the mismatches, which ride the decoded side's
+signature aggregate. Every manifest row of a partition that has blocks is
+compared exactly once; any other count fails the job. A single-file source
+plans its schema from the parquet footer. On a batch, flat or streaming
+warehouse that is 4 Spark jobs: the two signature aggregates.
 """
 
 from __future__ import annotations
@@ -28,25 +28,15 @@ import time
 
 
 def verify_frames(spark, warehouse: str, source: str, meta):
-    """(decoded, source, other_blocks, expected): the verified read of the
-    blocks (its tally columns only when ``meta`` exists), the normalized
-    source, the block rows of the files no scan task checks alone (None
-    when every file holds a whole partition), and how many manifest rows
-    the scan tasks must compare."""
-    from vcf2df_spark.blocks import BLOCKS_SCHEMA
-    from vcf2df_spark.datasource import checksum_split, read_warehouse
+    """(decoded, source, expected): the verified read of the blocks (its
+    tally columns only when ``meta`` exists), the normalized source, and
+    how many manifest rows its scan tasks must compare."""
+    from vcf2df_spark.datasource import planned_comparisons, read_warehouse
     from vcf2df_spark.sources import read_transcripts
 
     decoded = read_warehouse(spark, warehouse, verify_checksums=meta.exists)
-    other_blocks, expected = None, 0
-    if meta.exists:
-        root = f"{warehouse}/blocks"
-        whole, rest = checksum_split(root, meta)
-        expected = sum(map(len, whole.values()))
-        if rest:
-            other_blocks = (spark.read.schema(BLOCKS_SCHEMA)
-                            .option("basePath", root).parquet(*rest))
-    return decoded, read_transcripts(spark, source), other_blocks, expected
+    expected = planned_comparisons(warehouse, meta) if meta.exists else 0
+    return decoded, read_transcripts(spark, source), expected
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -76,11 +66,9 @@ def main(argv: list[str] | None = None) -> None:
     # warehouse without manifests (e.g. a bench warehouse) skips the
     # check (-1); any other error fails the job.
     meta = manifest_mod.WarehouseMeta.load(args.warehouse)
-    decoded, source, other_blocks, expected = verify_frames(
+    decoded, source, expected = verify_frames(
         spark, args.warehouse, args.source, meta)
     tallies = VERIFY_COLUMNS if meta.exists else ()
-    recomputed = ({} if other_blocks is None
-                  else manifest_mod.partition_checksums(other_blocks))
 
     if args.deep:
         # exact: column SETS must match (a warehouse missing a whole column
@@ -139,16 +127,10 @@ def main(argv: list[str] | None = None) -> None:
             raise RuntimeError(
                 f"checksum check incomplete: the scan compared "
                 f"{sums[VERIFY_COLUMNS[1]]} of the {expected} manifest rows "
-                "of its whole-partition files"
+                "it planned (a partition spread over several scan tasks, "
+                "or a task that decoded no row)"
             )
-        # the other files' partitions, recomputed by the aggregate
-        rest = [
-            c != recomputed[key]
-            for key, committed in meta.checksums().items()
-            if key in recomputed for c in committed
-        ]
-        checksum_mismatches = sums[VERIFY_COLUMNS[0]] + sum(rest)
-        compared = expected + len(rest)
+        checksum_mismatches, compared = sums[VERIFY_COLUMNS[0]], expected
     ok = rows_equal and checksum_mismatches <= 0
 
     print(json.dumps({

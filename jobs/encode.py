@@ -48,12 +48,13 @@ def main(argv: list[str] | None = None) -> None:
                         "single directory level strains object-store "
                         "listings; N~1024 keeps every level small. Layout "
                         "only — chunk identity and all readers unchanged.")
-    p.add_argument("--on-duplicates", choices=["fail", "quarantine", "ignore"],
+    p.add_argument("--on-duplicates", choices=["fail", "quarantine"],
                    default="fail",
                    help="input invariant: (conv_id, turn_idx) must be unique. "
                         "fail -> exit(5); quarantine -> keep one copy per key, "
                         "write the rest to <out>/quarantine (reference analogue: "
-                        "multi-allelic warning, parseVariant.go:16-18 — but loud)")
+                        "multi-allelic warning, parseVariant.go:16-18 — but loud). "
+                        "A key the warehouse already holds exits 5 either way")
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -171,7 +172,10 @@ def _encode(spark, args, wh: str, staging: str | None) -> tuple[int, dict]:
         stats = stage_and_swap(
             spark, wh, staging, meta, merge, pending, args.job_id, args.input,
             args.partitions, shard_dirs,
-            detect_dups=args.on_duplicates == "fail",
+            # after quarantine the input is unique: the check then fails
+            # only a key the warehouse already holds (committed twice, it
+            # would fail every later append that merges its partition)
+            detect_dups=True,
         )
     except RewriteError as e:
         return 2, {"job_id": args.job_id, "status": "error", "error": str(e)}

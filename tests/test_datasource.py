@@ -442,7 +442,7 @@ def test_routed_in_list_reads_manifests_once(spark, mwh, monkeypatch):
     def planned(flt):
         reader = ds.reader(ds.schema())
         reader.pushFilters([flt])
-        return {p.file_path for p in reader.partitions()}
+        return {f for p in reader.partitions() for f in p.files}
 
     want = set().union(*(planned(EqualTo(("conv_id",), c)) for c in cids))
     opens: list[str] = []

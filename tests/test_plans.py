@@ -150,9 +150,9 @@ def test_decode_verify_reads_blocks_once(spark, tmp_path):
     build_manifests(read_blocks(spark, f"{wh}/blocks"), "p", src_path) \
         .write.parquet(f"{wh}/manifests")
 
-    decoded, source, other_blocks, expected = verify_frames(
+    decoded, source, expected = verify_frames(
         spark, wh, src_path, WarehouseMeta.load(wh))
-    assert other_blocks is None and expected == 2
+    assert expected == 2
     p = _fmt(signature_frame(decoded, VERIFY_COLUMNS))
     assert _nodes(p, "BatchScan transcripts") == 1
     for plan in (p, _fmt(signature_frame(source))):

@@ -118,3 +118,51 @@ def test_manifests_listing_failure_is_not_a_batch_warehouse(tmp_path,
     monkeypatch.setattr(pafs, "LocalFileSystem", Unreachable)
     with pytest.raises(OSError, match="network"):
         reader.latestOffset()
+
+
+def _plan_keys(plan):
+    return [(sorted(p.files), p.hive) for p in plan]
+
+
+def test_stream_plan_is_the_batch_plan_of_its_epochs(tmp_path):
+    """No Spark: the stream reader plans epochs (start, end] through the
+    batch planner, so its tasks are exactly the batch plan's tasks of those
+    epochs; an epoch without manifest rows is in neither."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    wh = tmp_path / "wh"
+    for epoch in (0, 1, 2, 3):
+        d = wh / "blocks" / f"epoch={epoch}"
+        d.mkdir(parents=True)
+        for i in range(2):
+            pq.write_table(pa.table({"partition_id": [i]}), d / f"p{i}.parquet")
+        if epoch < 3:  # epoch 3: blocks written, never committed
+            m = wh / "manifests" / f"epoch={epoch}"
+            m.mkdir(parents=True)
+            pq.write_table(pa.table({"partition_id": [0, 1],
+                                     "status": ["committed"] * 2}),
+                           m / "m.parquet")
+    opts = {"path": str(wh)}
+    batch = datasource.TranscriptReader(opts, None, ctypes={}).plan()
+    assert {p.hive["epoch"] for p in batch} == {0, 1, 2}
+    stream = datasource.TranscriptStreamReader(opts, None, ctypes={})
+    assert stream.latestOffset() == {"epoch": 2}
+    got = stream.partitions({"epoch": -1}, {"epoch": 1})
+    assert _plan_keys(got) == _plan_keys(
+        [p for p in batch if p.hive["epoch"] in (0, 1)])
+    assert len(got) == 4  # one task per file: partition_id is a column
+
+
+def test_batch_read_skips_uncommitted_epoch(spark, tmp_path):
+    """A batch read of a streaming warehouse plans only the epochs the
+    manifests committed: blocks of an epoch whose manifests were never
+    written are not rows of the warehouse."""
+    wh = str(tmp_path / "uwh")
+    n = sum(_write_epoch(spark, wh, e) for e in (0, 1))
+    pdf = fixtures.transcripts_small(n_convs=10, seed=102)
+    pdf["conv_id"] = "e2-" + pdf["conv_id"]
+    encode_transcripts(normalize_input(spark.createDataFrame(pdf)),
+                       num_partitions=2, chunk_rows=64) \
+        .write.parquet(f"{wh}/blocks/epoch=2")
+    assert datasource.read_warehouse(spark, wh).count() == n

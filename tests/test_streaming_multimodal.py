@@ -306,10 +306,13 @@ def test_incremental_encode_dynamic_schema(spark, tmp_path):
 
     wh = str(tmp_path / "ewh")
     schema = spark.read.parquet(str(indir / "a.parquet")).schema
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs())
     q = streaming.incremental_encode(
         spark, str(indir), wh, checkpoint=str(tmp_path / "eck"), schema=schema
     )
     q.awaitTermination(120)
+    # each epoch is one blocks write: the drained query pinned nothing
+    assert set(spark.sparkContext._jsc.getPersistentRDDs()) <= persisted
 
     decoded = decode_blocks(spark.read.parquet(f"{wh}/blocks")).toPandas()
     assert len(decoded) == len(src)

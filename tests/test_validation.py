@@ -94,6 +94,27 @@ def test_duplicates_quarantine(spark, dup_input, tmp_path):
     assert decoded.select("conv_id", "turn_idx").distinct().count() == n_unique
 
 
+def test_on_duplicates_has_no_ignore(tmp_path):
+    """There is no mode that encodes duplicate keys: ``ignore`` committed
+    them, and every later append that merged their partition then failed
+    as a re-insert. argparse refuses it before any Spark work."""
+    with contextlib.redirect_stderr(io.StringIO()):
+        rc = _run(["--input", "unused.parquet", "--out", str(tmp_path / "w"),
+                   "--on-duplicates", "ignore"])
+    assert rc == 2
+
+
+def test_quarantine_refuses_reinserted_keys(spark, dup_input, tmp_path):
+    """Quarantine keeps one copy of each key within the input; a key the
+    warehouse already holds still fails the encode (exit 5)."""
+    path, _ = dup_input
+    wh = str(tmp_path / "w3")
+    common = ["--out", wh, "--partitions", "2", "--master", "local[2]",
+              "--on-duplicates", "quarantine"]
+    assert _run(["--input", path, "--job-id", "a", *common]) == 0
+    assert _run(["--input", path, "--job-id", "b", *common]) == 5
+
+
 def test_null_strings_normalize_to_empty(spark):
     """Reference P7 parity: null strings become typed defaults (\"\")."""
     import pandas as pd

@@ -2,10 +2,12 @@
 
 decode_verify's integrity check compares every manifest row's checksum
 with one recomputed from the stored blocks; only a warehouse WITHOUT
-manifests may skip it. The scan task of a file holding a whole partition
-compares its checksums; every other layout (a dir of several files, flat
-files, epoch dirs) goes through the Spark aggregate, keyed by (epoch,
-partition_id). Absence means ``FileNotFoundError`` and nothing
+manifests may skip it. A scan task holds one partition's files (a dir of
+several files included) and compares that partition's checksums, keyed by
+(epoch, partition_id), in every layout; a partition spread over two scan
+tasks (a flat or epoch partition split across files) is compared twice and
+fails the job, as does a copied file, whose chunks collide inside its
+task. Absence means ``FileNotFoundError`` and nothing
 else: any other read error (an unreachable remote store) must fail the
 caller instead of looking like a fresh or manifest-less warehouse.
 
@@ -194,8 +196,10 @@ def test_tampered_checksum_in_every_layout(spark, built, wh, layout):
         _flatten(wh)
     argv = ["--warehouse", wh, "--source", built[0], "--master", "local[4]"]
     argv += ["--deep"] if layout == "deep" else []
-    rc, rec, _ = _run(decode_job.main, argv)
+    rc, rec, n_jobs = _run(decode_job.main, argv, spark, f"verify-{layout}")
     assert rc == 0 and rec["status"] == "bit-identical", rec
+    if layout != "deep":  # the scan compares, no checksum aggregate
+        assert n_jobs <= 4
     assert rec["manifest_checksum_mismatches"] == 0
     assert rec["manifest_rows_compared"] == 4
     _tamper_manifest_checksum(wh, keep_crc=False)
@@ -222,8 +226,9 @@ def test_epoch_warehouse_keys_checksums_by_epoch(spark, tmp_path):
     src = str(tmp_path / "union.parquet")
     fixtures.write_parquet(pd.concat(frames, ignore_index=True), src)
     assert manifest.WarehouseMeta.load(wh).has_epoch
-    rc, rec, _ = _verify(spark, wh, src)
+    rc, rec, n_jobs = _verify(spark, wh, src, group="verify-epochs")
     assert rc == 0 and rec["status"] == "bit-identical", rec
+    assert n_jobs <= 4
     assert rec["rows_decoded"] == n
     assert rec["manifest_checksum_mismatches"] == 0
     assert rec["manifest_rows_compared"] == 4
@@ -232,6 +237,49 @@ def test_epoch_warehouse_keys_checksums_by_epoch(spark, tmp_path):
     rc, rec, _ = _verify(spark, wh, src)
     assert rc == 4 and rec["status"] == "MISMATCH"
     assert rec["manifest_checksum_mismatches"] == 1
+
+
+def test_flat_partition_split_over_two_files_fails_loudly(spark, tmp_path):
+    """A flat layout whose partition 0 spans two files, each of whole
+    chunks (no writer makes one), is compared by two scan tasks, each over
+    part of the partition: the job fails loudly and never reports
+    bit-identical."""
+    from vcf2df_spark.encode import encode_transcripts, normalize_input
+
+    pdf = fixtures.transcripts_small(n_convs=25)
+    src = str(tmp_path / "src.parquet")
+    fixtures.write_parquet(pdf, src)
+    wh = str(tmp_path / "flat")
+    blocks = encode_transcripts(normalize_input(spark.createDataFrame(pdf)),
+                                num_partitions=2, chunk_rows=64)
+    blocks.write.parquet(f"{wh}/blocks")
+    manifest.build_manifests(manifest.read_blocks(spark, f"{wh}/blocks"),
+                             "flat", src).write.parquet(f"{wh}/manifests")
+    [path] = [f for f in glob.glob(f"{wh}/blocks/*.parquet")
+              if 0 in pq.read_table(f, columns=["partition_id"])
+              .column(0).to_pylist()]
+    t = pq.read_table(path)
+    head = (pads.field("partition_id") == 0) & (pads.field("chunk_idx") == 0)
+    assert 0 < t.filter(head).num_rows < t.num_rows
+    os.remove(path)
+    pq.write_table(t.filter(head), path.replace(".parquet", "-a.parquet"))
+    pq.write_table(t.filter(~head), path.replace(".parquet", "-b.parquet"))
+    buf = io.StringIO()
+    with pytest.raises(RuntimeError, match="checksum check incomplete"), \
+            contextlib.redirect_stdout(buf):
+        decode_job.main(["--warehouse", wh, "--source", src,
+                         "--master", "local[4]"])
+    assert "bit-identical" not in buf.getvalue()
+
+
+def test_copied_blocks_file_is_refused(spark, wh):
+    """A copy of a partition dir's file lands in that dir's scan task: the
+    read raises on the colliding chunks instead of returning every row of
+    the partition twice (or once, silently overwritten)."""
+    [path] = glob.glob(f"{wh}/blocks/partition_id=0/*.parquet")
+    shutil.copy(path, path.replace(".parquet", "-copy.parquet"))
+    with pytest.raises(Exception, match="colliding chunks"):
+        datasource.read_warehouse(spark, wh).count()
 
 
 def test_uncompared_manifest_rows_fail_loudly(spark, built, wh, monkeypatch):

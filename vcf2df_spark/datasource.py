@@ -17,9 +17,11 @@ memory. Why it beats that ``groupBy(keys).applyInArrow`` decode:
   payload to co-locate a chunk's column blocks. But every writer already
   wrote each chunk's blocks into ONE parquet file (a single Spark task
   writes a whole (partition, chunk) group — the write invariant). One scan
-  task per blocks file decodes its complete groups in place: at 100 TB the
-  decode becomes an embarrassingly parallel scan instead of a
-  full-warehouse exchange.
+  task per partition's files (:meth:`TranscriptReader.plan`, the one
+  planner of every read, streaming included) decodes its complete groups
+  in place: at 100 TB the decode becomes an embarrassingly parallel scan
+  instead of a full-warehouse exchange. A chunk key met twice in a task
+  (a copied file) is refused, never decoded twice.
 - **Filter pushdown.** ``pushFilters`` receives Catalyst's conjunctive
   filters; range/equality/IN/prefix predicates on any stats-bearing column
   prune chunks against the zone maps *inside each task* (distributed
@@ -32,15 +34,16 @@ memory. Why it beats that ``groupBy(keys).applyInArrow`` decode:
   they are decoded. Each chunk's ``conv_id`` row is read too, undecoded,
   so a strict read refuses a chunk that lacks a requested column.
 - **Checksums where the bytes are.** decode_verify's read
-  (``verify_checksums``) hands each file that holds a whole partition its
-  committed manifest checksums; the scan task recomputes the checksum
-  from the block rows it reads anyway and reports the mismatches in two
-  extra columns, so verifying re-reads no blocks.
+  (``verify_checksums``) hands each scan task the committed manifest
+  checksums of the partitions it holds; the task recomputes each one from
+  the block rows it reads anyway and reports the mismatches in two extra
+  columns, so verifying re-reads no blocks, in every layout.
 
 Layout coverage (all produced by this engine, all hive-discovered):
 ``blocks/partition_id=N/*.parquet`` (batch jobs), ``blocks/*.parquet``
 (flat writes), ``blocks/epoch=E/*.parquet`` (streaming epochs — the epoch
 directory is part of chunk-group identity, CLAUDE.md constraint).
+Only the epochs the manifests committed are read.
 
 Reference analogue: the reference's only read surface is re-opening its
 Parquet output with a second reader (``converter/convert_test.go:63-97``);
@@ -262,58 +265,34 @@ def _overlap_prefix(stats: dict, ctype: str, prefix: str) -> bool:
 
 
 class _BlocksFilePartition(InputPartition):
-    def __init__(self, file_path: str, hive: dict[str, int],
-                 checksums: list[str] | None = None):
-        self.file_path = file_path
+    """One scan task: the files of one partition (see
+    :meth:`TranscriptReader.plan`), their hive keys, and a verified read's
+    committed checksums of the partitions they can hold, by (epoch,
+    partition_id)."""
+
+    def __init__(self, files: list[str], hive: dict[str, int]):
+        self.files = files
         self.hive = hive
-        # a verified read's committed checksums of the one partition this
-        # file holds whole (see checksum_split)
-        self.checksums = checksums
+        self.checksums: dict[tuple, list[str]] | None = None
 
 
 # the two columns a verified read appends (read_warehouse(verify_checksums=
-# True)): per file, the manifest rows whose checksum differs from the one
+# True)): per task, the manifest rows whose checksum differs from the one
 # recomputed from its block rows, and the manifest rows it compared. Each
-# file's counts ride its first decoded row; every other row carries 0.
+# task's counts ride its first decoded row; every other row carries 0.
 VERIFY_COLUMNS = ("__checksum_mismatches", "__checksums_compared")
 
 
-def checksum_split(root: str, meta) -> tuple[dict[str, list[str]], list[str]]:
-    """``({file: committed checksums}, other files)`` for a verified read.
-
-    A file that is the only one of its (epoch, partition_id), the one
-    file of a ``partition_id=N`` dir, holds every block row of its
-    partition, so its scan task recomputes the checksum and compares it
-    with the partition's manifest rows (``meta.checksums()``). Every
-    other file (a dir holding several files, flat ``blocks/*.parquet``,
-    ``epoch=E`` dirs, whose files carry partition_id as a column) is left
-    to the distributed aggregate, ``manifest.partition_checksums``."""
-    by_key: dict[tuple, list[str]] = {}
-    for f in _dataset(root).files:
-        hive = _hive_keys(f, root)
-        by_key.setdefault(
-            (hive.get("epoch"), hive.get("partition_id")), []).append(f)
-    committed = meta.checksums()
-    whole: dict[str, list[str]] = {}
-    rest: list[str] = []
-    for key, files in by_key.items():
-        if key[1] is not None and len(files) == 1:
-            whole[files[0]] = committed.get(key, [])
-        else:
-            rest += files
-    return whole, rest
-
-
-def _routed_files(root: str, pids, shard_dirs: int | None) -> list:
-    """One scan task per file of partitions ``pids``' dirs, opening only
-    those dirs (never a whole-tree listing)."""
-    from .manifest import routed_blocks_dirs
-
-    return [
-        _BlocksFilePartition(f, {"partition_id": pid})
-        for pid, _d, dset in routed_blocks_dirs(root, pids, shard_dirs)
-        for f in dset.files
-    ]
+def planned_comparisons(warehouse: str, meta) -> int:
+    """How many manifest rows a verified read of ``warehouse`` compares,
+    counted in the calling process from the plan its scan tasks run: each
+    (epoch, partition_id) of the planned checksums once."""
+    reader = TranscriptReader(
+        {"path": warehouse, "verify_checksums": "true"}, T.StructType(), {})
+    planned: dict[tuple, list[str]] = {}
+    for p in reader.plan(meta=meta):
+        planned.update(p.checksums)
+    return sum(map(len, planned.values()))
 
 
 class TranscriptReader(DataSourceReader):
@@ -351,29 +330,73 @@ class TranscriptReader(DataSourceReader):
         self.merge_schemas = options.get("merge_schemas") == "true"
         self.verify = options.get("verify_checksums") == "true"
 
-    def partitions(self) -> Sequence[InputPartition]:
-        """One task per blocks parquet file. Listing is O(files) driver
-        work (the same contract as any file source); chunk-level zone-map
-        pruning happens inside the tasks, against stats rows that are
-        already local to each file — pruning itself is distributed. A
-        ``partition_ids`` read lists only those partitions' dirs; a
-        verified read hands each whole-partition file its committed
-        checksums."""
-        from .manifest import WarehouseMeta
+    def plan(self, pids=None, epochs=None,
+             meta=None) -> list[_BlocksFilePartition]:
+        """The one planner of blocks reads: one task per partition's files.
 
-        if self.partition_ids is not None:
-            return _routed_files(
-                self.root, self.partition_ids,
-                WarehouseMeta.load(self.warehouse).shard_dirs,
-            )
+        A ``partition_id=N`` dir (under ``shard=`` or not) is one task of
+        all its files. Where partition_id is a column (flat
+        ``blocks/*.parquet``, ``epoch=E/*.parquet``) each file is one task:
+        every writer puts a whole partition of an epoch into one file.
+        Listing is O(files) planning work (the contract of any file source);
+        chunk-level zone-map pruning happens inside the tasks.
+
+        ``pids`` opens only those partitions' dirs. With none of them on
+        disk (flat or epoch layouts) the tree is listed and tasks whose
+        hive partition_id is outside ``pids`` dropped; a total miss keeps
+        one task (it prunes to nothing task-side) rather than risking the
+        empty-partition-list API edge. A listing that shows ``epoch=``
+        dirs keeps the epochs the manifests committed (every epoch without
+        manifests); ``epochs`` narrows further (a batch warehouse is epoch
+        0). A verified read hands each task the committed checksums of the
+        partitions it can hold. ``meta`` (the warehouse's
+        ``WarehouseMeta``) is loaded only when one of these needs it.
+        """
+        from .manifest import WarehouseMeta, routed_blocks_dirs
+
+        def load():
+            nonlocal meta
+            if meta is None:
+                meta = WarehouseMeta.load(self.warehouse)
+            return meta
+
+        files = [] if pids is None else [
+            f for _pid, _d, dset
+            in routed_blocks_dirs(self.root, pids, load().shard_dirs)
+            for f in dset.files
+        ]
+        listed = not files
+        tasks: dict = {}
+        for f in files or _dataset(self.root).files:
+            hive = _hive_keys(f, self.root)
+            key = ((hive.get("epoch"), hive["partition_id"])
+                   if "partition_id" in hive else f)
+            tasks.setdefault(key, _BlocksFilePartition([], hive)).files.append(f)
+        plan = list(tasks.values())
+        if any("epoch" in p.hive for p in plan):
+            durable = load().committed_epochs()
+            if durable is not None:
+                plan = [p for p in plan if p.hive.get("epoch") in durable]
+        if epochs is not None:
+            plan = [p for p in plan if p.hive.get("epoch", 0) in epochs]
+        if pids is not None and listed:
+            kept = [p for p in plan if "partition_id" not in p.hive
+                    or p.hive["partition_id"] in pids]
+            plan = kept or plan[:1]
         if self.verify:
-            whole, rest = checksum_split(
-                self.root, WarehouseMeta.load(self.warehouse))
-            files = list(whole) + rest
-        else:
-            whole, files = {}, _dataset(self.root).files
-        return [_BlocksFilePartition(f, _hive_keys(f, self.root), whole.get(f))
-                for f in files]
+            by_epoch: dict = {}
+            for key, sums in load().checksums().items():
+                by_epoch.setdefault(key[0], {})[key] = sums
+            for p in plan:
+                p.checksums = by_epoch.get(p.hive.get("epoch"), {})
+                if "partition_id" in p.hive:
+                    key = (p.hive.get("epoch"), p.hive["partition_id"])
+                    p.checksums = ({key: p.checksums[key]}
+                                   if key in p.checksums else {})
+        return plan
+
+    def partitions(self) -> Sequence[InputPartition]:
+        return self.plan(pids=self.partition_ids)
 
     def read(self, partition: _BlocksFilePartition) -> Iterator:
         import numpy as np
@@ -402,6 +425,10 @@ class TranscriptReader(DataSourceReader):
                 partition.hive.get("epoch"),
             )
 
+        def _rows(columns, filters=None) -> list[dict]:
+            return [r for f in partition.files for r in pq.read_table(
+                f, columns=columns, filters=filters).to_pylist()]
+
         chunk_filter = pc.field("column").isin(keep)
         if self.pushed:
             # two-phase read: chunk pruning must run BEFORE any payload
@@ -414,14 +441,11 @@ class TranscriptReader(DataSourceReader):
                 f.attribute[0]
                 for f in self.pushed if getattr(f, "attribute", None)
             }
-            stats = pq.read_table(
-                partition.file_path,
-                columns=id_cols + [
-                    "chunk_idx", "column", "stat_min_str", "stat_max_str",
-                    "stat_min_num", "stat_max_num",
-                ],
-                filters=pc.field("column").isin(sorted(need_cols)),
-            ).to_pylist()
+            stats = _rows(
+                id_cols + ["chunk_idx", "column", "stat_min_str",
+                           "stat_max_str", "stat_min_num", "stat_max_num"],
+                pc.field("column").isin(sorted(need_cols)),
+            )
             by_chunk: dict[tuple, dict[str, dict]] = {}
             for r in stats:
                 by_chunk.setdefault(_key(r), {})[r["column"]] = r
@@ -446,21 +470,33 @@ class TranscriptReader(DataSourceReader):
         ]
         tally = (0, 0)  # (checksum mismatches, manifest rows compared)
         if partition.checksums:
-            # verified: the checksum covers every block row of the file
-            rows = pq.read_table(partition.file_path, columns=columns).to_pylist()
-            got = checksum_of(rows)
-            tally = (sum(c != got for c in partition.checksums),
-                     len(partition.checksums))
+            # verified: a partition's checksum covers all its block rows,
+            # and the task holds every row of each partition it reads
+            rows = _rows(columns)
+            by_pid: dict = {}
+            for r in rows:
+                by_pid.setdefault(_key(r)[0], []).append(r)
+            for pid, part_rows in by_pid.items():
+                committed = partition.checksums.get(
+                    (partition.hive.get("epoch"), pid), [])
+                got = checksum_of(part_rows) if committed else None
+                tally = (tally[0] + sum(c != got for c in committed),
+                         tally[1] + len(committed))
             rows = [r for r in rows if r["column"] in keep]
         else:
             # row filter in the parquet reader: payloads of columns outside
             # the projection (and "__" marker rows, and pruned chunks) never
             # become Python objects
-            rows = pq.read_table(partition.file_path, columns=columns,
-                                 filters=chunk_filter).to_pylist()
+            rows = _rows(columns, chunk_filter)
         groups: dict[tuple, dict[str, dict]] = {}
         for r in rows:
-            groups.setdefault(_key(r), {})[r["column"]] = r
+            cols = groups.setdefault(_key(r), {})
+            if r["column"] in cols:
+                raise ValueError(
+                    f"colliding chunks: chunk {_key(r)} has two "
+                    f"{r['column']!r} blocks in {partition.files} (a copied "
+                    "or re-written blocks file)")
+            cols[r["column"]] = r
 
         out_schema = to_arrow_schema(self.schema)
         data_cols = [c for c in self.ctypes if c in want_set]
@@ -468,7 +504,7 @@ class TranscriptReader(DataSourceReader):
             missing = [c for c in data_cols if c not in cols]
             if missing and not self.merge_schemas:
                 raise ValueError(
-                    f"chunk {key} in {partition.file_path} is missing column "
+                    f"chunk {key} in {partition.files} is missing column "
                     f"blocks {missing} — incomplete chunk group (write "
                     "invariant violated or heterogeneous appends)"
                 )
@@ -509,10 +545,11 @@ class PrunedTranscriptReader(TranscriptReader):
         return list(filters)
 
     def _routed_pids(self):
-        """(partition ids, shard_dirs) that can hold the pushed conv_id
-        point keys, from ONE read of the manifests' hash-routing metadata.
-        (None, None) = no routable filter or no routing metadata (then
-        every file is planned as usual)."""
+        """(partition ids that can hold the pushed conv_id point keys, the
+        ``WarehouseMeta`` they were routed by), from ONE read of the
+        manifests' hash-routing metadata. (None, None) = no routable
+        filter; ids None = no routing metadata (then every file is planned
+        as usual)."""
         from .manifest import WarehouseMeta
 
         for f in self.pushed:
@@ -529,7 +566,8 @@ class PrunedTranscriptReader(TranscriptReader):
             # one conjunct suffices; others only narrow further
             if not keys:
                 return None, None
-            return WarehouseMeta.load(self.warehouse).route(keys)
+            meta = WarehouseMeta.load(self.warehouse)
+            return meta.route(keys)[0], meta
         return None, None
 
     def partitions(self) -> Sequence[InputPartition]:
@@ -540,24 +578,12 @@ class PrunedTranscriptReader(TranscriptReader):
         a point query opens ~2 dirs instead of discovering the tree
         (the same move as scan.fetch_conversation). Layouts without
         per-partition dirs (flat files, streaming epochs) fall back to the
-        full listing, and chunk zone maps still prune inside every task."""
-        pids, shard_dirs = self._routed_pids()
+        full listing (:meth:`plan`), and chunk zone maps still prune inside
+        every task."""
+        pids, meta = self._routed_pids()
         if pids is None:
             return super().partitions()
-        files = _routed_files(self.root, pids, shard_dirs)
-        if files:
-            return files
-        # routed dirs absent (flat/epoch layout) or a routed miss: plan the
-        # listed tree, filtered where hive keys allow; a total miss keeps
-        # one task (prunes to nothing task-side) rather than risking the
-        # empty-partition-list API edge
-        parts = super().partitions()
-        kept = [
-            p for p in parts
-            if p.hive.get("partition_id") is None
-            or p.hive["partition_id"] in pids
-        ]
-        return kept if kept else parts[:1]
+        return self.plan(pids=pids, meta=meta)
 
 
 class TranscriptStreamReader(DataSourceStreamReader):
@@ -584,57 +610,30 @@ class TranscriptStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict, schema: T.StructType,
                  ctypes: dict[str, str] | None = None):
         self._batch = TranscriptReader(options, schema, ctypes)
-        self.warehouse = (options.get("path") or options.get("warehouse")).rstrip("/")
 
-    def _committed_epochs(self) -> list[int]:
-        import re
+    def _epochs(self) -> list[int]:
+        """The committed epochs, from the manifests; a warehouse that is
+        not streaming is one epoch 0 once it holds blocks."""
+        from .manifest import WarehouseMeta
 
-        from pyarrow import fs as pafs
-
-        root = f"{self.warehouse}/manifests"
+        epochs = WarehouseMeta.load(self._batch.warehouse).committed_epochs()
+        if epochs is not None:
+            return epochs
         try:
-            filesystem, path = pafs.FileSystem.from_uri(root) \
-                if "://" in root else (pafs.LocalFileSystem(), root)
-            infos = filesystem.get_file_info(
-                pafs.FileSelector(path, recursive=False)
-            )
-        except FileNotFoundError:
-            # no manifests at all: a plain batch warehouse is one epoch. Any
-            # other OSError (a transient listing failure) propagates: read as
-            # "batch", it would expose epoch=0 blocks never committed
-            try:
-                if _dataset(self._batch.root).files:
-                    return [0]
-            except FileNotFoundError:
-                pass
+            return [0] if self._batch.plan() else []
+        except FileNotFoundError:  # no blocks yet
             return []
-        out = []
-        for info in infos:
-            m = re.match(r"epoch=(\d+)$", info.base_name)
-            if m:
-                out.append(int(m.group(1)))
-        if not out:
-            # manifests exist but not epoch-partitioned: batch warehouse
-            return [0] if _dataset(self._batch.root).files else []
-        return sorted(out)
 
     def initialOffset(self) -> dict:
         return {"epoch": -1}
 
     def latestOffset(self) -> dict:
-        epochs = self._committed_epochs()
+        epochs = self._epochs()
         return {"epoch": epochs[-1] if epochs else -1}
 
     def partitions(self, start: dict, end: dict):
-        lo, hi = int(start["epoch"]), int(end["epoch"])
-        epochs = [e for e in self._committed_epochs() if lo < e <= hi]
-        files: list[_BlocksFilePartition] = []
-        root = self._batch.root
-        for f in _dataset(root).files:
-            hive = _hive_keys(f, root)
-            if hive.get("epoch", 0) in epochs:
-                files.append(_BlocksFilePartition(f, hive))
-        return files
+        return self._batch.plan(
+            epochs=range(int(start["epoch"]) + 1, int(end["epoch"]) + 1))
 
     def read(self, partition: _BlocksFilePartition):
         return self._batch.read(partition)
@@ -745,10 +744,9 @@ def read_warehouse(
 
     ``verify_checksums`` is decode_verify's integrity check riding its
     decode: the read appends :data:`VERIFY_COLUMNS`, whose sums are the
-    manifest checksum mismatches and the manifest rows compared by the
-    scan tasks of the files that each hold a whole partition
-    (:func:`checksum_split`; the caller checks the other files). Without
-    it the read loads no manifests and hashes nothing.
+    manifest checksum mismatches and the manifest rows the scan tasks
+    compared (:func:`planned_comparisons` is how many they must). Without
+    it the read hashes nothing.
     """
     if (merge_schemas or verify_checksums) and columns:
         raise ValueError("merge_schemas and verify_checksums read every "

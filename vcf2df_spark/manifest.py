@@ -73,11 +73,6 @@ def _block_hash():
     )
 
 
-def _checksum_agg():
-    """Order-insensitive: sha256 over the sorted per-block hashes."""
-    return F.sha2(F.concat_ws("", F.sort_array(F.collect_list("_bh"))), 256)
-
-
 def checksum_of(rows) -> str:
     """A partition's manifest checksum from all its block rows (dicts): the
     Python twin of :func:`build_manifests`' aggregate, for a scan task
@@ -95,17 +90,6 @@ def checksum_of(rows) -> str:
         for r in rows
     )
     return hashlib.sha256("".join(hashes).encode()).hexdigest()
-
-
-def partition_checksums(blocks: DataFrame) -> dict[tuple, str]:
-    """{(epoch, partition_id): checksum} recomputed from ``blocks`` (epoch
-    None without an ``epoch`` column): the distributed check of files
-    that do not each hold a whole partition."""
-    epoch = F.col("epoch") if "epoch" in blocks.columns else F.lit(None)
-    rows = (blocks.withColumn("_bh", _block_hash())
-            .groupBy(epoch.cast("int").alias("epoch"), "partition_id")
-            .agg(_checksum_agg().alias("checksum")).collect())
-    return {(r.epoch, r.partition_id): r.checksum for r in rows}
 
 
 def build_manifests(
@@ -156,7 +140,9 @@ def build_manifests(
             ).alias("column_desc"),
             F.sum("raw_bytes").alias("raw_bytes"),
             F.sum("enc_bytes").alias("enc_bytes"),
-            _checksum_agg().alias("checksum"),
+            # order-insensitive: sha256 over the sorted per-block hashes
+            F.sha2(F.concat_ws("", F.sort_array(F.collect_list("_bh"))), 256)
+            .alias("checksum"),
             # partition-level conv_id zone map (min/max over the chunk zone
             # maps): the manifests table alone prunes a point lookup to ~1
             # partition dir, so the interactive read never lists blocks
@@ -388,6 +374,14 @@ class WarehouseMeta:
             out.setdefault((r.get("epoch"), r["partition_id"]), []).append(
                 r.get("checksum"))
         return out
+
+    def committed_epochs(self) -> list[int] | None:
+        """Sorted epochs a streaming warehouse has committed (an epoch's
+        blocks are durable once its manifest rows exist); None for any
+        other warehouse."""
+        if not self.has_epoch:
+            return None
+        return sorted({r["epoch"] for r in self.rows(["epoch"], committed=True)})
 
     def column_desc(self) -> dict[str, str] | None:
         """column -> description, merged over the committed rows."""

@@ -162,7 +162,8 @@ def register_transcript_view(spark: SparkSession, warehouse: str,
     """Expose the encoded warehouse as a SQL view: ``SELECT ... FROM name``.
 
     Backed by the ``transcripts`` Python DataSource (datasource.py): one
-    scan task per blocks file decodes its co-located chunk groups in place,
+    scan task per partition's files decodes its co-located chunk groups in
+    place,
     so the view costs NO shuffle — unlike the groupBy+applyInArrow decode,
     which must exchange every encoded payload. Combine with
     :func:`vcf2df_spark.datasource.scan_warehouse` for zone-map-pruned

@@ -66,27 +66,24 @@ def incremental_encode(
     def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        blocks = encode_transcripts(
-            batch_df, num_partitions=num_partitions
-        ).cache()
-        try:
-            blocks.count()
-            blocks.write.mode("overwrite").parquet(
-                f"{warehouse}/blocks/epoch={int(epoch_id)}"
-            )
-            # num_partitions on record gives streaming warehouses the same
-            # exact hash routing as batch ones: without it point lookups
-            # fall to the conv-range fallback, which cannot prune a hash
-            # layout and (worse) silently dropped partitions whose conv
-            # stats were suppressed (ADVICE r3)
-            manifest.build_manifests(
-                blocks, f"{job_id}-epoch{epoch_id}", input_dir,
-                num_partitions=num_partitions,
-            ).write.mode("overwrite").parquet(
-                f"{warehouse}/manifests/epoch={int(epoch_id)}"
-            )
-        finally:
-            blocks.unpersist()
+        # one blocks write, then the manifests read back exactly the epoch
+        # dir it wrote (the encode job's rule): the encode runs once, with
+        # no cache to pin or unpersist
+        blocks_dir = f"{warehouse}/blocks/epoch={int(epoch_id)}"
+        encode_transcripts(batch_df, num_partitions=num_partitions) \
+            .write.mode("overwrite").parquet(blocks_dir)
+        # num_partitions on record gives streaming warehouses the same
+        # exact hash routing as batch ones: without it point lookups
+        # fall to the conv-range fallback, which cannot prune a hash
+        # layout and (worse) silently dropped partitions whose conv
+        # stats were suppressed (ADVICE r3)
+        manifest.build_manifests(
+            manifest.read_blocks(batch_df.sparkSession, blocks_dir),
+            f"{job_id}-epoch{epoch_id}", input_dir,
+            num_partitions=num_partitions,
+        ).write.mode("overwrite").parquet(
+            f"{warehouse}/manifests/epoch={int(epoch_id)}"
+        )
 
     return (
         stream.writeStream.foreachBatch(handle_batch)
